@@ -225,12 +225,14 @@ object Bench {
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split("\\s+").take(3).mkString(",")
       catch { case _: Throwable => "" }
     val nCpu = Runtime.getRuntime.availableProcessors()
+    // the session's task slots; "cpus" is only the JVM's processor count
+    val parallelism = spark.sparkContext.defaultParallelism
     val canary = f"${Seq.fill(3)(cpuCanary()).min}%.4f"
     val (steal1, total1) = statTicks()
     val stealPct =
       if (total1 > total0) f"${100.0 * (steal1 - steal0) / (total1 - total0)}%.2f"
       else "-1"
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","window":"$window","legacy_total":$legacyTotal,"queries":$qs,"medians":$medians,"sf":"$sfDir","passes":$p,"pass_loads":"${passLoads.map(l => f"$l%.1f").mkString(",")}","pass_canary_sec":"${passCanaries.map(c => f"$c%.4f").mkString(",")}","pass_steal_pct":"${passSteals.map(s => f"$s%.2f").mkString(",")}","clean_passes":${cleanStealPasses.size},"clean_both_passes":${cleanBothPasses.size},"steal_gate_pct":$StealGatePct,"max_load":$maxLoad,"steal_gated":$stealGated,"load_gated":$loadGated,"min_pass":$minPass,"loadavg":"$loadAvg","cpus":$nCpu,"canary_sec":$canary,"steal_pct":$stealPct}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","window":"$window","legacy_total":$legacyTotal,"queries":$qs,"medians":$medians,"sf":"$sfDir","passes":$p,"pass_loads":"${passLoads.map(l => f"$l%.1f").mkString(",")}","pass_canary_sec":"${passCanaries.map(c => f"$c%.4f").mkString(",")}","pass_steal_pct":"${passSteals.map(s => f"$s%.2f").mkString(",")}","clean_passes":${cleanStealPasses.size},"clean_both_passes":${cleanBothPasses.size},"steal_gate_pct":$StealGatePct,"max_load":$maxLoad,"steal_gated":$stealGated,"load_gated":$loadGated,"min_pass":$minPass,"loadavg":"$loadAvg","cpus":$nCpu,"default_parallelism":$parallelism,"canary_sec":$canary,"steal_pct":$stealPct}"""
     spark.stop()
     // Driver-parseable channels, most robust first: a file in the repo
     // root, then bare stdout lines (raw via run/outputStrategy, printed

@@ -10,8 +10,8 @@ package graft
   *
   * NOTE: composite entries (d_web_pipeline*) execute their pipeline
   * EAGERLY during construction and return a tiny stage-count frame —
-  * their meaningful plans are per-stage and are captured by the profile
-  * mains instead; this tool still records the final frame for them.
+  * their meaningful plans are per-stage, in the event log's `web:<stage>`
+  * SQL executions; this tool still records the final frame for them.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -6,6 +6,9 @@ package graft
   *
   * Usage: runMain graft.QuickBench <passes> <query...>
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1).
+  *
+  * Per-job attribution: Spark's event log, folded by
+  * scripts/event_log_stages.py (its docstring has the recipe).
   */
 object QuickBench {
   def main(args: Array[String]): Unit = {
@@ -14,26 +17,6 @@ object QuickBench {
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-quickbench")
-    // GRAFT_QB_JOBS=1: print every Spark job's wall-clock + first line
-    // of its call site, so sequential-action overhead is attributable
-    if (sys.env.get("GRAFT_QB_JOBS").contains("1")) {
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val site = Option(j.properties.getProperty("spark.job.description"))
-              .orElse(Option(j.properties.getProperty("callSite.short")))
-              .orElse(j.stageInfos.lastOption.map(_.name))
-              .getOrElse("?")
-            starts.put(j.jobId, (System.nanoTime(), site))
-          }
-          override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            Option(starts.remove(j.jobId)).foreach { case (t0, site) =>
-              println(f"GRAFT_QB_JOB ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%8.3f s  $site")
-            }
-          }
-        })
-    }
     val queries = SparkEntry.queries
     def run(n: String): Double = {
       val t0 = System.nanoTime()

@@ -221,6 +221,12 @@ object TrainingData {
     * semi/inner join (hash joins on the id, never a corpus-wide window
     * or sort).
     *
+    * Attribution: every Spark job the call submits runs under the job
+    * description `web:<stage>`, where `<stage>` is a `stages` name
+    * (near-dup sub-steps: `web:neardup_keepbest/<step>`), so Spark's
+    * event log folds per stage (scripts/event_log_stages.py). The
+    * caller's own description is restored on return.
+    *
     * @param oracleHash true = md5 LSH signatures (DuckDB-checkable —
     *                   the d_web_pipeline gate entry); false = the
     *                   xxhash64 production path (default, same banding
@@ -228,8 +234,7 @@ object TrainingData {
     * @param probeMaxShingles explicit short-doc probe threshold; ≤ 0
     *                   (default) derives it from the corpus — the
     *                   smallest shingle count covering the bottom
-    *                   decile of battery survivors — with
-    *                   `spark.graft.probe.maxShingles` overriding both
+    *                   decile of battery survivors
     * @param modelQuality add the model-quality filter stage
     *                   (`model_keep`): train t_quality_model's
     *                   classifier on the url-deduped corpus, score the
@@ -277,52 +282,32 @@ object TrainingData {
     // persist the count already paid for, and checkpoint blocks are
     // GC-released by the context cleaner when the stage frame drops.
     var lastCount = 0L
-    // profiling hook (optimization rounds): wall-clock per stage to
-    // stdout when spark.graft.profile.stages=true — measurement only,
-    // no effect on what any stage computes
-    val profileStages = spark.conf.getOption("spark.graft.profile.stages")
-      .exists(_.toBoolean)
-    var lastStageEnd = System.nanoTime()
-    def stage(name: String, df: DataFrame): DataFrame = {
-      // widen before materializing (r16): stage frames inherit the
-      // first shuffle's AQE-coalesced partition count (~3 on the gate
-      // corpus), so every downstream battery/shingle/hash pass ran at
-      // a fraction of cluster parallelism. Par.widen now reads a
-      // checkpoint leaf's exact partition count, so this no-ops the
-      // moment the pipeline is wide (any real corpus) and the
-      // widening exchange carries only the tiny narrow stage rows
-      // otherwise; hash-partitioning by doc_id also pre-aligns the
-      // stage frame with every downstream doc_id join/aggregate.
-      // LAZY localCheckpoint + count (r17): the count action itself
-      // materializes the checkpoint blocks (first action on a
-      // checkpoint-marked RDD caches and truncates), so each stage pays
-      // ONE job where eager-checkpoint-then-count paid two — the
-      // count-materialization fusion r16 left as "needs non-public
-      // API", available on the public API after all. Attribution is
-      // unchanged: the materialization still happens inside this
-      // stage's count.
+    // job attribution: see the scaladoc
+    val sc = spark.sparkContext
+    def described[T](step: String)(body: => T): T = {
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"web:$step")
+      try body finally sc.setJobDescription(prev)
+    }
+    def stage(name: String)(df: => DataFrame): DataFrame = described(name) {
+      // widen before materializing: a stage frame otherwise inherits
+      // the first shuffle's AQE-coalesced partition count, so every
+      // later pass runs at a fraction of the cluster's parallelism
+      // (Par.widen no-ops once the pipeline is wide); hash-partitioning
+      // by doc_id pre-aligns it with every downstream doc_id join. The
+      // count materializes the lazy localCheckpoint: one job per stage.
       val p = Par.widen(df, col("doc_id")).localCheckpoint(false)
       lastCount = p.count()
       stages += name -> lastCount
-      if (profileStages) {
-        val now = System.nanoTime()
-        println(f"GRAFT_WEB_STAGE $name%-18s ${(now - lastStageEnd) / 1e9}%8.2f s  rows=$lastCount")
-        lastStageEnd = now
-      }
       p
     }
     locally {
-      stages += "raw" -> docs.count()
-      if (profileStages) {
-        val now = System.nanoTime()
-        println(f"GRAFT_WEB_STAGE raw                ${(now - lastStageEnd) / 1e9}%8.2f s")
-        lastStageEnd = now
-      }
+      stages += "raw" -> described("raw")(docs.count())
 
       // fetch: pack the corpus into WARC blobs, parse the records back,
       // strip HTML boilerplate — the p_warc_extract chain, kept here so
       // the composite exercises the REAL crawl front door end to end
-      val fetched = stage("warc_fetch",
+      val fetched = stage("warc_fetch")(
         TextAnalysis.warcBlobs(docs)
           .flatMap { case (_, blob) =>
             graft.functions.WarcRecords.parse(blob).getOrElse(Seq.empty)
@@ -333,7 +318,7 @@ object TrainingData {
       // RFC 9309 parse/match path (t_robots_rules' fixture scheme)
       val allowedIds = TextAnalysis.robotsDecisions(docs.select(col("doc_id")))
         .filter(col("allowed")).select("doc_id")
-      val robots = stage("robots_gate",
+      val robots = stage("robots_gate")(
         fetched.join(allowedIds, Seq("doc_id"), "left_semi"))
 
       // URL dedup: canonicalize doc_id-derived raw variants through the
@@ -350,7 +335,7 @@ object TrainingData {
       val withCanon = robots.join(canon, "doc_id")
       val urlKeepers = withCanon.groupBy("canon_url")
         .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-      val urlDeduped = stage("url_dedup",
+      val urlDeduped = stage("url_dedup")(
         withCanon.join(urlKeepers, Seq("doc_id"), "left_semi"))
 
       // published-filter battery, one attrition stage per filter.
@@ -361,7 +346,7 @@ object TrainingData {
       // rows. (C4/FineWeb keep the join shape: their metrics run over
       // a page-TRANSFORMED text, so the keep decision must map back to
       // the original rows anyway.)
-      val gophered = stage("filter_gopher",
+      val gophered = stage("filter_gopher")(
         TextAnalysis.gopherRules(urlDeduped, carry = Seq("url", "canon_url"),
             keepText = true)
           .filter(TextAnalysis.gopherWeakPassCond)
@@ -377,14 +362,14 @@ object TrainingData {
       // row carries. Scorer and pass rule are shared with the
       // oracle-gated gopherRepetition entry (gopherRepScore /
       // gopherRepPassOf), so the stage cannot drift from it.
-      val reped = stage("filter_gopher_rep", {
+      val reped = stage("filter_gopher_rep") {
         val idIdx = gophered.schema.fieldIndex("doc_id")
         val tIdx = gophered.schema.fieldIndex("text")
         gophered.filter { r: org.apache.spark.sql.Row =>
           TextAnalysis.gopherRepPassOf(
             TextAnalysis.gopherRepScore(r.getLong(idIdx), r.getString(tIdx)))
         }
-      })
+      }
 
       // C4/FineWeb now filter in ONE pass too (r16): their pass
       // conditions are deterministic row-local functions of
@@ -398,12 +383,12 @@ object TrainingData {
       // FineWeb line arrays. The pass fragments are shared with
       // c4Rules/finewebRules (c4PassExpr/fwPassExpr), so the inlined
       // stage cannot drift from the oracle-gated standalone entries.
-      val c4ed = stage("filter_c4",
+      val c4ed = stage("filter_c4")(
         reped.filter(expr(
           s"""aggregate(array(${TextAnalysis.C4PageExprSpark}), false,
              |  (c4acc, t) -> ${TextAnalysis.c4PassExpr("t")})""".stripMargin)))
 
-      val fwed = stage("filter_fineweb",
+      val fwed = stage("filter_fineweb")(
         c4ed.filter(expr(
           s"""aggregate(array(${TextAnalysis.FwPageExprSpark}), false,
              |  (fwacc0, t) -> aggregate(array(split(t, '\\n')), false,
@@ -413,7 +398,7 @@ object TrainingData {
       // exact dedup on the extracted text, min doc_id survives
       val exKeepers = fwed.groupBy(md5(col("text")).as("h"))
         .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-      val exact = stage("exact_dedup",
+      val exact = stage("exact_dedup")(
         fwed.join(exKeepers, Seq("doc_id"), "left_semi"))
 
       // near-dup dedup with the quality-aware keep-best keeper. TWO
@@ -433,8 +418,8 @@ object TrainingData {
       // (ceil(n/10) rank into a cumulative count over DISTINCT sizes —
       // a relation bounded by max document length, never corpus size;
       // a float quantile's interpolation is not integer-stable
-      // cross-engine). `spark.graft.probe.maxShingles` overrides, then
-      // an explicit probeMaxShingles argument, then the derivation.
+      // cross-engine). An explicit probeMaxShingles argument overrides
+      // the derivation.
       // Both arms are exact-gram verified, so the union is hash-path
       // independent (identical under md5 and xxhash64 LSH signatures).
       val exTexts = exact.select(col("doc_id"), col("text"))
@@ -446,33 +431,23 @@ object TrainingData {
       // containment probe keeps its own deliberately-UNCACHED streaming
       // passes (the measured 1000× memory discipline documented in
       // containmentProbePairs).
-      // job labels (guide-§1 attribution): each eager sub-step of the
-      // near-dup stage sets a description so its jobs are attributable
-      // in the UI/listener — measurement metadata only
-      def labeled[T](desc: String)(f: => T): T = {
-        spark.sparkContext.setJobDescription(s"neardup:$desc")
-        try f finally spark.sparkContext.setJobDescription(null)
-      }
       val exSh = graft.operators.Dedup.shingles(exTexts).persist()
       // (threshold, probe-slice count) in ONE derivation: the cumulative
       // count at the threshold row IS the probe count the probe's
       // bound/partitioning decisions need (r16 — previously a separate
-      // count action over the probe slice). A conf/argument override has
+      // count action over the probe slice). An explicit threshold has
       // no derivation to read it from, so the probe counts for itself.
       val (probeThr: Int, probeCount: Long) =
-        spark.conf.getOption("spark.graft.probe.maxShingles")
-          .map(_.toInt)
-          .orElse(if (probeMaxShingles > 0) Some(probeMaxShingles) else None)
-          .map(t => (t, -1L))
-          .getOrElse(labeled("probe_thr") {
-            survivorProbeThresholdAndCountOn(exSh, lastCount) })
-      val lshPairs = labeled("lsh") {
+        if (probeMaxShingles > 0) (probeMaxShingles, -1L)
+        else described("neardup_keepbest/probe_thr") {
+          survivorProbeThresholdAndCountOn(exSh, lastCount) }
+      val lshPairs = described("neardup_keepbest/lsh") {
         graft.operators.Dedup.minhashLshOn(exSh, oracleHash) }
       // the probe shares the SAME persisted frame (r16): it previously
       // re-shingled the corpus on its own three streaming passes (probe
       // slice, gram restriction, verify slice) even though the identical
       // arrays sat in the block store for the two arms above
-      val probePairs = labeled("probe") {
+      val probePairs = described("neardup_keepbest/probe") {
         graft.operators.Dedup.containmentProbePairsOn(
             exSh, maxShingles = probeThr, knownProbeCount = probeCount) }
         .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
@@ -486,7 +461,7 @@ object TrainingData {
       // ranking computes the same expression member-restricted
       // (dedupKeepBestBy: broadcast semi join below the projection)
       val withQ = exact.withColumn("quality", TextAnalysis.qualityCol)
-      val deduped = stage("neardup_keepbest", labeled("keepbest") {
+      val deduped = stage("neardup_keepbest")(described("neardup_keepbest/keepbest") {
         DedupPipeline.dedupKeepBestBy(withQ, pairs, exact, TextAnalysis.qualityCol) })
       // released only AFTER the keep-best stage action (r17, advisor
       // finding): under Materialize.lazily the pair arms are NOT eagerly
@@ -508,7 +483,7 @@ object TrainingData {
       // doc_id-filter contract the attrition accounting builds on.
       val substred =
         if (!exactSubstr) deduped
-        else stage("substr_keep",
+        else stage("substr_keep")(
           deduped.join(
             graft.operators.Dedup.substringDedup(
               deduped.select(col("doc_id"), col("text")))
@@ -520,10 +495,11 @@ object TrainingData {
       // ccnetBuckets is conf-aware: setting spark.graft.ccnet.approxCuts
       // swaps the exact tercile cuts for the bounded GK sketch here too
       // (the 100 TB arm), with the gate running the exact default.
-      val cc = TextAnalysis.ccnetBuckets(substred.select(col("doc_id"), col("text")))
-        .select(col("doc_id"), col("n_tokens"), col("surprisal"), col("bucket"))
-      val ccKept = stage("ccnet_keep",
-        substred.join(cc.filter(col("bucket") =!= "tail"), "doc_id"))
+      val ccKept = stage("ccnet_keep") {
+        val cc = TextAnalysis.ccnetBuckets(substred.select(col("doc_id"), col("text")))
+          .select(col("doc_id"), col("n_tokens"), col("surprisal"), col("bucket"))
+        substred.join(cc.filter(col("bucket") =!= "tail"), "doc_id")
+      }
 
       // model-quality filter arm — the FineWeb-Edu deployment of
       // t_quality_model as a pipeline stage with its own attrition
@@ -540,7 +516,7 @@ object TrainingData {
       // feature frame, a ≤32 KB weight pull per step.
       val bucketed =
         if (!modelQuality) ccKept
-        else {
+        else stage("model_keep") {
           // labels = membership in the (already checkpointed) gopher
           // stage — identical to re-running the battery over
           // urlDeduped (gophered ≡ urlDeduped ⋉ gopher-pass) without
@@ -577,9 +553,8 @@ object TrainingData {
             .agg(min("score")).head()
           val thr = if (thrRow.isNullAt(0)) Double.NegativeInfinity
                     else thrRow.getDouble(0)
-          stage("model_keep",
-            ccKept.join(scored.filter(col("score") > lit(thr)).select("doc_id"),
-              Seq("doc_id"), "left_semi"))
+          ccKept.join(scored.filter(col("score") > lit(thr)).select("doc_id"),
+            Seq("doc_id"), "left_semi")
         }
 
       // benchmark-decontamination arm — flag-and-drop at
@@ -594,7 +569,7 @@ object TrainingData {
       val decontamed = decontaminateEval match {
         case None => bucketed
         case Some(ev) =>
-          stage("decontam_keep",
+          stage("decontam_keep")(
             bucketed.join(
               graft.operators.Dedup.contaminatedPositions(
                 bucketed.select(col("doc_id"), col("text")), ev)
@@ -616,8 +591,8 @@ object TrainingData {
       val packTokens =
         if (!packByBpe) decontamed.withColumn("pack_tokens", col("n_tokens"))
         else {
-          val ranks = graft.functions.BpeTokenizer.rankTable(
-            TextAnalysis.learnBpeFrom(decontamed.select(col("doc_id"), col("text"))))
+          val ranks = described("final")(graft.functions.BpeTokenizer.rankTable(
+            TextAnalysis.learnBpeFrom(decontamed.select(col("doc_id"), col("text")))))
           decontamed.join(
             TextAnalysis.bpeEncoded(decontamed.select(col("doc_id"), col("text")), ranks)
               .select(col("doc_id"), col("n_bpe_tokens").as("pack_tokens")),
@@ -638,10 +613,9 @@ object TrainingData {
               ((sum("train_tokens").over(w) - col("pack_tokens")) / binTokens)
                 .cast("bigint"))))
         .drop("pack_bucket", "train_tokens", "pack_tokens")
-      val out = packed.localCheckpoint(false) // materialized by the count (see stage())
-      stages += "final" -> out.count()
-      if (profileStages)
-        println(f"GRAFT_WEB_STAGE final              ${(System.nanoTime() - lastStageEnd) / 1e9}%8.2f s")
+      // AQE runs the window's shuffle stage already at localCheckpoint
+      val out = described("final")(packed.localCheckpoint(false))
+      stages += "final" -> described("final")(out.count())
       PreparedWeb(out, pairs, stages.result())
     }
   }

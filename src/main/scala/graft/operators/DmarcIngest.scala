@@ -333,7 +333,9 @@ object DmarcIngest extends QueryModule {
     QueryDef(
       "p_imap_intake",
       (s, _) => {
-        val files = new java.io.File(s"$Samples/aggregate").listFiles().sortBy(_.getName)
+        val dir = new java.io.File(s"$Samples/aggregate")
+        val files = Option(dir.listFiles()).getOrElse(throw new java.io.FileNotFoundException(
+          s"p_imap_intake: sample corpus directory $dir is missing")).sortBy(_.getName)
         val seed = files.toIndexedSeq.map { f =>
           val bytes = java.nio.file.Files.readAllBytes(f.toPath)
           if (f.getName.endsWith(".eml")) bytes

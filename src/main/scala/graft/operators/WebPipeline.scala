@@ -339,21 +339,11 @@ object WebPipeline extends QueryModule {
   private def materialize(ctes: String): String =
     ctes.replaceAll("(?m)^(\\w+) AS \\(", "$1 AS MATERIALIZED (")
 
-  /** GATE guard (not a product constraint): both oracles recompute the
-    * corpus-derived probe threshold, so a conf override must fail
-    * loudly instead of hash-mismatching obscurely.
-    */
-  private def requireGateConf(s: org.apache.spark.sql.SparkSession, entry: String): Unit =
-    require(s.conf.getOption("spark.graft.probe.maxShingles").isEmpty,
-      s"$entry's oracle derives the probe threshold from the corpus; " +
-        "unset spark.graft.probe.maxShingles for the gate")
-
   override def entries: Seq[QueryDef] = Seq(
     QueryDef(
       "d_web_pipeline",
       (s, dir) => {
         import s.implicits._
-        requireGateConf(s, "d_web_pipeline")
         val p = graft.api.TrainingData.prepareWeb(
           Tables(s, dir).documents, oracleHash = true)
         p.stages.zipWithIndex
@@ -373,7 +363,6 @@ object WebPipeline extends QueryModule {
       "d_web_pipeline_model",
       (s, dir) => {
         import s.implicits._
-        requireGateConf(s, "d_web_pipeline_model")
         val p = graft.api.TrainingData.prepareWeb(
           Tables(s, dir).documents, oracleHash = true, modelQuality = true)
         p.stages.zipWithIndex
@@ -399,7 +388,6 @@ object WebPipeline extends QueryModule {
       "d_web_pipeline_substr",
       (s, dir) => {
         import s.implicits._
-        requireGateConf(s, "d_web_pipeline_substr")
         val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
         val minted = d.filter(col("doc_id") % 20 === 3)
           .select((col("doc_id") + 420000000000L).as("doc_id"),
@@ -431,7 +419,6 @@ object WebPipeline extends QueryModule {
       "d_web_pipeline_decontam",
       (s, dir) => {
         import s.implicits._
-        requireGateConf(s, "d_web_pipeline_decontam")
         val docs = Tables(s, dir).documents
         val ev = TextAnalysis.warcBlobs(docs.filter(col("doc_id") % 20 === 5))
           .flatMap { case (_, blob) =>
@@ -467,7 +454,6 @@ object WebPipeline extends QueryModule {
       "d_web_pipeline_full",
       (s, dir) => {
         import s.implicits._
-        requireGateConf(s, "d_web_pipeline_full")
         val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
         val minted = d.filter(col("doc_id") % 20 === 3)
           .select((col("doc_id") + 420000000000L).as("doc_id"),

@@ -22,8 +22,10 @@ object AggregateXmlParser {
   private def epoch(s: String): Option[Timestamp] =
     Try(new Timestamp(s.trim.toLong * 1000L)).toOption
 
-  def parse(data: Array[Byte]): Either[String, AggregateReport] = {
-    val raw = Extract.utf8(Extract.decompress(data))
+  def parse(data: Array[Byte]): Either[String, AggregateReport] =
+    Extract.decompressed(data).flatMap(b => parseXml(Extract.utf8(b)))
+
+  private def parseXml(raw: String): Either[String, AggregateReport] = {
     val start = raw.indexOf("<feedback>")
     val end = raw.lastIndexOf("</feedback>")
     val xmlStr =
@@ -128,12 +130,10 @@ object AggregateXmlParser {
   }
 
   /** Bytes → report, auto-detecting raw XML vs compressed vs email. */
-  def parseAny(data: Array[Byte]): Either[String, AggregateReport] = {
-    val body = Extract.decompress(data)
-    val text = Extract.utf8(body)
-    if (text.contains("<feedback")) parse(body)
-    else parseEmail(data)
-  }
+  def parseAny(data: Array[Byte]): Either[String, AggregateReport] =
+    Extract.decompressed(data).map(Extract.utf8).flatMap { text =>
+      if (text.contains("<feedback")) parseXml(text) else parseEmail(data)
+    }
 }
 
 /** Forensic / failure reports (RFC 6591 ARF). Mirrors the field map and

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object DmarcReader {
 
-  private def files(spark: SparkSession, path: String, glob: String): DataFrame =
+  private[sources] def files(spark: SparkSession, path: String, glob: String): DataFrame =
     spark.read.format("binaryFile")
       .option("pathGlobFilter", glob)
       .option("recursiveFileLookup", "true")

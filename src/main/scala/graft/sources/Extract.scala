@@ -40,6 +40,10 @@ object Extract {
     else if (isZip(b)) decompress(unzipFirst(b))
     else b
 
+  /** [[decompress]]; a corrupt or truncated archive is a `Left`, not an exception */
+  def decompressed(b: Array[Byte]): Either[String, Array[Byte]] =
+    scala.util.Try(decompress(b)).toEither.left.map(e => s"corrupt compressed payload: $e")
+
   def base64Decode(s: String): Array[Byte] =
     java.util.Base64.getMimeDecoder.decode(s.trim)
 

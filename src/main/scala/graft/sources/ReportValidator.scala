@@ -31,7 +31,12 @@ object ReportValidator {
     * the reference's error/warning split.
     */
   def validateAggregate(data: Array[Byte]): ValidationResult =
-    validateAggregateRaw(Extract.utf8(Extract.decompress(data)))
+    decoded(data).map(validateAggregateRaw).merge
+
+  /** decompress + utf8; an undecodable archive is an invalid result */
+  private def decoded(data: Array[Byte]): Either[ValidationResult, String] =
+    Extract.decompressed(data).map(Extract.utf8)
+      .left.map(err => ValidationResult(valid = false, Seq(err), Seq.empty))
 
   private def validateAggregateRaw(raw: String): ValidationResult = {
     val errors = Seq.newBuilder[String]
@@ -88,7 +93,7 @@ object ReportValidator {
     * the parser tolerates them but the report is degenerate.
     */
   def validateTlsJson(data: Array[Byte]): ValidationResult =
-    validateTlsJsonRaw(Extract.utf8(Extract.decompress(data)))
+    decoded(data).map(validateTlsJsonRaw).merge
 
   private def validateTlsJsonRaw(raw: String): ValidationResult = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -153,8 +158,12 @@ object ReportValidator {
     */
   def validateAny(data: Array[Byte]): (String, ValidationResult) = {
     // decode ONCE (decompress + utf8 are the per-file hot-path cost in
-    // the distributed audit) and dispatch on the decoded string
-    val raw = Extract.utf8(Extract.decompress(data))
+    // the distributed audit) and dispatch on the decoded string; an
+    // undecodable archive fails the fallback (aggregate) family
+    decoded(data).fold("aggregate" -> _, validateRaw(data, _))
+  }
+
+  private def validateRaw(data: Array[Byte], raw: String): (String, ValidationResult) = {
     val head = raw.dropWhile(_.isWhitespace)
     // XML-shaped content is the aggregate family unconditionally: an
     // aggregate report whose field TEXT happens to contain

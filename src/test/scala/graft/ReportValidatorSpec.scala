@@ -20,6 +20,19 @@ class ReportValidatorSpec extends AnyFunSuite {
     assert(!r.valid && r.errors.contains("Invalid XML format"))
   }
 
+  test("a truncated gzip payload is an invalid result, not an exception") {
+    val out = new java.io.ByteArrayOutputStream
+    val gz = new java.util.zip.GZIPOutputStream(out)
+    gz.write(("<feedback><report_metadata><org_name>acme</org_name>" * 20).getBytes("UTF-8"))
+    gz.close()
+    val cut = out.toByteArray.dropRight(16)
+    for (r <- Seq(ReportValidator.validateAggregate(cut), ReportValidator.validateTlsJson(cut))) {
+      assert(!r.valid && r.errors.head.startsWith("corrupt compressed payload"), r.errors)
+    }
+    val (family, any) = ReportValidator.validateAny(cut)
+    assert(family == "aggregate" && !any.valid)
+  }
+
   test("missing fields produce the reference's error messages") {
     val xml =
       """<feedback><report_metadata><email>not-an-email</email>

@@ -1,8 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.api.TrainingData
 import graft.operators.{TextAnalysis, WebPipeline}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** api.TrainingData.prepareWeb / d_web_pipeline — the one-call
   * WEB-corpus pipeline. Pins the attrition-accounting CONTRACT (stage
@@ -372,5 +377,36 @@ class WebPipelineSpec extends SparkSpec {
     // downstream stage count
     val fast = TrainingData.prepareWeb(docs, oracleHash = false)
     assert(fast.stages == prepared.stages)
+  }
+
+  test("every job of a default prepareWeb is labeled web:<stage>; the caller's label survives") {
+    val sc = spark.sparkContext
+    val input = docs // the parquet schema read is the caller's job
+    // the group keeps jobs other threads submit out of the tally
+    val group = "web-attribution"
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => labels.add(Option(p.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "caller-label")
+    try {
+      val p = TrainingData.prepareWeb(input)
+      assert(sc.getLocalProperty("spark.job.description") == "caller-label")
+      // listener events arrive in order: once the sentinel job is seen,
+      // every prepareWeb job has been too
+      sc.setJobDescription("sentinel")
+      spark.range(1).count()
+      eventually(timeout(60.seconds)) { assert(labels.contains(Some("sentinel"))) }
+      val web = labels.asScala.toSeq.takeWhile(_ != Some("sentinel"))
+      val stageNames = p.stages.map(_._1).toSet
+      assert(web.forall(_.exists(_.startsWith("web:"))), web.mkString("job labels: ", ", ", ""))
+      assert(web.flatten.map(_.stripPrefix("web:").takeWhile(_ != '/')).toSet == stageNames)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }
