@@ -77,13 +77,10 @@ object Bench {
     // scale artifact adopted in r15 — count() windows let the optimizer
     // prune real work (d_keep_best's 1000× cell read 328.6 s under
     // count() and 1782.4 s under the forced frame; t_quality_model's
-    // scoring projection collapses to a metadata count-star). The env
-    // toggle exists so the one-time count→forced bridge comparison is
-    // reproducible; the artifact records which window produced it.
-    val window = sys.env.getOrElse("GRAFT_BENCH_WINDOW", "forced")
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      if (window == "count") { df.count(); () }
-      else { ScaleDemo.forcedFrame(df).head(); () }
+    // scoring projection collapses to a metadata count-star).
+    def run(df: org.apache.spark.sql.DataFrame): Unit = {
+      ScaleDemo.forcedFrame(df).head(); ()
+    }
     // JVM+Spark warmup on the smallest SF so steady-state throughput is
     // measured, not first-call codegen/classloading. Guarded per query:
     // one broken query must degrade that query's samples to the -1
@@ -232,7 +229,7 @@ object Bench {
     val stealPct =
       if (total1 > total0) f"${100.0 * (steal1 - steal0) / (total1 - total0)}%.2f"
       else "-1"
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","window":"$window","legacy_total":$legacyTotal,"queries":$qs,"medians":$medians,"sf":"$sfDir","passes":$p,"pass_loads":"${passLoads.map(l => f"$l%.1f").mkString(",")}","pass_canary_sec":"${passCanaries.map(c => f"$c%.4f").mkString(",")}","pass_steal_pct":"${passSteals.map(s => f"$s%.2f").mkString(",")}","clean_passes":${cleanStealPasses.size},"clean_both_passes":${cleanBothPasses.size},"steal_gate_pct":$StealGatePct,"max_load":$maxLoad,"steal_gated":$stealGated,"load_gated":$loadGated,"min_pass":$minPass,"loadavg":"$loadAvg","cpus":$nCpu,"default_parallelism":$parallelism,"canary_sec":$canary,"steal_pct":$stealPct}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","window":"forced","legacy_total":$legacyTotal,"queries":$qs,"medians":$medians,"sf":"$sfDir","passes":$p,"pass_loads":"${passLoads.map(l => f"$l%.1f").mkString(",")}","pass_canary_sec":"${passCanaries.map(c => f"$c%.4f").mkString(",")}","pass_steal_pct":"${passSteals.map(s => f"$s%.2f").mkString(",")}","clean_passes":${cleanStealPasses.size},"clean_both_passes":${cleanBothPasses.size},"steal_gate_pct":$StealGatePct,"max_load":$maxLoad,"steal_gated":$stealGated,"load_gated":$loadGated,"min_pass":$minPass,"loadavg":"$loadAvg","cpus":$nCpu,"default_parallelism":$parallelism,"canary_sec":$canary,"steal_pct":$stealPct}"""
     spark.stop()
     // Driver-parseable channels, most robust first: a file in the repo
     // root, then bare stdout lines (raw via run/outputStrategy, printed

@@ -20,7 +20,7 @@ import graft.sources._
   * Single-input mode (main.go:parseFileWithCustomOutput): a file or a
   * directory (lexical order, subdirectories skipped) runs each payload
   * through the SAME aggregate→forensic→smtp_tls parser chain
-  * (main.go:parseAndWriteOutput) and writes the reference's exact
+  * ([[graft.sources.ReportParser]], main.go:parseAndWriteOutput) and writes the reference's exact
   * output bytes ([[graft.sources.ReportJson]]): stream JSON/CSV to
   * stdout or an append-file, or per-report files in directory mode
   * (output.go DirectoryJSONWriter/DirectoryCSVWriter filenames).
@@ -107,28 +107,6 @@ object GraftCli {
     }
     Right(opts)
   }
-
-  // ------------------------------------------------------ parse chain
-  sealed trait ParsedReport
-  final case class ParsedAggregate(r: AggregateReport) extends ParsedReport
-  final case class ParsedForensic(r: ForensicReport) extends ParsedReport
-  final case class ParsedTls(r: TlsReport) extends ParsedReport
-
-  /** main.go:parseAndWriteOutput's chain: aggregate first, then
-    * forensic, then SMTP TLS; the combined error joins all three.
-    */
-  def parseAny(data: Array[Byte]): Either[String, ParsedReport] =
-    AggregateXmlParser.parseAny(data).map(ParsedAggregate(_): ParsedReport)
-      .left.flatMap { aggErr =>
-        ForensicParser.parse(data).map(ParsedForensic(_): ParsedReport)
-          .left.flatMap { forErr =>
-            TlsReportParser.parseAny(data).map(ParsedTls(_): ParsedReport)
-              .left.map { tlsErr =>
-                "unable to parse data as any supported report type. " +
-                  s"Details: aggregate: $aggErr; forensic: $forErr; smtp_tls: $tlsErr"
-              }
-          }
-      }
 
   // ------------------------------------------------------ sinks
   /** output.Writer twin: one sink per (destination, format). */
@@ -362,7 +340,8 @@ object GraftCli {
       // (permissions, transient IO) must warn-and-continue exactly
       // like an unparseable one (main.go:283-287)
       val result =
-        try parseAny(Files.readAllBytes(f))
+        try ReportParser.parse(Files.readAllBytes(f)).left.map(
+          "unable to parse data as any supported report type. Details: " + _)
         catch { case NonFatal(e) => Left(e.toString) }
       result match {
         case Right(parsed) => sink.write(parsed); ok += 1

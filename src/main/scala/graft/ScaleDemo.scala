@@ -116,26 +116,6 @@ object ScaleDemo {
     "q11_important_value", "q20_excess_shippers", "q22_inactive_customers",
     "d_link_authority")
 
-  /** Variant cells: a registry query re-measured under a session-conf
-    * override — the conf-selectable at-scale arm of an operator gets
-    * its own named artifact row in scale_result.jsonl instead of
-    * silently overwriting the base cell. Resolution: variant name →
-    * (registry name, conf key, conf value).
-    */
-  val Variants: Map[String, (String, String, String)] = Map(
-    "t_ccnet_buckets_approx" ->
-      (("t_ccnet_buckets", "spark.graft.ccnet.approxCuts", "true")),
-    // one host owns ~60% of discovered urls — the adversarial shape
-    // the bounded-heap partial aggregate exists for (a window sort
-    // would ship the giant host's every url to one partition)
-    "t_crawl_frontier_skew" ->
-      (("t_crawl_frontier", "spark.graft.frontier.skewHost", "true")),
-    // the probe WITHOUT the gram-set restriction semi-join (the skip
-    // path forced) — measured against the default cell, this is the
-    // restriction's win as a number instead of a design claim
-    "d_containment_probe_norestrict" ->
-      (("d_containment_probe", "spark.graft.probe.noRestrict", "true")))
-
   /** Custom cells: production compositions with no registry entry of
     * their own (their correctness lives in a parity spec, not an
     * oracle) whose at-scale cost still belongs in the artifact.
@@ -364,31 +344,22 @@ object ScaleDemo {
     // re-measured. Run as: runMain graft.ScaleDemo --audit q1,q2,...
     if (audit) {
       val names = rest.headOption.map(_.split(",").toSeq)
-        .getOrElse((Queries ++ Variants.keys ++ CustomCells.keys).distinct)
+        .getOrElse((Queries ++ CustomCells.keys).distinct)
       val dir = generate(spark, base, workRoot, 1)
       for (q <- names) {
-        // variants audit under their conf override, mirroring the
-        // measurement loop — without it the audited plan can differ
-        // from the plan actually timed for variant cells
-        val (regName, confOverride) = Variants.get(q)
-          .map { case (r, ck, cv) => (r, Some(ck -> cv)) }
-          .getOrElse((q, None))
         val res = try {
-          confOverride.foreach { case (ck, cv) => spark.conf.set(ck, cv) }
-          try {
-            val df = CustomCells.getOrElse(regName, queries(regName))(spark, dir)
-            val hist = workHistogram(df.queryExecution.optimizedPlan)
-            val countPlan = workHistogram(
-              df.agg(count(lit(1))).queryExecution.optimizedPlan)
-            val lost = hist.collect {
-              case (n, c) if countPlan.getOrElse(n, 0) < c =>
-                s"$n:${c - countPlan.getOrElse(n, 0)}"
-            }.toSeq.sorted
-            // projection-only plans (no work nodes at all) collapse to
-            // footer count-star — flag them too
-            val projOnly = hist.isEmpty
-            s"""{"query":"$q","count_window_collapses":${lost.nonEmpty || projOnly},"lost":"${lost.mkString(",")}","projection_only":$projOnly}"""
-          } finally confOverride.foreach { case (ck, _) => spark.conf.unset(ck) }
+          val df = CustomCells.getOrElse(q, queries(q))(spark, dir)
+          val hist = workHistogram(df.queryExecution.optimizedPlan)
+          val countPlan = workHistogram(
+            df.agg(count(lit(1))).queryExecution.optimizedPlan)
+          val lost = hist.collect {
+            case (n, c) if countPlan.getOrElse(n, 0) < c =>
+              s"$n:${c - countPlan.getOrElse(n, 0)}"
+          }.toSeq.sorted
+          // projection-only plans (no work nodes at all) collapse to
+          // footer count-star — flag them too
+          val projOnly = hist.isEmpty
+          s"""{"query":"$q","count_window_collapses":${lost.nonEmpty || projOnly},"lost":"${lost.mkString(",")}","projection_only":$projOnly}"""
         } catch { case e: Throwable =>
           s"""{"query":"$q","error":"${Option(e.getMessage).getOrElse("").take(120).replace('"', ' ')}"}"""
         }
@@ -404,8 +375,7 @@ object ScaleDemo {
     locally {
       val dir = generate(spark, base, workRoot, 1)
       for (q <- queryNames) {
-        forcedFrame(CustomCells.getOrElse(q,
-          queries(Variants.get(q).map(_._1).getOrElse(q)))(spark, dir)).head(); ()
+        forcedFrame(CustomCells.getOrElse(q, queries(q))(spark, dir)).head(); ()
       }
       spark.catalog.clearCache()
     }
@@ -418,17 +388,9 @@ object ScaleDemo {
         // heavy lifting to warm cache and report decreasing times at
         // increasing scale
         spark.catalog.clearCache()
-        // variant cells run the underlying registry query with their
-        // conf set; the conf is restored so later cells see the default
-        val (regName, confOverride) = Variants.get(q)
-          .map { case (r, ck, cv) => (r, Some(ck -> cv)) }
-          .getOrElse((q, None))
-        confOverride.foreach { case (ck, cv) => spark.conf.set(ck, cv) }
-        // finally, not success-path-only: a throwing cell must not leak
-        // its conf arm into every later cell of an error-tolerant sweep
         val cell = try { Right {
         val t0 = System.nanoTime()
-        val df = CustomCells.getOrElse(regName, queries(regName))(spark, dir)
+        val df = CustomCells.getOrElse(q, queries(q))(spark, dir)
         // EVERY cell runs the forced count+hash window (round-15
         // re-baseline): count() alone is not a measurement for the two
         // collapse classes documented on WorkNodes, and the round-11
@@ -455,10 +417,10 @@ object ScaleDemo {
             Left(Option(e.getMessage).getOrElse(e.getClass.getName)
               .map(c => if (c < ' ' || c == '"' || c == '\\') ' ' else c)
               .take(300))
-        } finally confOverride.foreach { case (ck, _) => spark.conf.unset(ck) }
+        }
         val line = cell match {
           case Right((sec, rows, nested, collapsed)) =>
-            val degraded = nested && !IntendedNested(regName)
+            val degraded = nested && !IntendedNested(q)
             s"""{"scale":$k,"query":"$q","sec":$sec,"rows":$rows,"nested_loop":$nested,"degraded":$degraded,"collapsed":$collapsed}"""
           case Left(err) =>
             s"""{"scale":$k,"query":"$q","error":"$err"}"""

@@ -94,10 +94,6 @@ object Joins {
     // the width (pmod subtraction), then integral-divide — truncation
     // equals floor, and the BIGINT quotient is bounded by 2^63 / w2.
     def floorDiv(e: String): String = s"(($e) - pmod(($e), $w2d)) DIV $w2d"
-    // the column name carries BandJoinBinning's `_graft_band_bin`
-    // idempotence marker: under the rule's keyed opt-in conf the band
-    // filter merges back into this join's condition, and without the
-    // marker the already-binned join would be binned a second time
     val bin = "_graft_band_bin_rj"
     val probeBase = floorDiv(s"CAST($leftTs AS DECIMAL(38,0))")
     val probes = left.withColumn(bin,

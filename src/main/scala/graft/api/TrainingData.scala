@@ -492,9 +492,6 @@ object TrainingData {
             Seq("doc_id"), "left_semi"))
 
       // CCNet bucketing over the SURVIVOR corpus; tail tercile dropped.
-      // ccnetBuckets is conf-aware: setting spark.graft.ccnet.approxCuts
-      // swaps the exact tercile cuts for the bounded GK sketch here too
-      // (the 100 TB arm), with the gate running the exact default.
       val ccKept = stage("ccnet_keep") {
         val cc = TextAnalysis.ccnetBuckets(substred.select(col("doc_id"), col("text")))
           .select(col("doc_id"), col("n_tokens"), col("surprisal"), col("bucket"))

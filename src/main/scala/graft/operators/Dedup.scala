@@ -470,16 +470,11 @@ object Dedup extends QueryModule {
     // aggregation state for the same unified region (measured:
     // AGGREGATE_OUT_OF_MEMORY at 1000× on the default heap), while the
     // disk form streams out serialized and re-reads at scan speed.
-    // spark.graft.probe.noRestrict=true forces the skip path — a
-    // MEASUREMENT arm only (ScaleDemo's d_containment_probe_norestrict
-    // cell), so the restriction's claimed win is a measured number
-    // instead of a design assertion; results are identical either way
-    // (the restriction only removes rows the candidate equi-joins
-    // would ignore).
-    val noRestrict = spark.conf.getOption("spark.graft.probe.noRestrict")
-      .exists(_.toBoolean)
+    // The restriction only removes rows the candidate equi-joins would
+    // ignore, so both branches yield identical pairs (measured at
+    // 1000×: skipping it cost 1.35× wall time and ~36 GB of spill).
     val relevant =
-      (if (!noRestrict && nProbes * maxShingles <= 4L * 1000 * 1000) {
+      (if (nProbes * maxShingles <= 4L * 1000 * 1000) {
         val probeGramHashes = probeSh.select(explode(col("sh")).as("pg"))
           .select(xxhash64(col("pg")).as("gh")).distinct()
         exploded.withColumn("gh", xxhash64(col("g")))

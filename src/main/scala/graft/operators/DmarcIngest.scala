@@ -390,7 +390,7 @@ object DmarcIngest extends QueryModule {
       org.apache.spark.sql.Dataset[(String, String, String, Int)] = {
     import s.implicits._
     import graft.GraftCli
-    import graft.sources.ReportJson
+    import graft.sources.ReportParser
     s.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .load(Samples)
@@ -398,18 +398,13 @@ object DmarcIngest extends QueryModule {
       .as[(String, Array[Byte])]
       .map { case (path, bytes) =>
         val rel = path.substring(path.indexOf("/samples/") + "/samples/".length)
-        def family(p: GraftCli.ParsedReport): String = p match {
-          case GraftCli.ParsedAggregate(_) => "aggregate"
-          case GraftCli.ParsedForensic(_)  => "forensic"
-          case GraftCli.ParsedTls(_)       => "smtp_tls"
-        }
-        GraftCli.parseAny(bytes) match {
+        ReportParser.parse(bytes) match {
           case Right(p) =>
             // the CLI's own renderer — gate and CLI cannot drift
             val d = GraftCli.renderDocument(p, format)
             val sha = java.security.MessageDigest.getInstance("SHA-256")
               .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-            (rel, family(p), sha, d.length)
+            (rel, p.family, sha, d.length)
           case Left(_) => (rel, "error", "", 0)
         }
       }

@@ -17,13 +17,6 @@ object TextAnalysis extends QueryModule {
 
   private val Stop = "('the','a','of','and','to','in','is','it')"
 
-  /** GK-sketch accuracy for the ccnet approx-cut arm: rank error
-    * ≤ n/accuracy, so tercile cuts land within 0.01% of corpus rank —
-    * far inside the head/middle/tail boundaries' natural fuzz — at a
-    * fixed ~accuracy-sized sketch per partial aggregate.
-    */
-  private[graft] val CcnetSketchAccuracy = 10000
-
   /** Docs-per-bucket target of [[packBucketCount]]'s derived default. */
   private[graft] val PackDocsPerBucket = 4096L
 
@@ -699,6 +692,38 @@ object TextAnalysis extends QueryModule {
     }.toDF("doc_id", "is_index", "entry_i", "loc", "lastmod", "changefreq", "priority")
   }
 
+  /** t_crawl_frontier's body over a caller-chosen BIGINT `host` key
+    * (an expression over doc_id). The adversarial shape the bounded
+    * heap exists for is host skew — one host owning half the crawl:
+    * the heap's ≤ k-per-host-per-partition contract keeps the exchange
+    * O(hosts·k) there, where a window sort would ship the giant host's
+    * every url to one partition.
+    */
+  private[graft] def crawlFrontier(docs: org.apache.spark.sql.DataFrame,
+                                   host: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val urls = sitemapUrls(docs).filter(!col("is_index"))
+    val robots = robotsDecisions(docs.select(col("doc_id")))
+      .filter(col("allowed")).select(col("doc_id"), col("crawl_delay"))
+    val cand = urls.join(robots, "doc_id")
+      .withColumn("item", col("doc_id") * 8 + col("entry_i"))
+    val top = cand
+      .select(host.as("h"), col("item"), col("priority"))
+      .as[(Long, Long, Double)]
+      .groupByKey(_._1)
+      .agg(new graft.functions.TopKByScore(50).toColumn)
+      .flatMap { case (_, hits) =>
+        hits.zipWithIndex.map { case ((item, _), r) => (item, r + 1) }
+      }
+      .toDF("item", "crawl_rank")
+    broadcast(top).join(cand, "item")
+      .select(
+        concat(lit("site"), host.cast("string"), lit(".test")).as("host"),
+        col("crawl_rank"), col("loc"), col("priority"), col("crawl_delay"))
+      .orderBy("host", "crawl_rank")
+  }
+
   private[graft] val SitemapUrlsSql: String =
     """WITH n AS (SELECT doc_id,
       |  CASE WHEN doc_id % 7 = 0 THEN doc_id % 3 + 1 ELSE doc_id % 4 + 1 END AS n
@@ -735,20 +760,8 @@ object TextAnalysis extends QueryModule {
   /** CCNet's head/middle/tail scoring + partition (see the
     * t_ccnet_buckets registry entry for the paper mapping and the
     * <=-stability argument): unigram-surprisal scoring, tercile cuts as
-    * a 1-row broadcast, low surprisal = head.
-    *
-    * Cut computation is conf-selectable
-    * (`spark.graft.ccnet.approxCuts`, default false): the exact
-    * `percentile` buffers EVERY per-doc surprisal in the aggregation
-    * state — fine at gate SF, a driver/executor memory wall at 100 TB
-    * corpus cardinality — while `approx_percentile` keeps a bounded
-    * GK sketch with rank error ≤ n/accuracy, the shape that survives
-    * any corpus size. The plan is otherwise unchanged (same single
-    * aggregate to one row, same broadcast back). Semantics diverge
-    * only at the cut VALUES: exact interpolates between order
-    * statistics, the sketch returns an actual sample within the rank
-    * bound — CcnetApproxCutsSpec pins the agreement on the gate
-    * corpus. The oracle entry stays on the exact path.
+    * a 1-row broadcast, low surprisal = head. The cuts are the exact
+    * `percentile`, which the oracle recomputes.
     */
   private[graft] def ccnetBuckets(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // r16 shuffle-shape fix: the surprisal join previously hash-
@@ -801,17 +814,9 @@ object TextAnalysis extends QueryModule {
            round(sum(-log2(col("c").cast("double") / col("n_total").cast("double")))
              / count(lit(1)), 4).as("surprisal"))
       .localCheckpoint(false)
-    val approx = docs.sparkSession.conf
-      .getOption("spark.graft.ccnet.approxCuts").exists(_.toBoolean)
-    val cuts =
-      if (approx)
-        scored.agg(expr(
-            s"approx_percentile(surprisal, array(1.0D/3, 2.0D/3), $CcnetSketchAccuracy)")
-            .as("cs"))
-          .select(col("cs").getItem(0).as("c1"), col("cs").getItem(1).as("c2"))
-      else scored.agg(
-        expr("percentile(surprisal, 1.0D/3)").as("c1"),
-        expr("percentile(surprisal, 2.0D/3)").as("c2"))
+    val cuts = scored.agg(
+      expr("percentile(surprisal, 1.0D/3)").as("c1"),
+      expr("percentile(surprisal, 2.0D/3)").as("c2"))
     scored.crossJoin(broadcast(cuts))
       .select(col("doc_id"), col("n_tokens"), col("surprisal"),
         round(col("c1"), 4).as("cut_head"),
@@ -2247,47 +2252,11 @@ object TextAnalysis extends QueryModule {
     // ≤ 50·hosts winners broadcast-join their url rows back. Hosts
     // number in the millions on a real crawl, so per-host groups are
     // naturally bounded; the gate corpus's 5 synthetic hosts just
-    // concentrate the fixture. The ADVERSARIAL shape the bounded heap
-    // exists for is host skew — one host owning half the crawl — and
-    // `spark.graft.frontier.skewHost` selects exactly that fixture
-    // (every even doc lands on host 0, ~60% of urls): the heap's
-    // ≤ k-per-host-per-partition contract is what keeps the exchange
-    // O(hosts·k) there, where a window sort would ship the giant
-    // host's every url to one partition. The scale sweep measures the
-    // arm as t_crawl_frontier_skew; the driver gate runs the default
-    // (the oracle recomputes the 5-host fixture), and
-    // CrawlFrontierSpec pins heap≡window parity UNDER skew plus the
-    // per-partition heap-state bound itself.
+    // concentrate the fixture (CrawlFrontierSpec pins heap≡window
+    // parity under host skew through [[crawlFrontier]]'s host column).
     QueryDef(
       "t_crawl_frontier",
-      (s, dir) => {
-        import s.implicits._
-        val skew = s.conf.getOption("spark.graft.frontier.skewHost").exists(_.toBoolean)
-        val host =
-          if (skew) when(pmod(col("doc_id"), lit(2L)) === 0L, lit(0L))
-            .otherwise(pmod(col("doc_id"), lit(5L)))
-          else pmod(col("doc_id"), lit(5L))
-        val d = Tables(s, dir).documents
-        val urls = sitemapUrls(d).filter(!col("is_index"))
-        val robots = robotsDecisions(d.select(col("doc_id")))
-          .filter(col("allowed")).select(col("doc_id"), col("crawl_delay"))
-        val cand = urls.join(robots, "doc_id")
-          .withColumn("item", col("doc_id") * 8 + col("entry_i"))
-        val top = cand
-          .select(host.as("h"), col("item"), col("priority"))
-          .as[(Long, Long, Double)]
-          .groupByKey(_._1)
-          .agg(new graft.functions.TopKByScore(50).toColumn)
-          .flatMap { case (_, hits) =>
-            hits.zipWithIndex.map { case ((item, _), r) => (item, r + 1) }
-          }
-          .toDF("item", "crawl_rank")
-        broadcast(top).join(cand, "item")
-          .select(
-            concat(lit("site"), host.cast("string"), lit(".test")).as("host"),
-            col("crawl_rank"), col("loc"), col("priority"), col("crawl_delay"))
-          .orderBy("host", "crawl_rank")
-      },
+      (s, dir) => crawlFrontier(Tables(s, dir).documents, pmod(col("doc_id"), lit(5L))),
       Some(s"""WITH n AS (SELECT doc_id, doc_id % 4 + 1 AS n FROM documents
              |  WHERE doc_id % 7 <> 0),
              |e AS (SELECT doc_id, unnest(generate_series(0, n - 1)) AS i FROM n),

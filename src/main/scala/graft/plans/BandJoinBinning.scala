@@ -52,17 +52,10 @@ import org.apache.spark.sql.types.LongType
   * fixed-point optimizer batch, since the output join carries the bin
   * equality. One-sided bands with an unbounded other side (plain
   * `x >= y` alone) are left as-is: there is no finite bin width.
-  *
-  * KEYED band joins (equi key + band) can opt in via
-  * `spark.graft.bandJoinBinning.keyedJoins=true`: a hash join on the
-  * key alone is per-key quadratic in the band filter, which matters
-  * when keys are few and heavy (hot users, LSH buckets) — adding the
-  * bin to the join keys bounds the per-group cross product by band
-  * occupancy. Off by default because on near-unique keys (ordinary FK
-  * joins) per-key groups are already tiny and the 2× probe inflation
-  * is pure overhead — the same reason engines gate this rewrite
-  * behind a range-join hint. Idempotence in this mode comes from the
-  * `_graft_band_bin` marker already present in a rewritten condition.
+  * Keyed band joins (equi key + band) stay on the key's hash join: on
+  * near-unique keys (ordinary FK joins) per-key groups are already
+  * tiny and the 2× probe inflation would be pure overhead; callers
+  * with few heavy keys bin by hand (`api.Joins.rangeJoin`).
   */
 object BandJoinBinning extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -211,13 +204,8 @@ object BandJoinBinning extends Rule[LogicalPlan] with PredicateHelper {
     case j @ Join(left, right, Inner, Some(cond), hint)
         if !left.isStreaming && !right.isStreaming =>
       val conjuncts = splitConjunctivePredicates(cond)
-      val alreadyBinned = cond.references.exists(_.name.startsWith("_graft_band_bin"))
-      val keyedOptIn = conf
-        .getConfString("spark.graft.bandJoinBinning.keyedJoins", "false").toBoolean
-      val skip = alreadyBinned ||
-        (conjuncts.exists(isEquiAcross(_, left, right)) && !keyedOptIn)
       val band =
-        if (skip) None
+        if (conjuncts.exists(isEquiAcross(_, left, right))) None
         else finiteBand(conjuncts.flatMap(toBound(_, left, right)))
       band match {
         case None => j
@@ -240,12 +228,8 @@ object BandJoinBinning extends Rule[LogicalPlan] with PredicateHelper {
           if (lo == hi) {
             // zero-width band is an equality: x = y + lo, no explode.
             // Decimal comparison keeps the ±2^63 safety of the bin path.
-            // The semanticEquals guard is the idempotence marker here:
-            // under the keyed opt-in the conjunct survives the rewrite
-            // and must not be re-added on the next fixed-point pass.
             val eq = EqualTo(Cast(x, d38), Add(Cast(y, d38), decLit(lo)))
-            if (conjuncts.exists(_.semanticEquals(eq))) j
-            else Join(left, right, Inner, Some((eq +: conjuncts).reduce(And)), hint)
+            Join(left, right, Inner, Some((eq +: conjuncts).reduce(And)), hint)
           } else {
             // Probe-side selection: the exploded (probe) side pays a 2×
             // row inflation, so it should be the SMALLER input — a huge

@@ -346,3 +346,34 @@ object TlsReportParser {
     }
   }
 }
+
+/** One report of any family, as [[ReportParser.parse]] recognised it. */
+sealed trait ParsedReport {
+  /** Family name in intake metrics and landed file names. */
+  def family: String
+}
+final case class ParsedAggregate(r: AggregateReport) extends ParsedReport {
+  def family: String = "aggregate"
+}
+final case class ParsedForensic(r: ForensicReport) extends ParsedReport {
+  def family: String = "forensic"
+}
+final case class ParsedTls(r: TlsReport) extends ParsedReport {
+  def family: String = "smtp_tls"
+}
+
+/** Report-family auto-detection shared by every intake (parser.go
+  * ParseData, main.go:parseAndWriteOutput): aggregate first, then
+  * forensic, then SMTP TLS; the Left joins all three parsers' errors.
+  */
+object ReportParser {
+  def parse(data: Array[Byte]): Either[String, ParsedReport] =
+    AggregateXmlParser.parseAny(data).map(ParsedAggregate(_): ParsedReport)
+      .left.flatMap { aggErr =>
+        ForensicParser.parse(data).map(ParsedForensic(_): ParsedReport)
+          .left.flatMap { forErr =>
+            TlsReportParser.parseAny(data).map(ParsedTls(_): ParsedReport)
+              .left.map(tlsErr => s"aggregate: $aggErr; forensic: $forErr; smtp_tls: $tlsErr")
+          }
+      }
+}

@@ -108,18 +108,6 @@ final class HttpIntake(cfg: HttpConfig, dropDir: String,
     }
   }
 
-  /** The parser.ParseData contract: auto-detect and parse with the same
-    * parser chain every other intake uses; Left(reason) on failure.
-    */
-  private def parseData(body: Array[Byte]): Either[String, String] =
-    AggregateXmlParser.parseAny(body).map(_ => "aggregate").left.flatMap { aggErr =>
-      ForensicParser.parse(body).map(_ => "forensic").left.flatMap { forErr =>
-        TlsReportParser.parseAny(body).map(_ => "smtp_tls").left.map { tlsErr =>
-          s"aggregate: $aggErr; forensic: $forErr; smtp_tls: $tlsErr"
-        }
-      }
-    }
-
   private def sha(b: Array[Byte]): String =
     MessageDigest.getInstance("SHA-256").digest(b).take(12).map("%02x".format(_)).mkString
 
@@ -174,7 +162,7 @@ final class HttpIntake(cfg: HttpConfig, dropDir: String,
       return
     }
     val tpe = detectReportType(body, ct)
-    parseData(body) match {
+    ReportParser.parse(body).map(_.family) match {
       case Left(err) =>
         failedMetric(tpe, "parse_failed")
         respond(x, 400, s"""{"error":"Failed to parse DMARC report","details":"${err.replace("\"", "'").take(200)}"}""")

@@ -185,12 +185,7 @@ object ReportValidator {
     */
   def validateDirectory(spark: SparkSession, path: String, glob: String = "*"): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .option("recursiveFileLookup", "true")
-      .load(path)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
+    DmarcReader.files(spark, path, glob).as[(String, Array[Byte])]
       .map { case (p, bytes) =>
         val (family, r) = validateAny(bytes)
         (p, family, r.valid, r.errors, r.warnings)

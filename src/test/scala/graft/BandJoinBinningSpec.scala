@@ -137,30 +137,6 @@ class BandJoinBinningSpec extends SparkSpec {
     assert(!p.contains("_graft_band_bin"), p)
   }
 
-  test("keyed band joins rewrite only under the opt-in conf") {
-    import spark.implicits._
-    // one hot key: per-key quadratic without the bin
-    val a = (0L until 40L).map(i => (1L, i * 10L)).toDF("k", "a_us")
-    val b = (0L until 40L).map(i => (1L, i * 10L + 5L)).toDF("k", "b_us")
-    val condExpr = "k = bk AND abs(a_us - b_us) <= 25"
-    val bb = b.withColumnRenamed("k", "bk")
-    val brute = (for (x <- 0L until 40L; y <- 0L until 40L
-                      if math.abs(x * 10L - (y * 10L + 5L)) <= 25L) yield 1).size
-
-    // default: equi key present → untouched
-    val plain = a.join(bb, expr(condExpr))
-    assert(!plain.queryExecution.executedPlan.toString.contains("_graft_band_bin"))
-    assert(plain.count() == brute)
-
-    spark.conf.set("spark.graft.bandJoinBinning.keyedJoins", "true")
-    try {
-      val binned = a.join(bb, expr(condExpr))
-      val p = binned.queryExecution.executedPlan.toString
-      assert(p.contains("_graft_band_bin"), p)
-      assert(binned.count() == brute)
-    } finally spark.conf.unset("spark.graft.bandJoinBinning.keyedJoins")
-  }
-
   test("bins survive spark.sql.decimalOperations.allowPrecisionLoss=false") {
     // a decimal Divide would type as DECIMAL(38,38) under this conf and
     // overflow every |bin| >= 1; the IntegralDivide path must not care
@@ -186,19 +162,16 @@ class BandJoinBinningSpec extends SparkSpec {
     assert(got == (for (x <- as; y <- bs if x - y == 5) yield (x, y)).sorted)
   }
 
-  test("keyed opt-in does not re-bin rangeJoin's already-binned join") {
+  test("rangeJoin's binned join is not re-binned by the rule") {
     import spark.implicits._
     val a = Seq((1L, 10L), (1L, 250L)).toDF("user_id", "a_us")
     val b = Seq((1L, 20L), (1L, 500L)).toDF("user_id", "b_us")
-    spark.conf.set("spark.graft.bandJoinBinning.keyedJoins", "true")
-    try {
-      val joined = graft.api.Joins.rangeJoin(a, b, "user_id", "a_us", "b_us", 100L)
-      val p = joined.queryExecution.optimizedPlan.toString
-      // rangeJoin's own bin is _graft_band_bin_rj; a re-bin by the rule
-      // would introduce the bare _graft_band_bin attribute
-      assert(!p.contains("_graft_band_bin#"), p)
-      assert(joined.count() == 1) // only (10, 20) is in band
-    } finally spark.conf.unset("spark.graft.bandJoinBinning.keyedJoins")
+    val joined = graft.api.Joins.rangeJoin(a, b, "user_id", "a_us", "b_us", 100L)
+    val p = joined.queryExecution.optimizedPlan.toString
+    // rangeJoin's own bin is _graft_band_bin_rj; a re-bin by the rule
+    // would introduce the bare _graft_band_bin attribute
+    assert(!p.contains("_graft_band_bin#"), p)
+    assert(joined.count() == 1) // only (10, 20) is in band
   }
 
   test("the smaller input carries the probe-side explode, either way round") {

@@ -60,20 +60,16 @@ class CrawlFrontierSpec extends SparkSpec {
   }
 
   test("SKEWED hosts (one host ~60% of urls): heap still equals the window rank") {
-    // the adversarial shape the bounded heap exists for — the
-    // spark.graft.frontier.skewHost arm the scale sweep measures as
-    // t_crawl_frontier_skew
-    spark.conf.set("spark.graft.frontier.skewHost", "true")
-    val skewed =
-      try SparkEntry.queries("t_crawl_frontier")(spark, sfDir).cache()
-      finally spark.conf.unset("spark.graft.frontier.skewHost")
+    // the adversarial shape the bounded heap exists for: every even
+    // doc lands on host 0
     val d = Tables(spark, sfDir).documents
+    val host = when(pmod(col("doc_id"), lit(2L)) === 0L, lit(0L))
+      .otherwise(pmod(col("doc_id"), lit(5L)))
+    val skewed = graft.operators.TextAnalysis.crawlFrontier(d, host).cache()
     val urls = graft.operators.TextAnalysis.sitemapUrls(d).filter(!col("is_index"))
     val robots = graft.operators.TextAnalysis
       .robotsDecisions(d.select(col("doc_id")))
       .filter(col("allowed")).select(col("doc_id"), col("crawl_delay"))
-    val host = when(pmod(col("doc_id"), lit(2L)) === 0L, lit(0L))
-      .otherwise(pmod(col("doc_id"), lit(5L)))
     val w = Window.partitionBy(host)
       .orderBy(col("priority").desc, col("doc_id") * 8 + col("entry_i"))
     val viaWindow = urls.join(robots, "doc_id")

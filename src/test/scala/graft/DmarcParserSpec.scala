@@ -83,6 +83,17 @@ class DmarcParserSpec extends AnyFunSuite {
     assert(parsed.count(_.isRight) >= 11)
   }
 
+  test("ReportParser: aggregate, forensic, smtp_tls in order; Left names all three") {
+    def family(s: String) = ReportParser.parse(s.getBytes("UTF-8")).map(_.family)
+    assert(family(minimalXml) == Right("aggregate"))
+    assert(family("Subject: s\n\nFeedback-Type: auth-failure\nSource-IP: 1.1.1.1\n") ==
+      Right("forensic"))
+    assert(family("""{"organization-name": "o"}""") == Right("smtp_tls"))
+    val err = family("not a report").left.toOption.get
+    assert(err.startsWith("aggregate: ") && err.contains("; forensic: ") &&
+      err.contains("; smtp_tls: "), err)
+  }
+
   test("forensic: field map + defaults per parser.go:1563-1694") {
     val fb =
       """Feedback-Type: auth-failure

@@ -173,6 +173,19 @@ class GraftCliSpec extends AnyFunSuite {
     assert(err.toString("UTF-8").contains("unable to parse data as any supported report type"))
   }
 
+  test("an unparseable file warns with the CLI prefix and every family's error") {
+    val dir = Files.createTempDirectory("cli-junk")
+    val junk = Files.write(dir.resolve("junk.bin"), "not a report".getBytes("UTF-8"))
+    val err = new ByteArrayOutputStream()
+    try {
+      val (ok, failed) = processInput(dir, new StreamJsonSink(new java.lang.StringBuilder),
+        new PrintStream(err, true, "UTF-8"))
+      assert(ok == 0 && failed == 1)
+      assert(err.toString("UTF-8").contains(
+        "unable to parse data as any supported report type. Details: aggregate: "))
+    } finally { Files.delete(junk); Files.delete(dir) }
+  }
+
   // ------------------------------------------------------ file append
   test("append-file sink: two runs append like the reference's O_APPEND") {
     val f = Files.createTempFile("cli-out", ".json")
@@ -277,7 +290,7 @@ class GraftCliSpec extends AnyFunSuite {
         hosts = Seq(s"127.0.0.1:${broker.port}"), aggregateTopic = "")
       val sender = new KafkaReportSender(settings)
       val bytes = Files.readAllBytes(Paths.get(s"$Samples/aggregate/empty_reason.xml"))
-      sender.send(parseAny(bytes).toOption.get)
+      sender.send(graft.sources.ReportParser.parse(bytes).toOption.get)
       sender.close()
       // nothing produced: the broker never saw the topic at all
       val e = intercept[java.io.IOException] {
