@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.operators.Bounded
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,16 +23,19 @@ object DedupPipeline {
     * r16 small-graph fast path: the pair list every caller hands in is
     * an already-materialized near-dup pair frame that is tiny relative
     * to its corpus (pairs are the dedup family's REDUCTION; the house
-    * pipelines checkpoint it before clustering). Under the 4M-edge
-    * bound — the same explicit bounded-collect discipline as the
-    * k-means centroid pull and the quality-model weight pull, ~64 MB
-    * of longs against the 8 GiB driver — an exact driver union-find
+    * pipelines checkpoint it before clustering). Within [[Bounded.Rows]]
+    * edges an exact driver union-find
     * computes the components in one collect instead of ~3 propagation
     * iterations × (join + aggregate + checkpoint + convergence scan)
     * distributed jobs. The result is the EXACT transitive closure
     * (identical to the recursive-CTE oracle; the iterative path is
     * equivalent only once converged). Past the bound, the distributed
     * min-label propagation below is the 100 TB path, unchanged.
+    *
+    * Integral `doc_a`/`doc_b` come back as a `(doc_id: long,
+    * cluster_id: long)` frame, and a null id in either column fails
+    * with an IllegalArgumentException on both paths. Other id types
+    * take the distributed path and keep their type.
     */
   def clusters(pairs: DataFrame, maxIters: Int = 10): DataFrame = {
     val spark = pairs.sparkSession
@@ -48,28 +52,19 @@ object DedupPipeline {
         case _ => false
       })
     if (!integralIds) return clustersDistributed(pairs, maxIters)
-    // Single-derivation contract (r17): clusters() runs two actions on
-    // the pair frame (the bounded-decision count, then the collect or
-    // the propagation). Every house caller hands in an
-    // already-checkpointed pair list, but the public API did not
-    // enforce that — an un-materialized caller (e.g. a lazy
-    // union().distinct() of two pair arms) re-ran its whole pair
-    // derivation per action. Materialize the 2-long-column projection
-    // once unless the input is already a leaf; ClustersSpec pins the
-    // one-evaluation property.
-    val projected = pairs.select(col("doc_a").cast("long").as("doc_a"),
-      col("doc_b").cast("long").as("doc_b"))
-    val edges =
-      if (pairs.queryExecution.optimizedPlan
-            .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LeafNode]) projected
-      // lazy: the bound count below materializes the checkpoint in the
-      // same job (first action on a checkpoint-marked RDD)
-      else projected.localCheckpoint(false)
-    val edgePairs = edges.as[(Long, Long)]
-    // the count is a scan of the materialized pair list — a
-    // bounded-decision action, not a recompute
-    if (edgePairs.count() <= 4L * 1000 * 1000) {
-      val es = edgePairs.collect()
+    // Single-derivation contract (r17): the deciding aggregate
+    // materializes the 2-long-column projection that the collect or the
+    // propagation then reads. It also counts null ids, which the fast
+    // path's (Long, Long) decode could not carry.
+    val (edges, m) = Bounded.measure(
+      pairs.select(col("doc_a").cast("long").as("doc_a"), col("doc_b").cast("long").as("doc_b")),
+      count(lit(1)), count(col("doc_a")), count(col("doc_b")))
+    val n = m.getLong(0)
+    for ((c, i) <- Seq("doc_a" -> 1, "doc_b" -> 2); nulls = n - m.getLong(i))
+      require(nulls == 0, s"DedupPipeline.clusters: $nulls pair rows have a null $c; " +
+        "drop or resolve them before clustering")
+    if (n <= Bounded.Rows) {
+      val es = edges.as[(Long, Long)].collect()
       // Primitive union-find (r17, advisor finding): the old
       // java.util.HashMap[Long, Long] held up to 8M BOXED entries
       // (~0.5-1 GB real footprint at the bound) on the 8 GiB driver.
@@ -226,17 +221,13 @@ object DedupPipeline {
   def dedupKeepBestBy(corpus: DataFrame, pairs: DataFrame, source: DataFrame,
                       qualityExpr: org.apache.spark.sql.Column,
                       idCol: String = "doc_id"): DataFrame = {
-    val cl = clusters(pairs)
-    // cl is localCheckpointed by construction — the count is a bounded
-    // broadcast decision (16M rows ≈ the 8 GiB-driver-safe hashed
-    // relation, the Dedup.contaminatedPositions house bound), not a
-    // recompute
+    val cl = Bounded(clusters(pairs), Bounded.IdRows)
     val restricted =
-      if (cl.count() <= 16L * 1000 * 1000)
-        source.join(broadcast(cl.select(col("doc_id").as(idCol))),
+      if (cl.fits)
+        source.join(broadcast(cl.frame.select(col("doc_id").as(idCol))),
           Seq(idCol), "left_semi")
       else source
-    dedupKeepBestOn(corpus, cl,
+    dedupKeepBestOn(corpus, cl.frame,
       restricted.select(col(idCol), qualityExpr.as("quality")), idCol)
   }
 }

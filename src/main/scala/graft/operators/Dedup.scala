@@ -474,7 +474,7 @@ object Dedup extends QueryModule {
     // ignore, so both branches yield identical pairs (measured at
     // 1000×: skipping it cost 1.35× wall time and ~36 GB of spill).
     val relevant =
-      (if (nProbes * maxShingles <= 4L * 1000 * 1000) {
+      (if (nProbes * maxShingles <= Bounded.Rows) {
         val probeGramHashes = probeSh.select(explode(col("sh")).as("pg"))
           .select(xxhash64(col("pg")).as("gh")).distinct()
         exploded.withColumn("gh", xxhash64(col("g")))
@@ -517,15 +517,10 @@ object Dedup extends QueryModule {
     // exact residual — only A's HOT (capped) grams are uncounted, and
     // only for probes that lost grams to the cap at all: membership-
     // check those few (pair, gram) rows against the corpus slice of
-    // the plausible doc_bs. That slice restriction is a broadcast
-    // semi (the corpus never shuffles) ONLY while the plausible
-    // doc_b set is bounded — the same guard as the probe-gram
-    // broadcast above: a pathological corpus where most plausible
-    // pairs involve capped probe grams would otherwise push a
-    // corpus-scale doc_b set through a broadcast, so past the bound
-    // the restriction falls back to a shuffle semi join. For the
-    // common fully-uncapped probe, c_hot is null and c_capped
-    // already IS |A∩B|.
+    // the plausible doc_bs, restricted by a [[Bounded]] semi join: on a
+    // pathological corpus where most plausible pairs involve capped
+    // probe grams that doc_b set is corpus-scale. For the common
+    // fully-uncapped probe, c_hot is null and c_capped already IS |A∩B|.
     val hotPairs = plausible.filter(col("a_capped") < col("nsh"))
     // r16: on a healthy corpus NO probe loses grams to the cap, and
     // the whole residual chain (hotB checkpoint + bounded count + the
@@ -541,12 +536,7 @@ object Dedup extends QueryModule {
       val hotA = probeSh
         .select(col("doc_id").as("doc_a"), explode(col("sh")).as("g"))
         .join(probes, Seq("doc_a", "g"), "left_anti")
-      // checkpointed before the count so the distinct aggregate runs
-      // once (the count for the broadcast decision + the semi-join
-      // input would otherwise each execute it); bounded by the
-      // plausible pair list it derives from
-      val hotB = hotPairs.select("doc_b").distinct().localCheckpoint(false)
-      val hotBBounded = hotB.count() <= 4L * 1000 * 1000
+      val hotB = Bounded(hotPairs.select("doc_b").distinct(), Bounded.Rows)
       // NOTE (r16): tried reading this slice from the `relevant`
       // checkpoint instead of re-deriving the explode — measured 3.3 →
       // 10.4 s at sf0.1 and reverted: the doc_id semi join below pushes
@@ -554,7 +544,7 @@ object Dedup extends QueryModule {
       // only ever shingles the (tiny) hotB doc set, while a checkpoint
       // read scans every probe-relevant gram of every doc.
       val bGramsHot = exploded.select(col("doc_id").as("doc_b"), col("g"))
-        .join(if (hotBBounded) broadcast(hotB) else hotB, Seq("doc_b"), "left_semi")
+        .join(hotB.build, Seq("doc_b"), "left_semi")
       val hotShared = hotPairs.select("doc_a", "doc_b")
         .join(hotA, "doc_a")
         .join(bGramsHot, Seq("doc_b", "g"), "left_semi")
@@ -645,7 +635,7 @@ object Dedup extends QueryModule {
     * shuffles while the slice is bounded) for the exact confirm group
     * (collisions die there, so the output is EXACT and hash-free; the
     * d_bloom_prefilter discipline). The duplicated-hash
-    * set broadcasts under the shared 4M bound and falls back to a
+    * set broadcasts under [[Bounded.Rows]] and falls back to a
     * shuffle semi join past it. Span merging and text rebuild are
     * doc-local: a sorted position list folds left in one `aggregate`
     * lambda (positions ascend, so the merged cut-end only ever moves
@@ -671,24 +661,19 @@ object Dedup extends QueryModule {
   private[graft] def cutMarkedSpans(docs: DataFrame, marked: DataFrame, L: Int): DataFrame = {
     // per-doc position list is bounded by document length — the same
     // doc-local state class as lineDedup's reassembly
-    val spans = marked.groupBy("doc_id").agg(sort_array(collect_list(col("pos"))).as("ps"))
-      .localCheckpoint(false) // materialized by the bound aggregate below
-    // explicit bounded-broadcast decision (candPos' discipline, same 4M
-    // bound): the span-list side is bounded by duplication/contamination
-    // volume, not corpus size — while bounded it broadcasts, so the
-    // corpus TEXT never sorts or shuffles for the rebuild; past the
-    // bound the shuffle hash join is still span-proportional. Without
-    // the hint, stale auto-broadcast stats would ship the corpus text
-    // through an exchange for a join whose right side is KB-sized.
-    // The bound counts TOTAL marked positions (the true broadcast
-    // volume), not grouped rows: each spans row carries a per-doc
-    // position array bounded only by doc length, so a ≤4M-ROW table
-    // could still be multi-GB — the row-count-vs-bytes trap the
-    // 20M-hash broadcast measurement hit.
-    val totRow = spans.agg(sum(size(col("ps")))).head()
-    val spansBounded =
-      totRow.isNullAt(0) || totRow.getLong(0) <= 4L * 1000 * 1000
-    docs.join(if (spansBounded) broadcast(spans) else spans, Seq("doc_id"), "left")
+    // the span-list side is bounded by duplication/contamination volume,
+    // not corpus size — while it broadcasts, the corpus TEXT never sorts
+    // or shuffles for the rebuild; past the bound the shuffle hash join
+    // is still span-proportional. Without the hint, stale auto-broadcast
+    // stats would ship the corpus text through an exchange for a join
+    // whose right side is KB-sized. The measure is TOTAL marked
+    // positions (the true broadcast volume), not grouped rows: each row
+    // carries a per-doc position array bounded only by doc length, so a
+    // table within the row bound could still be multi-GB.
+    val spans = Bounded(
+      marked.groupBy("doc_id").agg(sort_array(collect_list(col("pos"))).as("ps")),
+      Bounded.Rows, sum(size(col("ps"))))
+    docs.join(spans.build, Seq("doc_id"), "left")
       .withColumn("kept", when(col("ps").isNull, col("text")).otherwise(expr(
         s"""aggregate(ps,
            |  named_struct('e', 0, 'acc', ''),
@@ -715,23 +700,18 @@ object Dedup extends QueryModule {
     val hashed = docs.filter(length(col("text")) >= L)
       .select(col("doc_id"),
         posexplode(expr(s"rolling_gram_hash(text, $L)")).as(Seq("pos", "gh")))
-    // checkpointed: read by the broadcast-bound decision AND the semi
-    // join; the set is bounded by duplication volume, not corpus size
-    val dupH = hashed.groupBy("gh").agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2).select("gh").localCheckpoint(false)
-    val dupHBounded = dupH.count() <= 4L * 1000 * 1000
-    // candidate POSITIONS only (two numbers a row); checkpointed for
-    // the broadcast decision + the text join below
-    val candPos = hashed
-      .join(if (dupHBounded) broadcast(dupH) else dupH, Seq("gh"), "left_semi")
-      .select("doc_id", "pos").localCheckpoint(false)
-    val candPosBounded = candPos.count() <= 4L * 1000 * 1000
+    // the duplicated-hash set is bounded by duplication volume, not
+    // corpus size
+    val dupH = Bounded(hashed.groupBy("gh").agg(count(lit(1)).as("c"))
+      .filter(col("c") >= 2).select("gh"), Bounded.Rows)
+    // candidate POSITIONS only (two numbers a row)
+    val candPos = Bounded(hashed.join(dupH.build, Seq("gh"), "left_semi")
+      .select("doc_id", "pos"), Bounded.Rows)
     // re-derive actual grams ONLY for the duplicated slice; while the
-    // slice is bounded it broadcasts, so the corpus text never shuffles
-    // (past the bound: shuffle hash join, still slice-proportional
-    // output)
+    // slice broadcasts, the corpus text never shuffles (past the bound:
+    // shuffle hash join, still slice-proportional output)
     val cand = docs.select(col("doc_id"), col("text"))
-      .join(if (candPosBounded) broadcast(candPos) else candPos, Seq("doc_id"))
+      .join(candPos.build, Seq("doc_id"))
       .select(col("doc_id"), col("pos"),
         expr(s"substring(text, pos + 1, $L)").as("gram"))
       .localCheckpoint(true)
@@ -808,64 +788,50 @@ object Dedup extends QueryModule {
     * there; no false negatives by construction, the d_bloom_prefilter
     * discipline). The eval side is tiny by NATURE (benchmarks, not
     * corpora) but nothing here falls over if it isn't: every broadcast
-    * is an explicit bounded decision with a shuffle fallback — the
-    * HASH set rides a wider 16M-row bound (8 B/row fixed width — a
-    * ~400 MB hashed relation, which the DEFAULT 8 GiB single-JVM driver
-    * can host alongside a composite pipeline's checkpoint blocks;
-    * measured: a ~20M-hash build inside prepareWeb's decontam arm blew
-    * the 8 GiB broadcast build, a ~12M one did not — keeping the
-    * corpus-wide marking pass map-side is worth 4× more broadcast rows
-    * than a 40-char string set), the
-    * gram STRING set and the candidate-position slice share the 4M-row
-    * bound the rest of the dedup family uses. While the bounds hold,
+    * is a [[Bounded]] decision with a shuffle fallback — the
+    * fixed-width HASH set rides the wider [[Bounded.IdRows]] (keeping
+    * the corpus-wide marking pass map-side is worth 4× more broadcast
+    * rows than a 40-char string set), the gram STRING set and the
+    * candidate-position slice [[Bounded.Rows]]. While the bounds hold,
     * the corpus text never shuffles.
     */
   private[graft] def contaminatedPositions(docs: DataFrame, evalDocs: DataFrame,
                                            L: Int = 40): DataFrame = {
-    // checkpointed: read by the hash derivation AND the exact confirm
-    val evalGrams = evalDocs.filter(length(col("text")) >= L)
-      .select(explode(expr(strideGramArrayExpr(L))).as("gram")).distinct()
-      .localCheckpoint(false) // materialized by the bound count (one job)
-    val evalGramsBounded = evalGrams.count() <= 4L * 1000 * 1000
+    // materialized: read by the hash derivation AND the exact confirm
+    val evalGrams = Bounded(evalDocs.filter(length(col("text")) >= L)
+      .select(explode(expr(strideGramArrayExpr(L))).as("gram")).distinct(), Bounded.Rows)
     // each eval gram is exactly L code points, so the kernel emits
     // exactly one hash per gram — the same polynomial the corpus-side
     // windows hash to, so equal grams meet in the semi join
-    val evalH = evalGrams
+    val evalH = Bounded(evalGrams.frame
       .select(expr(s"element_at(rolling_gram_hash(gram, $L), 1)").as("gh"))
-      .distinct().localCheckpoint(false)
-    val evalHBounded = evalH.count() <= 16L * 1000 * 1000
-    val candPos = docs.filter(length(col("text")) >= L)
+      .distinct(), Bounded.IdRows)
+    val candPos = Bounded(docs.filter(length(col("text")) >= L)
       .select(col("doc_id"),
         posexplode(expr(s"rolling_gram_hash(text, $L)")).as(Seq("pos", "gh")))
-      .join(if (evalHBounded) broadcast(evalH) else evalH, Seq("gh"), "left_semi")
-      .select("doc_id", "pos").localCheckpoint(false)
-    val candPosBounded = candPos.count() <= 4L * 1000 * 1000
+      .join(evalH.build, Seq("gh"), "left_semi")
+      .select("doc_id", "pos"), Bounded.Rows)
     // confirm source: while candPos broadcasts, the corpus text never
     // moves. Past the bound the inner join's shuffle arm would
     // hash-partition the ENTIRE text relation to meet a
     // contamination-proportional position list — so restrict the text
     // to contaminated docs FIRST via their DISTINCT doc_id set (orders
-    // smaller than the position list; fixed-width ids ride the same
-    // 16M bound as the hash set). The shuffled text is then
+    // smaller than the position list). The shuffled text is then
     // contaminated-docs-only, and the semi→inner composition is
     // row-identical to the plain inner join.
     val confirmSrc =
-      if (candPosBounded)
-        docs.select(col("doc_id"), col("text"))
-          .join(broadcast(candPos), Seq("doc_id"))
+      if (candPos.fits)
+        docs.select(col("doc_id"), col("text")).join(candPos.build, Seq("doc_id"))
       else {
-        val candIds = candPos.select("doc_id").distinct().localCheckpoint(false)
-        val candIdsBounded = candIds.count() <= 16L * 1000 * 1000
+        val candIds = Bounded(candPos.frame.select("doc_id").distinct(), Bounded.IdRows)
         docs.select(col("doc_id"), col("text"))
-          .join(if (candIdsBounded) broadcast(candIds) else candIds,
-            Seq("doc_id"), "left_semi")
-          .join(candPos, Seq("doc_id"))
+          .join(candIds.build, Seq("doc_id"), "left_semi")
+          .join(candPos.frame, Seq("doc_id"))
       }
     confirmSrc
       .select(col("doc_id"), col("pos"),
         expr(s"substring(text, pos + 1, $L)").as("gram"))
-      .join(if (evalGramsBounded) broadcast(evalGrams) else evalGrams,
-        Seq("gram"), "left_semi")
+      .join(evalGrams.build, Seq("gram"), "left_semi")
       .select("doc_id", "pos")
   }
 
@@ -1081,12 +1047,12 @@ object Dedup extends QueryModule {
       "d_keep_best",
       (s, dir) => {
         val docs = Tables(s, dir).documents
-        val cl = graft.api.DedupPipeline.clusters(minhashLsh(docs))
+        val cl = Bounded(graft.api.DedupPipeline.clusters(minhashLsh(docs)), Bounded.IdRows)
         val src =
-          if (cl.count() <= 16L * 1000 * 1000)
-            docs.join(broadcast(cl.select(col("doc_id"))), Seq("doc_id"), "left_semi")
+          if (cl.fits)
+            docs.join(broadcast(cl.frame.select(col("doc_id"))), Seq("doc_id"), "left_semi")
           else docs
-        keepBest(cl, src.select(col("doc_id"), TextAnalysis.qualityCol.as("quality")))
+        keepBest(cl.frame, src.select(col("doc_id"), TextAnalysis.qualityCol.as("quality")))
           .orderBy("cluster_id")
       },
       Some {

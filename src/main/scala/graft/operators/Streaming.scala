@@ -14,26 +14,21 @@ object Streaming extends QueryModule {
 
   /** The eval/benchmark stride-1 gram set pulled to the driver for the
     * streaming decontamination kernels (scrub + drop) — an EXPLICIT
-    * bounded decision (r17, the house discipline every other
-    * driver-side pull carries): the stateless per-partition kernel
+    * bounded decision (r17): the stateless per-partition kernel
     * consumes a Scala set riding the closure, so there is no
-    * distributed fallback — past the 4M-gram bound (the dedup family's
-    * string-gram broadcast tier, Dedup.contaminatedPositions) the pull
-    * REFUSES loudly instead of silently OOMing the 8 GiB driver. Eval
-    * sets are benchmarks, not corpora, so the bound is generous; a
+    * distributed fallback — past [[Bounded.Rows]] grams the pull
+    * REFUSES loudly instead of silently OOMing the driver. Eval sets
+    * are benchmarks, not corpora, so the bound is generous; a
     * genuinely larger eval set belongs on the batch anti-join path.
-    * The distinct frame is checkpointed once so the bound count and
-    * the collect read one materialization.
     */
   private def evalGramSet(d: org.apache.spark.sql.DataFrame): Set[String] = {
     import d.sparkSession.implicits._
-    val grams = d.filter(col("doc_id") % 97 === 0)
+    val (grams, m) = Bounded.measure(d.filter(col("doc_id") % 97 === 0)
       .filter(length(col("text")) >= 40)
       .select(explode(expr(graft.operators.Dedup.strideGramArrayExpr(40))).as("gram"))
-      // lazy: the bound count materializes the checkpoint in one job
-      .distinct().localCheckpoint(false)
-    val n = grams.count()
-    require(n <= 4L * 1000 * 1000,
+      .distinct(), count(lit(1)))
+    val n = m.getLong(0)
+    require(n <= Bounded.Rows,
       s"eval gram set ($n grams) exceeds the 4M driver-set bound " +
         "(SCALE.md: streaming decontamination) — scrub on the batch path")
     grams.as[String].collect().toSet

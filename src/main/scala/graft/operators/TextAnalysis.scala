@@ -770,8 +770,8 @@ object TextAnalysis extends QueryModule {
     // corpus-sized shuffle for a lookup against a vocabulary-sized
     // table). The unigram table now materializes once (it also feeds
     // the n_total aggregate, which previously re-ran its whole
-    // aggregation subtree) and, under the house 16M-row broadcast
-    // bound, ships to the scan as a broadcast hash join: the token
+    // aggregation subtree) and, within its rows-and-bytes bound, ships
+    // to the scan as a broadcast hash join: the token
     // stream never shuffles, and the per-doc sum's map-side partial
     // aggregation sends only (doc_id, partial) onward. Past the bound
     // the original shuffle join is the fallback. The tokenize pass is
@@ -779,24 +779,11 @@ object TextAnalysis extends QueryModule {
     val toks = Par.widen(docs.select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
-    val freq = toks.groupBy("term").agg(count(lit(1)).as("c"))
-      // lazy: the bytes-bound aggregate below materializes it (one job)
-      .localCheckpoint(false)
-    // bytes-estimated broadcast bound (r17, advisor finding): freq rows
-    // carry term STRINGS, so the 16M-ROW bound its long-only Dedup
-    // precedents use would admit a multi-GB hashed relation into the
-    // single 8 GiB JVM on a long-tailed vocabulary. Estimate the built
-    // relation (~48 B/row of hash-table + row overhead, 2 B/char
-    // UTF-16) from one cheap aggregate over the checkpoint leaf —
-    // replacing the old count() action, not adding one — and bound at
-    // 512 MB alongside the row cap. Plan-only decision: past either
-    // bound the shuffle join computes the identical rows.
-    val fs = freq.agg(count(lit(1)).as("n"), sum(length(col("term"))).as("chars")).head()
-    val freqRows = fs.getLong(0)
-    val freqChars = if (fs.isNullAt(1)) 0L else fs.getLong(1)
-    val freqBounded = freqRows <= 16L * 1000 * 1000 &&
-      freqRows * 48L + freqChars * 2L <= 512L * 1024 * 1024
-    val totalDf = freq.agg(sum(col("c")).as("n_total"))
+    // bytes-estimated bound (r17, advisor finding): freq rows carry
+    // term STRINGS, so a row bound alone would admit a multi-GB hashed
+    // relation on a long-tailed vocabulary
+    val freq = Bounded.withBytes(toks.groupBy("term").agg(count(lit(1)).as("c")), col("term"))
+    val totalDf = freq.frame.agg(sum(col("c")).as("n_total"))
     // eagerly materialized (r16): `scored` feeds the tercile-cuts
     // aggregate AND the final bucketed projection — without the cut the
     // whole tokenize + freq-join + per-doc aggregate chain executes
@@ -807,7 +794,7 @@ object TextAnalysis extends QueryModule {
     // corpus at doc cardinality, 3 narrow columns — the standard
     // doc-level materialization every dedup stage already pays. Lazy:
     // the cuts aggregate below is a full scan and materializes it.
-    val scored = toks.join(if (freqBounded) broadcast(freq) else freq, "term")
+    val scored = toks.join(freq.build, "term")
       .crossJoin(broadcast(totalDf))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"),
@@ -1290,8 +1277,8 @@ object TextAnalysis extends QueryModule {
     * rows sit verbatim in the training checkpoint — features are
     * per-doc deterministic and the survivor set is a subset of the
     * training corpus, so one id semi join replaces the whole second
-    * feature derivation. The semi join broadcasts under the house
-    * 16M-row id bound (`nScoreIds`, the caller's already-known stage
+    * feature derivation. The semi join broadcasts under
+    * [[Bounded.IdRows]] (`nScoreIds`, the caller's already-known stage
     * count) and shuffles past it. Same output contract as
     * qualityModelScores (round-6 sigmoid scores).
     */
@@ -1304,7 +1291,7 @@ object TextAnalysis extends QueryModule {
     val fl = qualityModelTrainingFrame(docs, labels)
     val w = fitQualityWeights(fl, docs, steps = 3, lr = QualityModelLr)
     val ids = scoreIds.select(col("doc_id"))
-    fl.join(if (nScoreIds >= 0 && nScoreIds <= 16L * 1000 * 1000) broadcast(ids) else ids,
+    fl.join(if (nScoreIds >= 0 && nScoreIds <= Bounded.IdRows) broadcast(ids) else ids,
         Seq("doc_id"), "left_semi")
       .join(broadcast(w.toSeq.toDF("b", "wv")), "b")
       .groupBy("doc_id").agg(sum(col("wv") * col("x")).as("m"))

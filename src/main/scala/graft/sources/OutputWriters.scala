@@ -18,14 +18,17 @@ object OutputWriters {
   private def first1(c: org.apache.spark.sql.Column) =
     coalesce(try_element_at(c, lit(1)), lit(""))
 
+  /** RFC 3339 UTC rendering of a timestamp column, as output.go writes it. */
+  private def rfc3339(c: org.apache.spark.sql.Column) =
+    date_format(c, "yyyy-MM-dd'T'HH:mm:ss'Z'")
+
   /** The aggregate CSV row layout of output.go:265-273 (first dkim/spf
     * auth result flattened, RFC 3339 dates, booleans as true/false).
     */
   def aggregateCsvLayout(records: Dataset[AggregateRecordRow], reports: Dataset[AggregateReport]): DataFrame = {
     val reps = reports.toDF().select(
       col("reportId").as("r_id"), col("orgEmail"),
-      date_format(col("beginDate"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("r_begin"),
-      date_format(col("endDate"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("r_end"),
+      rfc3339(col("beginDate")).as("r_begin"), rfc3339(col("endDate")).as("r_end"),
       col("domain"), col("adkim").as("policy_adkim"), col("aspf").as("policy_aspf"),
       col("p").as("policy_p"), col("sp").as("policy_sp"), col("pct").as("policy_pct"))
     records.toDF()
@@ -45,26 +48,13 @@ object OutputWriters {
         first1(col("spf_domains")).as("spf_domain"))
   }
 
-  /** Forensic CSV layout (output.go:334-398): RFC3339 arrival date,
-    * auth_failure ";"-joined, optional fields as empty strings.
+  /** Forensic CSV layout (output.go:334-398): the table layout's
+    * columns with an RFC3339 arrival date and auth_failure ";"-joined.
     */
   def forensicCsvLayout(forensic: Dataset[ForensicReport]): DataFrame =
-    forensic.toDF().select(
-      col("feedbackType").as("feedback_type"),
-      coalesce(col("userAgent"), lit("")).as("user_agent"),
-      coalesce(col("version"), lit("")).as("version"),
-      coalesce(col("originalEnvelopeId"), lit("")).as("original_envelope_id"),
-      coalesce(col("originalMailFrom"), lit("")).as("original_mail_from"),
-      coalesce(col("originalRcptTo"), lit("")).as("original_rcpt_to"),
-      date_format(col("arrivalDate"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("arrival_date"),
-      col("subject"), col("messageId").as("message_id"),
-      col("authenticationResults").as("authentication_results"),
-      coalesce(col("dkimDomain"), lit("")).as("dkim_domain"),
-      col("source.ipAddress").as("source_ip"),
-      col("source.country").as("source_country"),
-      col("deliveryResult").as("delivery_result"),
-      array_join(col("authFailure"), ";").as("auth_failure"),
-      col("reportedDomain").as("reported_domain"))
+    forensicTableLayout(forensic)
+      .withColumn("arrival_date", rfc3339(col("arrival_date")))
+      .withColumn("auth_failure", array_join(col("auth_failure"), ";"))
 
   /** SMTP TLS CSV layout (output.go:399-462): one row per policy, or one
     * per failure detail when present — exactly the reference's explode.
@@ -72,8 +62,7 @@ object OutputWriters {
   def tlsCsvLayout(reports: Dataset[TlsReport]): DataFrame = {
     val base = reports.toDF().select(
       col("organizationName").as("organization_name"),
-      date_format(col("beginDate"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("begin_date"),
-      date_format(col("endDate"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("end_date"),
+      rfc3339(col("beginDate")).as("begin_date"), rfc3339(col("endDate")).as("end_date"),
       col("contactInfo").as("contact_info"),
       col("reportId").as("report_id"),
       explode(col("policies")).as("policy"))
@@ -188,7 +177,8 @@ object OutputWriters {
       Seq("arrival_date", "source_ip"), path)
 
   /** The `dmarc_forensic_reports` column projection, exposed for the
-    * parquet writer above AND the ClickHouse HTTP output path.
+    * parquet writer above AND the ClickHouse HTTP output path; optional
+    * fields as empty strings.
     */
   def forensicTableLayout(forensic: Dataset[ForensicReport]): DataFrame =
     forensic.toDF().select(

@@ -29,6 +29,17 @@ class DedupPipelineSpec extends SparkSpec {
     assert(acc.value == 100, s"pair derivation ran ${acc.value / 100.0}x")
   }
 
+  test("clusters: a null id fails naming clusters and the column") {
+    import spark.implicits._
+    for ((pairs, c) <- Seq(
+        Seq((Some(1L), Some(2L)), (None, Some(3L))) -> "doc_a",
+        Seq((Some(1L), Some(2L)), (Some(2L), None)) -> "doc_b")) {
+      val e = intercept[IllegalArgumentException](
+        DedupPipeline.clusters(pairs.toDF("doc_a", "doc_b")))
+      assert(e.getMessage.contains("clusters") && e.getMessage.contains(s"null $c"), e.getMessage)
+    }
+  }
+
   test("clusters: string ids fall back to the distributed path instead of null-casting") {
     import spark.implicits._
     val pairs = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("doc_a", "doc_b")

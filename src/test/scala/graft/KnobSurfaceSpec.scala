@@ -28,6 +28,13 @@ class KnobSurfaceSpec extends AnyFunSuite {
     assert(confs.keySet == Set("spark.graft.pack.buckets"), confs)
   }
 
+  test("the bounded-broadcast limits are written only in Bounded.scala") {
+    // a new broadcast decision uses graft.operators.Bounded, not a
+    // fresh copy of a limit
+    val limits = found("((?:4|16)L \\* 1000 \\* 1000|512L \\* 1024 \\* 1024)")
+    assert(limits.values.flatten.toSet == Set("src/main/scala/graft/operators/Bounded.scala"), limits)
+  }
+
   test("environment variables read are exactly the allowlist") {
     // sys.env lookups, plus lookups on an `env` map defaulted to sys.env
     val vars = found("\\b(?:sys\\.)?env(?:\\.get|\\.getOrElse|\\.contains)?\\(\\s*\"([A-Z][A-Z0-9_]*)\"")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{DmarcReader, OutputWriters}
+import graft.sources.{DmarcReader, ForensicReport, OutputWriters, SourceInfo}
 import java.nio.file.Files
 
 class OutputWritersSpec extends SparkSpec {
@@ -30,6 +30,38 @@ class OutputWritersSpec extends SparkSpec {
       "message_id", "authentication_results", "dkim_domain", "source_ip",
       "source_country", "delivery_result", "auth_failure", "reported_domain"))
     assert(df.count() == 4)
+  }
+
+  test("forensic table and CSV layouts: same 16 columns; CSV formats the date and joins auth_failure") {
+    import spark.implicits._
+    val report = ForensicReport(
+      feedbackType = "auth-failure", userAgent = None, version = Some("1"),
+      originalEnvelopeId = None, originalMailFrom = Some("bounce@sender.example"),
+      originalRcptTo = None,
+      arrivalDate = java.sql.Timestamp.from(java.time.Instant.parse("2018-09-02T07:08:09Z")),
+      subject = "Invoice", messageId = "<m1@sender.example>",
+      authenticationResults = "dmarc=fail header.from=sender.example",
+      dkimDomain = None,
+      source = SourceInfo("192.0.2.1", "US", "mail.sender.example", "sender.example", "", ""),
+      deliveryResult = "reject", authFailure = Seq("dmarc", "spf"),
+      reportedDomain = "sender.example", authenticationMechanisms = Seq("dkim"),
+      sampleHeadersOnly = true, sample = "")
+    val forensic = Seq(report).toDS()
+    val columns = Seq(
+      "feedback_type", "user_agent", "version", "original_envelope_id",
+      "original_mail_from", "original_rcpt_to", "arrival_date", "subject",
+      "message_id", "authentication_results", "dkim_domain", "source_ip",
+      "source_country", "delivery_result", "auth_failure", "reported_domain")
+    val table = OutputWriters.forensicTableLayout(forensic)
+    val csv = OutputWriters.forensicCsvLayout(forensic)
+    assert(table.columns.toSeq == columns && csv.columns.toSeq == columns)
+    val shared = Seq("auth-failure", "", "1", "", "bounce@sender.example", "")
+    val tail = Seq("Invoice", "<m1@sender.example>", "dmarc=fail header.from=sender.example",
+      "", "192.0.2.1", "US", "reject")
+    assert(csv.collect().head.toSeq == (shared :+ "2018-09-02T07:08:09Z") ++ tail ++
+      Seq("dmarc;spf", "sender.example"))
+    assert(table.collect().head.toSeq == (shared :+ report.arrivalDate) ++ tail ++
+      Seq(Seq("dmarc", "spf"), "sender.example"))
   }
 
   test("tls CSV layout: one row per policy or per failure detail") {
