@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: headline queries (SURVEY §6) at the driver-selected
   * scale factor, one JSON line to stdout.
@@ -137,6 +139,10 @@ object Bench {
     // clean window exists. If no pass is clean, min falls back to all
     // samples and the artifact says so (steal_gated=false).
     val StealGatePct = 0.5
+    // Janino work over the timed passes: a warm pass whose generated
+    // classes fit GraftSession.CodegenCacheEntries compiles nothing
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val samples = Array.fill(Headline.size)(Vector.empty[Double])
     val passLoads = scala.collection.mutable.ArrayBuffer.empty[Double]
     val passCanaries = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -163,6 +169,8 @@ object Bench {
         (p < MaxPasses && (passLoads.exists(_ > maxLoad) ||
           passSteals.exists(_ > StealGatePct)))
     }
+    val codegenCompiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    val codegenCompileMs = f"${(CodeGenerator.compileTime - compileNs0) / 1e6}%.1f"
     val cleanStealPasses = passSteals.zipWithIndex.collect {
       case (s, i) if s >= 0 && s <= StealGatePct => i
     }.toSet
@@ -229,7 +237,7 @@ object Bench {
     val stealPct =
       if (total1 > total0) f"${100.0 * (steal1 - steal0) / (total1 - total0)}%.2f"
       else "-1"
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","window":"forced","legacy_total":$legacyTotal,"queries":$qs,"medians":$medians,"sf":"$sfDir","passes":$p,"pass_loads":"${passLoads.map(l => f"$l%.1f").mkString(",")}","pass_canary_sec":"${passCanaries.map(c => f"$c%.4f").mkString(",")}","pass_steal_pct":"${passSteals.map(s => f"$s%.2f").mkString(",")}","clean_passes":${cleanStealPasses.size},"clean_both_passes":${cleanBothPasses.size},"steal_gate_pct":$StealGatePct,"max_load":$maxLoad,"steal_gated":$stealGated,"load_gated":$loadGated,"min_pass":$minPass,"loadavg":"$loadAvg","cpus":$nCpu,"default_parallelism":$parallelism,"canary_sec":$canary,"steal_pct":$stealPct}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","window":"forced","legacy_total":$legacyTotal,"queries":$qs,"medians":$medians,"sf":"$sfDir","passes":$p,"pass_loads":"${passLoads.map(l => f"$l%.1f").mkString(",")}","pass_canary_sec":"${passCanaries.map(c => f"$c%.4f").mkString(",")}","pass_steal_pct":"${passSteals.map(s => f"$s%.2f").mkString(",")}","clean_passes":${cleanStealPasses.size},"clean_both_passes":${cleanBothPasses.size},"steal_gate_pct":$StealGatePct,"max_load":$maxLoad,"steal_gated":$stealGated,"load_gated":$loadGated,"min_pass":$minPass,"loadavg":"$loadAvg","cpus":$nCpu,"default_parallelism":$parallelism,"codegen_compiles":$codegenCompiles,"codegen_compile_ms":$codegenCompileMs,"canary_sec":$canary,"steal_pct":$stealPct}"""
     spark.stop()
     // Driver-parseable channels, most robust first: a file in the repo
     // root, then bare stdout lines (raw via run/outputStrategy, printed

@@ -52,11 +52,35 @@ object EventTime {
   * Mirrors the deployment posture of the reference's ClickHouse backend
   * (/root/reference/internal/storage/clickhouse/clickhouse.go:79-228):
   * month-partitioned, sort-keyed fact tables. On Spark that translates to
-  * AQE + partition-pruning-friendly reads; shuffle parallelism is sized by
-  * env so the same binary works on local[32] and on a cluster.
+  * AQE + partition-pruning-friendly reads; task slots and shuffle
+  * partitions both come from `SPARK_GRAFT_CPUS` so the same binary works
+  * on local[4], local[32] and on a cluster. Spark's generated-class cache
+  * holds [[CodegenCacheEntries]] classes, graft's whole working set, so a
+  * warm session runs Janino once per distinct generated class.
   */
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** `spark.sql.codegen.cache.maxEntries` (Spark's default: 100). Spark
+    * sizes its one generated-class cache per JVM, from the session active
+    * at the first code generation. The cache is an LRU keyed by class
+    * loader and generated source, so a working set past its size misses
+    * on every lookup and each warm pass re-runs Janino and the JIT on
+    * every class. Measured Janino compilations (4 CPUs; one cache entry
+    * per class loader and source, so a class is compiled once for the
+    * driver and once for the executor threads):
+    *  - DMARC ingest → five tables → CSV: ≈56 in a whole session, under
+    *    the default, so a warm pass compiles none at either size;
+    *  - `prepareWeb` + `containmentProbePairs`: ≈270–314 a pass. At 100
+    *    entries every warm pass recompiled ≈270–303 of them; at 2,000 a
+    *    warm pass compiles none, and web_prepare's cpu_ms_per_item drops
+    *    by about a quarter;
+    *  - a full `graft.Verify` sf0.01 sweep: 2,926 with no limit, 3,042 at
+    *    2,000, 6,497 at 100. The sweep runs each entry once, so the 116
+    *    it recompiles at 2,000 were evicted after their last use.
+    * Generated classes average ≈2.6 KB of bytecode, the largest ≈38 KB.
+    */
+  val CodegenCacheEntries = 2000
 
   def build(appName: String = "graft"): SparkSession = {
     val spark = SparkSession
@@ -87,6 +111,7 @@ object GraftSession {
       // int64 (harmless for micros files) and EventTime.normalizeTs adapts
       // whichever dtype actually arrives.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
