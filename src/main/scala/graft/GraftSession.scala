@@ -79,6 +79,14 @@ object GraftSession {
     *    2,000, 6,497 at 100. The sweep runs each entry once, so the 116
     *    it recompiles at 2,000 were evicted after their last use.
     * Generated classes average ≈2.6 KB of bytecode, the largest ≈38 KB.
+    *
+    * The cache key is the generated source, so whole-stage classes are
+    * named without their codegen stage id
+    * (`spark.sql.codegen.useIdInClassName=false`): AQE numbers stages in
+    * creation order, which follows task timing, and identical code under
+    * a new number would miss. Measured on warm web runs in one Spark
+    * session (4 CPUs): 0.67 compilations a run with the stage id left
+    * out, 4.7 with it in.
     */
   val CodegenCacheEntries = 2000
 
@@ -112,6 +120,7 @@ object GraftSession {
       // whichever dtype actually arrives.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -463,12 +463,11 @@ object TrainingData {
       val withQ = exact.withColumn("quality", TextAnalysis.qualityCol)
       val deduped = stage("neardup_keepbest")(described("neardup_keepbest/keepbest") {
         DedupPipeline.dedupKeepBestBy(withQ, pairs, exact, TextAnalysis.qualityCol) })
-      // released only AFTER the keep-best stage action (r17, advisor
-      // finding): under Materialize.lazily the pair arms are NOT eagerly
-      // materialized, so an earlier unpersist dropped the shingle cache
-      // before `pairs` was first consumed and the plan-audit sweep paid
-      // a full shingle recompute. Under normal (eager) operation the
-      // arms materialized above and the later release changes nothing.
+      // released only AFTER the keep-best stage action (r17): both pair
+      // arms checkpoint eagerly above, so nothing reads the shingle
+      // cache past this point; a release before `pairs` is first
+      // consumed would make any arm that stays lazy recompute every
+      // shingle.
       exSh.unpersist(false)
 
       // exact-substring coverage arm — d_substring_dedup deployed as a

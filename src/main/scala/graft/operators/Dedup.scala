@@ -52,13 +52,6 @@ object Dedup extends QueryModule {
       df.join(broadcast(oversized), keys, "left_anti")
     }
 
-  /** Materialize `out` with a single action (localCheckpoint also cuts
-    * the lineage), then release the persisted intermediates — see
-    * operators.Materialize (switchable for the plan audits).
-    */
-  private def materialized(out: DataFrame, caches: DataFrame*): DataFrame =
-    Materialize(out, caches: _*)
-
   /** distinct 3-word shingles of `text` (whole text if < 3 tokens).
     * Formulated as slice+zip_with — never index the token array inside a
     * lambda (`element_at(split(text), i)` re-splits per element, turning
@@ -115,7 +108,7 @@ object Dedup extends QueryModule {
     * them Catalyst cannot reuse the subtree, so the md5 chain would run
     * 3×. 8 (doc_id, tinyint, 32-char) rows per doc ≪ the raw corpus —
     * the standard LSH signature-table materialization at any scale.
-    * Callers that own the pipeline release it via `materialized`;
+    * Callers that own the pipeline release it via `Materialize`;
     * spec/plan-audit callers rely on the context cleaner.
     *
     * 16 minhash functions come from FOUR md5s per shingle: 4×32 hex
@@ -240,7 +233,7 @@ object Dedup extends QueryModule {
     val sh = shingles(docs).persist()
     val bands = bandedSignatures(sh)
     val verified = verify(candidatesFrom(bands, maxBucket), sh)
-    materialized(verified, bands, sh)
+    Materialize(verified, bands, sh)
   }
 
   /** [[minhashLsh]] / [[minhashLsh64]] over a CALLER-OWNED persisted
@@ -253,7 +246,7 @@ object Dedup extends QueryModule {
                    maxBucket: Int = MaxBucket): DataFrame = {
     val bands = if (oracleHash) bandedSignatures(sh) else bandedSignatures64(sh)
     val verified = verify(candidatesFrom(bands, maxBucket), sh)
-    materialized(verified, bands)
+    Materialize(verified, bands)
   }
 
   /** Production-hash variant of `minhashLsh` (xxhash64 signatures, same
@@ -267,7 +260,7 @@ object Dedup extends QueryModule {
     val sh = shingles(docs).persist()
     val bands = bandedSignatures64(sh)
     val verified = verify(candidatesFrom(bands, maxBucket), sh)
-    materialized(verified, bands, sh)
+    Materialize(verified, bands, sh)
   }
 
   /** Banded simhash64 frame (doc_id, h, band_i, band_v): native
@@ -305,7 +298,7 @@ object Dedup extends QueryModule {
     */
   def simhash64Pairs(docs: DataFrame, maxBucket: Int = MaxBucket): DataFrame = {
     val bands = simhash64Bands(docs)
-    materialized(simhash64PairsFrom(bands, maxBucket), bands)
+    Materialize(simhash64PairsFrom(bands, maxBucket), bands)
   }
 
   /** Shingle-set containment ≥ τ on the LSH candidate pairs — the
@@ -329,7 +322,7 @@ object Dedup extends QueryModule {
       .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"), containment.as("containment"))
       .filter(col("containment") >= tau)
-    materialized(out, bands, sh)
+    Materialize(out, bands, sh)
   }
 
   /** Containment-COMPLETE candidate generation for SHORT documents —
@@ -556,7 +549,7 @@ object Dedup extends QueryModule {
             / col("nsh"), 4).as("containment"))
         .filter(col("containment") >= tau)
     }
-    materialized(out, probeSh)
+    Materialize(out, probeSh)
     } finally {
       prevInit match {
         case Some(v) => spark.conf.set(initKey, v)
@@ -1203,7 +1196,7 @@ object Dedup extends QueryModule {
           .select(col("doc_a"), col("doc_b"), jaccard(col("g_a"), col("g_b")).as("jaccard"))
           .filter(col("jaccard") >= 0.2)
           .orderBy("doc_a", "doc_b")
-        materialized(out, bands, sh)
+        Materialize(out, bands, sh)
       },
       Some(s"""WITH ${candSql(MaxBucket)},
              |g AS (SELECT doc_id,
@@ -1239,7 +1232,7 @@ object Dedup extends QueryModule {
                     greatest(length(col("t_a")), length(col("t_b"))), 4).as("sim"))
           .filter(col("sim") >= 0.5)
           .orderBy("doc_a", "doc_b")
-        materialized(out, bands, sh)
+        Materialize(out, bands, sh)
       },
       Some(s"""WITH ${candSql(MaxBucket)},
              |t AS (SELECT doc_id, text FROM documents),

@@ -7,35 +7,16 @@ import org.apache.spark.sql.DataFrame
   * then release the caches — pipeline state must not outlive the call
   * in a long-lived session.
   *
-  * The switch exists for the plan audits: a checkpointed frame's
-  * executedPlan is just a scan of the checkpoint, so registry-wide
-  * plan assertions (no cartesians, capped joins) would be vacuous for
-  * exactly the self-join-heavy pipelines they most need to cover.
-  * PlanAuditSpec disables materialization, builds the FULL lazy plans
-  * without executing them, and re-enables it.
+  * A checkpointed frame's executedPlan is just a scan of the checkpoint;
+  * the plan that filled it is the checkpoint action's own, which Spark
+  * reports to every QueryExecutionListener and writes to the event log
+  * (PlanAuditSpec audits those executed plans).
   */
 object Materialize {
 
-  @volatile var enabled: Boolean = true
-
-  def apply(out: DataFrame, caches: DataFrame*): DataFrame =
-    if (!enabled) {
-      // plan-audit mode must still RELEASE the caches: the sweep builds
-      // hundreds of plans in one session, and un-released persist marks
-      // accumulate in the CacheManager and rewrite every later plan
-      // over the same frames (observed: kmeansClusters' persisted
-      // vector frame surviving each lazily{} sweep)
-      caches.foreach(_.unpersist(false))
-      out
-    } else {
-      val m = out.localCheckpoint(true)
-      caches.foreach(_.unpersist(false))
-      m
-    }
-
-  /** Run `f` with materialization disabled (plan-audit mode). */
-  def lazily[T](f: => T): T = {
-    enabled = false
-    try f finally enabled = true
+  def apply(out: DataFrame, caches: DataFrame*): DataFrame = {
+    val m = out.localCheckpoint(true)
+    caches.foreach(_.unpersist(false))
+    m
   }
 }

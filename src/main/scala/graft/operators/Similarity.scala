@@ -220,13 +220,11 @@ object Similarity extends QueryModule {
   }
 
   private[graft] def kmeansClusters(vecs: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
-    // localCheckpoint leaf, not persist (r17, see kmeansCentroids):
-    // no cache registration to release, so plan-audit sweeps cannot
-    // accumulate CacheManager marks either. Known and accepted: under
-    // Materialize.lazily the fit's bounded collects still EXECUTE (the
-    // returned plan embeds the fitted centroids as literals — there is
-    // no plan to audit without them), so a sweep over the two k-means
-    // entries runs the fit once each.
+    // localCheckpoint leaf, not persist (r17, see kmeansCentroids): no
+    // cache registration to release, so a session that builds many
+    // entries accumulates no CacheManager marks. Building the frame
+    // runs the fit (its bounded collects embed the fitted centroids as
+    // literals in the assignment plan) and the assignment checkpoint.
     val v = Par.widen(vecs.select(col("vec_id"), col("embedding")), col("vec_id"))
       .localCheckpoint(true)
     val cents = kmeansCentroidsOn(v, k, iters)

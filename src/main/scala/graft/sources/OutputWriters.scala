@@ -24,15 +24,17 @@ object OutputWriters {
 
   /** The aggregate CSV row layout of output.go:265-273 (first dkim/spf
     * auth result flattened, RFC 3339 dates, booleans as true/false).
+    * Records meet their report on (report id, org name): report ids
+    * collide across orgs.
     */
   def aggregateCsvLayout(records: Dataset[AggregateRecordRow], reports: Dataset[AggregateReport]): DataFrame = {
     val reps = reports.toDF().select(
-      col("reportId").as("r_id"), col("orgEmail"),
+      col("reportId").as("r_id"), col("orgName").as("r_org"), col("orgEmail"),
       rfc3339(col("beginDate")).as("r_begin"), rfc3339(col("endDate")).as("r_end"),
       col("domain"), col("adkim").as("policy_adkim"), col("aspf").as("policy_aspf"),
       col("p").as("policy_p"), col("sp").as("policy_sp"), col("pct").as("policy_pct"))
     records.toDF()
-      .join(reps, col("report_id") === col("r_id"))
+      .join(reps, col("report_id") === col("r_id") && col("org_name") === col("r_org"))
       .select(
         col("report_id"), col("org_name"), col("orgEmail").as("org_email"),
         col("r_begin").as("begin_date"), col("r_end").as("end_date"), col("domain"),

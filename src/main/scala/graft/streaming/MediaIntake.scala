@@ -67,6 +67,12 @@ object MediaIntake {
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         }
     }
+    // the marker vouches for the directory, not for the caller's count:
+    // a wrong `expectedRows` or a repeated doc_id (one file, two rows)
+    // must not publish a directory the stream would read short
+    val written = root.listFiles().count(_.getName.endsWith(s".$ext"))
+    if (written != n) throw new IllegalStateException(
+      s"MediaIntake: $dir holds $written .$ext files, expected $n rows; no _READY_ marker written")
     marker.createNewFile()
     ()
   }

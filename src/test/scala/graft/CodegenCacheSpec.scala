@@ -46,6 +46,12 @@ class CodegenCacheSpec extends SparkSpec {
       GraftSession.CodegenCacheEntries.toString)
   }
 
+  test("whole-stage class names carry no codegen stage id") {
+    // AQE numbers stages in creation order; identical code planned
+    // under a new stage id must still hit the cache
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
+  }
+
   test("a warm prepareWeb + containmentProbePairs run compiles no generated class") {
     val runs = warmRuns { _ =>
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")

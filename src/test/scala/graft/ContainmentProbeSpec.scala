@@ -1,16 +1,10 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.Join
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
 
 /** d_containment_probe — prefix-filtering containment candidates for
   * short documents. Pins the operator's whole reason to exist: recall
@@ -68,40 +62,25 @@ class ContainmentProbeSpec extends SparkSpec {
 
   test("past the 4M probe-gram bound the restriction is skipped; same pairs") {
     val docs = Tables(spark, sfDir).documents
-    // records, per executed query, whether it ran the probe-gram
-    // restriction: the left semi join on the gram hash `gh`
-    val restricted = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]
-    val sentinel = "containment_probe_sentinel"
-    @volatile var sentinelSeen = false
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == sentinel)) sentinelSeen = true
-        else restricted.add(qe.optimizedPlan.exists {
-          case j: Join => j.joinType == LeftSemi &&
-            j.condition.exists(_.references.exists(_.name == "gh"))
-          case _ => false
-        })
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    // listener events arrive in order: once the sentinel query is
-    // seen, every query of `run` has been too
+    // whether any executed query ran the probe-gram restriction: the
+    // left semi join on the gram hash `gh`
     def run(pairs: => DataFrame): (Set[(Long, Long, Double)], Boolean) = {
-      restricted.clear(); sentinelSeen = false
-      val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      spark.range(1).select(lit(1).as(sentinel)).collect()
-      eventually(timeout(60.seconds)) { assert(sentinelSeen) }
-      (got, restricted.asScala.exists(identity))
+      val (got, ran) = ExecutedPlans.during(spark) {
+        pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      }
+      (got, ran.exists(_.optimizedPlan.exists {
+        case j: Join => j.joinType == LeftSemi &&
+          j.condition.exists(_.references.exists(_.name == "gh"))
+        case _ => false
+      }))
     }
-    spark.listenerManager.register(listener)
-    try {
-      val (base, baseRestricted) = run(Dedup.containmentProbePairs(docs))
-      assert(baseRestricted, "the gate corpus's probe set should take the restriction")
-      // 200,001 probes × 20 shingles is past the 4M-gram broadcast bound
-      val (skipped, skippedRestricted) = run(
-        Dedup.containmentProbePairsOn(Dedup.shingles(docs), knownProbeCount = 200001))
-      assert(!skippedRestricted, "the restriction ran past its bound")
-      assert(skipped === base)
-    } finally spark.listenerManager.unregister(listener)
+    val (base, baseRestricted) = run(Dedup.containmentProbePairs(docs))
+    assert(baseRestricted, "the gate corpus's probe set should take the restriction")
+    // 200,001 probes × 20 shingles is past the 4M-gram broadcast bound
+    val (skipped, skippedRestricted) = run(
+      Dedup.containmentProbePairsOn(Dedup.shingles(docs), knownProbeCount = 200001))
+    assert(!skippedRestricted, "the restriction ran past its bound")
+    assert(skipped === base)
   }
 
   test("hot-shingle cap drops boilerplate keys on BOTH sides, not just the index") {

@@ -40,7 +40,6 @@ class KnobSurfaceSpec extends AnyFunSuite {
     val vars = found("\\b(?:sys\\.)?env(?:\\.get|\\.getOrElse|\\.contains)?\\(\\s*\"([A-Z][A-Z0-9_]*)\"")
     assert(vars.keySet == Set(
       "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "GRAFT_BENCH_MAX_LOAD",
-      "GRAFT_PLAN_DIR", "GRAFT_PLAN_LAZY",
       "GRAFT_KAFKA_BOOTSTRAP", "GRAFT_KAFKA_TOPIC"), vars)
     // no other way in: every sys.env use is a literal-named lookup or
     // the default of such an `env` map

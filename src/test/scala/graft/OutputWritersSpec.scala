@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{DmarcReader, ForensicReport, OutputWriters, SourceInfo}
+import graft.sources.{AggregateRecordRow, AggregateReport, DmarcReader, ForensicReport, OutputWriters, SourceInfo}
 import java.nio.file.Files
 
 class OutputWritersSpec extends SparkSpec {
@@ -19,6 +19,32 @@ class OutputWritersSpec extends SparkSpec {
       "header_from", "envelope_from", "dkim_domain", "dkim_selector", "spf_domain")
     assert(df.columns.toSeq == expected)
     assert(df.count() > 0)
+  }
+
+  test("aggregate CSV layout: a report id shared by two orgs keeps each record with its own report") {
+    import spark.implicits._
+    val day = java.sql.Timestamp.from(java.time.Instant.parse("2018-09-02T00:00:00Z"))
+    def report(org: String, domain: String, p: String) = AggregateReport(
+      xmlSchema = "1.0", orgName = org, orgEmail = s"dmarc@$org", orgExtraContactInfo = None,
+      reportId = "shared-1", beginDate = day, endDate = day, errors = Nil, domain = domain,
+      adkim = "r", aspf = "r", p = p, sp = p, pct = "100", fo = "0", records = Nil)
+    def record(org: String, ip: String) = AggregateRecordRow(
+      report_id = "shared-1", org_name = org, source_ip_address = ip, source_country = "",
+      source_reverse_dns = "", source_base_domain = "", source_name = "", source_type = "",
+      count = 1, spf_aligned = true, dkim_aligned = true, dmarc_aligned = true,
+      disposition = "none", policy_override_reasons = Nil, policy_override_comments = Nil,
+      envelope_from = None, header_from = "x.example", envelope_to = None,
+      dkim_domains = Nil, dkim_selectors = Nil, dkim_results = Nil,
+      spf_domains = Nil, spf_scopes = Nil, spf_results = Nil, begin_date = day)
+    val reports = Seq(report("a.example", "a.example", "none"),
+      report("b.example", "b.example", "reject")).toDS()
+    val records = Seq(record("a.example", "192.0.2.1"), record("b.example", "192.0.2.2")).toDS()
+    val rows = OutputWriters.aggregateCsvLayout(records, reports)
+      .select("org_name", "org_email", "domain", "policy_p", "source_ip")
+      .collect().map(_.toSeq).toSeq.sortBy(_.head.toString)
+    assert(rows == Seq(
+      Seq("a.example", "dmarc@a.example", "a.example", "none", "192.0.2.1"),
+      Seq("b.example", "dmarc@b.example", "b.example", "reject", "192.0.2.2")), rows)
   }
 
   test("forensic CSV layout matches output.go:334-398 header set") {

@@ -110,30 +110,44 @@ class PlanAuditSpec extends SparkSpec {
   // swept through their own registry entries
   private val eagerComposites = Set("d_training_prepare", "d_web_pipeline", "d_web_pipeline_model", "d_web_pipeline_substr", "w_zorder", "w_upsert", "w_rollup_refresh", "st_upsert_apply", "w_retention")
 
-  /** Registry plans with pipeline materialization DISABLED — entries
-    * that localCheckpoint (dedup/ANN pipelines) otherwise truncate to a
-    * scan of the checkpoint and the sweep would be vacuous for exactly
-    * the self-join-heavy queries it most needs to cover. Also avoids
-    * executing every pipeline just to read its plan.
+  /** Each swept entry built once, under [[ExecutedPlans]], as the set of
+    * audited operators in the plans it ran: the returned frame's
+    * executedPlan and the executed plan of every action its build ran.
+    * Checkpoints are actions, so the full plan behind every Materialize
+    * and Bounded checkpoint is audited, not the checkpoint scan the
+    * returned frame shows. An entry that fails to build is kept as its
+    * error: the sweeps name it instead of stopping at it.
     */
-  private def sweepPlans(names: Seq[String]): Seq[(String, String)] =
-    graft.operators.Materialize.lazily {
-      names.map { name =>
-        name -> SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.executedPlan.toString
+  private lazy val swept: Seq[(String, Either[String, Set[String]])] = {
+    val audited = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
+    SparkEntry.queries.keys.toSeq.sorted
+      .filterNot(streamingEntries).filterNot(eagerComposites)
+      .map { name =>
+        name -> scala.util.Try(ExecutedPlans.during(spark)(SparkEntry.queries(name)(spark, sfDir)))
+          .toEither.left.map(e => s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}")
+          .map { case (df, ran) =>
+            (df.queryExecution.executedPlan +: ran.map(_.executedPlan)).map(_.toString)
+              .flatMap(p => audited.filter(p.contains)).toSet
+          }
       }
-    }
+  }
+
+  /** Fails naming every swept entry outside `exempt` whose plans ran
+    * `op`, and every one that did not build.
+    */
+  private def assertNoneRan(op: String, exempt: Set[String] = Set.empty): Unit = {
+    val entries = swept.filterNot { case (name, _) => exempt(name) }
+    val offenders = entries.collect { case (name, Right(ops)) if ops(op) => name }
+    val unbuilt = entries.collect { case (name, Left(err)) => s"$name ($err)" }
+    assert(offenders.isEmpty && unbuilt.isEmpty,
+      s"$op in: ${offenders.mkString(", ")}; not built: ${unbuilt.mkString("; ")}")
+  }
 
   test("no CartesianProduct anywhere in the registry") {
     // broadcast-bounded scoring crossJoins compile to
     // BroadcastNestedLoopJoin; a raw CartesianProduct anywhere means an
     // unhinted cross join slipped in — fail the build, name the query
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(streamingEntries).filterNot(eagerComposites)
-    val offenders = sweepPlans(names).collect {
-      case (name, p) if p.contains("CartesianProduct") => name
-    }
-    assert(offenders.isEmpty, s"cartesian in: ${offenders.mkString(", ")}")
+    assertNoneRan("CartesianProduct")
   }
 
   test("BroadcastNestedLoopJoin appears only on intended scoring paths") {
@@ -152,27 +166,26 @@ class PlanAuditSpec extends SparkSpec {
       "d_embedding_neardup_ivf",
       "d_embedding_neardup_srp", "s_ivf_topk", "s_srp_topk", "s_knn_classify",
       "s_ivfpq_topk", "s_prefix_rerank_topk", "s_mmr_rerank",
+      // streaming twins: the k-means fit's centroids and the range-search
+      // queries broadcast against the corpus (as s_kmeans_clusters and
+      // s_range_search)
+      "st_kmeans_assign", "st_range_search",
       "q11_important_value", "q20_excess_shippers", "q22_inactive_customers",
       // 1-row corpus-total broadcast onto the token frame (same scalar
       // shape as the TPC-H threshold queries)
       "t_unigram_surprisal",
       // 1-row corpus-total + 1-row tercile-cuts broadcasts (CCNet)
-      "t_ccnet_buckets",
+      "t_ccnet_buckets", "d_web_pipeline_decontam", "d_web_pipeline_full",
       // 1-row vocabulary-size broadcast onto the bigram frame
       "t_bigram_surprisal",
       // 1-row model-totals broadcast onto the token frame (DSIR)
-      "t_dsir_weight", "t_dsir_sample",
+      "t_dsir_weight", "t_dsir_sample", "st_dsir_score",
       // 1-row node-count broadcast seeding the PageRank iteration
       "d_link_authority",
       // four 1-row summary frames crossJoined into the corpus-profile
       // row (the TPC-H scalar-threshold shape, bounded at any scale)
       "t_wimbd_stats")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(allowed).filterNot(streamingEntries).filterNot(eagerComposites)
-    val offenders = sweepPlans(names).collect {
-      case (name, p) if p.contains("BroadcastNestedLoopJoin") => name
-    }
-    assert(offenders.isEmpty, s"nested-loop join in: ${offenders.mkString(", ")}")
+    assertNoneRan("BroadcastNestedLoopJoin", exempt = allowed)
   }
 
   test("q6 is a pure pushed-down scan+agg: no join, filters reach parquet") {
@@ -259,26 +272,32 @@ class PlanAuditSpec extends SparkSpec {
     // that was the dominant cost in d_winnow_dedup's 100× cell. Sweep
     // the big-output public entry points: global=true SortExec is the
     // defect; partition-local sorts (window/SMJ internals) are fine.
+    // Every plan a path ran is walked into AQE's plan and its query
+    // stages: a plain `collect` stops at AdaptiveSparkPlanExec, a leaf,
+    // and a global sort always sits under one (its range exchange
+    // makes AQE wrap the plan).
     import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.functions._
+    import graft.operators.Dedup
+    object aqe extends AdaptiveSparkPlanHelper
     val docs = Tables(spark, sfDir).documents.limit(200)
       .select(col("doc_id"), col("text")).cache()
     docs.count()
-    try graft.operators.Materialize.lazily {
-      import graft.operators.Dedup
-      val paths: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
-        "minhashLsh" -> Dedup.minhashLsh(docs),
-        "minhashLsh64" -> Dedup.minhashLsh64(docs),
-        "simhash64Pairs" -> Dedup.simhash64Pairs(docs),
-        "containmentPairs" -> Dedup.containmentPairs(docs),
-        "lineDedup" -> Dedup.lineDedup(docs),
-        "decontaminate" -> Dedup.decontaminate(
-          docs.filter(col("doc_id") % 97 =!= 0), docs.filter(col("doc_id") % 97 === 0)),
+    try {
+      val paths: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+        "minhashLsh" -> (() => Dedup.minhashLsh(docs)),
+        "minhashLsh64" -> (() => Dedup.minhashLsh64(docs)),
+        "simhash64Pairs" -> (() => Dedup.simhash64Pairs(docs)),
+        "containmentPairs" -> (() => Dedup.containmentPairs(docs)),
+        "lineDedup" -> (() => Dedup.lineDedup(docs)),
+        "decontaminate" -> (() => Dedup.decontaminate(
+          docs.filter(col("doc_id") % 97 =!= 0), docs.filter(col("doc_id") % 97 === 0))),
       )
-      paths.foreach { case (name, df) =>
-        val globalSorts = df.queryExecution.executedPlan.collect {
-          case s: SortExec if s.global => s
-        }
+      paths.foreach { case (name, build) =>
+        val (df, ran) = ExecutedPlans.during(spark)(build())
+        val globalSorts = (df.queryExecution.executedPlan +: ran.map(_.executedPlan))
+          .flatMap(aqe.collect(_) { case s: SortExec if s.global => s })
         assert(globalSorts.isEmpty,
           s"$name: production path contains a global sort:\n${globalSorts.mkString("\n")}")
       }
