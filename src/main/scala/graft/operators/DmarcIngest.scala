@@ -1,25 +1,50 @@
 package graft.operators
 
 import graft.sources.DmarcReader
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Rows-only query entries exercising the DMARC ingestion pipeline on the
-  * reference's own sample corpus (read-only). These have no SQL oracle —
-  * the driver records rows>0; the ScalaTest specs pin exact field values
-  * against the reference's documented semantics.
+import scala.jdk.CollectionConverters._
+
+/** Query entries exercising the DMARC ingestion pipeline on a sample
+  * corpus (read-only; [[samples]], by default the reference's own). Their
+  * oracles are committed snapshots of the reference corpus's parse
+  * ([[graft.api.ParseSnapshots]]); the ScalaTest specs pin exact field
+  * values against the reference's documented semantics.
   */
 object DmarcIngest extends QueryModule {
 
-  /** Reference sample-corpus root — the single definition every module
-    * and spec reading the read-only reference checkout goes through.
+  /** Session conf naming the sample-corpus root: a directory laid out as
+    * `aggregate/`, `extract_report/`, `forensic/` and `smtp_tls/`.
     */
-  private[graft] val Samples = "/root/reference/samples"
+  val SamplesConf = "spark.graft.dmarc.samples"
+
+  /** Default root: the reference checkout the snapshot oracles were
+    * pinned on.
+    */
+  val DefaultSamples = "/root/reference/samples"
+
+  /** The sample-corpus root every DMARC entry reads, checked once: a
+    * missing root fails here, naming it and [[SamplesConf]], instead of
+    * as a bare PATH_NOT_FOUND inside the first reader.
+    */
+  def samples(s: SparkSession): String = {
+    val root = s.conf.get(SamplesConf, DefaultSamples)
+    val path = new Path(root)
+    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!scala.util.Try(fs.getFileStatus(path).isDirectory).getOrElse(false))
+      throw new java.io.FileNotFoundException(
+        s"DMARC sample corpus root $root is not a directory: set $SamplesConf " +
+          "to a corpus holding aggregate/, extract_report/, forensic/ and smtp_tls/")
+    root
+  }
 
   override def entries: Seq[QueryDef] = Seq(
     QueryDef(
       "p_aggregate_xml",
       (s, _) =>
-        DmarcReader.aggregateReports(s, s"$Samples/aggregate", "*.xml")
+        DmarcReader.aggregateReports(s, s"${samples(s)}/aggregate", "*.xml")
           .toDF()
           .select(col("reportId"), col("orgName"), col("domain"), col("p"),
                   col("sp"), col("pct"), size(col("records")).as("n_records"))
@@ -37,7 +62,7 @@ object DmarcIngest extends QueryModule {
       (s, _) => {
         // Seq-typed fields serialized to joined strings at the output
         // boundary: the driver's pandas comparator cannot sort array cells.
-        val rows = DmarcReader.aggregateRecords(s, s"$Samples/aggregate").toDF()
+        val rows = DmarcReader.aggregateRecords(s, s"${samples(s)}/aggregate").toDF()
         val arrayCols = Set(
           "policy_override_reasons", "policy_override_comments",
           "dkim_domains", "dkim_selectors", "dkim_results",
@@ -55,7 +80,7 @@ object DmarcIngest extends QueryModule {
     QueryDef(
       "p_compressed",
       (s, _) =>
-        DmarcReader.aggregateReports(s, s"$Samples/extract_report", "*.{gz,zip,xml}")
+        DmarcReader.aggregateReports(s, s"${samples(s)}/extract_report", "*.{gz,zip,xml}")
           .toDF()
           .select(col("reportId"), col("domain"), size(col("records")).as("n_records"))
           .orderBy("reportId"),
@@ -66,7 +91,7 @@ object DmarcIngest extends QueryModule {
     QueryDef(
       "p_forensic_arf",
       (s, _) =>
-        DmarcReader.forensicReports(s, s"$Samples/forensic", "*.eml")
+        DmarcReader.forensicReports(s, s"${samples(s)}/forensic", "*.eml")
           .toDF()
           .select(col("feedbackType"), col("reportedDomain"), col("deliveryResult"),
                   col("source.ipAddress").as("source_ip"),
@@ -79,7 +104,7 @@ object DmarcIngest extends QueryModule {
     QueryDef(
       "p_smtp_tls_json",
       (s, _) => {
-        val reports = DmarcReader.tlsReports(s, s"$Samples/smtp_tls").toDF()
+        val reports = DmarcReader.tlsReports(s, s"${samples(s)}/smtp_tls").toDF()
         reports.select(
             col("organizationName"), col("reportId"),
             explode(col("policies")).as("policy"))
@@ -106,7 +131,7 @@ object DmarcIngest extends QueryModule {
       "q_tls_failure_breakdown",
       (s, _) => graft.api.TlsAnalytics.failureBreakdown(
         graft.api.TlsAnalytics.tlsFailureRows(
-          DmarcReader.tlsReports(s, s"$Samples/smtp_tls"))),
+          DmarcReader.tlsReports(s, s"${samples(s)}/smtp_tls"))),
       Some(s"""WITH f(result_type, failed_session_count) AS (VALUES
              |  ${graft.api.TlsAnalytics.failureSqlValues})
              |SELECT result_type,
@@ -118,7 +143,7 @@ object DmarcIngest extends QueryModule {
       "q_tls_session_success",
       (s, _) => graft.api.TlsAnalytics.sessionSuccessRate(
         graft.api.TlsAnalytics.tlsReportRows(
-          DmarcReader.tlsReports(s, s"$Samples/smtp_tls"))),
+          DmarcReader.tlsReports(s, s"${samples(s)}/smtp_tls"))),
       Some(s"""WITH p(policy_domain, successful_session_count, failed_session_count) AS (VALUES
              |  ${graft.api.TlsAnalytics.policySqlValues})
              |SELECT policy_domain,
@@ -138,7 +163,7 @@ object DmarcIngest extends QueryModule {
         val cfg = graft.sources.SmtpConfig(enabled = false,
           from = "dmarc@example.com", to = Seq("admin@example.com"))
         graft.sources.EmailOutput.aggregateEmails(
-            DmarcReader.aggregateReports(s, s"$Samples/aggregate", "*.xml"),
+            DmarcReader.aggregateReports(s, s"${samples(s)}/aggregate", "*.xml"),
             cfg, java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
           .select(col("report_key"), col("subject"), col("attachment_name"),
                   length(col("mime")).as("mime_chars"))
@@ -166,6 +191,7 @@ object DmarcIngest extends QueryModule {
         import graft.sources.{KafkaWire => KW}
         import org.json4s._
         import org.json4s.jackson.JsonMethods
+        val root = samples(s)
         val broker = new graft.sources.InMemoryKafka()
         val summary =
           try {
@@ -179,10 +205,10 @@ object DmarcIngest extends QueryModule {
               KW.fetch("127.0.0.1", broker.port, topic, 0L)
                 .map(r => JsonMethods.parse(new String(r.value, "UTF-8")))
             val aggs = DmarcReader
-              .aggregateReports(s, s"$Samples/aggregate", "*.xml").collect()
+              .aggregateReports(s, s"$root/aggregate", "*.xml").collect()
             val forensic = DmarcReader
-              .forensicReports(s, s"$Samples/forensic", "*.eml").collect()
-            val tls = DmarcReader.tlsReports(s, s"$Samples/smtp_tls").collect()
+              .forensicReports(s, s"$root/forensic", "*.eml").collect()
+            val tls = DmarcReader.tlsReports(s, s"$root/smtp_tls").collect()
             produce("dmarc_aggregate", aggs.toIndexedSeq.map(a => a.reportId ->
               JObject("report_id" -> JString(a.reportId),
                       "org_name" -> JString(a.orgName),
@@ -248,6 +274,7 @@ object DmarcIngest extends QueryModule {
       (s, _) => {
         import graft.sources.{ClickHouseHttp => CH, OutputWriters => OW}
         import org.json4s._
+        val root = samples(s)
         val server = new graft.sources.InMemoryClickHouse()
         val summary =
           try {
@@ -256,10 +283,10 @@ object DmarcIngest extends QueryModule {
             // globs mirror the snapshot each table is gated against:
             // reports ↔ p_aggregate_xml ("*.xml"), records ↔ the
             // p_records_flatten resource (whole corpus incl. gz/zip/eml)
-            val reports = DmarcReader.aggregateReports(s, s"$Samples/aggregate", "*.xml")
-            val records = DmarcReader.enrichedRecords(s, s"$Samples/aggregate")
-            val forensic = DmarcReader.forensicReports(s, s"$Samples/forensic", "*.eml")
-            val tls = DmarcReader.tlsReports(s, s"$Samples/smtp_tls")
+            val reports = DmarcReader.aggregateReports(s, s"$root/aggregate", "*.xml")
+            val records = DmarcReader.enrichedRecords(s, s"$root/aggregate")
+            val forensic = DmarcReader.forensicReports(s, s"$root/forensic", "*.eml")
+            val tls = DmarcReader.tlsReports(s, s"$root/smtp_tls")
             CH.insertDataFrame(base, "dmarc_aggregate_reports", OW.reportsTableLayout(reports))
             CH.insertDataFrame(base, "dmarc_aggregate_records", records)
             CH.insertDataFrame(base, "dmarc_forensic_reports", OW.forensicTableLayout(forensic))
@@ -333,13 +360,14 @@ object DmarcIngest extends QueryModule {
     QueryDef(
       "p_imap_intake",
       (s, _) => {
-        val dir = new java.io.File(s"$Samples/aggregate")
-        val files = Option(dir.listFiles()).getOrElse(throw new java.io.FileNotFoundException(
-          s"p_imap_intake: sample corpus directory $dir is missing")).sortBy(_.getName)
-        val seed = files.toIndexedSeq.map { f =>
-          val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-          if (f.getName.endsWith(".eml")) bytes
-          else graft.sources.ImapIntake.wrapReportEmail(f.getName, bytes)
+        val dir = java.nio.file.Paths.get(samples(s), "aggregate")
+        val files = scala.util.Using.resource(java.nio.file.Files.list(dir))(
+          _.iterator.asScala.toIndexedSeq.sortBy(_.getFileName.toString))
+        val seed = files.map { f =>
+          val name = f.getFileName.toString
+          val bytes = java.nio.file.Files.readAllBytes(f)
+          if (name.endsWith(".eml")) bytes
+          else graft.sources.ImapIntake.wrapReportEmail(name, bytes)
         }
         val server = new graft.sources.InMemoryImap("dmarc", "secret", seed)
         try {
@@ -382,22 +410,28 @@ object DmarcIngest extends QueryModule {
   )
 
   /** Distributed CLI-document projection shared by o_cli_json/o_cli_csv:
-    * (relative file, parsed family, sha256 of the reference-byte
-    * document, document chars); unparseable files keep the CLI's
-    * continue-past-failure semantics as family "error".
+    * (file relative to the corpus root, parsed family, sha256 of the
+    * reference-byte document, document chars); unparseable files keep
+    * the CLI's continue-past-failure semantics as family "error".
     */
-  private def cliDocs(s: org.apache.spark.sql.SparkSession, format: String):
+  private def cliDocs(s: SparkSession, format: String):
       org.apache.spark.sql.Dataset[(String, String, String, Int)] = {
     import s.implicits._
     import graft.GraftCli
     import graft.sources.ReportParser
+    val root = samples(s)
+    val rootPath = new Path(root)
+    val base = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .makeQualified(rootPath).toUri
     s.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
-      .load(Samples)
+      .load(root)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .map { case (path, bytes) =>
-        val rel = path.substring(path.indexOf("/samples/") + "/samples/".length)
+        val relUri = base.relativize(new Path(path).toUri)
+        require(!relUri.isAbsolute, s"$path is not under the corpus root $base")
+        val rel = relUri.getPath
         ReportParser.parse(bytes) match {
           case Right(p) =>
             // the CLI's own renderer — gate and CLI cannot drift

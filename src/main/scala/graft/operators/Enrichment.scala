@@ -164,7 +164,7 @@ object Enrichment extends QueryModule {
       "f_rdns_ptr",
       (s, _) => {
         val ips = graft.sources.DmarcReader
-          .aggregateRecords(s, s"${DmarcIngest.Samples}/aggregate").toDF()
+          .aggregateRecords(s, s"${DmarcIngest.samples(s)}/aggregate").toDF()
           .select(col("source_ip_address")).distinct()
           .collect().map(_.getString(0)).sorted
         val server = new graft.sources.InMemoryDns(graft.sources.InMemoryDns.fixtureZone)

@@ -880,7 +880,7 @@ object Streaming extends QueryModule {
       (s, _) => {
         val name = s"st_intake_${System.nanoTime()}"
         val q = graft.streaming.ReportFileIntake
-          .aggregateRecordStream(s, s"${DmarcIngest.Samples}/aggregate")
+          .aggregateRecordStream(s, s"${DmarcIngest.samples(s)}/aggregate")
           .toDF()
           .select(col("report_id"), col("org_name"), col("source_ip_address"),
                   col("count"), col("disposition"), col("begin_date"))

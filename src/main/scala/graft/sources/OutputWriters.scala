@@ -108,13 +108,18 @@ object OutputWriters {
 
   /** Directory mode: reference writes one timestamped file per report
     * (output.go:867-905); the scalable analogue partitions by report
-    * month + org so each report lands in its own directory subtree.
+    * month + org so each report lands in its own directory subtree. The
+    * org directory is `org_dir`, the URL-encoded org name: an org name is
+    * report text, and spelled raw it fails as a directory name wherever
+    * the JVM's file-name encoding lacks one of its characters (any
+    * non-ASCII name under a POSIX locale). `org_name` stays in the files.
     */
   def writeDirectoryMode(records: Dataset[AggregateRecordRow], path: String): Unit =
     records.toDF()
       .withColumn("report_month", date_format(col("begin_date"), "yyyyMM"))
+      .withColumn("org_dir", url_encode(col("org_name")))
       .write.mode("overwrite")
-      .partitionBy("report_month", "org_name")
+      .partitionBy("report_month", "org_dir")
       .parquet(path)
 
   /** The analytics TABLE layout — MergeTree parity with

@@ -30,7 +30,7 @@ class ClickHouseHttpSpec extends SparkSpec {
   test("records round-trip the wire: counts, per-row fields, DateTime form") {
     withServer { base =>
       ClickHouseHttp.createTables(base)
-      val records = DmarcReader.enrichedRecords(spark, "/root/reference/samples/aggregate")
+      val records = DmarcReader.enrichedRecords(spark, s"${DmarcFixtures.Root}/aggregate")
       ClickHouseHttp.insertDataFrame(base, "dmarc_aggregate_records", records)
       val n = records.count()
       assert(ClickHouseHttp.count(base, "dmarc_aggregate_records") == n)
@@ -76,7 +76,7 @@ class ClickHouseHttpSpec extends SparkSpec {
   test("nullable columns travel as JSON null and survive readback") {
     withServer { base =>
       ClickHouseHttp.createTables(base)
-      val reports = DmarcReader.aggregateReports(spark, "/root/reference/samples/aggregate")
+      val reports = DmarcReader.aggregateReports(spark, s"${DmarcFixtures.Root}/aggregate")
       ClickHouseHttp.insertDataFrame(base, "dmarc_aggregate_reports",
         OutputWriters.reportsTableLayout(reports))
       val back = ClickHouseHttp.selectAll(base, "dmarc_aggregate_reports")

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class ConfigLoaderSpec extends AnyFunSuite {
 
   test("the reference's config.yaml.example parses to its documented values") {
-    val cfg = ConfigLoader.load("/root/reference/config.yaml.example")
+    val example = s"${DmarcFixtures.Reference}/config.yaml.example"
+    assume(Files.isRegularFile(java.nio.file.Paths.get(example)), s"$example is absent")
+    val cfg = ConfigLoader.load(example)
     assert(cfg.logging.level == "info")
     assert(cfg.logging.format == "json")
     assert(cfg.parser.nameservers == Seq("1.1.1.1", "1.0.0.1"))
@@ -82,7 +84,7 @@ class ConfigLoaderSpec extends AnyFunSuite {
   test("loaded IMAP settings drive the live intake client end to end") {
     val seed = ImapIntake.wrapReportEmail("r.xml",
       Files.readAllBytes(java.nio.file.Paths.get(
-        "/root/reference/samples/aggregate/example.net!example.com!1529366400!1529452799.xml")))
+        s"${DmarcFixtures.Root}/aggregate/example.net!example.com!1529366400!1529452799.xml")))
     // `tls` defaults true (the reference's client.go tls.Dial posture), so the
     // loaded config dials IMAPS — the server must speak TLS from byte 0.
     val server = new InMemoryImap("cfg-user", "cfg-pw", Seq(seed),
@@ -111,7 +113,7 @@ class ConfigLoaderSpec extends AnyFunSuite {
   test("explicit 'tls: false' opts into the plaintext fallback client") {
     val seed = ImapIntake.wrapReportEmail("r.xml",
       Files.readAllBytes(java.nio.file.Paths.get(
-        "/root/reference/samples/aggregate/example.net!example.com!1529366400!1529452799.xml")))
+        s"${DmarcFixtures.Root}/aggregate/example.net!example.com!1529366400!1529452799.xml")))
     val server = new InMemoryImap("cfg-user", "cfg-pw", Seq(seed))
     try {
       val cfg = ConfigLoader.fromYaml(

@@ -21,13 +21,13 @@ import org.apache.spark.sql.functions._
   */
 class DaemonEndToEndSpec extends SparkSpec {
 
-  private val Samples = "/root/reference/samples"
+  private val Samples = DmarcFixtures.Root
 
   test("mail over IMAP -> daemon -> Spark parse -> ClickHouse wire -> HTTP summary") {
     // seed a real IMAP server with two aggregate reports as mail
     val seed = Seq(
       "empty_reason.xml",
-      "!example.com!1538204542!1538463818.xml",
+      "mail.receiver.example!example.com!1536192000!1536278399.xml",
     ).map { name =>
       ImapIntake.wrapReportEmail(name,
         Files.readAllBytes(Paths.get(s"$Samples/aggregate/$name")))

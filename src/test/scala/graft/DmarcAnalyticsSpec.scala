@@ -10,9 +10,9 @@ import org.apache.spark.sql.DataFrame
 class DmarcAnalyticsSpec extends SparkSpec {
 
   private lazy val records: DataFrame =
-    DmarcReader.aggregateRecords(spark, "/root/reference/samples/aggregate").toDF().cache()
+    DmarcReader.aggregateRecords(spark, s"${DmarcFixtures.Root}/aggregate").toDF().cache()
   private lazy val forensic: DataFrame =
-    DmarcReader.forensicReports(spark, "/root/reference/samples/forensic", "*.eml").toDF().cache()
+    DmarcReader.forensicReports(spark, s"${DmarcFixtures.Root}/forensic", "*.eml").toDF().cache()
 
   test("daily volume sums to total message count") {
     val daily = dailyVolume(records).agg(org.apache.spark.sql.functions.sum("total_messages"))
@@ -53,7 +53,7 @@ class DmarcAnalyticsSpec extends SparkSpec {
   }
 
   test("topCountries returns real countries on enriched records") {
-    val enriched = DmarcReader.enrichedRecords(spark, "/root/reference/samples/aggregate")
+    val enriched = DmarcReader.enrichedRecords(spark, s"${DmarcFixtures.Root}/aggregate")
     val rows = topCountries(enriched).collect()
     assert(rows.nonEmpty, "geo enrichment left every record Unknown")
     assert(rows.forall(_.getString(0) != "Unknown"))
@@ -65,8 +65,8 @@ class DmarcAnalyticsSpec extends SparkSpec {
 
   test("summaryJson mirrors the reference server's document shape") {
     import spark.implicits._
-    val enriched = DmarcReader.enrichedRecords(spark, "/root/reference/samples/aggregate")
-    val tls = DmarcReader.tlsReports(spark, "/root/reference/samples/smtp_tls").toDF()
+    val enriched = DmarcReader.enrichedRecords(spark, s"${DmarcFixtures.Root}/aggregate")
+    val tls = DmarcReader.tlsReports(spark, s"${DmarcFixtures.Root}/smtp_tls").toDF()
     val json = graft.api.DmarcAnalytics.summaryJson(enriched, forensic, Some(tls))
     // parse with Spark's JSON reader: malformed JSON → corrupt-record col
     val parsed = spark.read.option("mode", "FAILFAST").json(Seq(json).toDS())
@@ -101,7 +101,7 @@ class DmarcAnalyticsSpec extends SparkSpec {
   }
 
   test("writeSummary produces a readable single-file JSON document") {
-    val enriched = DmarcReader.enrichedRecords(spark, "/root/reference/samples/aggregate")
+    val enriched = DmarcReader.enrichedRecords(spark, s"${DmarcFixtures.Root}/aggregate")
     val out = java.nio.file.Files.createTempDirectory("summary").resolve("summary.json")
     graft.api.DmarcAnalytics.writeSummary(enriched, forensic, out.toString)
     val back = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
@@ -111,9 +111,9 @@ class DmarcAnalyticsSpec extends SparkSpec {
   test("topForensicSources returns real countries on enriched forensic reports") {
     import org.apache.spark.sql.functions.col
     val enriched = DmarcReader.enrichedForensic(
-      spark, "/root/reference/samples/forensic", "*.eml")
+      spark, s"${DmarcFixtures.Root}/forensic", "*.eml")
     assert(enriched.count() == forensic.count())
-    // every sample sources from 10.10.10.10 → fixture octet 10 → US
+    // every sample sources from 198.51.100.0/24 → fixture octet 198 → CA
     assert(enriched.filter(col("source.country") === "Unknown").count() == 0)
     assert(enriched.filter(col("source.baseDomain") === "").count() == 0)
     val rows = topForensicSources(enriched).collect()

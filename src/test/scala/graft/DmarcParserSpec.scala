@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
   */
 class DmarcParserSpec extends AnyFunSuite {
 
-  private val samples = "/root/reference/samples"
+  private val samples = DmarcFixtures.Root
   private def bytes(p: String): Array[Byte] = Files.readAllBytes(Paths.get(p))
 
   private val minimalXml =
@@ -60,10 +60,12 @@ class DmarcParserSpec extends AnyFunSuite {
     // on its 97-hour date range (parser.go:1174's 48h guard), not the
     // letter case — mixed-case pass values themselves are tolerated and
     // lowercased (parser.go:1236) on both sides
+    val reference = DmarcFixtures.ReferenceSamples
+    assume(Files.isDirectory(Paths.get(reference)), s"$reference is absent")
     assert(AggregateXmlParser
-      .parse(bytes(s"$samples/aggregate_invalid/report_with_upper_cased_pass.xml"))
+      .parse(bytes(s"$reference/aggregate_invalid/report_with_upper_cased_pass.xml"))
       .isLeft)
-    assert(AggregateXmlParser.parse(bytes(s"$samples/empty.xml")).isLeft)
+    assert(AggregateXmlParser.parse(bytes(s"$reference/empty.xml")).isLeft)
   }
 
   test("gzip and zip payloads extract to the same report") {
@@ -136,7 +138,8 @@ class DmarcParserSpec extends AnyFunSuite {
   }
 
   test("smtp-tls: email-wrapped report (google .eml) parses via MIME") {
-    val r = TlsReportParser.parseAny(bytes(s"$samples/smtp_tls/google.com_smtp_tls_report.eml"))
+    val r = TlsReportParser.parseAny(
+      bytes(s"$samples/smtp_tls/mail.sender.example!example.net!1494201600!1494287999.eml"))
     assert(r.isRight)
     assert(r.toOption.get.organizationName.nonEmpty)
   }

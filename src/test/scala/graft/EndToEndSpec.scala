@@ -14,7 +14,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("ingest -> partitioned store -> dashboard analytics round-trip") {
     val dir = Files.createTempDirectory("graft-e2e").toString
-    val records = DmarcReader.aggregateRecords(spark, "/root/reference/samples/aggregate")
+    val records = DmarcReader.aggregateRecords(spark, s"${DmarcFixtures.Root}/aggregate")
 
     // store (the ClickHouse-table equivalent)
     OutputWriters.writeDirectoryMode(records, s"$dir/records")
@@ -45,7 +45,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("writeRecordsTable: MergeTree-parity layout (month partitions, sorted files)") {
     val dir = Files.createTempDirectory("graft-table").toString
-    val records = DmarcReader.aggregateRecords(spark, "/root/reference/samples/aggregate")
+    val records = DmarcReader.aggregateRecords(spark, s"${DmarcFixtures.Root}/aggregate")
     OutputWriters.writeRecordsTable(records, s"$dir/t")
 
     // month partition directories exist and a month filter prunes
@@ -75,9 +75,9 @@ class EndToEndSpec extends SparkSpec {
   test("all five reference tables materialize in their MergeTree layouts") {
     import graft.api.TlsAnalytics
     val dir = Files.createTempDirectory("graft-tables").toString
-    val reports = DmarcReader.aggregateReports(spark, "/root/reference/samples/aggregate")
-    val forensic = DmarcReader.forensicReports(spark, "/root/reference/samples/forensic", "*.eml")
-    val tls = DmarcReader.tlsReports(spark, "/root/reference/samples/smtp_tls")
+    val reports = DmarcReader.aggregateReports(spark, s"${DmarcFixtures.Root}/aggregate")
+    val forensic = DmarcReader.forensicReports(spark, s"${DmarcFixtures.Root}/forensic", "*.eml")
+    val tls = DmarcReader.tlsReports(spark, s"${DmarcFixtures.Root}/smtp_tls")
 
     OutputWriters.writeReportsTable(reports, s"$dir/reports")
     OutputWriters.writeForensicTable(forensic, s"$dir/forensic")

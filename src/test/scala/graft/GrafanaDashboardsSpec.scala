@@ -14,7 +14,10 @@ import org.json4s.jackson.JsonMethods
   */
 class GrafanaDashboardsSpec extends SparkSpec {
 
-  private val RefDir = "/root/reference/grafana/clickhouse"
+  private val RefDir = s"${DmarcFixtures.Reference}/grafana/clickhouse"
+
+  private def assumeReference(): Unit =
+    assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(RefDir)), s"$RefDir is absent")
 
   private def refDashboard(file: String): JValue =
     JsonMethods.parse(java.nio.file.Files.readString(
@@ -41,10 +44,12 @@ class GrafanaDashboardsSpec extends SparkSpec {
   }
 
   test("overview dashboard mirrors the reference panel-for-panel") {
+    assumeReference()
     structuralParity(GrafanaDashboards.Overview, "dashboard-dmarc-overview.json")
   }
 
   test("forensic dashboard mirrors the reference panel-for-panel") {
+    assumeReference()
     structuralParity(GrafanaDashboards.Forensic, "dashboard-dmarc-forensic.json")
   }
 
@@ -55,7 +60,7 @@ class GrafanaDashboardsSpec extends SparkSpec {
   }
 
   private lazy val viewsReady: Unit = GrafanaDashboards.registerViews(
-    spark, "/root/reference/samples/aggregate", "/root/reference/samples/forensic")
+    spark, s"${DmarcFixtures.Root}/aggregate", s"${DmarcFixtures.Root}/forensic")
 
   test("all 18 panel queries run as Spark SQL over the sample corpus") {
     viewsReady
@@ -101,6 +106,7 @@ class GrafanaDashboardsSpec extends SparkSpec {
   }
 
   test("writeAll emits three artifacts that parse and keep the reference key shape") {
+    assumeReference()
     val dir = java.nio.file.Files.createTempDirectory("grafana").toString
     GrafanaDashboards.writeAll(dir)
     for (f <- Seq("dashboard-dmarc-overview.json", "dashboard-dmarc-forensic.json", "datasource.json")) {

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraftCliSpec extends AnyFunSuite {
 
-  private val Samples = "/root/reference/samples"
+  private val Samples = DmarcFixtures.Root
 
   private def runCli(args: String*): (Int, String, String) = {
     val out = new ByteArrayOutputStream()
@@ -116,11 +116,11 @@ class GraftCliSpec extends AnyFunSuite {
   // ------------------------------------------------------ stream JSON
   test("single file JSON to stdout: the exact MarshalIndent document") {
     val (rc, out, _) =
-      runCli("-input", s"$Samples/aggregate/!example.com!1538204542!1538463818.xml")
+      runCli("-input", s"$Samples/aggregate/mail.receiver.example!example.com!1536192000!1536278399.xml")
     assert(rc == 0)
-    assert(out.startsWith("{\n  \"xml_schema\": \"\",\n  \"report_metadata\": {\n"))
-    assert(out.contains("\"report_id\": \"example.com:1538463741\""))
-    assert(out.contains("\"begin_date\": \"2018-10-01T17:07:12Z\""))
+    assert(out.startsWith("{\n  \"xml_schema\": \"1.0\",\n  \"report_metadata\": {\n"))
+    assert(out.contains("\"report_id\": \"2018.09.06.1\""))
+    assert(out.contains("\"begin_date\": \"2018-09-06T00:00:00Z\""))
     assert(out.contains("\"errors\": null"))          // Go nil slice
     assert(out.contains("\"policy_override_reasons\": null"))
     assert(out.endsWith("}\n"))                        // doc + trailing newline
@@ -268,12 +268,12 @@ class GraftCliSpec extends AnyFunSuite {
            |    - 127.0.0.1:${broker.port}
            |  aggregate_topic: dmarc_aggregate
            |""".stripMargin)
-      val sample = s"$Samples/aggregate/!example.com!1538204542!1538463818.xml"
+      val sample = s"$Samples/aggregate/mail.receiver.example!example.com!1536192000!1536278399.xml"
       val (rc, out, _) = runCli("-config", cfgFile.toString, "-input", sample)
       assert(rc == 0)
       val recs = graft.sources.KafkaWire.fetch("127.0.0.1", broker.port, "dmarc_aggregate", 0L)
       assert(recs.size == 1)
-      assert(new String(recs.head.key, "UTF-8") == "example.com:1538463741")
+      assert(new String(recs.head.key, "UTF-8") == "2018.09.06.1")
       val value = new String(recs.head.value, "UTF-8")
       // the wire payload is the compact form of the SAME document the
       // stdout writer pretty-printed: Jackson-normalized they are equal

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   */
 class HttpIntakeSpec extends SparkSpec {
 
-  private val Samples = "/root/reference/samples"
+  private val Samples = DmarcFixtures.Root
   private val client = HttpClient.newHttpClient()
 
   private def get(port: Int, path: String): HttpResponse[String] =
@@ -74,9 +74,9 @@ class HttpIntakeSpec extends SparkSpec {
 
   test("compressed and JSON report types parse through the same chain") {
     withServer() { (_, port, drop) =>
-      val gz = sample("aggregate/fastmail.com!example.com!1516060800!1516147199!102675056.xml.gz")
+      val gz = sample("aggregate/mx.mailhost.example!example.com!1516060800!1516147199!102675056.xml.gz")
       assert(post(port, "/dmarc/report", gz, "application/gzip").statusCode() == 200)
-      val tls = sample("smtp_tls/smtp_tls.json")
+      val tls = sample("smtp_tls/mail.sender.example!example.com!1538352000!1538438399!001.json")
       assert(post(port, "/dmarc/report", tls, "application/tlsrpt+json").statusCode() == 200)
       val names = new java.io.File(drop).list().toSeq
       assert(names.exists(_.startsWith("http-aggregate-")))
@@ -162,7 +162,7 @@ class HttpIntakeSpec extends SparkSpec {
     try {
       val port = server.port
       assert(get(port, "/summary").body() == """{"reports":0}""")
-      val xml = sample("aggregate/usssa.com!example.com!1538784000!1538870399.xml")
+      val xml = sample("aggregate/mail.sports-league.example!example.com!1538784000!1538870399.xml")
       assert(post(port, "/dmarc/report", xml, "application/xml").statusCode() == 200)
       assert(get(port, "/summary").body() == """{"reports":1}""")
       val metrics = get(port, "/metrics").body()

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 class ImapIntakeSpec extends SparkSpec {
 
-  private val Samples = "/root/reference/samples/aggregate"
+  private val Samples = s"${DmarcFixtures.Root}/aggregate"
 
   private def sampleBytes(name: String): Array[Byte] =
     Files.readAllBytes(Paths.get(s"$Samples/$name"))
@@ -25,8 +25,8 @@ class ImapIntakeSpec extends SparkSpec {
 
   private val ThreeSamples = Seq(
     "example.net!example.com!1529366400!1529452799.xml",
-    "usssa.com!example.com!1538784000!1538870399.xml",
-    "twilight.eml")
+    "mail.sports-league.example!example.com!1538784000!1538870399.xml",
+    "mail.receiver.example!example.com!1013662812!1013749130.eml")
 
   test("protocol round-trip: fetched RFC822 bytes are byte-identical to the mailbox") {
     val seed = seeded(ThreeSamples)
@@ -139,12 +139,14 @@ class ImapIntakeSpec extends SparkSpec {
   }
 
   test("p_imap_intake registry entry covers the full sample corpus") {
-    val out = SparkEntry.queries("p_imap_intake")(spark, "")
-    assert(out.count() == 2302)
-    // the gate's stronger claim (identical to st_report_intake's
-    // snapshot) is hash-checked by the driver; here pin the row count
-    // and a spot value
-    val one = out.filter(col("report_id") === "9391651994964116463").collect()
-    assert(one.length == 1)
+    onReferenceSamples {
+      val out = SparkEntry.queries("p_imap_intake")(spark, "")
+      assert(out.count() == 2302)
+      // the gate's stronger claim (identical to st_report_intake's
+      // snapshot) is hash-checked by the driver; here pin the row count
+      // and a spot value
+      val one = out.filter(col("report_id") === "9391651994964116463").collect()
+      assert(one.length == 1)
+    }
   }
 }

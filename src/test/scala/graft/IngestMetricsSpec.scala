@@ -8,7 +8,7 @@ import graft.sources.{DmarcReader, IngestMetrics}
 
 class IngestMetricsSpec extends SparkSpec {
   test("metrics agree with the ingest datasets") {
-    val path = "/root/reference/samples/aggregate"
+    val path = s"${DmarcFixtures.Root}/aggregate"
     val m = IngestMetrics.aggregateSummary(spark, path).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(m("dmarc_reports_parsed_total") > 0)

@@ -25,7 +25,7 @@ class KnobSurfaceSpec extends AnyFunSuite {
 
   test("spark.graft.* confs are exactly the allowlist") {
     val confs = found("\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"")
-    assert(confs.keySet == Set("spark.graft.pack.buckets"), confs)
+    assert(confs.keySet == Set("spark.graft.pack.buckets", "spark.graft.dmarc.samples"), confs)
   }
 
   test("the bounded-broadcast limits are written only in Bounded.scala") {

@@ -5,7 +5,7 @@ import java.nio.file.Files
 
 class OutputWritersSpec extends SparkSpec {
 
-  private val samples = "/root/reference/samples/aggregate"
+  private val samples = s"${DmarcFixtures.Root}/aggregate"
 
   test("aggregate CSV layout matches output.go:265-273 header set") {
     val reports = DmarcReader.aggregateReports(spark, samples, "*.xml")
@@ -48,7 +48,7 @@ class OutputWritersSpec extends SparkSpec {
   }
 
   test("forensic CSV layout matches output.go:334-398 header set") {
-    val forensic = DmarcReader.forensicReports(spark, "/root/reference/samples/forensic", "*.eml")
+    val forensic = DmarcReader.forensicReports(spark, s"${DmarcFixtures.Root}/forensic", "*.eml")
     val df = OutputWriters.forensicCsvLayout(forensic)
     assert(df.columns.toSeq == Seq(
       "feedback_type", "user_agent", "version", "original_envelope_id",
@@ -91,7 +91,7 @@ class OutputWritersSpec extends SparkSpec {
   }
 
   test("tls CSV layout: one row per policy or per failure detail") {
-    val tls = DmarcReader.tlsReports(spark, "/root/reference/samples/smtp_tls")
+    val tls = DmarcReader.tlsReports(spark, s"${DmarcFixtures.Root}/smtp_tls")
     val df = OutputWriters.tlsCsvLayout(tls)
     assert(df.columns.toSeq == Seq(
       "organization_name", "begin_date", "end_date", "contact_info", "report_id",

@@ -11,7 +11,7 @@ import graft.streaming.ReportFileIntake
   */
 class ReportFileIntakeSpec extends SparkSpec {
 
-  private val samples = "/root/reference/samples/aggregate"
+  private val samples = s"${DmarcFixtures.Root}/aggregate"
 
   private def copyIn(drop: Path, name: String): Unit =
     Files.copy(java.nio.file.Paths.get(samples, name), drop.resolve(name),
@@ -24,7 +24,7 @@ class ReportFileIntakeSpec extends SparkSpec {
     val ckpt = tmp.resolve("ckpt").toString
 
     // micro-batch 1: one report file arrives
-    copyIn(drop, "!example.com!1538204542!1538463818.xml")
+    copyIn(drop, "mail.receiver.example!example.com!1536192000!1536278399.xml")
     val q1 = ReportFileIntake.appendRecords(spark, drop.toString, out, ckpt)
     assert(q1.awaitTermination(120000))
     val n1 = spark.read.parquet(out).count()
@@ -57,23 +57,23 @@ class ReportFileIntakeSpec extends SparkSpec {
       spark.table(name).count()
     }
     val nF = drain(ReportFileIntake.forensicReportStream(
-      spark, "/root/reference/samples/forensic", "*.eml").toDF(),
+      spark, s"${DmarcFixtures.Root}/forensic", "*.eml").toDF(),
       s"st_forensic_${System.nanoTime()}")
     assert(nF == DmarcReader.forensicReports(
-      spark, "/root/reference/samples/forensic", "*.eml").count() && nF > 0)
+      spark, s"${DmarcFixtures.Root}/forensic", "*.eml").count() && nF > 0)
     val nT = drain(ReportFileIntake.tlsReportStream(
-      spark, "/root/reference/samples/smtp_tls").toDF()
+      spark, s"${DmarcFixtures.Root}/smtp_tls").toDF()
         .selectExpr("reportId", "organizationName", "size(policies) AS n_policies"),
       s"st_tls_${System.nanoTime()}")
     assert(nT == DmarcReader.tlsReports(
-      spark, "/root/reference/samples/smtp_tls").count() && nT > 0)
+      spark, s"${DmarcFixtures.Root}/smtp_tls").count() && nT > 0)
   }
 
   test("redelivered reports (same id, different files) collapse to one copy") {
     import org.apache.spark.sql.streaming.Trigger
     val tmp = Files.createTempDirectory("intake_dup")
     val drop = Files.createDirectories(tmp.resolve("drop"))
-    val orig = java.nio.file.Paths.get(samples, "!example.com!1538204542!1538463818.xml")
+    val orig = java.nio.file.Paths.get(samples, "mail.receiver.example!example.com!1536192000!1536278399.xml")
     // the same report delivered THREE times under different names, plus
     // one genuinely different report
     Files.copy(orig, drop.resolve("copy-a.xml"))
@@ -97,7 +97,7 @@ class ReportFileIntakeSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("intake_bad")
     val drop = Files.createDirectories(tmp.resolve("drop"))
     copyIn(drop, "invalid_utf_8.xml")
-    copyIn(drop, "!example.com!1538204542!1538463818.xml")
+    copyIn(drop, "mail.receiver.example!example.com!1536192000!1536278399.xml")
     val out = tmp.resolve("out").toString
     val q = ReportFileIntake.appendRecords(spark, drop.toString, out,
                                            tmp.resolve("ckpt").toString)

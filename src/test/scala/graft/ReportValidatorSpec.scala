@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ReportValidatorSpec extends AnyFunSuite {
 
-  private val samples = "/root/reference/samples"
+  private val samples = DmarcFixtures.Root
   private def bytes(p: String) = Files.readAllBytes(Paths.get(p))
 
   test("valid sample report passes validation") {
@@ -87,7 +87,7 @@ class ReportValidatorSpec extends AnyFunSuite {
       bytes(s"$samples/aggregate/example.net!example.com!1529366400!1529452799.xml"))
     assert(af == "aggregate" && ar.valid, ar.errors)
     val (ff, fr) = ReportValidator.validateAny(
-      bytes(s"$samples/forensic/dmarc_ruf_report_linkedin.eml"))
+      bytes(s"$samples/forensic/dkim_failure_example.com.eml"))
     assert(ff == "forensic" && fr.valid, fr.errors)
   }
 
@@ -105,7 +105,7 @@ class ReportValidatorSpec extends AnyFunSuite {
 class ReportValidatorSparkSpec extends SparkSpec {
   test("distributed archive audit flags exactly the bad files") {
     val df = ReportValidator.validateDirectory(
-      spark, "/root/reference/samples/aggregate", "*.xml").cache()
+      spark, s"${DmarcFixtures.Root}/aggregate", "*.xml").cache()
     val bad = df.filter(!org.apache.spark.sql.functions.col("valid"))
       .select("path").collect().map(_.getString(0)).toSet
     assert(bad.exists(_.contains("invalid_xml.xml")))

@@ -9,7 +9,7 @@ import graft.sources.DmarcReader
 class TlsAnalyticsSpec extends SparkSpec {
 
   private lazy val reports =
-    DmarcReader.tlsReports(spark, "/root/reference/samples/smtp_tls")
+    DmarcReader.tlsReports(spark, s"${DmarcFixtures.Root}/smtp_tls")
 
   test("tlsReportRows: one row per report×policy, ClickHouse column set") {
     val rows = tlsReportRows(reports)
@@ -42,6 +42,10 @@ class TlsAnalyticsSpec extends SparkSpec {
   }
 
   test("oracle VALUES snapshots equal the live parse (no silent drift)") {
+    // the snapshots pin the reference corpus's parse
+    val root = DmarcFixtures.ReferenceSamples
+    assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root)), s"$root is absent")
+    val reports = DmarcReader.tlsReports(spark, s"$root/smtp_tls")
     val liveP = tlsReportRows(reports)
       .select("policy_domain", "successful_session_count", "failed_session_count")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
