@@ -122,7 +122,6 @@ object Bench {
         (f.lift(7).getOrElse(0L), f.sum)
       } catch { case scala.util.control.NonFatal(_) => (0L, 0L) }
     val (steal0, total0) = statTicks()
-    val maxLoad = sys.env.get("GRAFT_BENCH_MAX_LOAD").flatMap(_.toDoubleOption).getOrElse(8.0)
     // 5 base passes always (was 3 + up to 2 load-gated extras): r13's
     // 3-pass mins ran 6–17% over r12's 5-pass mins on UNTOUCHED code —
     // min-of-5 is the stable cross-round statistic, so take 5
@@ -139,6 +138,10 @@ object Bench {
     // clean window exists. If no pass is clean, min falls back to all
     // samples and the artifact says so (steal_gated=false).
     val StealGatePct = 0.5
+    // pass-start load average above which a pass is load-contended: the
+    // extra passes are taken for it, and its samples count as clean only
+    // when the load stays at or below it
+    val MaxLoad = 8.0
     // Janino work over the timed passes: a warm pass whose generated
     // classes fit GraftSession.CodegenCacheEntries compiles nothing
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -166,7 +169,7 @@ object Bench {
       p += 1
       // a burned pass buys extra passes exactly like a loaded one
       continue = p < BasePasses ||
-        (p < MaxPasses && (passLoads.exists(_ > maxLoad) ||
+        (p < MaxPasses && (passLoads.exists(_ > MaxLoad) ||
           passSteals.exists(_ > StealGatePct)))
     }
     val codegenCompiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
@@ -190,7 +193,7 @@ object Bench {
     // min_pass pinned to 0). One pass is not a minimum statistic; two
     // keeps the r15 protection against genuinely loaded windows while
     // never discarding six of seven samples for self-load.
-    val cleanBothPasses = cleanStealPasses.filter(i => passLoads(i) <= maxLoad)
+    val cleanBothPasses = cleanStealPasses.filter(i => passLoads(i) <= MaxLoad)
     val gateSet =
       if (cleanBothPasses.size >= 2) cleanBothPasses else cleanStealPasses
     val stealGated = cleanStealPasses.nonEmpty
@@ -237,7 +240,7 @@ object Bench {
     val stealPct =
       if (total1 > total0) f"${100.0 * (steal1 - steal0) / (total1 - total0)}%.2f"
       else "-1"
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","window":"forced","legacy_total":$legacyTotal,"queries":$qs,"medians":$medians,"sf":"$sfDir","passes":$p,"pass_loads":"${passLoads.map(l => f"$l%.1f").mkString(",")}","pass_canary_sec":"${passCanaries.map(c => f"$c%.4f").mkString(",")}","pass_steal_pct":"${passSteals.map(s => f"$s%.2f").mkString(",")}","clean_passes":${cleanStealPasses.size},"clean_both_passes":${cleanBothPasses.size},"steal_gate_pct":$StealGatePct,"max_load":$maxLoad,"steal_gated":$stealGated,"load_gated":$loadGated,"min_pass":$minPass,"loadavg":"$loadAvg","cpus":$nCpu,"default_parallelism":$parallelism,"codegen_compiles":$codegenCompiles,"codegen_compile_ms":$codegenCompileMs,"canary_sec":$canary,"steal_pct":$stealPct}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","window":"forced","legacy_total":$legacyTotal,"queries":$qs,"medians":$medians,"sf":"$sfDir","passes":$p,"pass_loads":"${passLoads.map(l => f"$l%.1f").mkString(",")}","pass_canary_sec":"${passCanaries.map(c => f"$c%.4f").mkString(",")}","pass_steal_pct":"${passSteals.map(s => f"$s%.2f").mkString(",")}","clean_passes":${cleanStealPasses.size},"clean_both_passes":${cleanBothPasses.size},"steal_gate_pct":$StealGatePct,"max_load":$MaxLoad,"steal_gated":$stealGated,"load_gated":$loadGated,"min_pass":$minPass,"loadavg":"$loadAvg","cpus":$nCpu,"default_parallelism":$parallelism,"codegen_compiles":$codegenCompiles,"codegen_compile_ms":$codegenCompileMs,"canary_sec":$canary,"steal_pct":$stealPct}"""
     spark.stop()
     // Driver-parseable channels, most robust first: a file in the repo
     // root, then bare stdout lines (raw via run/outputStrategy, printed

@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.operators.{Corpus, Dedup, Par, TextAnalysis}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -56,6 +56,24 @@ object TrainingData {
     conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint"),
     lit(100L))
 
+  /** The tail [[prepare]] and [[prepareWeb]] share: the deterministic
+    * 80/10/10 train/val/test hash split (`split`), then the packing
+    * plan of the train rows (`bin` = `"<bucket>_<bin>"`, null on
+    * val/test). Only train tokens advance the bin timelines — val/test
+    * rows in the same bucket must not inflate train bins. The bucket
+    * count derives from `nDocs` (packBucketCount), so the parallelism
+    * ceiling scales with the corpus.
+    */
+  private def splitAndPack(df: DataFrame, tokens: Column, binTokens: Int,
+                           nDocs: Long): DataFrame = {
+    val train = col("split") === "train"
+    val (bucket, bin) = TextAnalysis.packPlan(tokens, train, binTokens,
+      TextAnalysis.packBucketCount(nDocs))
+    df.withColumn("split",
+        when(pctBucket < 80, "train").when(pctBucket < 90, "val").otherwise("test"))
+      .withColumn("bin", when(train, concat_ws("_", bucket, bin)))
+  }
+
   /** prepareWeb's corpus-derived probe threshold: the smallest shingle
     * count covering the bottom DECILE of the `n`-doc survivor frame —
     * pure integer arithmetic (rank ceil(n/10) into a cumulative count
@@ -103,11 +121,9 @@ object TrainingData {
     *
     * @param qualityQuantile  drop docs below this corpus quality
     *                         quantile (0.25 = drop the worst quartile)
-    * @param trainPct/valPct  hash-split percentages (rest = test)
     * @param binTokens        context-window size for the packing plan
     */
   def prepare(docs: DataFrame, qualityQuantile: Double = 0.25,
-              trainPct: Int = 80, valPct: Int = 10,
               binTokens: Int = 2048): Prepared = {
     val stages = Seq.newBuilder[(String, Long)]
     stages += "raw" -> docs.count()
@@ -143,31 +159,14 @@ object TrainingData {
                     else thrRow.getDouble(0)
           val filtered = scored.filter(col("quality") >= lit(thr))
 
-          // deterministic split + packing plan (train only): running
-          // token total per hash bucket — independent timelines
-          // (packBucketCount: conf dial + corpus-derived default),
-          // never a corpus-wide cumulative sum
+          // deterministic split + packing plan (train only); the corpus
+          // carries n_tokens between split and bin
           val nFiltered = filtered.count()
           stages += "quality_filter" -> nFiltered
-          val buckets = TextAnalysis.packBucketCount(docs.sparkSession, nFiltered)
-          val split = filtered.withColumn("split",
-            when(pctBucket < trainPct, "train")
-              .when(pctBucket < trainPct + valPct, "val")
-              .otherwise("test"))
-            .withColumn("n_tokens", expr("CAST(size(split(text, ' ')) AS BIGINT)"))
-          val w = Window.partitionBy("bucket").orderBy("doc_id")
-          val packed = split
-            .withColumn("bucket", pmod(col("doc_id"), lit(buckets.toLong)))
-            // only train tokens advance the bin timeline — val/test rows
-            // in the same bucket must not inflate train bins
-            .withColumn("train_tokens",
-              when(col("split") === "train", col("n_tokens")).otherwise(0L))
-            .withColumn("bin",
-              when(col("split") === "train",
-                concat_ws("_", col("bucket"),
-                  ((sum("train_tokens").over(w) - col("n_tokens")) / binTokens)
-                    .cast("bigint"))))
-            .drop("bucket", "train_tokens")
+          val packed = splitAndPack(
+              filtered.withColumn("n_tokens", expr("CAST(size(split(text, ' ')) AS BIGINT)")),
+              col("n_tokens"), binTokens, nFiltered)
+            .select((filtered.columns ++ Seq("split", "n_tokens", "bin")).map(col): _*)
           // one materialization for callers + counts, surviving the
           // stage-cache release below (lazy: the count materializes it)
           val out = packed.localCheckpoint(false)
@@ -261,7 +260,6 @@ object TrainingData {
     *                   REWRITE is the standalone d_decontaminate_scrub)
     */
   def prepareWeb(docs: DataFrame, oracleHash: Boolean = false,
-                 trainPct: Int = 80, valPct: Int = 10,
                  binTokens: Int = 2048,
                  probeMaxShingles: Int = 0,
                  packByBpe: Boolean = false,
@@ -579,36 +577,19 @@ object TrainingData {
       // vocabulary trains on the SURVIVOR corpus (the tokens the model
       // will actually see), the rank table broadcasts in the encode
       // closure, and only the bin arithmetic changes — packing drops
-      // nothing either way. Bucket count comes from packBucketCount
-      // (conf dial; corpus-derived default off the ccnet survivor
-      // count, so the parallelism ceiling scales with the corpus
-      // instead of pinning 32 timelines at any size).
-      val buckets = TextAnalysis.packBucketCount(spark, lastCount)
-      val packTokens =
-        if (!packByBpe) decontamed.withColumn("pack_tokens", col("n_tokens"))
+      // nothing either way. The bucket count derives from the ccnet
+      // survivor count.
+      val (tokened, tokens) =
+        if (!packByBpe) (decontamed, col("n_tokens"))
         else {
           val ranks = described("final")(graft.functions.BpeTokenizer.rankTable(
             TextAnalysis.learnBpeFrom(decontamed.select(col("doc_id"), col("text")))))
-          decontamed.join(
+          (decontamed.join(
             TextAnalysis.bpeEncoded(decontamed.select(col("doc_id"), col("text")), ranks)
               .select(col("doc_id"), col("n_bpe_tokens").as("pack_tokens")),
-            "doc_id")
+            "doc_id"), col("pack_tokens"))
         }
-      val split = packTokens.withColumn("split",
-        when(pctBucket < trainPct, "train")
-          .when(pctBucket < trainPct + valPct, "val")
-          .otherwise("test"))
-      val w = Window.partitionBy("pack_bucket").orderBy("doc_id")
-      val packed = split
-        .withColumn("pack_bucket", pmod(col("doc_id"), lit(buckets.toLong)))
-        .withColumn("train_tokens",
-          when(col("split") === "train", col("pack_tokens")).otherwise(0L))
-        .withColumn("bin",
-          when(col("split") === "train",
-            concat_ws("_", col("pack_bucket"),
-              ((sum("train_tokens").over(w) - col("pack_tokens")) / binTokens)
-                .cast("bigint"))))
-        .drop("pack_bucket", "train_tokens", "pack_tokens")
+      val packed = splitAndPack(tokened, tokens, binTokens, lastCount).drop("pack_tokens")
       // AQE runs the window's shuffle stage already at localCheckpoint
       val out = described("final")(packed.localCheckpoint(false))
       stages += "final" -> described("final")(out.count())

@@ -17,7 +17,7 @@ object TextAnalysis extends QueryModule {
 
   private val Stop = "('the','a','of','and','to','in','is','it')"
 
-  /** Docs-per-bucket target of [[packBucketCount]]'s derived default. */
+  /** Docs-per-bucket target of [[packBucketCount]]. */
   private[graft] val PackDocsPerBucket = 4096L
 
   /** Packing-bucket count shared by t_sequence_pack, t_bpe_pack and
@@ -26,16 +26,33 @@ object TextAnalysis extends QueryModule {
     * independent timeline per bucket, so the bucket count is the
     * stage's maximum parallelism AND its per-window state bound (a
     * fixed count at 100 TB would sort ~corpus/32 tokens of window
-    * state per timeline). `spark.graft.pack.buckets` overrides; the
-    * default derives one bucket per ~4096 docs with a floor of 32, so
-    * gate corpora keep the historical 32 while a 10B-doc corpus gets
-    * ~2.4M bounded timelines. Bins are independent across buckets —
-    * more buckets cost nothing in packing quality.
+    * state per timeline). One bucket per ~4096 docs with a floor of
+    * 32, so gate corpora keep the historical 32 while a 10B-doc corpus
+    * gets ~2.4M bounded timelines. Bins are independent across
+    * buckets — more buckets cost nothing in packing quality.
     */
-  private[graft] def packBucketCount(spark: org.apache.spark.sql.SparkSession,
-                                     nDocs: Long): Int =
-    spark.conf.getOption("spark.graft.pack.buckets").map(_.toInt)
-      .getOrElse(math.max(32L, (nDocs + PackDocsPerBucket - 1) / PackDocsPerBucket).toInt)
+  private[graft] def packBucketCount(nDocs: Long): Int =
+    math.max(32L, (nDocs + PackDocsPerBucket - 1) / PackDocsPerBucket).toInt
+
+  /** The greedy context-window packing plan, the one definition behind
+    * t_sequence_pack, t_bpe_pack and TrainingData's split-and-pack
+    * tail. A document's bucket is `pmod(doc_id, buckets)`; its bin is
+    * the running sum of `tokens` over the rows of its bucket that
+    * `advances` holds for, in doc_id order, minus its own tokens,
+    * integer-divided by `budget` (the oracles' `//`) — a document
+    * that crosses a bin boundary belongs to the bin it started in.
+    * One window per bucket, never a corpus-wide cumulative sum.
+    * Returns the (bucket, bin) columns, both BIGINT.
+    */
+  private[graft] def packPlan(tokens: org.apache.spark.sql.Column,
+                              advances: org.apache.spark.sql.Column,
+                              budget: Int, buckets: Int)
+      : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {
+    val bucket = pmod(col("doc_id"), lit(buckets.toLong))
+    val running = sum(when(advances, tokens).otherwise(0L))
+      .over(Window.partitionBy(bucket).orderBy("doc_id"))
+    (bucket, call_function("div", running - tokens, lit(budget.toLong)))
+  }
 
   /** The t_quality_score scalar, reused by the global-threshold filter:
     * length-capped token share + stopword ratio + alpha density, rounded
@@ -1396,18 +1413,24 @@ object TextAnalysis extends QueryModule {
        |  FROM (SELECT doc_id, SUM(w * x) AS m
        |        FROM ${p}sfeat JOIN ${wp}w3 USING (b) GROUP BY 1))""".stripMargin
 
-  /** t_sequence_pack's plan body, parameterized by the bucket dial
-    * (the entry passes the derived/guarded count; PackBucketsSpec
-    * drives other dials through here).
+  /** t_sequence_pack's plan body at any bucket count: whitespace
+    * tokens in 2048-token bins.
     */
   private[graft] def sequencePack(docs: org.apache.spark.sql.DataFrame,
                                   buckets: Int): org.apache.spark.sql.DataFrame =
-    docs.select(col("doc_id"), pmod(col("doc_id"), lit(buckets.toLong)).as("bucket"),
-        expr("CAST(size(split(text, ' ')) AS BIGINT)").as("n_tokens"))
-      .withColumn("bin",
-        expr("CAST((sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id) - n_tokens) div 2048 AS BIGINT)"))
+    binFill(docs.select(col("doc_id"),
+      expr("CAST(size(split(text, ' ')) AS BIGINT)").as("n_tokens")), 2048, buckets)
+
+  /** Per-(bucket, bin) fill of a (doc_id, n_tokens) frame packed by
+    * [[packPlan]], every document advancing its timeline.
+    */
+  private def binFill(counted: org.apache.spark.sql.DataFrame, budget: Int,
+                      buckets: Int): org.apache.spark.sql.DataFrame = {
+    val (bucket, bin) = packPlan(col("n_tokens"), lit(true), budget, buckets)
+    counted.select(bucket.as("bucket"), bin.as("bin"), col("n_tokens"))
       .groupBy("bucket", "bin")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("bin_tokens"))
+  }
 
   /** Sliding-window chunk projection shared by batch (t_chunk_overlap)
     * and streaming (st_chunk_overlap): 256-char windows at 192-char
@@ -1906,27 +1929,25 @@ object TextAnalysis extends QueryModule {
     // and the whole op one shuffle). A doc that crosses a bin boundary
     // belongs to the bin it started in — greedy packing semantics; the
     // padding/truncation decision is the trainer's, the ENGINE's job is
-    // the deterministic bin assignment and fill accounting. The bucket
-    // count is the parallelism dial — packBucketCount: conf-overridable
-    // (spark.graft.pack.buckets), corpus-derived default (one bucket
-    // per ~4096 docs, floor 32 — so the gate SFs keep the historical
-    // 32 the oracle hardcodes, and a 100 TB corpus gets millions of
-    // bounded timelines instead of 32 corpus-sized ones).
+    // the deterministic bin assignment and fill accounting (packPlan).
+    // The bucket count is the parallelism dial — packBucketCount,
+    // derived from the corpus (one bucket per ~4096 docs, floor 32 — so
+    // the gate SFs keep the historical 32 the oracle hardcodes, and a
+    // 100 TB corpus gets millions of bounded timelines instead of 32
+    // corpus-sized ones).
     QueryDef(
       "t_sequence_pack",
       (s, dir) => {
         val d = Tables(s, dir).documents
-        val buckets = packBucketCount(s, d.count())
+        val buckets = packBucketCount(d.count())
         // GATE guard, not a product constraint: this entry's DuckDB
-        // oracle hardcodes the 32-bucket historical default, so a conf
-        // override or a gate corpus past the derived floor must fail
-        // LOUDLY here instead of hash-mismatching obscurely downstream
-        // (PackBucketsSpec drives the dial through sequencePack
-        // directly — the product paths, prepare/prepareWeb, stay
-        // conf-dialable)
-        require(s.conf.getOption("spark.graft.pack.buckets").isEmpty && buckets == 32,
+        // oracle hardcodes the 32-bucket historical default, so a gate
+        // corpus past the derived floor must fail LOUDLY here instead
+        // of hash-mismatching obscurely downstream (PackBucketsSpec
+        // drives other counts through sequencePack directly)
+        require(buckets == 32,
           s"t_sequence_pack's oracle pins 32 pack buckets; live value is $buckets " +
-            "(unset spark.graft.pack.buckets / gate corpora stay under 32*4096 docs)")
+            "(gate corpora stay under 32*4096 docs)")
         sequencePack(d, buckets).orderBy("bucket", "bin")
       },
       Some("""WITH t AS (SELECT doc_id, doc_id % 32 AS bucket,
@@ -2403,7 +2424,7 @@ object TextAnalysis extends QueryModule {
     // exercises punctuated text where they genuinely diverge). A
     // 512-token budget so the gate corpus actually FILLS bins (~3 per
     // bucket) instead of one bin per timeline. Same bounded-timeline
-    // shape (bucketed running sum, packBucketCount dial); the encode
+    // shape (packPlan's bucketed running sum, packBucketCount); the encode
     // rides the same broadcast rank table as t_bpe_encode. The oracle
     // chains the committed t_bpe_encode snapshot (the only
     // non-SQL-expressible step) through an INDEPENDENT SQL
@@ -2414,19 +2435,14 @@ object TextAnalysis extends QueryModule {
       (s, dir) => {
         val t = Tables(s, dir)
         val ranks = graft.functions.BpeTokenizer.rankTable(learnBpe(t))
-        val buckets = packBucketCount(s, t.documents.count())
+        val buckets = packBucketCount(t.documents.count())
         // same GATE guard as t_sequence_pack: the oracle below
         // hardcodes doc_id % 32
-        require(s.conf.getOption("spark.graft.pack.buckets").isEmpty && buckets == 32,
+        require(buckets == 32,
           s"t_bpe_pack's oracle pins 32 pack buckets; live value is $buckets " +
-            "(unset spark.graft.pack.buckets / gate corpora stay under 32*4096 docs)")
-        bpeEncoded(t.documents, ranks)
-          .select(col("doc_id"), pmod(col("doc_id"), lit(buckets.toLong)).as("bucket"),
-                  col("n_bpe_tokens").as("n_tokens"))
-          .withColumn("bin",
-            expr("CAST((sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id) - n_tokens) div 512 AS BIGINT)"))
-          .groupBy("bucket", "bin")
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("bin_tokens"))
+            "(gate corpora stay under 32*4096 docs)")
+        binFill(bpeEncoded(t.documents, ranks)
+            .select(col("doc_id"), col("n_bpe_tokens").as("n_tokens")), 512, buckets)
           .orderBy("bucket", "bin")
       },
       Some {

@@ -1,7 +1,12 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import scala.collection.mutable
+import org.snakeyaml.engine.v2.api.LoadSettings
+import org.snakeyaml.engine.v2.api.lowlevel.Compose
+import org.snakeyaml.engine.v2.common.ScalarStyle
+import org.snakeyaml.engine.v2.nodes.{MappingNode, Node, ScalarNode, SequenceNode}
+import scala.jdk.CollectionConverters._
+import scala.jdk.OptionConverters._
 
 /** Typed settings mirroring the reference's config surface
   * (internal/config/config.go:10-98), with the reference's defaults
@@ -80,11 +85,9 @@ final case class GraftConfig(logging: LoggingSettings = LoggingSettings(),
   * file is the defaults; a malformed file or a wrong-typed value fails
   * loudly (viper's Unmarshal contract).
   *
-  * The parser covers the YAML subset the reference's config.yaml
-  * actually uses — two-level `section: / key: value` maps, `- item`
-  * string lists, quoted and bare scalars, `#` comments — and nothing
-  * more, so there is no dependency on a YAML library (none exists in
-  * this offline container). Unknown sections and keys are ignored,
+  * The file is composed (not constructed) by snakeyaml-engine, a YAML
+  * 1.2 parser on Spark's classpath, and read as two-level
+  * `section: / key: value` maps. Unknown sections and keys are ignored,
   * like viper's.
   */
 object ConfigLoader {
@@ -181,85 +184,39 @@ object ConfigLoader {
     throw new IllegalArgumentException(
       s"config key '$key': expected $want, got '$got'")
 
-  /** Trailing-comment strip + quote removal. None = genuinely no value
-    * (a list follows); Some("") = an explicit quoted empty string —
-    * config.yaml.example uses `password: ""` and the two must not
-    * collapse.
+  /** section → key → value off the composed node graph: a scalar is
+    * its source text (`password: 007` stays "007"; the accessors do
+    * the typing), a sequence is a Seq of its items. A plain empty value
+    * (`host:`) is YAML null and ABSENT, so the accessors apply their
+    * defaults (viper's nil handling); a quoted `""` stays an empty
+    * string.
     */
-  private def scalar(raw: String): Option[String] = {
-    val t = raw.trim
-    if (t.startsWith("\"") && t.indexOf('"', 1) > 0)
-      Some(t.substring(1, t.indexOf('"', 1)))
-    else if (t.startsWith("'") && t.indexOf('\'', 1) > 0)
-      Some(t.substring(1, t.indexOf('\'', 1)))
-    else {
-      // a '#' starts a comment only at the value start or after
-      // whitespace (YAML rule): `password: abc#123` is the scalar
-      // "abc#123", not "abc"
-      var h = -1
-      var i = 0
-      while (h < 0 && i < t.length) {
-        if (t.charAt(i) == '#' &&
-            (i == 0 || t.charAt(i - 1) == ' ' || t.charAt(i - 1) == '\t')) h = i
-        i += 1
-      }
-      val v = (if (h >= 0) t.substring(0, h) else t).trim
-      if (v.isEmpty) None else Some(v)
+  private[sources] def parseYaml(text: String): Map[String, Map[String, Any]] = {
+    val sections = new Compose(LoadSettings.builder().build()).composeString(text).toScala match {
+      case None => Map.empty[String, Any]
+      case Some(m: MappingNode) => entries(m)
+      case Some(_) => throw new IllegalArgumentException("expected a map of config sections")
+    }
+    sections.map {
+      case (k, m: Map[_, _]) => k -> m.asInstanceOf[Map[String, Any]]
+      case (k, _) => throw new IllegalArgumentException(
+        s"top-level '$k' is not a section (two-level config expected)")
     }
   }
 
-  /** Two-level YAML subset → section → key → (String | Seq[String]). */
-  private[sources] def parseYaml(text: String): Map[String, Map[String, Any]] = {
-    val root = mutable.LinkedHashMap.empty[String, mutable.LinkedHashMap[String, Any]]
-    var section: Option[String] = None
-    var listKey: Option[String] = None
-    text.linesIterator.zipWithIndex.foreach { case (line, i) =>
-      val noComment = if (line.trim.startsWith("#")) "" else line
-      if (noComment.trim.nonEmpty) {
-        val indent = noComment.takeWhile(_ == ' ').length
-        val t = noComment.trim
-        if (t.startsWith("- ") || t == "-") {
-          val key = listKey.getOrElse(
-            throw new IllegalArgumentException(s"line ${i + 1}: list item outside a list"))
-          val s = section.getOrElse(
-            throw new IllegalArgumentException(s"line ${i + 1}: list item outside a section"))
-          val cur = root(s).get(key) match {
-            case Some(xs: Seq[_]) => xs.asInstanceOf[Seq[String]]
-            case _ => Seq.empty[String]
-          }
-          root(s)(key) = cur :+ scalar(t.stripPrefix("-")).getOrElse("")
-        } else {
-          val c = t.indexOf(':')
-          if (c <= 0)
-            throw new IllegalArgumentException(s"line ${i + 1}: expected 'key: value', got '$t'")
-          val key = t.substring(0, c).trim
-          val value = scalar(t.substring(c + 1))
-          if (indent == 0) {
-            section = Some(key)
-            listKey = None
-            root.getOrElseUpdate(key, mutable.LinkedHashMap.empty)
-            if (value.exists(_.nonEmpty))
-              throw new IllegalArgumentException(
-                s"line ${i + 1}: top-level scalar '$key' unsupported (two-level config expected)")
-          } else {
-            val s = section.getOrElse(
-              throw new IllegalArgumentException(s"line ${i + 1}: key outside a section"))
-            value match {
-              case None =>
-                // `key:` with nothing after it: either a list follows
-                // (materialized when the first `- item` arrives) or the
-                // value is YAML null — treated as ABSENT so the typed
-                // accessors apply their defaults (viper's nil handling),
-                // instead of surfacing a bogus empty list
-                listKey = Some(key)
-                root(s).remove(key)
-                ()
-              case Some(v) => listKey = None; root(s)(key) = v
-            }
-          }
-        }
-      }
-    }
-    root.map { case (k, v) => k -> v.toMap }.toMap
+  private def entries(m: MappingNode): Map[String, Any] =
+    m.getValue.asScala.iterator.collect {
+      case t if !isNull(t.getValueNode) => value(t.getKeyNode).toString -> value(t.getValueNode)
+    }.toMap
+
+  private def isNull(n: Node): Boolean = n match {
+    case s: ScalarNode => s.getScalarStyle == ScalarStyle.PLAIN && s.getValue.isEmpty
+    case _ => false
+  }
+
+  private def value(n: Node): Any = n match {
+    case s: ScalarNode => s.getValue
+    case q: SequenceNode => q.getValue.asScala.map(value).toSeq
+    case m: MappingNode => entries(m)
   }
 }

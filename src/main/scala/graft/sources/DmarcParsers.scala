@@ -109,25 +109,28 @@ object AggregateXmlParser {
     }
   }
 
-  /** .eml input: locate the aggregate attachment inside MIME parts
-    * (xml / gzip / zip payloads, base64 transfer encoding) — the path of
-    * parser.go:392-628.
+  /** The decoded MIME parts of a mail that may hold an aggregate
+    * report, in message order: xml / gzip / zip payloads by content
+    * type or file name, or octet-stream (base64 transfer encoding) —
+    * the parts parser.go:392-628 tries. The report is the first that
+    * [[parse]] accepts.
     */
-  def parseEmail(data: Array[Byte]): Either[String, AggregateReport] = {
-    val msg = Mime.parseMessage(Extract.utf8(data))
-    val candidates = msg.flatten.filterNot(_.isMultipart)
-    val hit = candidates.iterator.flatMap { part =>
-      val ct = part.contentType
-      val fn = part.header("content-disposition") + part.header("content-type")
-      val looksLikeReport =
-        ct.contains("xml") || ct.contains("gzip") || ct.contains("zip") ||
-          fn.contains(".xml") || fn.contains(".gz") || fn.contains(".zip") ||
-          ct.contains("octet-stream")
-      if (!looksLikeReport) None
-      else Try(part.decodedBytes).toOption.flatMap(b => parse(b).toOption)
-    }.take(1).toSeq
-    hit.headOption.toRight("no aggregate report found in email")
-  }
+  private[sources] def attachments(data: Array[Byte]): Iterator[Array[Byte]] =
+    Mime.parseMessage(Extract.utf8(data)).flatten.filterNot(_.isMultipart).iterator
+      .flatMap { part =>
+        val ct = part.contentType
+        val fn = part.header("content-disposition") + part.header("content-type")
+        val looksLikeReport =
+          ct.contains("xml") || ct.contains("gzip") || ct.contains("zip") ||
+            fn.contains(".xml") || fn.contains(".gz") || fn.contains(".zip") ||
+            ct.contains("octet-stream")
+        if (looksLikeReport) Try(part.decodedBytes).toOption else None
+      }
+
+  /** .eml input: the first of its [[attachments]] that parses. */
+  def parseEmail(data: Array[Byte]): Either[String, AggregateReport] =
+    attachments(data).flatMap(parse(_).toOption).nextOption()
+      .toRight("no aggregate report found in email")
 
   /** Bytes → report, auto-detecting raw XML vs compressed vs email. */
   def parseAny(data: Array[Byte]): Either[String, AggregateReport] =
@@ -321,21 +324,25 @@ object TlsReportParser {
         }
       }
 
+  /** The decoded MIME parts of a mail that may hold an SMTP TLS
+    * report, in message order: tlsrpt, json or octet-stream content
+    * types. The report is the first that [[parseJson]] accepts.
+    */
+  private[sources] def attachments(data: Array[Byte]): Iterator[Array[Byte]] =
+    Mime.parseMessage(Extract.utf8(data)).flatten.filterNot(_.isMultipart).iterator
+      .flatMap { part =>
+        val ct = part.contentType
+        if (ct.contains("tlsrpt") || ct.contains("json") || ct.contains("octet-stream"))
+          Try(part.decodedBytes).toOption
+        else None
+      }
+
   /** JSON, compressed JSON, or .eml with a tlsrpt attachment. */
   def parseAny(data: Array[Byte]): Either[String, TlsReport] = {
     val direct = parseJson(data)
     if (direct.isRight) direct
-    else {
-      val msg = Mime.parseMessage(Extract.utf8(data))
-      val hit = msg.flatten.filterNot(_.isMultipart).iterator.flatMap { part =>
-        if (part.contentType.contains("tlsrpt") ||
-            part.contentType.contains("json") ||
-            part.contentType.contains("octet-stream"))
-          Try(part.decodedBytes).toOption.flatMap(b => parseJson(b).toOption)
-        else None
-      }.take(1).toSeq
-      hit.headOption.toRight("no SMTP TLS report found")
-    }
+    else attachments(data).flatMap(parseJson(_).toOption).nextOption()
+      .toRight("no SMTP TLS report found")
   }
 
   private implicit class IterOps[A](it: java.util.Iterator[A]) {

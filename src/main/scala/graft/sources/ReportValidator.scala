@@ -153,8 +153,9 @@ object ReportValidator {
     * dispatching to parser/validator. JSON-shaped content goes through
     * the TLS-JSON checks, ARF feedback email through a forensic parse
     * probe (the reference has no standalone forensic validator; a
-    * parse failure IS the audit error), everything else through the
-    * aggregate-XML battery.
+    * parse failure IS the audit error), a mailed aggregate or TLS
+    * report through its family's checks on the attachment the parsers
+    * would take, everything else through the aggregate-XML battery.
     */
   def validateAny(data: Array[Byte]): (String, ValidationResult) = {
     // decode ONCE (decompress + utf8 are the per-file hot-path cost in
@@ -177,8 +178,18 @@ object ReportValidator {
         case Right(_)  => ValidationResult(valid = true, Seq.empty, Seq.empty)
         case Left(err) => ValidationResult(valid = false, Seq(err), Seq.empty)
       })
-    else "aggregate" -> validateAggregateRaw(raw)
+    else mailed(data).getOrElse("aggregate" -> validateAggregateRaw(raw))
   }
+
+  /** A mailed report (RFC 7489 §7.2.1.1 / RFC 8460 §5.3): the first
+    * attachment the family's parser accepts, tried in ReportParser's
+    * order (aggregate, then TLS), validated as that family's text.
+    */
+  private def mailed(data: Array[Byte]): Option[(String, ValidationResult)] =
+    AggregateXmlParser.attachments(data).find(AggregateXmlParser.parse(_).isRight)
+      .map(a => "aggregate" -> validateAggregate(a))
+      .orElse(TlsReportParser.attachments(data).find(TlsReportParser.parseJson(_).isRight)
+        .map(a => "smtp_tls" -> validateTlsJson(a)))
 
   /** Distributed archive audit: every file validated on executors,
     * across all three report families (format auto-detected per file).

@@ -50,18 +50,16 @@ class BpePackSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val docs = Tables(spark, sfDir).documents
-    // 2 buckets + a 64-token budget: long per-bucket timelines whose
-    // bins actually fill, so the BPE-vs-whitespace prefix drift (the
+    // a 32-token budget: on the 32 short bucket timelines (one or two
+    // train docs each) the BPE-vs-whitespace prefix drift (the
     // extracted text carries punctuation — '<end>' is three pretokens
-    // to one whitespace token) must shift some bin boundary; at the
-    // default 2048 every bucket fits in bin 0 and the two accountings
-    // are indistinguishable
-    spark.conf.set("spark.graft.pack.buckets", "2")
-    val (base, bpe) =
-      try (TrainingData.prepareWeb(docs, oracleHash = true, binTokens = 64),
-           TrainingData.prepareWeb(docs, oracleHash = true, binTokens = 64,
-             packByBpe = true))
-      finally spark.conf.unset("spark.graft.pack.buckets")
+    // to one whitespace token) must shift some bin boundary; at 64 it
+    // shifts none here, and at the default 2048 every bucket fits in
+    // bin 0, so the two accountings would be indistinguishable
+    val budget = 32
+    val base = TrainingData.prepareWeb(docs, oracleHash = true, binTokens = budget)
+    val bpe = TrainingData.prepareWeb(docs, oracleHash = true, binTokens = budget,
+      packByBpe = true)
     // the arm only changes bin arithmetic: every stage count identical
     assert(bpe.stages == base.stages)
     assert(bpe.corpus.select("doc_id").except(base.corpus.select("doc_id")).isEmpty)
@@ -81,7 +79,7 @@ class BpePackSpec extends SparkSpec {
       .join(counts, "doc_id")
       .groupBy("bin")
       .agg(sum("n_bpe_tokens").as("t"), max("n_bpe_tokens").as("m"))
-      .filter(col("t") - col("m") >= 64)
+      .filter(col("t") - col("m") >= budget)
     assert(overfull.isEmpty, "a BPE bin was already full before its last doc")
   }
 }

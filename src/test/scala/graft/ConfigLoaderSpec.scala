@@ -142,6 +142,19 @@ class ConfigLoaderSpec extends AnyFunSuite {
     assert(cfg.imap.port == 143)
   }
 
+  test("scalars keep their source text; a quoted empty string is not YAML null") {
+    val cfg = ConfigLoader.fromYaml(
+      """imap:
+        |  password: 007
+        |clickhouse:
+        |  username: ""
+        |  database:
+        |""".stripMargin)
+    assert(cfg.imap.password == "007")
+    assert(cfg.clickhouse.username == "", "quoted empty string overrides the default")
+    assert(cfg.clickhouse.database == "dmarc", "plain empty value keeps the default")
+  }
+
   test("'#' starts a comment only after whitespace (password: abc#123 survives)") {
     val cfg = ConfigLoader.fromYaml(
       """imap:

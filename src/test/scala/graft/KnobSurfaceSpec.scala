@@ -25,7 +25,7 @@ class KnobSurfaceSpec extends AnyFunSuite {
 
   test("spark.graft.* confs are exactly the allowlist") {
     val confs = found("\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"")
-    assert(confs.keySet == Set("spark.graft.pack.buckets", "spark.graft.dmarc.samples"), confs)
+    assert(confs.keySet == Set("spark.graft.dmarc.samples"), confs)
   }
 
   test("the bounded-broadcast limits are written only in Bounded.scala") {
@@ -39,7 +39,7 @@ class KnobSurfaceSpec extends AnyFunSuite {
     // sys.env lookups, plus lookups on an `env` map defaulted to sys.env
     val vars = found("\\b(?:sys\\.)?env(?:\\.get|\\.getOrElse|\\.contains)?\\(\\s*\"([A-Z][A-Z0-9_]*)\"")
     assert(vars.keySet == Set(
-      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "GRAFT_BENCH_MAX_LOAD",
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
       "GRAFT_KAFKA_BOOTSTRAP", "GRAFT_KAFKA_TOPIC"), vars)
     // no other way in: every sys.env use is a literal-named lookup or
     // the default of such an `env` map

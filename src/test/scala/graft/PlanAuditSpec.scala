@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+
 /** Physical-plan audit: the properties that make these queries survive a
   * 100x scale-up must be visible in the plan, not assumed — parquet
   * filter pushdown, column pruning, broadcast of dimension tables, and
@@ -110,6 +116,29 @@ class PlanAuditSpec extends SparkSpec {
   // swept through their own registry entries
   private val eagerComposites = Set("d_training_prepare", "d_web_pipeline", "d_web_pipeline_model", "d_web_pipeline_substr", "w_zorder", "w_upsert", "w_rollup_refresh", "st_upsert_apply", "w_retention")
 
+  /** Every node of a plan, through AQE's final plan, its query stages,
+    * reused exchanges and subqueries.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case r: ReusedExchangeExec => r +: nodes(r.child)
+    case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+  }
+
+  /** A BroadcastNestedLoopJoin whose broadcast side held more than one
+    * row, by the broadcast exchange's output-row metric of the run.
+    */
+  private val WideNestedLoop = "BroadcastNestedLoopJoin over more than one broadcast row"
+
+  private def ranWideNestedLoop(p: SparkPlan): Boolean = nodes(p).exists {
+    case j: BroadcastNestedLoopJoinExec =>
+      nodes(if (j.buildSide == BuildLeft) j.left else j.right)
+        .collectFirst { case b: BroadcastExchangeExec => b.metrics("numOutputRows").value }
+        .forall(_ > 1)
+    case _ => false
+  }
+
   /** Each swept entry built once, under [[ExecutedPlans]], as the set of
     * audited operators in the plans it ran: the returned frame's
     * executedPlan and the executed plan of every action its build ran.
@@ -126,8 +155,9 @@ class PlanAuditSpec extends SparkSpec {
         name -> scala.util.Try(ExecutedPlans.during(spark)(SparkEntry.queries(name)(spark, sfDir)))
           .toEither.left.map(e => s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}")
           .map { case (df, ran) =>
-            (df.queryExecution.executedPlan +: ran.map(_.executedPlan)).map(_.toString)
-              .flatMap(p => audited.filter(p.contains)).toSet
+            val plans = df.queryExecution.executedPlan +: ran.map(_.executedPlan)
+            plans.map(_.toString).flatMap(p => audited.filter(p.contains)).toSet ++
+              Some(WideNestedLoop).filter(_ => plans.exists(ranWideNestedLoop))
           }
       }
   }
@@ -135,7 +165,7 @@ class PlanAuditSpec extends SparkSpec {
   /** Fails naming every swept entry outside `exempt` whose plans ran
     * `op`, and every one that did not build.
     */
-  private def assertNoneRan(op: String, exempt: Set[String] = Set.empty): Unit = {
+  private def assertNoneRan(op: String, exempt: String => Boolean = _ => false): Unit = {
     val entries = swept.filterNot { case (name, _) => exempt(name) }
     val offenders = entries.collect { case (name, Right(ops)) if ops(op) => name }
     val unbuilt = entries.collect { case (name, Left(err)) => s"$name ($err)" }
@@ -175,7 +205,7 @@ class PlanAuditSpec extends SparkSpec {
       // shape as the TPC-H threshold queries)
       "t_unigram_surprisal",
       // 1-row corpus-total + 1-row tercile-cuts broadcasts (CCNet)
-      "t_ccnet_buckets", "d_web_pipeline_decontam", "d_web_pipeline_full",
+      "t_ccnet_buckets",
       // 1-row vocabulary-size broadcast onto the bigram frame
       "t_bigram_surprisal",
       // 1-row model-totals broadcast onto the token frame (DSIR)
@@ -185,7 +215,11 @@ class PlanAuditSpec extends SparkSpec {
       // four 1-row summary frames crossJoined into the corpus-profile
       // row (the TPC-H scalar-threshold shape, bounded at any scale)
       "t_wimbd_stats")
-    assertNoneRan("BroadcastNestedLoopJoin", exempt = allowed)
+    // prepareWeb runs CCNet's two 1-row broadcasts among many other
+    // stages: its entries may run a nested loop only over one row
+    val oneRowOnly = Set("d_web_pipeline_decontam", "d_web_pipeline_full")
+    assertNoneRan("BroadcastNestedLoopJoin", exempt = allowed ++ oneRowOnly)
+    assertNoneRan(WideNestedLoop, exempt = !oneRowOnly(_))
   }
 
   test("q6 is a pure pushed-down scan+agg: no join, filters reach parquet") {

@@ -91,6 +91,14 @@ class ReportValidatorSpec extends AnyFunSuite {
     assert(ff == "forensic" && fr.valid, fr.errors)
   }
 
+  test("a mailed TLS report validates as smtp_tls from its attachment") {
+    // RFC 8460 §5.3: the report rides a gzip attachment of a
+    // multipart/report message, not the message text
+    val (family, r) = ReportValidator.validateAny(
+      bytes(s"$samples/smtp_tls/mail.sender.example!example.net!1494201600!1494287999.eml"))
+    assert(family == "smtp_tls" && r.valid, r.errors)
+  }
+
   test("email/domain/ip/policy helpers match validator.go semantics") {
     import ReportValidator._
     assert(isValidEmail("a.b+c@example.co"))
@@ -110,5 +118,19 @@ class ReportValidatorSparkSpec extends SparkSpec {
       .select("path").collect().map(_.getString(0)).toSet
     assert(bad.exists(_.contains("invalid_xml.xml")))
     assert(df.count() > bad.size) // most sample files are valid
+  }
+
+  test("the archive audit reads mailed and compressed reports like the parsers") {
+    val verdicts = ReportValidator.validateDirectory(
+        spark, s"${DmarcFixtures.Root}/aggregate", "*")
+      .select("path", "family", "valid").collect()
+      .map(r => r.getString(0).split('/').last -> (r.getString(1), r.getBoolean(2))).toMap
+    // RFC 7489 §7.2.1.1 mail, gzip and zip: each an aggregate report
+    for (ext <- Seq(".eml", ".gz", ".zip")) {
+      val hits = verdicts.filter(_._1.endsWith(ext))
+      assert(hits.size == 1, s"$ext: $hits")
+      assert(hits.values.forall(_ == ("aggregate" -> true)), s"$ext: $hits")
+    }
+    assert(verdicts("invalid_xml.xml") == ("aggregate" -> false))
   }
 }
