@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
   *
   * All methods take the flattened `dmarc_aggregate_records` /
   * `dmarc_forensic_reports` shape; on a cluster those are parquet tables
-  * partitioned by month(begin_date) so the `since` filters prune
-  * partitions.
+  * partitioned by `report_month`. The `since` filters compare the row
+  * column (`begin_date`, `arrivalDate`), so they prune no partition:
+  * every month file is opened, and row-group statistics skip the rows
+  * outside the window.
   */
 object DmarcAnalytics {
 
@@ -106,8 +108,9 @@ object DmarcAnalytics {
   /** forensic p7: top source countries over enriched forensic reports
     * (GeoEnrichment.enrichForensic output — on the raw offline parse
     * every row is "Unknown" and this panel is empty, the round-2 gap).
-    * `since` applies the dashboard's arrival-date window; on the
-    * month-partitioned parquet table it prunes partitions.
+    * `since` applies the dashboard's arrival-date window as a row
+    * filter; on the month-partitioned parquet table it prunes no
+    * partition.
     */
   def forensicTopCountries(forensic: DataFrame, since: Option[String] = None,
                            n: Int = 10): DataFrame =

@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * ORDER BY (report_id, result_type)
   * (/root/reference/internal/storage/clickhouse/clickhouse.go:184-228).
   * Here they are flattened DataFrames; on a cluster both persist as
-  * parquet partitioned by month(begin_date), and every panel below is a
+  * month-partitioned parquet — the reports table by month(begin_date),
+  * the failures table by the ingest month, as in the reference
+  * (OutputWriters.writeTlsFailuresTable) — and every panel below is a
   * partial-aggregated groupBy over low-cardinality keys (map-side
   * combine, no extra shuffle beyond the agg exchange).
   */

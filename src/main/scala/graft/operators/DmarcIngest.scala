@@ -423,11 +423,7 @@ object DmarcIngest extends QueryModule {
     val rootPath = new Path(root)
     val base = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       .makeQualified(rootPath).toUri
-    s.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(root)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
+    DmarcReader.files(s, root, "*").as[(String, Array[Byte])]
       .map { case (path, bytes) =>
         val relUri = base.relativize(new Path(path).toUri)
         require(!relUri.isAbsolute, s"$path is not under the corpus root $base")

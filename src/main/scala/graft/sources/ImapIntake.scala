@@ -277,16 +277,16 @@ object ImapIntake {
   }
 
   /** Flatten fetched messages to aggregate record rows on the CLUSTER:
-    * the message bytes become a Dataset and run the same executor-side
-    * parser chain as the batch/file paths (parseAny handles the MIME
-    * walk, attachment decode, and decompression), so IMAP intake can
-    * never drift from file intake.
+    * the message bytes become the `content` column of the same
+    * executor-side parse step as the batch/file paths (the aggregate
+    * parser handles the MIME walk, attachment decode, and
+    * decompression), so IMAP intake can never drift from file intake.
     */
   def aggregateRecords(spark: SparkSession,
                        messages: Seq[FetchedMessage]): Dataset[AggregateRecordRow] = {
     import spark.implicits._
-    spark.createDataset(messages.map(_.rfc822))
-      .flatMap(b => AggregateXmlParser.parseAny(b).toOption.toSeq.flatMap(DmarcReader.recordRows))
+    DmarcReader.records(DmarcReader.Aggregate.reports(
+      spark.createDataset(messages.map(_.rfc822)).toDF("content")))
   }
 
   /** Wrap a raw report payload as the multipart message a reporting org

@@ -16,10 +16,10 @@ object IngestMetrics {
   def aggregateSummary(spark: SparkSession, path: String, glob: String = "*"): DataFrame = {
     import spark.implicits._
     val cols = Seq("parsed", "failed", "records", "messages")
-    val totals = DmarcReader.files(spark, path, glob).as[(String, Array[Byte])]
-      .map { case (_, bytes) => AggregateXmlParser.parseAny(bytes).fold(
+    val totals = DmarcReader.Aggregate.outcomes[String, (Long, Long, Long, Long)](
+        DmarcReader.files(spark, path, glob), "path")((_, parsed) => Some(parsed.fold(
         _ => (0L, 1L, 0L, 0L),
-        rep => (1L, 0L, rep.records.size.toLong, rep.records.map(_.count.toLong).sum)) }
+        rep => (1L, 0L, rep.records.size.toLong, rep.records.map(_.count.toLong).sum))))
       .toDF(cols: _*).select(cols.map(c => coalesce(sum(c), lit(0L))): _*).head()
     val Seq(nReports, nErrors, nRecords, nMessages) = cols.indices.map(totals.getLong)
     Seq(

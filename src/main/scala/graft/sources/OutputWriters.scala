@@ -130,8 +130,10 @@ object OutputWriters {
     * sorted within files on (org_name, report_id, source_ip_address,
     * begin_date) so parquet row-group min/max statistics serve the same
     * data-skipping role as MergeTree's primary index — a dashboard
-    * filter on org or source IP skips whole row groups, and every
-    * time-windowed panel prunes whole month directories.
+    * filter on org or source IP skips whole row groups. The panels'
+    * time windows filter on `begin_date`, not `report_month`, so Spark
+    * prunes no month directory for them: a windowed refresh opens every
+    * month file and only row-group statistics keep its bytes low.
     */
   def writeRecordsTable(records: Dataset[AggregateRecordRow], path: String): Unit =
     writeTable(records.toDF(), date_format(col("begin_date"), "yyyyMM"),

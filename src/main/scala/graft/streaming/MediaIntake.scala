@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Continuous MULTIMODAL intake: media files land in a drop directory
   * (crawler output, upload feed) and are feature-extracted as they
@@ -21,13 +21,6 @@ object MediaIntake {
   final case class ExifRow(doc_id: Long, byte_order: String, make: String,
                            model: String, orientation: Int, date_time: String,
                            iso: Int, exp_num: Int, exp_den: Int)
-
-  private val binarySchema = StructType(Seq(
-    StructField("path", StringType),
-    StructField("modificationTime", TimestampType),
-    StructField("length", LongType),
-    StructField("content", BinaryType),
-  ))
 
   /** Materialize a (doc_id, payload) frame as one file per row —
     * executor-side, so no driver collect — reused across runs via a
@@ -57,9 +50,12 @@ object MediaIntake {
     }
     media.select(col("doc_id"), col("payload")).foreachPartition {
       rows: java.util.Iterator[org.apache.spark.sql.Row] =>
+        // one temp name per task: two rows of one doc_id in concurrent
+        // tasks must not move each other's temp file
+        val task = org.apache.spark.TaskContext.get().taskAttemptId()
         rows.forEachRemaining { r =>
           val f = new java.io.File(dir, s"doc_${r.getLong(0)}.$ext")
-          val tmp = new java.io.File(dir, s".doc_${r.getLong(0)}.$ext.tmp")
+          val tmp = new java.io.File(dir, s".doc_${r.getLong(0)}.$ext.$task.tmp")
           java.nio.file.Files.write(tmp.toPath, r.getAs[Array[Byte]](1))
           // atomic publish (THROWS on failure — File.renameTo returns a
           // silently-ignorable boolean): the stream never sees a torn file
@@ -81,7 +77,7 @@ object MediaIntake {
   def mediaFileStream(spark: SparkSession, dropDir: String,
                       ext: String = "jpg"): DataFrame =
     spark.readStream.format("binaryFile")
-      .schema(binarySchema)
+      .schema(BinaryFileFormat.schema)
       .option("pathGlobFilter", s"*.$ext")
       .load(dropDir)
       .select(col("path"), col("content"))
@@ -140,7 +136,7 @@ object MediaIntake {
   def warcStream(spark: SparkSession, dropDir: String): Dataset[WarcPage] = {
     import spark.implicits._
     spark.readStream.format("binaryFile")
-      .schema(binarySchema)
+      .schema(BinaryFileFormat.schema)
       .option("pathGlobFilter", "*.warc*")
       .load(dropDir)
       .select(col("content")).as[Array[Byte]]

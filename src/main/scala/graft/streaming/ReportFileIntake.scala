@@ -1,11 +1,10 @@
 package graft.streaming
 
-import graft.sources.{AggregateRecordRow, AggregateReport, AggregateXmlParser,
-  DmarcReader, ForensicParser, ForensicReport, TlsReport, TlsReportParser}
+import graft.sources.{AggregateRecordRow, AggregateReport, DmarcReader}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 /** Continuous intake of raw DMARC report FILES from a drop directory —
   * the Spark twin of the reference's IMAP poll loop
@@ -20,14 +19,21 @@ import org.apache.spark.sql.types._
   */
 object ReportFileIntake {
 
-  /** binaryFile's fixed schema (streaming sources require it up front). */
-  private val binarySchema = StructType(Seq(
-    StructField("path", StringType),
-    StructField("modificationTime", TimestampType),
-    StructField("length", LongType),
-    StructField("content", BinaryType)))
+  private val MaxFilesPerTrigger = 64
 
-  /** (path, content) stream of newly arrived report files.
+  /** The drop directory as a `binaryFile` stream, `maxFilesPerTrigger`
+    * new files per micro-batch.
+    */
+  private def fileStream(spark: SparkSession, dropDir: String, glob: String,
+                         maxFilesPerTrigger: Int): DataFrame =
+    spark.readStream.format("binaryFile")
+      .schema(BinaryFileFormat.schema)
+      .option("pathGlobFilter", glob)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+      .load(dropDir)
+
+  /** (path, content) stream of newly arrived report files, the input of
+    * a `DmarcReader` family's `reports`.
     *
     * The watermarked path dedup guards a real hazard of mail-derived
     * filenames (the reference saves reports under their email subject —
@@ -37,39 +43,20 @@ object ReportFileIntake {
     * once the watermark passes a file's modification time + 1h, so it
     * stays bounded by recent-arrival count, not all-time file count.
     */
-  private def rawFileStream(spark: SparkSession, dropDir: String, glob: String,
-                            maxFilesPerTrigger: Int): DataFrame =
-    spark.readStream.format("binaryFile")
-      .schema(binarySchema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .load(dropDir)
+  def reportFileStream(spark: SparkSession, dropDir: String, glob: String = "*",
+                       maxFilesPerTrigger: Int = MaxFilesPerTrigger): DataFrame =
+    fileStream(spark, dropDir, glob, maxFilesPerTrigger)
       .withWatermark("modificationTime", "1 hour")
       .dropDuplicatesWithinWatermark("path")
-
-  def reportFileStream(spark: SparkSession, dropDir: String, glob: String = "*",
-                       maxFilesPerTrigger: Int = 64): DataFrame =
-    rawFileStream(spark, dropDir, glob, maxFilesPerTrigger)
       .select(col("path"), col("content"))
-
-  /** Parsed aggregate reports from the drop directory; unparseable files
-    * are skipped (the reference logs and continues — parser.go:116-193).
-    */
-  def aggregateReportStream(spark: SparkSession, dropDir: String,
-                            glob: String = "*"): Dataset[AggregateReport] = {
-    import spark.implicits._
-    reportFileStream(spark, dropDir, glob).as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) => AggregateXmlParser.parseAny(bytes).toOption }
-  }
 
   /** Flattened record rows (the `dmarc_aggregate_records` shape) as a
     * stream — ready to append to the same table the batch path fills.
+    * Unparseable files are skipped, as in the batch readers.
     */
   def aggregateRecordStream(spark: SparkSession, dropDir: String,
-                            glob: String = "*"): Dataset[AggregateRecordRow] = {
-    import spark.implicits._
-    aggregateReportStream(spark, dropDir, glob).flatMap(DmarcReader.recordRows)
-  }
+                            glob: String = "*"): Dataset[AggregateRecordRow] =
+    DmarcReader.records(DmarcReader.Aggregate.reports(reportFileStream(spark, dropDir, glob)))
 
   /** Aggregate reports with mailbox-redelivery dedup: an IMAP mailbox
     * can deliver the same report repeatedly (cc'd copies, re-polls,
@@ -82,44 +69,17 @@ object ReportFileIntake {
   def dedupedAggregateReports(spark: SparkSession, dropDir: String,
                               glob: String = "*"): Dataset[AggregateReport] = {
     import spark.implicits._
-    // built on the RAW load (not the path-deduped stream): report-id
+    // built on the RAW stream (not the path-deduped one): report-id
     // dedup subsumes path dedup here — a double-listed path parses to
     // the same report id — and Spark allows only one watermark
     // definition per stateful chain
-    spark.readStream.format("binaryFile")
-      .schema(binarySchema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", "64")
-      .load(dropDir)
-      .select(col("modificationTime"), col("content"))
-      .as[(java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (mt, bytes) =>
-        AggregateXmlParser.parseAny(bytes).toOption.map(r => (mt, r))
-      }
+    DmarcReader.Aggregate.keyedReports[java.sql.Timestamp](
+        fileStream(spark, dropDir, glob, MaxFilesPerTrigger), "modificationTime")
       .toDF("_arrival", "report")
       .withWatermark("_arrival", "1 hour")
       .withColumn("_rid", col("report.reportId"))
       .dropDuplicatesWithinWatermark("_rid")
       .select("report.*").as[AggregateReport]
-  }
-
-  /** Forensic (ARF email) twin of `aggregateReportStream` — the IMAP
-    * poll also delivers forensic reports; same drop-directory source,
-    * same executor-side parser as the batch path.
-    */
-  def forensicReportStream(spark: SparkSession, dropDir: String,
-                           glob: String = "*"): Dataset[ForensicReport] = {
-    import spark.implicits._
-    reportFileStream(spark, dropDir, glob).as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) => ForensicParser.parse(bytes).toOption }
-  }
-
-  /** SMTP TLS (RFC 8460 JSON) twin. */
-  def tlsReportStream(spark: SparkSession, dropDir: String,
-                      glob: String = "*"): Dataset[TlsReport] = {
-    import spark.implicits._
-    reportFileStream(spark, dropDir, glob).as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) => TlsReportParser.parseAny(bytes).toOption }
   }
 
   /** The full ingest loop: drop directory → parse → append-mode parquet

@@ -116,16 +116,19 @@ class ImapIntakeSpec extends SparkSpec {
     } finally server.close()
   }
 
-  test("mail intake flattens to the same records as the batch file parse") {
-    val server = new InMemoryImap("user", "pw", seeded(ThreeSamples))
+  /** (report_id, source_ip_address, count) of `names` read by the mail
+    * intake from a mailbox seeded with them, and by the batch file parse.
+    */
+  private def viaMailAndFiles(mailbox: Seq[String], names: Seq[String]): (Seq[String], Seq[String]) = {
+    val server = new InMemoryImap("user", "pw", seeded(mailbox))
     try {
       val msgs = ImapIntake.pullMessages(
         ImapConfig("127.0.0.1", server.port, "user", "pw", archiveMailbox = ""))
+      assert(msgs.size == mailbox.size)
       val viaMail = ImapIntake.aggregateRecords(spark, msgs).toDF()
         .select("report_id", "source_ip_address", "count")
         .collect().map(_.toString).sorted.toSeq
-      val names = ThreeSamples.map(n => s"$Samples/$n")
-      val viaFiles = names
+      val viaFiles = names.map(n => s"$Samples/$n")
         .map(p => DmarcReader.aggregateReports(spark, Paths.get(p).getParent.toString,
           Paths.get(p).getFileName.toString))
         .reduce(_ unionByName _)
@@ -133,9 +136,20 @@ class ImapIntakeSpec extends SparkSpec {
         .toDF()
         .select("report_id", "source_ip_address", "count")
         .collect().map(_.toString).sorted.toSeq
-      assert(viaMail.nonEmpty)
-      assert(viaMail == viaFiles)
+      (viaMail, viaFiles)
     } finally server.close()
+  }
+
+  test("mail intake flattens to the same records as the batch file parse") {
+    val (viaMail, viaFiles) = viaMailAndFiles(ThreeSamples, ThreeSamples)
+    assert(viaMail.nonEmpty)
+    assert(viaMail == viaFiles)
+  }
+
+  test("mail intake skips a mail whose report does not parse") {
+    val (viaMail, viaFiles) = viaMailAndFiles(ThreeSamples :+ "invalid_xml.xml", ThreeSamples)
+    assert(viaMail.nonEmpty)
+    assert(viaMail == viaFiles)
   }
 
   test("p_imap_intake registry entry covers the full sample corpus") {

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Pins graft's user-settable surface: every `spark.graft.*` session
   * conf and every environment variable the main sources read. Each
@@ -11,12 +9,7 @@ import scala.jdk.CollectionConverters._
   */
 class KnobSurfaceSpec extends AnyFunSuite {
 
-  private lazy val sources: Seq[(Path, String)] = {
-    val walk = Files.walk(Paths.get("src/main/scala"))
-    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      .map(p => p -> Files.readString(p))
-    finally walk.close()
-  }
+  private def sources = MainSources.all
 
   private def found(pattern: String): Map[String, Seq[String]] =
     sources.flatMap { case (p, text) =>

@@ -56,13 +56,13 @@ class ReportFileIntakeSpec extends SparkSpec {
       assert(q.awaitTermination(120000))
       spark.table(name).count()
     }
-    val nF = drain(ReportFileIntake.forensicReportStream(
-      spark, s"${DmarcFixtures.Root}/forensic", "*.eml").toDF(),
+    val nF = drain(DmarcReader.Forensic.reports(ReportFileIntake.reportFileStream(
+      spark, s"${DmarcFixtures.Root}/forensic", "*.eml")).toDF(),
       s"st_forensic_${System.nanoTime()}")
     assert(nF == DmarcReader.forensicReports(
       spark, s"${DmarcFixtures.Root}/forensic", "*.eml").count() && nF > 0)
-    val nT = drain(ReportFileIntake.tlsReportStream(
-      spark, s"${DmarcFixtures.Root}/smtp_tls").toDF()
+    val nT = drain(DmarcReader.Tls.reports(ReportFileIntake.reportFileStream(
+      spark, s"${DmarcFixtures.Root}/smtp_tls")).toDF()
         .selectExpr("reportId", "organizationName", "size(policies) AS n_policies"),
       s"st_tls_${System.nanoTime()}")
     assert(nT == DmarcReader.tlsReports(
