@@ -67,15 +67,26 @@ for name in sorted(oracle):
     # a name-derived match (entry stem vs spec-class stem), then to the
     # suites driving the defining module object (marked "module:")
     specs = [s for s, body in spec_files if f'"{name}"' in body]
+    parts = re.sub(r"^(st|[a-z])_", "", name).split("_")
     if not specs:
-        stem = re.sub(r"^(st|[a-z])_", "", name).replace("_", "")
-        specs = [s for s, _ in spec_files
-                 if s.lower().removesuffix("spec") in stem
-                 or stem in s.lower().removesuffix("spec")]
+        stem = "".join(parts)
+
+        def names_entry(spec, body):
+            # the spec's name holds the entry's whole stem or begins it
+            # (ZOrderSpec -> q_zorder_code); a fragment from further in
+            # claims the entry only if the suite names the other parts
+            # too (VerifySpec does not claim d_fuzzy_verify, nor the BMP
+            # ThumbnailSpec m_png_thumbnail)
+            spec_stem = spec.lower().removesuffix("spec")
+            if stem in spec_stem or stem.startswith(spec_stem):
+                return True
+            text = body.lower()
+            return spec_stem in stem and all(
+                p in spec_stem or p in text for p in parts)
+        specs = [s for s, body in spec_files if names_entry(s, body)]
     if not specs:
         # camelCase of the stem is usually the underlying function name
         # (f_base_domain -> baseDomain in NetFunctionsSpec)
-        parts = re.sub(r"^(st|[a-z])_", "", name).split("_")
         camel = parts[0] + "".join(p.capitalize() for p in parts[1:])
         specs = [s for s, body in spec_files
                  if re.search(rf"\b{camel}\b", body)]

@@ -79,16 +79,16 @@ object Bench {
     // scale artifact adopted in r15 — count() windows let the optimizer
     // prune real work (d_keep_best's 1000× cell read 328.6 s under
     // count() and 1782.4 s under the forced frame; t_quality_model's
-    // scoring projection collapses to a metadata count-star).
-    def run(df: org.apache.spark.sql.DataFrame): Unit = {
-      ScaleDemo.forcedFrame(df).head(); ()
-    }
+    // scoring projection collapses to a metadata count-star). Each
+    // query's jobs, its build's included, are described by its name.
+    def run(name: String, dir: String): Unit =
+      GraftSession.described(spark, name) { ScaleDemo.forcedFrame(queries(name)(spark, dir)).head(); () }
     // JVM+Spark warmup on the smallest SF so steady-state throughput is
     // measured, not first-call codegen/classloading. Guarded per query:
     // one broken query must degrade that query's samples to the -1
     // sentinel below, not zero the whole bench artifact.
     Headline.foreach { n =>
-      try run(queries(n)(spark, "/root/testdata/sf0.001"))
+      try run(n, "/root/testdata/sf0.001")
       catch { case scala.util.control.NonFatal(_) => () }
     }
     // Timed passes are INTERLEAVED round-robin (pass 1 of every query,
@@ -161,7 +161,7 @@ object Bench {
         // a failed query must NOT record its (tiny) elapsed-to-failure
         // time as a plausible sample — report the -1 sentinel instead
         samples(qi) = samples(qi) :+ (
-          try { run(queries(name)(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
+          try { run(name, sfDir); (System.nanoTime() - t0) / 1e9 }
           catch { case _: Throwable => -1.0 })
       }
       val (ps1, pt1) = statTicks()

@@ -90,6 +90,18 @@ object GraftSession {
     */
   val CodegenCacheEntries = 2000
 
+  /** Runs `body` with `label` as the description of every Spark job it
+    * submits from this thread, so Spark's event log and listeners
+    * attribute those jobs to `label`; the caller's description is
+    * restored on return. The job group is left as the caller set it.
+    */
+  def described[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prev)
+  }
+
   def build(appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()

@@ -18,14 +18,17 @@ object QuickBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-quickbench")
     val queries = SparkEntry.queries
+    // each entry's jobs are described by its name
+    def force(n: String, dir: String): Unit =
+      GraftSession.described(spark, n) { ScaleDemo.forcedFrame(queries(n)(spark, dir)).head(); () }
     def run(n: String): Double = {
       val t0 = System.nanoTime()
-      ScaleDemo.forcedFrame(queries(n)(spark, sfDir)).head()
+      force(n, sfDir)
       (System.nanoTime() - t0) / 1e9
     }
     // warmup on the smallest SF (codegen/classloading), like Bench
     for (n <- names) {
-      try { ScaleDemo.forcedFrame(queries(n)(spark, "/root/testdata/sf0.001")).head(); () }
+      try force(n, "/root/testdata/sf0.001")
       catch { case scala.util.control.NonFatal(_) => () }
     }
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.WebPipeline.{evalExcerpts, stageRows}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -134,65 +135,39 @@ object ScaleDemo {
     // the full web composite on its PRODUCTION xxhash64 LSH path
     // (prepareWeb's default; the registry entry pins oracleHash=true
     // for the DuckDB gate — stage-count parity is WebPipelineSpec's)
-    "d_web_pipeline_fast" -> ((s, dir) => {
-      import s.implicits._
-      graft.api.TrainingData.prepareWeb(Tables(s, dir).documents)
-        .stages.zipWithIndex.map { case ((st, n), i) => (i, st, n) }
-        .toDF("stage_idx", "stage", "n_docs")
-    }),
+    "d_web_pipeline_fast" -> ((s, dir) =>
+      stageRows(graft.api.TrainingData.prepareWeb(Tables(s, dir).documents))),
     // the composite with a TRUE-MINORITY probe threshold (20 shingles
     // — the standalone entry's default) alongside the corpus-derived
     // decile cell: the two rows bound the probe arm's cost across its
     // regimes (the gate entry itself refuses the conf override, so
     // this is an explicit-argument custom cell)
-    "d_web_pipeline_probe20" -> ((s, dir) => {
-      import s.implicits._
-      graft.api.TrainingData.prepareWeb(Tables(s, dir).documents,
-          probeMaxShingles = 20)
-        .stages.zipWithIndex.map { case ((st, n), i) => (i, st, n) }
-        .toDF("stage_idx", "stage", "n_docs")
-    }),
+    "d_web_pipeline_probe20" -> ((s, dir) =>
+      stageRows(graft.api.TrainingData.prepareWeb(Tables(s, dir).documents,
+        probeMaxShingles = 20))),
     // the model-quality arm at scale (trains the classifier on the
     // url-deduped corpus, scores the ccnet survivors — the
     // d_web_pipeline_model gate entry's production-hash twin)
-    "d_web_pipeline_model_fast" -> ((s, dir) => {
-      import s.implicits._
-      graft.api.TrainingData.prepareWeb(Tables(s, dir).documents,
-          modelQuality = true)
-        .stages.zipWithIndex.map { case ((st, n), i) => (i, st, n) }
-        .toDF("stage_idx", "stage", "n_docs")
-    }),
+    "d_web_pipeline_model_fast" -> ((s, dir) =>
+      stageRows(graft.api.TrainingData.prepareWeb(Tables(s, dir).documents,
+        modelQuality = true))),
     // the exact-substring coverage arm at scale (the
     // d_web_pipeline_substr gate entry's production-hash twin, run on
     // the natural corpus — a COST cell: the permutation replicas carry
     // no cross-replica spans, so the arm's attrition is ~0 and the
     // row measures the pure per-scale overhead of the coverage pass)
-    "d_web_pipeline_substr_fast" -> ((s, dir) => {
-      import s.implicits._
-      graft.api.TrainingData.prepareWeb(Tables(s, dir).documents,
-          exactSubstr = true)
-        .stages.zipWithIndex.map { case ((st, n), i) => (i, st, n) }
-        .toDF("stage_idx", "stage", "n_docs")
-    }),
+    "d_web_pipeline_substr_fast" -> ((s, dir) =>
+      stageRows(graft.api.TrainingData.prepareWeb(Tables(s, dir).documents,
+        exactSubstr = true))),
     // the decontamination arm at scale (the d_web_pipeline_decontam
     // gate entry's production-hash twin, same excerpt-mint eval set —
     // every 20th doc's extracted-text excerpt, so the eval set scales
     // with the corpus like the standalone scrub fixture and the arm's
     // attrition stays a real ~5% at every scale)
     "d_web_pipeline_decontam_fast" -> ((s, dir) => {
-      import s.implicits._
       val docs = Tables(s, dir).documents
-      val ev = graft.operators.TextAnalysis.warcBlobs(
-          docs.filter(col("doc_id") % 20 === 5))
-        .flatMap { case (_, blob) =>
-          graft.functions.WarcRecords.parse(blob).getOrElse(Seq.empty)
-            .map(graft.operators.TextAnalysis.warcPageText)
-        }.toDF("doc_id", "url", "text")
-        .filter(length(col("text")) >= 49)
-        .select(expr("substring(text, 10, 120)").as("text"))
-      graft.api.TrainingData.prepareWeb(docs, decontaminateEval = Some(ev))
-        .stages.zipWithIndex.map { case ((st, n), i) => (i, st, n) }
-        .toDF("stage_idx", "stage", "n_docs")
+      stageRows(graft.api.TrainingData.prepareWeb(docs,
+        decontaminateEval = Some(evalExcerpts(docs))))
     }),
     // ALL THREE ARMS composed (the d_web_pipeline_full gate entry's
     // production-hash twin): model + substr + decontam on the natural
@@ -201,20 +176,9 @@ object ScaleDemo {
     // single-arm cells (the substr arm runs as a pure-overhead pass on
     // the permutation replicas, like d_web_pipeline_substr_fast)
     "d_web_pipeline_full_fast" -> ((s, dir) => {
-      import s.implicits._
       val docs = Tables(s, dir).documents
-      val ev = graft.operators.TextAnalysis.warcBlobs(
-          docs.filter(col("doc_id") % 20 === 5))
-        .flatMap { case (_, blob) =>
-          graft.functions.WarcRecords.parse(blob).getOrElse(Seq.empty)
-            .map(graft.operators.TextAnalysis.warcPageText)
-        }.toDF("doc_id", "url", "text")
-        .filter(length(col("text")) >= 49)
-        .select(expr("substring(text, 10, 120)").as("text"))
-      graft.api.TrainingData.prepareWeb(docs, modelQuality = true,
-          exactSubstr = true, decontaminateEval = Some(ev))
-        .stages.zipWithIndex.map { case ((st, n), i) => (i, st, n) }
-        .toDF("stage_idx", "stage", "n_docs")
+      stageRows(graft.api.TrainingData.prepareWeb(docs, modelQuality = true,
+        exactSubstr = true, decontaminateEval = Some(evalExcerpts(docs))))
     }))
 
   /** Content fingerprint of the base corpus: path plus (size, mtime) of

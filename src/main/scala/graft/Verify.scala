@@ -16,7 +16,8 @@ object Verify {
   }
 
   /** Writes every registry entry `only` names (all when None) to
-    * `outDir/<entry>`, then `oracle_sql.json` and `_failures.json`: one
+    * `outDir/<entry>`, each entry's Spark jobs described by its name,
+    * then `oracle_sql.json` and `_failures.json`: one
     * `{entry, exception, message}` per entry that failed, `[]` when none
     * did. A failed entry also leaves one stderr line.
     */
@@ -27,7 +28,9 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .flatMap { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        GraftSession.described(spark, name) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        }
         None
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -281,12 +281,8 @@ object TrainingData {
     // GC-released by the context cleaner when the stage frame drops.
     var lastCount = 0L
     // job attribution: see the scaladoc
-    val sc = spark.sparkContext
-    def described[T](step: String)(body: => T): T = {
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"web:$step")
-      try body finally sc.setJobDescription(prev)
-    }
+    def described[T](step: String)(body: => T): T =
+      graft.GraftSession.described(spark, s"web:$step")(body)
     def stage(name: String)(df: => DataFrame): DataFrame = described(name) {
       // widen before materializing: a stage frame otherwise inherits
       // the first shuffle's AQE-coalesced partition count, so every

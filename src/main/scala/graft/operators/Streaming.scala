@@ -2,15 +2,53 @@ package graft.operators
 
 import graft.Tables
 import graft.streaming.{EventsStreaming, RawEvent}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Rows-only entries exercising the Structured Streaming pipelines end to
-  * end (AvailableNow trigger → memory sink). Their batch twins
-  * (q_daily_volume, q_sessionize) are DuckDB-oracled; StreamingSpec
-  * asserts stream/batch parity.
+/** Entries exercising the Structured Streaming pipelines end to end.
+  * Each stream entry builds its stream plan and hands it to [[drain]],
+  * which runs it once to completion (AvailableNow trigger → memory sink)
+  * and returns the memory table; the entry then orders, windows or
+  * limits that table as its batch twin does. `st_upsert_apply` writes
+  * through foreachBatch instead and shares only the wait
+  * ([[awaitOrStop]]); `st_sessionize` is the batch fold of the
+  * streaming sessionizer and runs no stream.
+  *
+  * A stream gets [[DrainTimeoutMs]] to finish. `awaitTermination`
+  * returns false, not an exception, when that runs out; a partial memory
+  * table would hash-compare nondeterministically, so the entry fails
+  * naming itself, and the query is stopped first so a stuck stream does
+  * not keep running beside every later query of the session.
   */
 object Streaming extends QueryModule {
+
+  /** How long a registry stream may take to run to completion. */
+  private val DrainTimeoutMs = 300000L
+
+  /** Runs `stream` to completion into a memory table under the output
+    * `mode` and returns that table; the query is named after `entry`.
+    */
+  private def drain(stream: Dataset[_], entry: String, mode: String = "append"): DataFrame = {
+    val name = s"${entry}_${System.nanoTime()}"
+    val q = stream.writeStream.format("memory").queryName(name).outputMode(mode)
+      .trigger(Trigger.AvailableNow()).start()
+    awaitOrStop(q, entry)
+    stream.sparkSession.table(name)
+  }
+
+  private def awaitOrStop(q: StreamingQuery, entry: String): Unit =
+    stopUnlessDone(q, entry, q.awaitTermination(DrainTimeoutMs))
+
+  /** After the wait: a query that is not `done` is stopped, then `entry`
+    * fails with a message naming it.
+    */
+  private[graft] def stopUnlessDone(q: StreamingQuery, entry: String, done: Boolean): Unit =
+    if (!done) {
+      q.stop()
+      throw new IllegalStateException(
+        s"$entry timed out: its stream did not finish within ${DrainTimeoutMs / 1000} s and was stopped")
+    }
 
   /** The eval/benchmark stride-1 gram set pulled to the driver for the
     * streaming decontamination kernels (scrub + drop) — an EXPLICIT
@@ -38,21 +76,12 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_windowed_agg",
       (s, dir) => {
-        val name = s"st_win_${System.nanoTime()}"
-        val q = EventsStreaming.windowedAgg(EventsStreaming.readEventStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        // awaitTermination returns FALSE on timeout (no exception) — a
-        // partial memory table would hash-compare nondeterministically;
-        // fail loudly instead
-        require(q.awaitTermination(300000), "st_windowed_agg timed out")
+        val stream = EventsStreaming.windowedAgg(EventsStreaming.readEventStream(s, dir))
         // epoch-micros projection at the gate boundary only (the driver
         // compares parquet dtypes bit-for-bit and Spark writes tz-adjusted
         // timestamps, DuckDB literal TIMESTAMPs — same convention as
         // st_stats_moments' window_us)
-        s.table(name)
+        drain(stream, "st_windowed_agg", "complete")
           .select(unix_micros(col("window_start")).as("window_us"),
                   col("event_type"), col("n_events"), col("total_value"))
           .orderBy("window_us", "event_type")
@@ -94,14 +123,8 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_stats_moments",
       (s, dir) => {
-        val name = s"st_mom_${System.nanoTime()}"
-        val q = EventsStreaming.windowedMoments(EventsStreaming.readEventStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_stats_moments timed out")
-        s.table(name).orderBy("window_us", "event_type")
+        val stream = EventsStreaming.windowedMoments(EventsStreaming.readEventStream(s, dir))
+        drain(stream, "st_stats_moments", "complete").orderBy("window_us", "event_type")
       },
       Some("""WITH s AS (SELECT date_trunc('day', ts) AS day, event_type, COUNT(*) AS n,
              |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sx,
@@ -127,14 +150,8 @@ object Streaming extends QueryModule {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         import HistogramSketch.est
-        val name = s"st_qsk_${System.nanoTime()}"
-        val q = EventsStreaming.windowedHistogram(EventsStreaming.readEventStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_quantile_sketch timed out")
-        val cum = s.table(name)
+        val stream = EventsStreaming.windowedHistogram(EventsStreaming.readEventStream(s, dir))
+        val cum = drain(stream, "st_quantile_sketch", "complete")
           .withColumn("cum", sum("c").over(
             Window.partitionBy("window_us").orderBy("bin")
               .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -167,15 +184,10 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_heavy_hitters",
       (s, dir) => {
-        val name = s"st_hh_${System.nanoTime()}"
-        val q = graft.streaming.CorpusStreaming.heavyHitters(
+        val stream = graft.streaming.CorpusStreaming.heavyHitters(
           graft.streaming.CorpusStreaming.readDocumentStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_heavy_hitters timed out")
-        s.table(name).orderBy(desc("est_count"), asc("term")).limit(20)
+        drain(stream, "st_heavy_hitters", "complete")
+          .orderBy(desc("est_count"), asc("term")).limit(20)
       },
       Some(graft.api.ParseSnapshots.sfPinnedSql("st_heavy_hitters")),
     ),
@@ -186,21 +198,15 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_dedup_exact",
       (s, dir) => {
-        val name = s"st_dedup_${System.nanoTime()}"
         val docs = graft.streaming.CorpusStreaming.readDocumentStream(s, dir)
           // documents carry no event time; a deterministic pseudo-arrival
           // keeps the gate output stable (real feeds carry ingest time).
           // Offset past epoch 0: a row AT the initial watermark (0) would
           // be discarded as late by the stateful dedup.
           .withColumn("ts", expr("timestamp_micros((doc_id + 86400) * 1000000)"))
-        val q = graft.streaming.CorpusStreaming.dedupExact(docs)
+        val stream = graft.streaming.CorpusStreaming.dedupExact(docs)
           .select(col("text_hash"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_dedup_exact timed out")
-        s.table(name).orderBy("text_hash")
+        drain(stream, "st_dedup_exact").orderBy("text_hash")
       },
       // ORACLED: the admitted set after a single AvailableNow pass is
       // exactly the distinct hash set (which copy survives is racy;
@@ -216,14 +222,8 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_click_attribution",
       (s, dir) => {
-        val name = s"st_attr_${System.nanoTime()}"
-        val q = EventsStreaming.attributeClicks(EventsStreaming.readEventStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_click_attribution timed out")
-        s.table(name).orderBy("user_id", "view_id", "click_id")
+        val stream = EventsStreaming.attributeClicks(EventsStreaming.readEventStream(s, dir))
+        drain(stream, "st_click_attribution").orderBy("user_id", "view_id", "click_id")
       },
       Some("""WITH e AS (SELECT user_id, event_id, event_type,
              |  EPOCH_US(CAST(ts AS TIMESTAMP)) AS ts_us FROM events),
@@ -243,15 +243,9 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_static_enrich",
       (s, dir) => {
-        val name = s"st_enrich_${System.nanoTime()}"
-        val q = EventsStreaming.enrichWithWeights(
+        val stream = EventsStreaming.enrichWithWeights(
             EventsStreaming.readEventStream(s, dir), EventsStreaming.typeWeights(s))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_static_enrich timed out")
-        s.table(name).orderBy("event_id")
+        drain(stream, "st_static_enrich").orderBy("event_id")
       },
       // ORACLED: the stream-static broadcast join is stateless, so one
       // AvailableNow pass equals the batch join row for row; the weight
@@ -271,21 +265,15 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_bloom_guard",
       (s, dir) => {
-        val name = s"st_guard_${System.nanoTime()}"
         val d = Tables(s, dir).documents
         val fp = graft.functions.TextFp.bagOfWords(col("text"))
         val hist = d.filter(col("doc_id") % 10 < 3).select(fp.as("fp")).distinct()
         val bits = graft.functions.BloomFilter.build(hist, col("fp"), numWords = 2048, k = 5)
         val stream = graft.streaming.CorpusStreaming.readDocumentStream(s, dir)
           .filter(col("doc_id") % 10 >= 3)
-        val q = graft.streaming.CorpusStreaming.bloomGuard(stream, bits, k = 5)
+        val guarded = graft.streaming.CorpusStreaming.bloomGuard(stream, bits, k = 5)
           .select(col("doc_id"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_bloom_guard timed out")
-        s.table(name).orderBy("doc_id")
+        drain(guarded, "st_bloom_guard").orderBy("doc_id")
       },
       Some(graft.api.ParseSnapshots.sfPinnedSql("st_bloom_guard")),
     ),
@@ -298,17 +286,11 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_kmeans_assign",
       (s, dir) => {
-        val name = s"st_km_${System.nanoTime()}"
         val cents = Similarity.kmeansCentroids(
           Tables(s, dir).embeddings.select(col("vec_id"), col("embedding")))
-        val q = graft.streaming.CorpusStreaming
+        val stream = graft.streaming.CorpusStreaming
           .kmeansAssign(graft.streaming.CorpusStreaming.readEmbeddingStream(s, dir), cents)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_kmeans_assign timed out")
-        s.table(name).orderBy("vec_id")
+        drain(stream, "st_kmeans_assign").orderBy("vec_id")
       },
       Some(Similarity.KmeansSql),
     ),
@@ -320,16 +302,10 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_srp_bucketize",
       (s, dir) => {
-        val name = s"st_srp_${System.nanoTime()}"
-        val q = graft.streaming.CorpusStreaming
+        val stream = graft.streaming.CorpusStreaming
           .srpBucketize(graft.streaming.CorpusStreaming.readEmbeddingStream(s, dir),
                         dim = 64, nbits = 16, bandBits = 8)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_srp_bucketize timed out")
-        s.table(name).orderBy("vec_id", "band_i")
+        drain(stream, "st_srp_bucketize").orderBy("vec_id", "band_i")
       },
       Some(graft.api.ParseSnapshots.sfPinnedSql("st_srp_bucketize")),
     ),
@@ -342,15 +318,9 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_minhash_bucketize",
       (s, dir) => {
-        val name = s"st_mh_${System.nanoTime()}"
-        val q = graft.streaming.CorpusStreaming
+        val stream = graft.streaming.CorpusStreaming
           .minhashBucketize(graft.streaming.CorpusStreaming.readDocumentStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_minhash_bucketize timed out")
-        s.table(name).orderBy("doc_id", "j")
+        drain(stream, "st_minhash_bucketize").orderBy("doc_id", "j")
       },
       Some(graft.api.ParseSnapshots.sfPinnedSql("st_minhash_bucketize")),
     ),
@@ -362,15 +332,9 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_chunk_overlap",
       (s, dir) => {
-        val name = s"st_chunk_${System.nanoTime()}"
-        val q = graft.streaming.CorpusStreaming
+        val stream = graft.streaming.CorpusStreaming
           .chunkOverlap(graft.streaming.CorpusStreaming.readDocumentStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_chunk_overlap timed out")
-        s.table(name).orderBy("doc_id", "chunk_id")
+        drain(stream, "st_chunk_overlap").orderBy("doc_id", "chunk_id")
       },
       // oracled like the other streaming twins: the stream must match
       // the same DuckDB SQL the batch entry matches
@@ -386,15 +350,9 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_winnow_bucketize",
       (s, dir) => {
-        val name = s"st_wn_${System.nanoTime()}"
-        val q = graft.streaming.CorpusStreaming
+        val stream = graft.streaming.CorpusStreaming
           .winnowBucketize(graft.streaming.CorpusStreaming.readDocumentStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_winnow_bucketize timed out")
-        s.table(name).orderBy("doc_id", "gram")
+        drain(stream, "st_winnow_bucketize").orderBy("doc_id", "gram")
       },
       Some(s"""WITH ${graft.operators.Dedup.WinnowFpCtes}
              |SELECT doc_id, gram FROM fp
@@ -409,17 +367,11 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_bpe_encode",
       (s, dir) => {
-        val name = s"st_bpe_${System.nanoTime()}"
         val ranks = graft.functions.BpeTokenizer.rankTable(
           graft.operators.TextAnalysis.learnBpe(graft.Tables(s, dir)))
-        val q = graft.operators.TextAnalysis
+        val stream = graft.operators.TextAnalysis
           .bpeEncoded(graft.streaming.CorpusStreaming.readDocumentStream(s, dir), ranks)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_bpe_encode timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_bpe_encode").orderBy("doc_id")
       },
       Some(graft.api.ParseSnapshots.sfPinnedSql("t_bpe_encode")),
     ),
@@ -433,17 +385,11 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_dsir_score",
       (s, dir) => {
-        val name = s"st_dsir_${System.nanoTime()}"
         val lr = graft.operators.TextAnalysis
           .dsirModelLogRatios(Tables(s, dir).documents)
-        val q = graft.streaming.CorpusStreaming
+        val stream = graft.streaming.CorpusStreaming
           .dsirScore(graft.streaming.CorpusStreaming.readDocumentStream(s, dir), lr)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_dsir_score timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_dsir_score").orderBy("doc_id")
       },
       Some(s"${graft.operators.TextAnalysis.DsirWeightSqlCore}\nORDER BY doc_id"),
     ),
@@ -457,22 +403,16 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_ccnet_score",
       (s, dir) => {
-        val name = s"st_ccnet_${System.nanoTime()}"
         val docs = Tables(s, dir).documents
         val (counts, total) = graft.operators.TextAnalysis.ccnetHashedModel(docs)
         val cuts = graft.streaming.CorpusStreaming
           .ccnetHashedSurprisal(docs, counts, total)
           .agg(expr("percentile(surprisal, 1.0D/3)"),
                expr("percentile(surprisal, 2.0D/3)")).head()
-        val q = graft.streaming.CorpusStreaming
+        val stream = graft.streaming.CorpusStreaming
           .ccnetScore(graft.streaming.CorpusStreaming.readDocumentStream(s, dir),
             counts, total, cuts.getDouble(0), cuts.getDouble(1))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_ccnet_score timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_ccnet_score").orderBy("doc_id")
       },
       Some("""WITH tk AS (SELECT doc_id,
              |  unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS term
@@ -502,17 +442,11 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_quality_model",
       (s, dir) => {
-        val name = s"st_qmodel_${System.nanoTime()}"
         val w = graft.operators.TextAnalysis
           .qualityModelWeights(Tables(s, dir).documents)
-        val q = graft.streaming.CorpusStreaming
+        val stream = graft.streaming.CorpusStreaming
           .qualityModelScore(graft.streaming.CorpusStreaming.readDocumentStream(s, dir), w)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_quality_model timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_quality_model").orderBy("doc_id")
       },
       Some(graft.operators.TextAnalysis.QualityModelSql),
     ),
@@ -529,17 +463,11 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_decontaminate_scrub",
       (s, dir) => {
-        val name = s"st_scrub_${System.nanoTime()}"
         val evalGrams = evalGramSet(Tables(s, dir).documents)
-        val q = graft.streaming.CorpusStreaming
+        val stream = graft.streaming.CorpusStreaming
           .decontaminateScrub(
             graft.streaming.CorpusStreaming.readDocumentStream(s, dir), evalGrams)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_decontaminate_scrub timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_decontaminate_scrub").orderBy("doc_id")
       },
       Some(s"""WITH ev AS (SELECT text FROM documents
               |  WHERE doc_id % 97 = 0 AND len(text) >= 40),
@@ -569,17 +497,11 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_decontaminate_drop",
       (s, dir) => {
-        val name = s"st_dcdrop_${System.nanoTime()}"
         val evalGrams = evalGramSet(Tables(s, dir).documents)
-        val q = graft.streaming.CorpusStreaming
+        val stream = graft.streaming.CorpusStreaming
           .decontaminateDrop(
             graft.streaming.CorpusStreaming.readDocumentStream(s, dir), evalGrams)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_decontaminate_drop timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_decontaminate_drop").orderBy("doc_id")
       },
       Some("""WITH ev AS (SELECT text FROM documents
              |  WHERE doc_id % 97 = 0 AND len(text) >= 40),
@@ -600,15 +522,9 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_gopher_repetition",
       (s, dir) => {
-        val name = s"st_grep_${System.nanoTime()}"
-        val q = graft.operators.TextAnalysis
+        val stream = graft.operators.TextAnalysis
           .gopherRepetition(graft.streaming.CorpusStreaming.readDocumentStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_gopher_repetition timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_gopher_repetition").orderBy("doc_id")
       },
       Some(graft.operators.TextAnalysis.GopherRepetitionSql),
     ),
@@ -620,15 +536,9 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_gopher_rules",
       (s, dir) => {
-        val name = s"st_gopher_${System.nanoTime()}"
-        val q = graft.operators.TextAnalysis
+        val stream = graft.operators.TextAnalysis
           .gopherRules(graft.streaming.CorpusStreaming.readDocumentStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_gopher_rules timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_gopher_rules").orderBy("doc_id")
       },
       Some(s"${graft.operators.TextAnalysis.GopherRulesSql}\nORDER BY doc_id"),
     ),
@@ -639,16 +549,10 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_c4_rules",
       (s, dir) => {
-        val name = s"st_c4_${System.nanoTime()}"
-        val q = graft.operators.TextAnalysis
+        val stream = graft.operators.TextAnalysis
           .c4Rules(graft.operators.TextAnalysis.c4PageTable(
             graft.streaming.CorpusStreaming.readDocumentStream(s, dir)))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_c4_rules timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_c4_rules").orderBy("doc_id")
       },
       Some(s"${graft.operators.TextAnalysis.C4RulesSql}\nORDER BY doc_id"),
     ),
@@ -658,16 +562,10 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_fineweb_rules",
       (s, dir) => {
-        val name = s"st_fineweb_${System.nanoTime()}"
-        val q = graft.operators.TextAnalysis
+        val stream = graft.operators.TextAnalysis
           .finewebRules(graft.operators.TextAnalysis.fwPageTable(
             graft.streaming.CorpusStreaming.readDocumentStream(s, dir)))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_fineweb_rules timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_fineweb_rules").orderBy("doc_id")
       },
       Some(s"${graft.operators.TextAnalysis.FinewebRulesSql}\nORDER BY doc_id"),
     ),
@@ -681,21 +579,15 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_range_search",
       (s, dir) => {
-        val name = s"st_range_${System.nanoTime()}"
         val queries = Tables(s, dir).embeddings
           .filter(col("vec_id") < 10)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-        val q = graft.operators.Similarity
+        val stream = graft.operators.Similarity
           .rangeSearch(
             graft.streaming.CorpusStreaming.readEmbeddingStream(s, dir)
               .select(col("vec_id"), col("embedding")),
             queries, 0.35)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_range_search timed out")
-        s.table(name).orderBy("q_id", "vec_id")
+        drain(stream, "st_range_search").orderBy("q_id", "vec_id")
       },
       Some(graft.operators.Similarity.RangeSearchSql),
     ),
@@ -706,15 +598,9 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_html_extract",
       (s, dir) => {
-        val name = s"st_html_${System.nanoTime()}"
-        val q = graft.operators.TextAnalysis
+        val stream = graft.operators.TextAnalysis
           .htmlExtracted(graft.streaming.CorpusStreaming.readDocumentStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_html_extract timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_html_extract").orderBy("doc_id")
       },
       Some(graft.operators.TextAnalysis.HtmlExtractSql),
     ),
@@ -731,14 +617,8 @@ object Streaming extends QueryModule {
         graft.streaming.MediaIntake.materializeWarcDir(
           graft.operators.TextAnalysis.warcBlobs(Tables(s, dir).documents,
             gz = true), drop, graft.ScaleDemo.baseFingerprint(dir))
-        val name = s"st_warc_${System.nanoTime()}"
-        val q = graft.streaming.MediaIntake.warcStream(s, drop)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_warc_extract timed out")
-        s.table(name).orderBy("doc_id")
+        val stream = graft.streaming.MediaIntake.warcStream(s, drop)
+        drain(stream, "st_warc_extract").orderBy("doc_id")
       },
       Some(graft.operators.TextAnalysis.WarcExtractSql),
     ),
@@ -758,14 +638,8 @@ object Streaming extends QueryModule {
         graft.streaming.MediaIntake.materializeDropDir(
           graft.operators.Multimodal.exifTable(t), drop,
           expectedRows = t.documents.count())
-        val name = s"st_exif_${System.nanoTime()}"
-        val q = graft.streaming.MediaIntake.exifStream(s, drop)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_exif_meta timed out")
-        s.table(name).orderBy("doc_id")
+        val stream = graft.streaming.MediaIntake.exifStream(s, drop)
+        drain(stream, "st_exif_meta").orderBy("doc_id")
       },
       Some(graft.operators.Multimodal.exifOracle),
     ),
@@ -776,15 +650,9 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_robots_rules",
       (s, dir) => {
-        val name = s"st_robots_${System.nanoTime()}"
-        val q = graft.operators.TextAnalysis
+        val stream = graft.operators.TextAnalysis
           .robotsDecisions(graft.streaming.CorpusStreaming.readDocumentStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_robots_rules timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_robots_rules").orderBy("doc_id")
       },
       Some(s"${graft.operators.TextAnalysis.RobotsRulesSql}"),
     ),
@@ -794,15 +662,9 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_url_canonicalize",
       (s, dir) => {
-        val name = s"st_urlc_${System.nanoTime()}"
-        val q = graft.operators.TextAnalysis
+        val stream = graft.operators.TextAnalysis
           .urlCanonicalize(graft.streaming.CorpusStreaming.readDocumentStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_url_canonicalize timed out")
-        s.table(name).orderBy("doc_id")
+        drain(stream, "st_url_canonicalize").orderBy("doc_id")
       },
       Some(s"${graft.operators.TextAnalysis.UrlCanonicalizeSql}"),
     ),
@@ -815,15 +677,9 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_sitemap_urls",
       (s, dir) => {
-        val name = s"st_smap_${System.nanoTime()}"
-        val q = graft.operators.TextAnalysis
+        val stream = graft.operators.TextAnalysis
           .sitemapUrls(graft.streaming.CorpusStreaming.readDocumentStream(s, dir))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_sitemap_urls timed out")
-        s.table(name).orderBy("doc_id", "entry_i")
+        drain(stream, "st_sitemap_urls").orderBy("doc_id", "entry_i")
       },
       Some(s"${graft.operators.TextAnalysis.SitemapUrlsSql}"),
     ),
@@ -838,14 +694,8 @@ object Streaming extends QueryModule {
         graft.streaming.MediaIntake.materializeDropDir(
           graft.operators.Multimodal.tiffTable(t), drop, ext = "tiff",
           expectedRows = t.documents.count())
-        val name = s"st_tiff_${System.nanoTime()}"
-        val q = graft.streaming.MediaIntake.tiffStream(s, drop)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_tiff_pixels timed out")
-        s.table(name).orderBy("doc_id")
+        val stream = graft.streaming.MediaIntake.tiffStream(s, drop)
+        drain(stream, "st_tiff_pixels").orderBy("doc_id")
       },
       Some(graft.operators.Multimodal.pngPixelsOracle),
     ),
@@ -861,14 +711,8 @@ object Streaming extends QueryModule {
         graft.streaming.MediaIntake.materializeDropDir(
           graft.operators.Multimodal.oggTable(t), drop, ext = "ogg",
           expectedRows = t.documents.count())
-        val name = s"st_ogg_${System.nanoTime()}"
-        val q = graft.streaming.MediaIntake.oggStream(s, drop)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_ogg_headers timed out")
-        s.table(name).orderBy("doc_id")
+        val stream = graft.streaming.MediaIntake.oggStream(s, drop)
+        drain(stream, "st_ogg_headers").orderBy("doc_id")
       },
       Some(graft.operators.Multimodal.oggOracle),
     ),
@@ -878,18 +722,12 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_report_intake",
       (s, _) => {
-        val name = s"st_intake_${System.nanoTime()}"
-        val q = graft.streaming.ReportFileIntake
+        val stream = graft.streaming.ReportFileIntake
           .aggregateRecordStream(s, s"${DmarcIngest.samples(s)}/aggregate")
           .toDF()
           .select(col("report_id"), col("org_name"), col("source_ip_address"),
                   col("count"), col("disposition"), col("begin_date"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        require(q.awaitTermination(300000), "st_report_intake timed out")
-        s.table(name).orderBy("report_id", "source_ip_address", "count")
+        drain(stream, "st_report_intake").orderBy("report_id", "source_ip_address", "count")
       },
       // snapshot oracle (resource-backed, SF-independent sample corpus):
       // the streaming intake must flatten to the SAME records the batch
@@ -928,7 +766,7 @@ object Streaming extends QueryModule {
           }
           .trigger(Trigger.AvailableNow())
           .start()
-        require(q.awaitTermination(300000), "st_upsert_apply timed out")
+        awaitOrStop(q, "st_upsert_apply")
         val rows = s.read.parquet(table)
           .groupBy(col("day").cast("string").as("day"))
           .agg(count(lit(1)).as("n_events"),

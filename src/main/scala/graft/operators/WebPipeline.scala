@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** d_web_pipeline — the one-call WEB-corpus training-data pipeline
@@ -149,6 +150,44 @@ object WebPipeline extends QueryModule {
        |  generate_series(1, len(string_split(text, ' ')) - $substrMintHeadSql),
        |  j -> 'z' || substr(md5('t' || CAST(doc_id AS VARCHAR) || 'w' || CAST(j AS VARCHAR)), 1, 3)),
        |  ' ')""".stripMargin
+
+  /** The substr-arm gate corpus: `docs`' (doc_id, text) plus a minted
+    * partial duplicate ([[substrMintTextSpark]]) of every doc with
+    * doc_id % 20 = 3, its id offset by 420,000,000,000.
+    */
+  private[graft] def withSubstrMints(docs: DataFrame): DataFrame = {
+    val d = docs.select(col("doc_id"), col("text"))
+    d.unionByName(d.filter(col("doc_id") % 20 === 3)
+      .select((col("doc_id") + 420000000000L).as("doc_id"),
+        expr(substrMintTextSpark).as("text")))
+  }
+
+  /** The decontam-arm eval set: a 120-char verbatim excerpt of the
+    * extracted text (WARC → HTML → text, the text the battery sees) of
+    * every doc with doc_id % 20 = 5.
+    */
+  private[graft] def evalExcerpts(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    TextAnalysis.warcBlobs(docs.filter(col("doc_id") % 20 === 5))
+      .flatMap { case (_, blob) =>
+        graft.functions.WarcRecords.parse(blob).getOrElse(Seq.empty)
+          .map(TextAnalysis.warcPageText)
+      }.toDF("doc_id", "url", "text")
+      .filter(length(col("text")) >= 49)
+      .select(expr("substring(text, 10, 120)").as("text"))
+  }
+
+  /** prepareWeb's attrition accounting as `(stage_idx, stage, n_docs)`
+    * rows in stage order: the frame every web-pipeline entry and scale
+    * cell returns.
+    */
+  private[graft] def stageRows(p: graft.api.TrainingData.PreparedWeb): DataFrame = {
+    import p.corpus.sparkSession.implicits._
+    p.stages.zipWithIndex
+      .map { case ((st, n), i) => (i, st, n) }
+      .toDF("stage_idx", "stage", "n_docs")
+      .orderBy("stage_idx")
+  }
 
   private def oracleSql(model: Boolean, substr: Boolean = false,
                         decontam: Boolean = false): String = {
@@ -342,15 +381,8 @@ object WebPipeline extends QueryModule {
   override def entries: Seq[QueryDef] = Seq(
     QueryDef(
       "d_web_pipeline",
-      (s, dir) => {
-        import s.implicits._
-        val p = graft.api.TrainingData.prepareWeb(
-          Tables(s, dir).documents, oracleHash = true)
-        p.stages.zipWithIndex
-          .map { case ((st, n), i) => (i, st, n) }
-          .toDF("stage_idx", "stage", "n_docs")
-          .orderBy("stage_idx")
-      },
+      (s, dir) => stageRows(graft.api.TrainingData.prepareWeb(
+        Tables(s, dir).documents, oracleHash = true)),
       Some(oracleSql(model = false)),
     ),
     // the model-quality arm (FineWeb-Edu deployment): same composite
@@ -361,15 +393,8 @@ object WebPipeline extends QueryModule {
     // scoring as chained CTEs on top of the base pipeline chain.
     QueryDef(
       "d_web_pipeline_model",
-      (s, dir) => {
-        import s.implicits._
-        val p = graft.api.TrainingData.prepareWeb(
-          Tables(s, dir).documents, oracleHash = true, modelQuality = true)
-        p.stages.zipWithIndex
-          .map { case ((st, n), i) => (i, st, n) }
-          .toDF("stage_idx", "stage", "n_docs")
-          .orderBy("stage_idx")
-      },
+      (s, dir) => stageRows(graft.api.TrainingData.prepareWeb(
+        Tables(s, dir).documents, oracleHash = true, modelQuality = true)),
       Some(oracleSql(model = true)),
     ),
     // the exact-substring coverage arm (d_substring_dedup deployed as
@@ -386,19 +411,8 @@ object WebPipeline extends QueryModule {
     // from scratch.
     QueryDef(
       "d_web_pipeline_substr",
-      (s, dir) => {
-        import s.implicits._
-        val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-        val minted = d.filter(col("doc_id") % 20 === 3)
-          .select((col("doc_id") + 420000000000L).as("doc_id"),
-            expr(substrMintTextSpark).as("text"))
-        val p = graft.api.TrainingData.prepareWeb(
-          d.unionByName(minted), oracleHash = true, exactSubstr = true)
-        p.stages.zipWithIndex
-          .map { case ((st, n), i) => (i, st, n) }
-          .toDF("stage_idx", "stage", "n_docs")
-          .orderBy("stage_idx")
-      },
+      (s, dir) => stageRows(graft.api.TrainingData.prepareWeb(
+        withSubstrMints(Tables(s, dir).documents), oracleHash = true, exactSubstr = true)),
       Some(oracleSql(model = false, substr = true)),
     ),
     // the benchmark-decontamination arm (the filter every published
@@ -418,21 +432,9 @@ object WebPipeline extends QueryModule {
     QueryDef(
       "d_web_pipeline_decontam",
       (s, dir) => {
-        import s.implicits._
         val docs = Tables(s, dir).documents
-        val ev = TextAnalysis.warcBlobs(docs.filter(col("doc_id") % 20 === 5))
-          .flatMap { case (_, blob) =>
-            graft.functions.WarcRecords.parse(blob).getOrElse(Seq.empty)
-              .map(TextAnalysis.warcPageText)
-          }.toDF("doc_id", "url", "text")
-          .filter(length(col("text")) >= 49)
-          .select(expr("substring(text, 10, 120)").as("text"))
-        val p = graft.api.TrainingData.prepareWeb(
-          docs, oracleHash = true, decontaminateEval = Some(ev))
-        p.stages.zipWithIndex
-          .map { case ((st, n), i) => (i, st, n) }
-          .toDF("stage_idx", "stage", "n_docs")
-          .orderBy("stage_idx")
+        stageRows(graft.api.TrainingData.prepareWeb(
+          docs, oracleHash = true, decontaminateEval = Some(evalExcerpts(docs))))
       },
       Some(oracleSql(model = false, decontam = true)),
     ),
@@ -453,26 +455,10 @@ object WebPipeline extends QueryModule {
     QueryDef(
       "d_web_pipeline_full",
       (s, dir) => {
-        import s.implicits._
-        val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-        val minted = d.filter(col("doc_id") % 20 === 3)
-          .select((col("doc_id") + 420000000000L).as("doc_id"),
-            expr(substrMintTextSpark).as("text"))
-        val docs = d.unionByName(minted)
-        val ev = TextAnalysis.warcBlobs(docs.filter(col("doc_id") % 20 === 5))
-          .flatMap { case (_, blob) =>
-            graft.functions.WarcRecords.parse(blob).getOrElse(Seq.empty)
-              .map(TextAnalysis.warcPageText)
-          }.toDF("doc_id", "url", "text")
-          .filter(length(col("text")) >= 49)
-          .select(expr("substring(text, 10, 120)").as("text"))
-        val p = graft.api.TrainingData.prepareWeb(
+        val docs = withSubstrMints(Tables(s, dir).documents)
+        stageRows(graft.api.TrainingData.prepareWeb(
           docs, oracleHash = true, modelQuality = true, exactSubstr = true,
-          decontaminateEval = Some(ev))
-        p.stages.zipWithIndex
-          .map { case ((st, n), i) => (i, st, n) }
-          .toDF("stage_idx", "stage", "n_docs")
-          .orderBy("stage_idx")
+          decontaminateEval = Some(evalExcerpts(docs))))
       },
       Some(oracleSql(model = true, substr = true, decontam = true)),
     ),

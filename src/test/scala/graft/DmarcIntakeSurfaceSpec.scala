@@ -10,13 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DmarcIntakeSurfaceSpec extends AnyFunSuite {
 
-  /** Matches of `pattern` per main source file that has any. */
-  private def found(pattern: String): Map[String, Int] =
-    MainSources.all.map { case (p, text) => p.toString -> pattern.r.findAllMatchIn(text).size }
-      .filter(_._2 > 0).toMap
-
   test("the DMARC binaryFile source is declared once for batch and once for stream") {
-    val scans = found("""format\("binaryFile"\)""") -
+    val scans = MainSources.matches("""format\("binaryFile"\)""") -
       "src/main/scala/graft/streaming/MediaIntake.scala"
     assert(scans == Map(
       "src/main/scala/graft/sources/DmarcReader.scala" -> 1,
@@ -24,14 +19,14 @@ class DmarcIntakeSurfaceSpec extends AnyFunSuite {
   }
 
   test("the DMARC family parsers run on Spark rows only in DmarcReader") {
-    val calls = found("""AggregateXmlParser\.parseAny\b|ForensicParser\.parse\b|TlsReportParser\.parseAny\b""")
+    val calls = MainSources.matches("""AggregateXmlParser\.parseAny\b|ForensicParser\.parse\b|TlsReportParser\.parseAny\b""")
     val allowed = Set("DmarcParsers", "DmarcReader", "ReportValidator")
       .map(f => s"src/main/scala/graft/sources/$f.scala")
     assert(calls.keySet.subsetOf(allowed), calls)
   }
 
   test("report → record flattening is written once") {
-    val flattens = found("""flatMap\((?:DmarcReader\.)?recordRows\)""")
+    val flattens = MainSources.matches("""flatMap\((?:DmarcReader\.)?recordRows\)""")
     assert(flattens == Map("src/main/scala/graft/sources/DmarcReader.scala" -> 1), flattens)
   }
 }

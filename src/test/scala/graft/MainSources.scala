@@ -13,4 +13,9 @@ object MainSources {
       .map(p => p -> Files.readString(p))
     finally walk.close()
   }
+
+  /** Matches of `pattern` per main source file that has any. */
+  def matches(pattern: String): Map[String, Int] =
+    all.map { case (p, text) => p.toString -> pattern.r.findAllMatchIn(text).size }
+      .filter(_._2 > 0).toMap
 }

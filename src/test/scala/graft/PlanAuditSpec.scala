@@ -102,10 +102,13 @@ class PlanAuditSpec extends SparkSpec {
     assert(!capped.contains("Window"), capped)
   }
 
-  // streaming entries drain to a memory sink, so their returned frame's
-  // plan is a memory-table scan regardless of pipeline shape (their
-  // plans are audited via their batch twins); building them also runs
-  // the whole stream — exclude from the registry-wide sweeps
+  // kept out of the registry-wide sweeps, their plans audited via their
+  // batch twins: st_windowed_agg and st_report_intake drain their stream
+  // to a memory sink (Streaming.drain), so building one runs the whole
+  // stream and the frame it returns scans the memory table whatever the
+  // pipeline's shape; st_sessionize is the batch fold of the streaming
+  // sessionizer. The other st_ entries drain the same way and are swept:
+  // their micro-batch plans reach the listener like any other action's
   private val streamingEntries = Set("st_windowed_agg", "st_sessionize", "st_report_intake")
 
   // composite-pipeline entries whose registry frame is driver-local
