@@ -9,7 +9,7 @@ $JAVA_HOME/bin) on the recording and prints:
 - execution samples per thread group (executor tasks, driver, Spark
   internals, other), as a share of all samples;
 - executor-thread samples and sampled allocation per named layer (XML
-  parse and its three parts, parquet write, Janino compile, ...). A
+  parse and its parts, parquet write, Janino compile, ...). A
   sample under Janino or a class load belongs to that; any other to
   the layer whose rule matches the frame nearest the top of its stack,
   so a gzip read called from the XML parser counts as decode;
@@ -56,13 +56,15 @@ CONTEXTS = [
     ("class loading", r"^java\.lang\.ClassLoader\.loadClass$"),
 ]
 LAYERS = [
-    # `\` and `.text` on the parsed tree; constructors match nothing, so
-    # a node built by the parser counts where it was built
+    # scala-xml (SitemapUrls' crawl XML; aggregate reports until the
+    # streaming walk): `\` and `.text` on the parsed tree, where
+    # constructors match nothing, so a node counts where it was built
     ("XML parse: \\ navigation",
      r"^scala\.xml\.(NodeSeq|ScalaVersionSpecificNodeSeq|Node|Elem)\b(?!.*\.<init>$)"),
     ("XML parse: scala-xml DOM build", r"^scala\.xml\.(parsing|factory)\."),
     ("XML parse: xerces scan", r"^(com\.sun\.)?org\.apache\.xerces\."),
-    ("XML parse: fromXml itself", r"^graft\.sources\.AggregateXmlParser"),
+    # the aggregate-report field walk and the report built from it
+    ("XML parse: field walk", r"^graft\.sources\.AggregateXml"),
     ("decode (gzip/zip/MIME)", r"^(java\.util\.zip\.|jakarta\.mail\.|javax\.mail\.|org\.apache\.commons\.compress\.|graft\.sources\.Extract)"),
     ("JSON parse", r"^com\.fasterxml\.jackson\."),
     ("parquet write", r"^(org\.apache\.parquet\.(hadoop\.(InternalParquetRecordWriter|ParquetFileWriter|ParquetOutputFormat|CodecFactory\$HeapBytesCompressor)|column\.(impl\.ColumnWriter|values)|bytes)|org\.apache\.spark\.sql\.execution\.datasources\.parquet\.(ParquetWriteSupport|ParquetOutputWriter))"),

@@ -2,17 +2,41 @@ package graft.sources
 
 import java.sql.Timestamp
 import scala.util.Try
-import scala.xml.{Elem, XML}
 
 /** Aggregate (RFC 7489) XML report parser. Semantics mirror
   * /root/reference/internal/parser/parser.go:1059-1270 — feedback-element
   * extraction, field defaults (adkim/aspf "r", sp:=p, pct "100", fo "0",
   * policy dkim/spf "fail"), alignment = evaluated pass, lowercase
-  * identifiers, 48h date-range guard — re-expressed on scala-xml.
+  * identifiers, 48h date-range guard — over the field text of one
+  * [[AggregateXml]] streaming pass ([[Report]] names every field read).
   * Runs offline: source enrichment uses the reference's offline path
   * (country/type "Unknown", parser.go:1272-1301).
   */
 object AggregateXmlParser {
+  import AggregateXml.{Group, Slot}
+
+  private val Record = new Group(
+    Seq("row/source_ip", "row/count", "row/policy_evaluated/disposition",
+      "row/policy_evaluated/dkim", "row/policy_evaluated/spf",
+      "identifiers/header_from", "identifiers/envelope_from", "identifiers/envelope_to"),
+    Seq("row/policy_evaluated/reason" -> new Group(Seq("type", "comment")),
+      "auth_results/dkim" -> new Group(Seq("domain", "selector", "result")),
+      "auth_results/spf" -> new Group(Seq("domain", "scope", "result"))))
+
+  /** Every RFC 7489 field the parser and [[ReportValidator]] read, by its
+    * path below the report's root element.
+    */
+  private val Report = new Group(
+    Seq("version", "report_metadata/org_name", "report_metadata/email",
+      "report_metadata/extra_contact_info", "report_metadata/report_id",
+      "report_metadata/date_range/begin", "report_metadata/date_range/end",
+      "policy_published/domain", "policy_published/adkim", "policy_published/aspf",
+      "policy_published/p", "policy_published/sp", "policy_published/pct",
+      "policy_published/fo"),
+    Seq("report_metadata/error" -> new Group(Seq("")), "record" -> Record))
+
+  /** The [[Report]] fields of `xml`'s root element. */
+  private[sources] def fields(xml: String): Either[String, Slot] = AggregateXml.read(xml, Report)
 
   private def default(v: String, d: String): String = if (v.isEmpty) d else v
 
@@ -31,77 +55,65 @@ object AggregateXmlParser {
     val xmlStr =
       if (start >= 0 && end > start) raw.substring(start, end + "</feedback>".length)
       else raw
-    val parsed = Try(XML.loadString(xmlStr)).toEither.left
-      .map(e => s"invalid XML: ${e.getMessage}")
-    parsed.flatMap(fromXml)
+    fields(xmlStr).flatMap(fromFields)
   }
 
-  private def fromXml(root: Elem): Either[String, AggregateReport] = {
-    val meta = root \ "report_metadata"
-    val pol = root \ "policy_published"
-    def txt(n: scala.xml.NodeSeq): String = n.text.trim
-
-    val beginOpt = epoch(txt(meta \ "date_range" \ "begin"))
-    val endOpt = epoch(txt(meta \ "date_range" \ "end"))
+  private def fromFields(root: Slot): Either[String, AggregateReport] = {
+    def opt(s: String): Option[String] = Some(s).filter(_.nonEmpty)
+    val beginOpt = epoch(root("report_metadata/date_range/begin"))
+    val endOpt = epoch(root("report_metadata/date_range/end"))
     (beginOpt, endOpt) match {
       case (Some(begin), Some(endD)) =>
         // RFC 7489 §7.2: reject implausibly wide ranges (reference: 48h)
         if (endD.getTime - begin.getTime > 48L * 3600 * 1000)
           Left("time span > 24 hours - RFC 7489 section 7.2")
         else {
-          val p = txt(pol \ "p")
-          val extra = txt(meta \ "extra_contact_info")
-          val records = (root \ "record").map { rec =>
-            val row = rec \ "row"
-            val pe = row \ "policy_evaluated"
-            val ids = rec \ "identifiers"
-            val dkimEval = default(txt(pe \ "dkim"), "fail")
-            val spfEval = default(txt(pe \ "spf"), "fail")
+          val p = root("policy_published/p")
+          val records = root.all("record").map { rec =>
+            val dkimEval = default(rec("row/policy_evaluated/dkim"), "fail")
+            val spfEval = default(rec("row/policy_evaluated/spf"), "fail")
             val spfAligned = spfEval.toLowerCase == "pass"
             val dkimAligned = dkimEval.toLowerCase == "pass"
             AggregateRecord(
-              source = offlineSource(txt(row \ "source_ip")),
-              count = Try(txt(row \ "count").toInt).getOrElse(0),
+              source = offlineSource(rec("row/source_ip")),
+              count = Try(rec("row/count").toInt).getOrElse(0),
               spfAligned = spfAligned,
               dkimAligned = dkimAligned,
               dmarcAligned = spfAligned || dkimAligned,
-              disposition = txt(pe \ "disposition"),
+              disposition = rec("row/policy_evaluated/disposition"),
               policyEvalDkim = dkimEval,
               policyEvalSpf = spfEval,
-              overrides = (pe \ "reason").map { r =>
-                PolicyOverride(
-                  Option(txt(r \ "type")).filter(_.nonEmpty),
-                  Option(txt(r \ "comment")).filter(_.nonEmpty))
-              },
-              headerFrom = txt(ids \ "header_from").toLowerCase,
-              envelopeFrom = Option(txt(ids \ "envelope_from")).filter(_.nonEmpty).map(_.toLowerCase),
-              envelopeTo = Option(txt(ids \ "envelope_to")).filter(_.nonEmpty).map(_.toLowerCase),
-              dkim = (rec \ "auth_results" \ "dkim")
-                .filter(d => txt(d \ "domain").nonEmpty)
-                .map(d => DkimAuth(txt(d \ "domain"),
-                  default(txt(d \ "selector"), "none"), default(txt(d \ "result"), "none"))),
-              spf = (rec \ "auth_results" \ "spf")
-                .filter(s => txt(s \ "domain").nonEmpty)
-                .map(s => SpfAuth(txt(s \ "domain"),
-                  default(txt(s \ "scope"), "mfrom"), default(txt(s \ "result"), "none"))),
+              overrides = rec.all("row/policy_evaluated/reason")
+                .map(r => PolicyOverride(opt(r("type")), opt(r("comment")))),
+              headerFrom = rec("identifiers/header_from").toLowerCase,
+              envelopeFrom = opt(rec("identifiers/envelope_from")).map(_.toLowerCase),
+              envelopeTo = opt(rec("identifiers/envelope_to")).map(_.toLowerCase),
+              dkim = rec.all("auth_results/dkim")
+                .filter(d => d("domain").nonEmpty)
+                .map(d => DkimAuth(d("domain"),
+                  default(d("selector"), "none"), default(d("result"), "none"))),
+              spf = rec.all("auth_results/spf")
+                .filter(s => s("domain").nonEmpty)
+                .map(s => SpfAuth(s("domain"),
+                  default(s("scope"), "mfrom"), default(s("result"), "none"))),
             )
           }
           Right(AggregateReport(
-            xmlSchema = txt(root \ "version"),
-            orgName = txt(meta \ "org_name"),
-            orgEmail = txt(meta \ "email"),
-            orgExtraContactInfo = Option(extra).filter(_.nonEmpty),
-            reportId = txt(meta \ "report_id"),
+            xmlSchema = root("version"),
+            orgName = root("report_metadata/org_name"),
+            orgEmail = root("report_metadata/email"),
+            orgExtraContactInfo = opt(root("report_metadata/extra_contact_info")),
+            reportId = root("report_metadata/report_id"),
             beginDate = begin,
             endDate = endD,
-            errors = (meta \ "error").map(_.text.trim),
-            domain = txt(pol \ "domain"),
-            adkim = default(txt(pol \ "adkim"), "r"),
-            aspf = default(txt(pol \ "aspf"), "r"),
+            errors = root.all("report_metadata/error").map(_("")),
+            domain = root("policy_published/domain"),
+            adkim = default(root("policy_published/adkim"), "r"),
+            aspf = default(root("policy_published/aspf"), "r"),
             p = p,
-            sp = default(txt(pol \ "sp"), p),
-            pct = default(txt(pol \ "pct"), "100"),
-            fo = default(txt(pol \ "fo"), "0"),
+            sp = default(root("policy_published/sp"), p),
+            pct = default(root("policy_published/pct"), "100"),
+            fo = default(root("policy_published/fo"), "0"),
             records = records,
           ))
         }

@@ -1,8 +1,8 @@
 package graft.sources
 
+import com.google.common.net.InetAddresses
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.Try
-import scala.xml.XML
 
 final case class ValidationResult(
     valid: Boolean, errors: Seq[String], warnings: Seq[String])
@@ -22,9 +22,11 @@ object ReportValidator {
 
   def isValidEmail(s: String): Boolean = EmailRe.matches(s)
   def isValidDomain(s: String): Boolean = s.nonEmpty && DomainRe.matches(s)
+  /** An IPv4 dotted quad or an IPv6 literal, as Go's `net.ParseIP`
+    * accepts: parsed as text, never looked up, and with no zone.
+    */
   def isValidIpLiteral(s: String): Boolean =
-    Try(java.net.InetAddress.getByName(s)).isSuccess &&
-      (s.contains(".") || s.contains(":"))
+    InetAddresses.isInetAddress(s) && !s.contains('%')
   def isValidPolicy(p: String): Boolean = ValidPolicies(p)
 
   /** validator.go ValidateXMLReport: structural + semantic checks with
@@ -38,29 +40,28 @@ object ReportValidator {
     Extract.decompressed(data).map(Extract.utf8)
       .left.map(err => ValidationResult(valid = false, Seq(err), Seq.empty))
 
-  private def validateAggregateRaw(raw: String): ValidationResult = {
-    val errors = Seq.newBuilder[String]
-    val warnings = Seq.newBuilder[String]
-
-    Try(XML.loadString(raw)).toOption match {
-      case None =>
+  /** The checks over the report fields of one [[AggregateXml]] pass over
+    * the whole document (no `<feedback>` cut, unlike the parser).
+    */
+  private def validateAggregateRaw(raw: String): ValidationResult =
+    AggregateXmlParser.fields(raw) match {
+      case Left(_) =>
         ValidationResult(valid = false, Seq("Invalid XML format"), Seq.empty)
-      case Some(root) =>
-        def txt(n: scala.xml.NodeSeq): String = n.text.trim
-        val meta = root \ "report_metadata"
-        val pol = root \ "policy_published"
+      case Right(root) =>
+        val errors = Seq.newBuilder[String]
+        val warnings = Seq.newBuilder[String]
 
-        if (txt(meta \ "org_name").isEmpty) errors += "Missing organization name"
-        if (txt(meta \ "report_id").isEmpty) errors += "Missing report ID"
-        val email = txt(meta \ "email")
+        if (root("report_metadata/org_name").isEmpty) errors += "Missing organization name"
+        if (root("report_metadata/report_id").isEmpty) errors += "Missing report ID"
+        val email = root("report_metadata/email")
         if (email.nonEmpty && !isValidEmail(email)) warnings += "Invalid email format"
-        val domain = txt(pol \ "domain")
+        val domain = root("policy_published/domain")
         if (domain.isEmpty) errors += "Missing domain in policy published"
         else if (!isValidDomain(domain)) errors += "Invalid domain format in policy published"
-        if (!isValidPolicy(txt(pol \ "p"))) errors += "Invalid DMARC policy value"
+        if (!isValidPolicy(root("policy_published/p"))) errors += "Invalid DMARC policy value"
 
-        val begin = Try(txt(meta \ "date_range" \ "begin").toLong).toOption
-        val end = Try(txt(meta \ "date_range" \ "end").toLong).toOption
+        val begin = Try(root("report_metadata/date_range/begin").toLong).toOption
+        val end = Try(root("report_metadata/date_range/end").toLong).toOption
         (begin, end) match {
           case (Some(b), Some(e)) =>
             if (e < b) errors += "Invalid date range: end date is before begin date"
@@ -68,14 +69,14 @@ object ReportValidator {
           case _ => errors += "Invalid date range: unparseable timestamps"
         }
 
-        val records = root \ "record"
+        val records = root.all("record")
         if (records.isEmpty) warnings += "No records found in report"
         records.zipWithIndex.foreach { case (rec, i) =>
-          val count = Try(txt(rec \ "row" \ "count").toInt).getOrElse(0)
+          val count = Try(rec("row/count").toInt).getOrElse(0)
           if (count <= 0) warnings += s"Record ${i + 1} has invalid count: $count"
-          val ip = txt(rec \ "row" \ "source_ip")
+          val ip = rec("row/source_ip")
           if (!isValidIpLiteral(ip)) errors += s"Record ${i + 1} has invalid source IP: $ip"
-          val hf = txt(rec \ "identifiers" \ "header_from")
+          val hf = rec("identifiers/header_from")
           if (hf.isEmpty) warnings += s"Record ${i + 1} missing header_from"
           else if (!isValidDomain(hf)) warnings += s"Record ${i + 1} has invalid header_from domain: $hf"
         }
@@ -83,7 +84,6 @@ object ReportValidator {
         val errs = errors.result()
         ValidationResult(errs.isEmpty, errs, warnings.result())
     }
-  }
 
   /** validator.go:143 ValidateJSONReport, extended with the structural
     * fields the RFC 8460 parse requires (DmarcParsers.parseTlsJson:284):

@@ -29,4 +29,9 @@ class DmarcIntakeSurfaceSpec extends AnyFunSuite {
     val flattens = MainSources.matches("""flatMap\((?:DmarcReader\.)?recordRows\)""")
     assert(flattens == Map("src/main/scala/graft/sources/DmarcReader.scala" -> 1), flattens)
   }
+
+  test("the DMARC sources read XML through the one streaming pass, never scala-xml") {
+    val uses = MainSources.matches("""scala\.xml""").filter(_._1.startsWith("src/main/scala/graft/sources/"))
+    assert(uses.isEmpty, uses)
+  }
 }

@@ -108,6 +108,14 @@ class ReportValidatorSpec extends AnyFunSuite {
     assert(!isValidIpLiteral("notanip"))
     assert(isValidPolicy("none") && isValidPolicy("reject") && !isValidPolicy("p=none"))
   }
+
+  test("an IP is valid only as a full literal, as net.ParseIP reads it, never looked up") {
+    import ReportValidator.isValidIpLiteral
+    // InetAddress.getByName read "1.2.3" as 1.2.0.3 and sent host names to DNS
+    for (s <- Seq("1.2.3", "127.1", "mail.example.com", "fe80::1%eth0", "[::1]", "01.2.3.4"))
+      assert(!isValidIpLiteral(s), s)
+    assert(isValidIpLiteral("::ffff:192.0.2.1") && isValidIpLiteral("203.0.113.7"))
+  }
 }
 
 class ReportValidatorSparkSpec extends SparkSpec {

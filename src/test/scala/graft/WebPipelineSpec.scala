@@ -236,10 +236,8 @@ class WebPipelineSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val d = docs.select(col("doc_id"), col("text"))
-    val minted = d.filter(col("doc_id") % 20 === 3)
-      .select((col("doc_id") + 420000000000L).as("doc_id"),
-        expr(WebPipeline.substrMintTextSpark).as("text"))
-    val union = d.unionByName(minted)
+    val union = WebPipeline.withSubstrMints(docs)
+    val minted = union.filter(col("doc_id") >= 420000000000L) // the mints' id offset
     val base = TrainingData.prepareWeb(union, oracleHash = true)
     val armed = TrainingData.prepareWeb(union, oracleHash = true, exactSubstr = true)
     assert(armed.stages.map(_._1) == WebPipeline.StageNamesSubstr)
@@ -283,13 +281,7 @@ class WebPipelineSpec extends SparkSpec {
     // the gate entry's eval mint: 120-char verbatim excerpts of the
     // EXTRACTED text of every 20th doc — each excerpt source that
     // reaches ccnet is a guaranteed eval leak
-    val ev = TextAnalysis.warcBlobs(docs.filter(col("doc_id") % 20 === 5))
-      .flatMap { case (_, blob) =>
-        graft.functions.WarcRecords.parse(blob).getOrElse(Seq.empty)
-          .map(TextAnalysis.warcPageText)
-      }.toDF("doc_id", "url", "text")
-      .filter(length(col("text")) >= 49)
-      .select(expr("substring(text, 10, 120)").as("text"))
+    val ev = WebPipeline.evalExcerpts(docs)
     val armed = TrainingData.prepareWeb(docs, oracleHash = true,
       decontaminateEval = Some(ev))
     assert(armed.stages.map(_._1) == WebPipeline.StageNamesDecontam)
@@ -319,18 +311,8 @@ class WebPipelineSpec extends SparkSpec {
     // partial duplicates (doc_id % 20 = 3 sources) ∪ the corpus, plus
     // the decontam arm's verbatim-excerpt eval mint (% 20 = 5 sources)
     // — disjoint residues by construction
-    val d = docs.select(col("doc_id"), col("text"))
-    val minted = d.filter(col("doc_id") % 20 === 3)
-      .select((col("doc_id") + 420000000000L).as("doc_id"),
-        expr(WebPipeline.substrMintTextSpark).as("text"))
-    val union = d.unionByName(minted)
-    val ev = TextAnalysis.warcBlobs(union.filter(col("doc_id") % 20 === 5))
-      .flatMap { case (_, blob) =>
-        graft.functions.WarcRecords.parse(blob).getOrElse(Seq.empty)
-          .map(TextAnalysis.warcPageText)
-      }.toDF("doc_id", "url", "text")
-      .filter(length(col("text")) >= 49)
-      .select(expr("substring(text, 10, 120)").as("text"))
+    val union = WebPipeline.withSubstrMints(docs)
+    val ev = WebPipeline.evalExcerpts(union)
     val substrOnly = TrainingData.prepareWeb(union, oracleHash = true,
       exactSubstr = true)
     val full = TrainingData.prepareWeb(union, oracleHash = true,
