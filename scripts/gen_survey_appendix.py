@@ -93,10 +93,11 @@ for name in sorted(oracle):
     if not specs:
         # a suite drives the module when it calls a member of it (a
         # lowerCamel method or value); naming only a constant, as
-        # SparkSpec names DmarcIngest.SamplesConf, does not count
+        # SparkSpec names DmarcIngest.SamplesConf, does not count, nor
+        # does naming its source file (`Multimodal.scala`)
         module = os.path.basename(f).removesuffix(".scala")
         hits = [s for s, body in spec_files
-                if re.search(rf"\b{module}\.[a-z]", body)
+                if re.search(rf"\b{module}\.(?!scala\b)[a-z]", body)
                 and s not in ("PlanAuditSpec", "QueriesSmokeSpec")]
         specs = [f"module: {', '.join(hits)}"] if hits else []
     rows.append((name, f"{f}:{l}", kind, ", ".join(specs) or "—"))

@@ -6,6 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: headline queries (SURVEY §6) at the driver-selected
   * scale factor, one JSON line to stdout.
+  *
+  * Filter mode, for quick iteration between changes:
+  * `runMain graft.Bench <passes> <entry…>` times only the named registry
+  * entries, with the same warm-up and forced window, for that many
+  * passes and prints one `QUICKBENCH <entry> min= med= all=` line per
+  * entry instead of the JSON artifact.
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1).
   */
 object Bench {
 
@@ -72,6 +79,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    require(args.length != 1, "usage: Bench [<passes> <entry...>]")
+    val names = if (args.isEmpty) Headline else args.toSeq.drop(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-bench")
     val queries = SparkEntry.queries
@@ -87,9 +96,21 @@ object Bench {
     // measured, not first-call codegen/classloading. Guarded per query:
     // one broken query must degrade that query's samples to the -1
     // sentinel below, not zero the whole bench artifact.
-    Headline.foreach { n =>
+    names.foreach { n =>
       try run(n, "/root/testdata/sf0.001")
       catch { case scala.util.control.NonFatal(_) => () }
+    }
+    if (args.nonEmpty) {
+      val samples = Array.fill(names.size)(Vector.empty[Double])
+      for (_ <- 1 to args(0).toInt; (n, i) <- names.zipWithIndex) {
+        val t0 = System.nanoTime()
+        run(n, sfDir)
+        samples(i) :+= (System.nanoTime() - t0) / 1e9
+      }
+      for ((n, v) <- names.zip(samples))
+        println(f"QUICKBENCH $n%-28s min=${v.min}%8.3f  med=${v.sorted.apply(v.size / 2)}%8.3f  all=${v.map(x => f"$x%.3f").mkString(",")}")
+      spark.stop()
+      return
     }
     // Timed passes are INTERLEAVED round-robin (pass 1 of every query,
     // then pass 2, ...): back-to-back passes let one sustained co-tenant

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.sources.JsonText
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -34,26 +35,13 @@ object Verify {
         None
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        Some(s"""{"entry": ${q(name)}, "exception": ${q(e.getClass.getName)}, """ +
-          s""""message": ${Option(e.getMessage).map(q).getOrElse("null")}}""")
+        Some(s"""{"entry": ${JsonText.str(name)}, "exception": """ +
+          s"""${JsonText.str(e.getClass.getName)}, "message": ${JsonText.str(e.getMessage)}}""")
       }
     }
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${JsonText.str(k)}: ${JsonText.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/_failures.json"), failures.mkString("[", ",\n", "]"))
   }
-
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in an oracle's SQL would otherwise make the reader's
-  // json.load (scripts/check.py) fail and silently zero every compare.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

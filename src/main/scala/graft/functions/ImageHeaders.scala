@@ -2,10 +2,10 @@ package graft.functions
 
 /** Pure-byte image header parsing — (format, width, height) from the
   * magic numbers and size fields of the public PNG / GIF / BMP / JPEG
-  * file formats. No media libraries: this is the REAL metadata half of
-  * the multimodal decode path (pixel decode stays stubbed in this
-  * container); it runs inside the batched partition-level extractor, so
-  * swapping in a full decoder later changes nothing about the plumbing.
+  * file formats. No media libraries: the metadata half of the
+  * multimodal decode path, plus BMP pixels, the BMP thumbnail and the
+  * nearest-neighbor sampler the decoded-raster thumbnails share; each
+  * runs per row inside Multimodal's decode step.
   */
 object ImageHeaders {
 
@@ -161,6 +161,39 @@ object ImageHeaders {
     }
     val n = tw.toLong * th
     Some((tw, th, sr.toDouble / n, sg.toDouble / n, sb.toDouble / n, fnv))
+  }
+
+  /** Nearest-neighbor tw×th thumbnail of a decoded row-major raster of
+    * `ch` interleaved channels — the sampler the PNG, TIFF, JPEG and
+    * EXIF-oriented thumbnails share: sample at (⌊ty·h/th⌋, ⌊tx·w/tw⌋)
+    * in (ty, tx) order, FNV-1a over each sample's r,g,b bytes; one or
+    * two channels are gray (+ alpha) and replicate into r,g,b, three
+    * or four are RGB (+ alpha). Returns (tw, th, meanR, meanG, meanB,
+    * fnv); the caller guarantees tw, th > 0.
+    */
+  def thumbnailRaster(raster: Array[Byte], w: Int, h: Int, ch: Int,
+                      tw: Int, th: Int): (Int, Int, Double, Double, Double, Long) = {
+    var (sr, sg, sb) = (0L, 0L, 0L)
+    var fnv = 0xcbf29ce484222325L
+    def mix(v: Int): Unit = { fnv ^= (v & 0xff); fnv *= 0x100000001b3L }
+    var ty = 0
+    while (ty < th) {
+      val sy = (ty.toLong * h / th).toInt
+      var tx = 0
+      while (tx < tw) {
+        val sx = (tx.toLong * w / tw).toInt
+        val i = (sy * w + sx) * ch
+        val (r, g, bl) =
+          if (ch <= 2) { val v = raster(i) & 0xff; (v, v, v) }
+          else (raster(i) & 0xff, raster(i + 1) & 0xff, raster(i + 2) & 0xff)
+        sr += r; sg += g; sb += bl
+        mix(r); mix(g); mix(bl)
+        tx += 1
+      }
+      ty += 1
+    }
+    val n = tw.toLong * th
+    (tw, th, sr.toDouble / n, sg.toDouble / n, sb.toDouble / n, fnv)
   }
 
   /** Complete uncompressed 24bpp BMP (54-byte header + padded BGR rows)

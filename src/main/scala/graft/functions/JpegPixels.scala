@@ -18,9 +18,9 @@ package graft.functions
   * PngPixels.
   *
   * The reference parses media headers only (multimodal stills are an
-  * engine-side extension); like the other decoders this runs inside
-  * batched mapPartitions — binary decode is per-row imperative work,
-  * not an Expression job.
+  * engine-side extension); like the other decoders this runs per row
+  * inside Multimodal's decode step — binary decode is per-row
+  * imperative work, not an Expression job.
   */
 object JpegPixels {
 
@@ -912,37 +912,17 @@ object JpegPixels {
       }
     } catch { case _: Throwable => None }
 
-  /** Nearest-neighbor thumbnail over the decoded raster — the same
-    * (ty*h/th, tx*w/tw) sampling grid as PngPixels.thumbnail, with a
-    * positional FNV fingerprint of the sampled bytes (pins OUR
-    * decoder's determinism; it cannot be compared across decoders —
-    * conformant IDCTs differ by ±1 per sample, which the mean
-    * tolerance absorbs but a hash never would).
+  /** Nearest-neighbor thumbnail over the decoded raster — the shared
+    * sampler [[ImageHeaders.thumbnailRaster]], whose positional FNV
+    * fingerprint of the sampled bytes pins OUR decoder's determinism;
+    * it cannot be compared across decoders — conformant IDCTs differ by
+    * ±1 per sample, which the mean tolerance absorbs but a hash never
+    * would.
     */
   def thumbnail(b: Array[Byte], tw: Int, th: Int): Option[(Int, Int, Double, Double, Double, Long)] = {
     if (tw <= 0 || th <= 0) return None
     decodeRaster(b).map { case (w, h, ch, raster) =>
-      var (sr, sg, sb) = (0L, 0L, 0L)
-      var fnv = 0xcbf29ce484222325L
-      def mix(v: Int): Unit = { fnv ^= (v & 0xff); fnv *= 0x100000001b3L }
-      var ty = 0
-      while (ty < th) {
-        val sy = (ty.toLong * h / th).toInt
-        var tx = 0
-        while (tx < tw) {
-          val sx = (tx.toLong * w / tw).toInt
-          val i = (sy * w + sx) * ch
-          val (r, g, bl) =
-            if (ch == 1) { val v = raster(i) & 0xff; (v, v, v) }
-            else (raster(i) & 0xff, raster(i + 1) & 0xff, raster(i + 2) & 0xff)
-          sr += r; sg += g; sb += bl
-          mix(r); mix(g); mix(bl)
-          tx += 1
-        }
-        ty += 1
-      }
-      val n = tw.toLong * th
-      (tw, th, sr.toDouble / n, sg.toDouble / n, sb.toDouble / n, fnv)
+      ImageHeaders.thumbnailRaster(raster, w, h, ch, tw, th)
     }
   }
 

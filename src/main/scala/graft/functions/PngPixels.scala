@@ -167,35 +167,14 @@ object PngPixels {
   }
 
   /** Nearest-neighbor thumbnail over the decoded raster — the resize
-    * stage for the COMPRESSED image path, same sampling grid and FNV
-    * convention as ImageHeaders.thumbnailBmp (sample at
-    * (⌊ty·h/th⌋, ⌊tx·w/tw⌋), FNV-1a over the sampled channel bytes in
-    * r,g,b order; gray replicates into all three channels).
+    * stage for the COMPRESSED image path, through the shared sampler
+    * [[ImageHeaders.thumbnailRaster]] (gray replicates into all three
+    * channels).
     */
   def thumbnail(b: Array[Byte], tw: Int, th: Int): Option[(Int, Int, Double, Double, Double, Long)] = {
     if (tw <= 0 || th <= 0) return None
     decodeRaster(b).map { case (w, h, ch, raster) =>
-      var (sr, sg, sb) = (0L, 0L, 0L)
-      var fnv = 0xcbf29ce484222325L
-      def mix(v: Int): Unit = { fnv ^= (v & 0xff); fnv *= 0x100000001b3L }
-      var ty = 0
-      while (ty < th) {
-        val sy = (ty.toLong * h / th).toInt
-        var tx = 0
-        while (tx < tw) {
-          val sx = (tx.toLong * w / tw).toInt
-          val i = (sy * w + sx) * ch
-          val (r, g, bl) =
-            if (ch <= 2) { val v = raster(i) & 0xff; (v, v, v) }
-            else (raster(i) & 0xff, raster(i + 1) & 0xff, raster(i + 2) & 0xff)
-          sr += r; sg += g; sb += bl
-          mix(r); mix(g); mix(bl)
-          tx += 1
-        }
-        ty += 1
-      }
-      val n = tw.toLong * th
-      (tw, th, sr.toDouble / n, sg.toDouble / n, sb.toDouble / n, fnv)
+      ImageHeaders.thumbnailRaster(raster, w, h, ch, tw, th)
     }
   }
 

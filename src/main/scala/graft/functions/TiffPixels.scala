@@ -49,32 +49,14 @@ object TiffPixels {
     }
 
   /** Nearest-neighbor tw×th thumbnail over the decoded raster — the
-    * same sampling grid and positional FNV walk as
-    * [[PngPixels.thumbnail]], so the TIFF thumbnail entry shares the
-    * PNG thumbnail's closed-form oracle.
+    * shared sampler [[ImageHeaders.thumbnailRaster]], as
+    * [[PngPixels.thumbnail]] uses it, so the TIFF thumbnail entry shares
+    * the PNG thumbnail's closed-form oracle.
     */
   def thumbnail(bytes: Array[Byte], tw: Int, th: Int): Option[(Int, Int, Double, Double, Double, Long)] = {
     if (tw <= 0 || th <= 0) return None
     decodeRaster(bytes).map { case (w, h, raster) =>
-      var (sr, sg, sb) = (0L, 0L, 0L)
-      var fnv = 0xcbf29ce484222325L
-      def mix(v: Int): Unit = { fnv ^= (v & 0xff); fnv *= 0x100000001b3L }
-      var ty = 0
-      while (ty < th) {
-        val sy = (ty.toLong * h / th).toInt
-        var tx = 0
-        while (tx < tw) {
-          val sx = (tx.toLong * w / tw).toInt
-          val i = (sy * w + sx) * 3
-          val (r, g, bl) = (raster(i) & 0xff, raster(i + 1) & 0xff, raster(i + 2) & 0xff)
-          sr += r; sg += g; sb += bl
-          mix(r); mix(g); mix(bl)
-          tx += 1
-        }
-        ty += 1
-      }
-      val n = tw.toLong * th
-      (tw, th, sr.toDouble / n, sg.toDouble / n, sb.toDouble / n, fnv)
+      ImageHeaders.thumbnailRaster(raster, w, h, 3, tw, th)
     }
   }
 

@@ -6,29 +6,58 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video travel as opaque
-  * `binary` columns with a typed metadata struct; decode / feature
-  * extraction runs as a batched partition-level transform (the JVM
-  * equivalent of `mapInPandas` — iterate a partition in fixed-size
-  * batches, produce one output row per input row).
+  * `binary` columns with a typed metadata struct. Two helpers carry
+  * every table and decoder here:
+  *   - [[synthTable]] builds a (doc_id, payload[, meta]) frame from a
+  *     narrow base frame, one payload per base row;
+  *   - [[decodeRows]] maps each (doc_id, payload[, meta]) row to one
+  *     output row on the input's partitioning; its [[decodeSome]] form
+  *     drops a row whose decode yields nothing (the near-dup hashes).
+  * Each decoder is a plain per-row function over the payload bytes
+  * (graft.functions, pure JVM, no media libraries). Only
+  * [[extractFeatures]] keeps byte statistics in place of a decode.
   *
-  * The decode step is a STUB — no image/audio libraries exist in this
-  * container — replaced by a deterministic byte-statistics extractor so
-  * the Spark-side contract (schema, batching, partitioning, row
-  * alignment) is real and tested. Swap `decodeBatch` for a real decoder
-  * (JNI/ONNX/etc.) without touching the plumbing.
-  *
-  * Parallelism (r16): every synthetic-table builder widens its narrow
-  * base (doc_id + a few ints) with Par.widen before the `.rdd`
-  * conversion — the gate corpus arrives as ONE parquet split (single
-  * row group), which would otherwise pin the per-row encode AND the
-  * downstream decode (which inherits the builder's partitioning) to a
-  * single core; measured 2.67 → 1.77 s on m_jpeg_pixels at sf0.1.
-  * Par.widen is a no-op when the scan is already at cluster
-  * parallelism, so a real sharded media table pays no extra shuffle.
+  * Parallelism (r16): synthTable widens its narrow base (doc_id + a
+  * few ints) with Par.widen before the RDD conversion — the gate
+  * corpus arrives as ONE parquet split (single row group), which would
+  * otherwise pin the per-row encode AND the downstream decode (which
+  * inherits the table's partitioning) to a single core; measured
+  * 2.67 → 1.77 s on m_jpeg_pixels at sf0.1. Par.widen is a no-op when
+  * the scan is already at cluster parallelism, so a real sharded media
+  * table pays no extra shuffle.
   */
 object Multimodal extends QueryModule {
 
-  val BatchSize = 64
+  /** The one synthetic-table step: widen `base` (doc_id first) with
+    * Par.widen, then one (doc_id, payload[, meta]) row per base row,
+    * where meta is the struct of base's columns after doc_id. The
+    * schema follows `base`, nullable throughout.
+    */
+  private def synthTable(base: DataFrame, withMeta: Boolean = true)
+                        (payload: Row => Array[Byte]): DataFrame = {
+    val fields = base.schema.fields.map(_.copy(nullable = true))
+    val schema = StructType(fields.take(1)).add("payload", BinaryType)
+    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
+      if (withMeta) Row(r.get(0), payload(r), Row.fromSeq(r.toSeq.tail))
+      else Row(r.get(0), payload(r))
+    }
+    base.sparkSession.createDataFrame(rdd,
+      if (withMeta) schema.add("meta", StructType(fields.tail)) else schema)
+  }
+
+  /** The one decode step: each (doc_id, payload[, meta]) row of `media`
+    * maps to one row of `schema`, on the input's partitioning.
+    */
+  private def decodeRows(media: DataFrame, schema: StructType, withMeta: Boolean = true)
+                        (f: Row => Row): DataFrame =
+    decodeSome(media, schema, withMeta)(r => Some(f(r)))
+
+  /** [[decodeRows]] for a decode that may yield no row. */
+  private def decodeSome(media: DataFrame, schema: StructType, withMeta: Boolean)
+                        (f: Row => Option[Row]): DataFrame = {
+    val cols = Seq(col("doc_id"), col("payload")) ++ (if (withMeta) Seq(col("meta")) else Nil)
+    media.sparkSession.createDataFrame(media.select(cols: _*).rdd.flatMap(f), schema)
+  }
 
   val featureSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -54,12 +83,12 @@ object Multimodal extends QueryModule {
         (col("doc_id") % 480 + 32).cast("int").as("height"),
       ).as("meta"))
 
-  /** STUB decode: deterministic byte statistics standing in for pixel
-    * decode. Real implementation would decode `payload` per `format`.
+  /** Byte statistics per media row, standing in for a decode: the
+    * declared format and dimensions, payload size, mean byte and
+    * distinct byte count.
     */
-  private def decodeBatch(rows: Seq[Row]): Seq[Row] =
-    rows.map { r =>
-      val docId = r.getLong(0)
+  def extractFeatures(media: DataFrame): DataFrame =
+    decodeRows(media, featureSchema) { r =>
       val payload = r.getAs[Array[Byte]](1)
       val meta = r.getStruct(2)
       // raw sum/size, no display rounding: the partial sums stay exact
@@ -69,23 +98,11 @@ object Multimodal extends QueryModule {
       val mean =
         if (payload.isEmpty) 0.0
         else payload.iterator.map(b => (b & 0xff).toDouble).sum / payload.length
-      Row(docId, meta.getString(0), meta.getInt(1), meta.getInt(2),
+      Row(r.getLong(0), meta.getString(0), meta.getInt(1), meta.getInt(2),
           payload.length.toLong,
           mean,
           payload.iterator.map(b => b & 0xff).toSet.size)
     }
-
-  /** Partition-level batched extraction: groups the partition iterator
-    * into BatchSize chunks (the mapInPandas batch shape) and runs the
-    * decoder per chunk — bounded memory per task regardless of partition
-    * size.
-    */
-  def extractFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(decodeBatch))
-    spark.createDataFrame(rdd, featureSchema)
-  }
 
   val headerSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -95,62 +112,41 @@ object Multimodal extends QueryModule {
     StructField("header_ok", BooleanType),
   ))
 
-  private val imageSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("payload", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType)))),
-  ))
-
   /** Media table whose payloads are REAL image headers (PNG/GIF/BMP
     * bytes synthesized per-format with the declared dimensions) — the
     * metadata-decode path below parses actual bytes, not a side
     * channel.
     */
-  def imageTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
+  def imageTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(
       col("doc_id"),
       element_at(array(lit("png"), lit("gif"), lit("bmp")),
         (col("doc_id") % 3 + 1).cast("int")).as("format"),
       (col("doc_id") % 640 + 32).cast("int").as("width"),
-      (col("doc_id") % 480 + 32).cast("int").as("height"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
-      Row(r.getLong(0),
-          graft.functions.ImageHeaders.syntheticHeader(
-            r.getString(1), r.getInt(2), r.getInt(3)),
-          Row(r.getString(1), r.getInt(2), r.getInt(3)))
+      (col("doc_id") % 480 + 32).cast("int").as("height"))) { r =>
+      graft.functions.ImageHeaders.syntheticHeader(r.getString(1), r.getInt(2), r.getInt(3))
     }
-    spark.createDataFrame(rdd, imageSchema)
-  }
 
   /** REAL metadata decode: parse (format, width, height) out of the
     * payload's actual header bytes (graft.functions.ImageHeaders —
-    * pure-JVM PNG/GIF/BMP/JPEG parsing, no media libraries), batched
-    * like `extractFeatures`. `header_ok` compares the parsed values to
-    * the declared metadata — a corrupt or mislabeled payload surfaces
-    * as false instead of poisoning downstream stats. Pixel decode is
-    * REAL for BMP (decodePixels), PNG (decodePngPixels), GIF
-    * (decodeGifPixels), JPEG (decodeJpegPixels), and lossless WebP
-    * (decodeWebpPixels) — no still-image format keeps a stub.
+    * pure-JVM PNG/GIF/BMP/JPEG parsing, no media libraries).
+    * `header_ok` compares the parsed values to the declared metadata —
+    * a corrupt or mislabeled payload surfaces as false instead of
+    * poisoning downstream stats. Pixel decode is REAL for BMP
+    * (decodePixels), PNG (decodePngPixels), GIF (decodeGifPixels), JPEG
+    * (decodeJpegPixels), and lossless WebP (decodeWebpPixels).
     */
-  def decodeHeaders(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.ImageHeaders.parse(r.getAs[Array[Byte]](1)) match {
-          case Some((f, w, h)) =>
-            Row(r.getLong(0), f, w, h,
-                f == meta.getString(0) && w == meta.getInt(1) && h == meta.getInt(2))
-          case None =>
-            Row(r.getLong(0), "unknown", 0, 0, false)
-        }
-      }))
-    spark.createDataFrame(rdd, headerSchema)
-  }
+  def decodeHeaders(media: DataFrame): DataFrame =
+    decodeRows(media, headerSchema) { r =>
+      val meta = r.getStruct(2)
+      graft.functions.ImageHeaders.parse(r.getAs[Array[Byte]](1)) match {
+        case Some((f, w, h)) =>
+          Row(r.getLong(0), f, w, h,
+              f == meta.getString(0) && w == meta.getInt(1) && h == meta.getInt(2))
+        case None =>
+          Row(r.getLong(0), "unknown", 0, 0, false)
+      }
+    }
 
   val audioSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -165,52 +161,34 @@ object Multimodal extends QueryModule {
     * synthesized with the declared parameters — the audio twin of
     * `imageTable`.
     */
-  def audioTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
+  def audioTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(
       col("doc_id"),
       (col("doc_id") % 2 + 1).cast("int").as("channels"),
       element_at(array(lit(8000), lit(16000), lit(44100)),
         (col("doc_id") % 3 + 1).cast("int")).as("sample_rate"),
-      (col("doc_id") % 48000 + 1000).as("n_samples"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
-      Row(r.getLong(0),
-          graft.functions.AudioHeaders.syntheticHeader(
-            r.getInt(1), r.getInt(2), bits = 16, nSamples = r.getLong(3)),
-          Row(r.getInt(1), r.getInt(2), r.getLong(3)))
+      (col("doc_id") % 48000 + 1000).as("n_samples"))) { r =>
+      graft.functions.AudioHeaders.syntheticHeader(
+        r.getInt(1), r.getInt(2), bits = 16, nSamples = r.getLong(3))
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("channels", IntegerType),
-        StructField("sample_rate", IntegerType),
-        StructField("n_samples", LongType)))),
-    ))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** REAL audio metadata decode: parse channels/rate/bits/duration out
-    * of the payload's actual RIFF bytes (functions.AudioHeaders),
-    * batched like the image path; `header_ok` cross-checks the parsed
-    * values against the declared metadata.
+    * of the payload's actual RIFF bytes (functions.AudioHeaders);
+    * `header_ok` cross-checks the parsed values against the declared
+    * metadata.
     */
-  def decodeAudioHeaders(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.AudioHeaders.parse(r.getAs[Array[Byte]](1)) match {
-          case Some((ch, rate, bits, durMs)) =>
-            val expectMs = meta.getLong(2) * 1000L / meta.getInt(1)
-            Row(r.getLong(0), ch, rate, bits, durMs,
-                ch == meta.getInt(0) && rate == meta.getInt(1) && durMs == expectMs)
-          case None =>
-            Row(r.getLong(0), 0, 0, 0, 0L, false)
-        }
-      }))
-    spark.createDataFrame(rdd, audioSchema)
-  }
+  def decodeAudioHeaders(media: DataFrame): DataFrame =
+    decodeRows(media, audioSchema) { r =>
+      val meta = r.getStruct(2)
+      graft.functions.AudioHeaders.parse(r.getAs[Array[Byte]](1)) match {
+        case Some((ch, rate, bits, durMs)) =>
+          val expectMs = meta.getLong(2) * 1000L / meta.getInt(1)
+          Row(r.getLong(0), ch, rate, bits, durMs,
+              ch == meta.getInt(0) && rate == meta.getInt(1) && durMs == expectMs)
+        case None =>
+          Row(r.getLong(0), 0, 0, 0, 0L, false)
+      }
+    }
 
   val videoSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -223,52 +201,33 @@ object Multimodal extends QueryModule {
   /** Video table whose payloads are REAL minimal MP4 box streams
     * (ftyp + moov/mvhd) with the declared timescale/duration.
     */
-  def videoTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
+  def videoTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(
       col("doc_id"),
       element_at(array(lit("isom"), lit("mp42")),
         (col("doc_id") % 2 + 1).cast("int")).as("brand"),
       element_at(array(lit(600), lit(1000), lit(90000)),
         (col("doc_id") % 3 + 1).cast("int")).as("timescale"),
-      (col("doc_id") % 3600 + 1).as("dur_s"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
-      val ticks = r.getLong(3) * r.getInt(2)
-      Row(r.getLong(0),
-          graft.functions.VideoHeaders.syntheticHeader(r.getString(1), r.getInt(2), ticks),
-          Row(r.getString(1), r.getInt(2), r.getLong(3)))
+      (col("doc_id") % 3600 + 1).as("dur_s"))) { r =>
+      graft.functions.VideoHeaders.syntheticHeader(
+        r.getString(1), r.getInt(2), r.getLong(3) * r.getInt(2))
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("brand", StringType),
-        StructField("timescale", IntegerType),
-        StructField("dur_s", LongType)))),
-    ))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** REAL video metadata decode: parse brand/timescale/duration out of
-    * the payload's actual MP4 boxes (functions.VideoHeaders), batched
-    * like the other modalities.
+    * the payload's actual MP4 boxes (functions.VideoHeaders).
     */
-  def decodeVideoHeaders(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.VideoHeaders.parse(r.getAs[Array[Byte]](1)) match {
-          case Some((brand, ts, durMs)) =>
-            Row(r.getLong(0), brand, ts, durMs,
-                brand == meta.getString(0) && ts == meta.getInt(1) &&
-                  durMs == meta.getLong(2) * 1000L)
-          case None =>
-            Row(r.getLong(0), "unknown", 0, 0L, false)
-        }
-      }))
-    spark.createDataFrame(rdd, videoSchema)
-  }
+  def decodeVideoHeaders(media: DataFrame): DataFrame =
+    decodeRows(media, videoSchema) { r =>
+      val meta = r.getStruct(2)
+      graft.functions.VideoHeaders.parse(r.getAs[Array[Byte]](1)) match {
+        case Some((brand, ts, durMs)) =>
+          Row(r.getLong(0), brand, ts, durMs,
+              brand == meta.getString(0) && ts == meta.getInt(1) &&
+                durMs == meta.getLong(2) * 1000L)
+        case None =>
+          Row(r.getLong(0), "unknown", 0, 0L, false)
+      }
+    }
 
   val pixelSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -293,264 +252,189 @@ object Multimodal extends QueryModule {
 
   /** Nearest-neighbor thumbnails over a (doc_id, payload, meta) media
     * frame — the resize stage of the multimodal brief, real for the
-    * codec-free BMP format. Same batched mapPartitions shape as
-    * decodePixels; thumb_ok cross-checks the thumbnail's channel means
-    * against the declared solid source color (a solid image downsamples
-    * to itself at any grid).
+    * codec-free BMP format. thumb_ok cross-checks the thumbnail's
+    * channel means against the declared solid source color (a solid
+    * image downsamples to itself at any grid).
     */
-  def decodeThumbnails(media: DataFrame, tw: Int, th: Int): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.ImageHeaders.thumbnailBmp(r.getAs[Array[Byte]](1), tw, th) match {
-          case Some((w, h, mr, mg, mb, fnv)) =>
-            Row(r.getLong(0), w, h, mr, mg, mb, fnv,
-                mr == meta.getInt(2).toDouble && mg == meta.getInt(3).toDouble &&
-                  mb == meta.getInt(4).toDouble)
-          case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, 0L, false)
-        }
-      }))
-    spark.createDataFrame(rdd, thumbSchema)
-  }
+  def decodeThumbnails(media: DataFrame, tw: Int, th: Int): DataFrame =
+    decodeRows(media, thumbSchema) { r =>
+      val meta = r.getStruct(2)
+      graft.functions.ImageHeaders.thumbnailBmp(r.getAs[Array[Byte]](1), tw, th) match {
+        case Some((w, h, mr, mg, mb, fnv)) =>
+          Row(r.getLong(0), w, h, mr, mg, mb, fnv,
+              mr == meta.getInt(2).toDouble && mg == meta.getInt(3).toDouble &&
+                mb == meta.getInt(4).toDouble)
+        case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, 0L, false)
+      }
+    }
 
   /** Image table whose payloads are COMPLETE uncompressed 24bpp BMPs
     * (solid color derived from doc_id) — real pixel arrays, not header
     * fragments. Dimensions stay small (≤19×15) so 500 full images are
     * a few hundred KB.
     */
-  def bmpTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
+  def bmpTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(
       col("doc_id"),
       (col("doc_id") % 16 + 4).cast("int").as("w"),
       (col("doc_id") % 12 + 4).cast("int").as("h"),
       (col("doc_id") % 256).cast("int").as("r"),
       (col("doc_id") * 7 % 256).cast("int").as("g"),
-      (col("doc_id") * 13 % 256).cast("int").as("b"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
-      Row(r.getLong(0),
-          graft.functions.ImageHeaders.syntheticBmp(
-            r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5)),
-          Row(r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5)))
+      (col("doc_id") * 13 % 256).cast("int").as("b"))) { r =>
+      graft.functions.ImageHeaders.syntheticBmp(
+        r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5))
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("w", IntegerType), StructField("h", IntegerType),
-        StructField("r", IntegerType), StructField("g", IntegerType),
-        StructField("b", IntegerType)))),
-    ))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** REAL pixel decode (uncompressed 24bpp BMP — no codec needed, just
-    * the spec): per-channel means over the actual pixel array, batched
-    * like every other modality; `pixels_ok` cross-checks the decoded
-    * means against the declared solid color. The decode stub now covers
-    * only COMPRESSED formats — this path is end-to-end real.
+    * the spec): per-channel means over the actual pixel array;
+    * `pixels_ok` cross-checks the decoded means against the declared
+    * solid color.
     */
-  def decodePixels(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.ImageHeaders.decodeBmpPixels(r.getAs[Array[Byte]](1)) match {
-          case Some((w, h, mr, mg, mb)) =>
-            Row(r.getLong(0), w, h, mr, mg, mb,
-                w == meta.getInt(0) && h == meta.getInt(1) &&
-                  mr == meta.getInt(2).toDouble && mg == meta.getInt(3).toDouble &&
-                  mb == meta.getInt(4).toDouble)
-          case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, false)
-        }
-      }))
-    spark.createDataFrame(rdd, pixelSchema)
+  def decodePixels(media: DataFrame): DataFrame =
+    decodeRows(media, pixelSchema) { r =>
+      val meta = r.getStruct(2)
+      graft.functions.ImageHeaders.decodeBmpPixels(r.getAs[Array[Byte]](1)) match {
+        case Some((w, h, mr, mg, mb)) =>
+          Row(r.getLong(0), w, h, mr, mg, mb,
+              w == meta.getInt(0) && h == meta.getInt(1) &&
+                mr == meta.getInt(2).toDouble && mg == meta.getInt(3).toDouble &&
+                mb == meta.getInt(4).toDouble)
+        case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, false)
+      }
+    }
+
+  /** documents projected to the (w ≤ 19, h ≤ 15, seed) dims the
+    * gradient fixtures (PNG, TIFF, GIF, WebP) share.
+    */
+  private def gradientDims(t: Tables): DataFrame =
+    t.documents.select(
+      col("doc_id"),
+      (col("doc_id") % 16 + 4).cast("int").as("w"),
+      (col("doc_id") % 12 + 4).cast("int").as("h"),
+      (col("doc_id") % 997).cast("int").as("seed"))
+
+  /** pixels_ok of a gradient fixture: the decoded dims and channel
+    * means equal the closed form `means(w, h, seed)` exactly.
+    * MediaIntake.tiffStream applies it to the streamed TIFFs.
+    */
+  private[graft] def gradientOk(decoded: (Int, Int, Double, Double, Double),
+                                w: Int, h: Int, seed: Int,
+                                means: (Int, Int, Int) => (Double, Double, Double)): Boolean = {
+    val (dw, dh, mr, mg, mb) = decoded
+    val (er, eg, eb) = means(w, h, seed)
+    dw == w && dh == h && mr == er && mg == eg && mb == eb
   }
+
+  /** Per-channel means of a gradient fixture's pixels through `decode`,
+    * pixels_ok per [[gradientOk]].
+    */
+  private def gradientPixels(media: DataFrame,
+                             decode: Array[Byte] => Option[(Int, Int, Double, Double, Double)],
+                             means: (Int, Int, Int) => (Double, Double, Double)): DataFrame =
+    decodeRows(media, pixelSchema) { r =>
+      val meta = r.getStruct(2)
+      decode(r.getAs[Array[Byte]](1)) match {
+        case Some(p @ (w, h, mr, mg, mb)) =>
+          Row(r.getLong(0), w, h, mr, mg, mb,
+              gradientOk(p, meta.getInt(0), meta.getInt(1), meta.getInt(2), means))
+        case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, false)
+      }
+    }
+
+  /** tw×th thumbnails of a PNG-gradient fixture through `thumbnail`;
+    * `thumb_ok` compares the sampled pixels' FNV (and means) against a
+    * formula-only recomputation of the gradient — the codec chain is in
+    * the loop on every image, the check path never is.
+    */
+  private def gradientThumbnails(media: DataFrame, tw: Int, th: Int,
+      thumbnail: (Array[Byte], Int, Int) => Option[(Int, Int, Double, Double, Double, Long)]): DataFrame =
+    decodeRows(media, thumbSchema) { r =>
+      val meta = r.getStruct(2)
+      thumbnail(r.getAs[Array[Byte]](1), tw, th) match {
+        case Some((w, h, mr, mg, mb, fnv)) =>
+          val (er, eg, eb, efnv) = graft.functions.PngPixels.syntheticThumb(
+            meta.getInt(0), meta.getInt(1), meta.getInt(2), tw, th)
+          Row(r.getLong(0), w, h, mr, mg, mb, fnv,
+              fnv == efnv && mr == er && mg == eg && mb == eb)
+        case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, 0L, false)
+      }
+    }
 
   /** Image table whose payloads are COMPLETE baseline TIFFs (TIFF 6.0
     * strip-organized uncompressed RGB, RowsPerStrip cycling 2-4, byte
     * order alternating II/MM on doc_id) carrying the suite's shared
     * gradient — the container-format sixth of the still-image family.
     */
-  def tiffTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
-      col("doc_id"),
-      (col("doc_id") % 16 + 4).cast("int").as("w"),
-      (col("doc_id") % 12 + 4).cast("int").as("h"),
-      (col("doc_id") % 997).cast("int").as("seed"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
-      Row(r.getLong(0),
-          graft.functions.TiffPixels.syntheticTiff(
-            r.getInt(1), r.getInt(2), r.getInt(3), bigEndian = r.getLong(0) % 2 == 1),
-          Row(r.getInt(1), r.getInt(2), r.getInt(3)))
+  def tiffTable(t: Tables): DataFrame =
+    synthTable(gradientDims(t)) { r =>
+      graft.functions.TiffPixels.syntheticTiff(
+        r.getInt(1), r.getInt(2), r.getInt(3), bigEndian = r.getLong(0) % 2 == 1)
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("w", IntegerType), StructField("h", IntegerType),
-        StructField("seed", IntegerType)))),
-    ))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** TIFF pixel decode to per-channel means, cross-checked against the
-    * closed-form gradient — same batched mapPartitions shape and same
-    * pixels_ok contract as [[decodePngPixels]].
+    * closed-form gradient — the pixels_ok contract of
+    * [[decodePngPixels]].
     */
-  def decodeTiffPixels(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.TiffPixels.decode(r.getAs[Array[Byte]](1)) match {
-          case Some((w, h, mr, mg, mb)) =>
-            val (er, eg, eb) = graft.functions.PngPixels.syntheticMeans(
-              meta.getInt(0), meta.getInt(1), meta.getInt(2))
-            Row(r.getLong(0), w, h, mr, mg, mb,
-                w == meta.getInt(0) && h == meta.getInt(1) &&
-                  mr == er && mg == eg && mb == eb)
-          case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, false)
-        }
-      }))
-    spark.createDataFrame(rdd, pixelSchema)
-  }
+  def decodeTiffPixels(media: DataFrame): DataFrame =
+    gradientPixels(media, graft.functions.TiffPixels.decode,
+      graft.functions.PngPixels.syntheticMeans)
 
   /** Thumbnails through the TIFF container: full IFD walk + strip
     * raster + the shared nearest-neighbor sampler/FNV walk, cross-
     * checked against the formula-only gradient recomputation — same
     * contract as [[decodePngThumbnails]].
     */
-  def decodeTiffThumbnails(media: DataFrame, tw: Int, th: Int): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.TiffPixels.thumbnail(r.getAs[Array[Byte]](1), tw, th) match {
-          case Some((w, h, mr, mg, mb, fnv)) =>
-            val (er, eg, eb, efnv) = graft.functions.PngPixels.syntheticThumb(
-              meta.getInt(0), meta.getInt(1), meta.getInt(2), tw, th)
-            Row(r.getLong(0), w, h, mr, mg, mb, fnv,
-                fnv == efnv && mr == er && mg == eg && mb == eb)
-          case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, 0L, false)
-        }
-      }))
-    spark.createDataFrame(rdd, thumbSchema)
-  }
+  def decodeTiffThumbnails(media: DataFrame, tw: Int, th: Int): DataFrame =
+    gradientThumbnails(media, tw, th, graft.functions.TiffPixels.thumbnail)
 
   /** Image table whose payloads are COMPLETE compressed PNGs (real zlib
     * IDAT streams, gradient pixels, rows cycling through all five
     * filter types) — the compressed-format twin of [[bmpTable]].
     * Dimensions stay small (≤19×15) so 500 full images are cheap.
     */
-  def pngTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
-      col("doc_id"),
-      (col("doc_id") % 16 + 4).cast("int").as("w"),
-      (col("doc_id") % 12 + 4).cast("int").as("h"),
-      (col("doc_id") % 997).cast("int").as("seed"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
-      Row(r.getLong(0),
-          graft.functions.PngPixels.syntheticPng(r.getInt(1), r.getInt(2), r.getInt(3)),
-          Row(r.getInt(1), r.getInt(2), r.getInt(3)))
+  def pngTable(t: Tables): DataFrame =
+    synthTable(gradientDims(t)) { r =>
+      graft.functions.PngPixels.syntheticPng(r.getInt(1), r.getInt(2), r.getInt(3))
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("w", IntegerType), StructField("h", IntegerType),
-        StructField("seed", IntegerType)))),
-    ))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** Image table whose payloads are COMPLETE GIF89a files (real LZW
     * streams over a 64-color palette, gradient indices) — the second
     * compressed-format table after [[pngTable]].
     */
-  def gifTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
-      col("doc_id"),
-      (col("doc_id") % 16 + 4).cast("int").as("w"),
-      (col("doc_id") % 12 + 4).cast("int").as("h"),
-      (col("doc_id") % 997).cast("int").as("seed"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
-      Row(r.getLong(0),
-          graft.functions.GifPixels.syntheticGif(r.getInt(1), r.getInt(2), r.getInt(3)),
-          Row(r.getInt(1), r.getInt(2), r.getInt(3)))
+  def gifTable(t: Tables): DataFrame =
+    synthTable(gradientDims(t)) { r =>
+      graft.functions.GifPixels.syntheticGif(r.getInt(1), r.getInt(2), r.getInt(3))
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("w", IntegerType), StructField("h", IntegerType),
-        StructField("seed", IntegerType)))),
-    ))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** REAL pixel decode for the second COMPRESSED image format: GIF LZW
     * inflate + palette mapping (graft.functions.GifPixels,
-    * dependency-free), batched like every other modality; `pixels_ok`
-    * cross-checks decoded channel means against the index/palette
-    * formulas — a gradient, so a wrong LZW or palette path cannot pass.
+    * dependency-free); `pixels_ok` cross-checks decoded channel means
+    * against the index/palette formulas — a gradient, so a wrong LZW or
+    * palette path cannot pass.
     */
-  def decodeGifPixels(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.GifPixels.decode(r.getAs[Array[Byte]](1)) match {
-          case Some((w, h, mr, mg, mb)) =>
-            val (er, eg, eb) = graft.functions.GifPixels.syntheticMeans(
-              meta.getInt(0), meta.getInt(1), meta.getInt(2))
-            Row(r.getLong(0), w, h, mr, mg, mb,
-                w == meta.getInt(0) && h == meta.getInt(1) &&
-                  mr == er && mg == eg && mb == eb)
-          case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, false)
-        }
-      }))
-    spark.createDataFrame(rdd, pixelSchema)
-  }
+  def decodeGifPixels(media: DataFrame): DataFrame =
+    gradientPixels(media, graft.functions.GifPixels.decode,
+      graft.functions.GifPixels.syntheticMeans)
 
   /** Image table whose payloads are COMPLETE baseline JPEGs — encoded
     * by the JDK's own writer (javax.imageio, in every JVM), 4:2:0
     * chroma at seed-varied quality: real DCT entropy-coded streams,
     * not synthetic headers.
     */
-  def jpegTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    // (widening happens at the .rdd conversion below, like every
-    // builder in this file — see the module note on Par.widen)
-    val base = t.documents.select(
+  def jpegTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(
       col("doc_id"),
       (col("doc_id") % 16 + 9).cast("int").as("w"),
       (col("doc_id") % 12 + 9).cast("int").as("h"),
-      (col("doc_id") % 997).cast("int").as("seed"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
+      (col("doc_id") % 997).cast("int").as("seed"))) { r =>
       // every third payload is PROGRESSIVE (the JDK writer's multi-scan
       // successive-approximation script), so the driver's hash gate and
       // the runtime JDK cross-check exercise both entropy paths
-      Row(r.getLong(0),
-          graft.functions.JpegPixels.syntheticJpeg(
-            r.getInt(1), r.getInt(2), r.getInt(3),
-            0.6f + (r.getInt(3) % 5) * 0.08f,
-            progressive = r.getInt(3) % 3 == 0),
-          Row(r.getInt(1), r.getInt(2), r.getInt(3)))
+      graft.functions.JpegPixels.syntheticJpeg(
+        r.getInt(1), r.getInt(2), r.getInt(3),
+        0.6f + (r.getInt(3) % 5) * 0.08f,
+        progressive = r.getInt(3) % 3 == 0)
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("w", IntegerType), StructField("h", IntegerType),
-        StructField("seed", IntegerType)))),
-    ))
-    spark.createDataFrame(rdd, schema)
-  }
 
   val exifSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -569,13 +453,11 @@ object Multimodal extends QueryModule {
     * sit inside the driver's hash gate), spliced after SOI the way
     * camera encoders place it.
     */
-  def exifTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
+  def exifTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(
       col("doc_id"),
       (col("doc_id") % 16 + 9).cast("int").as("w"),
-      (col("doc_id") % 12 + 9).cast("int").as("h"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
+      (col("doc_id") % 12 + 9).cast("int").as("h")), withMeta = false) { r =>
       val d = r.getLong(0)
       val e = graft.functions.ExifMeta.Exif(
         if (d % 2 == 0) "MM" else "II",
@@ -584,16 +466,11 @@ object Multimodal extends QueryModule {
         f"2024:01:${d % 28 + 1}%02d 12:00:00",
         ((d % 4 + 1) * 100).toInt,
         1, 1 << ((d % 6) + 1).toInt)
-      Row(d, graft.functions.ExifMeta.spliceApp1(
+      graft.functions.ExifMeta.spliceApp1(
         graft.functions.JpegPixels.syntheticJpeg(
           r.getInt(1), r.getInt(2), (d % 997).toInt),
-        graft.functions.ExifMeta.buildApp1(e)))
+        graft.functions.ExifMeta.buildApp1(e))
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType)))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** REAL EXIF extraction (graft.functions.ExifMeta: APP1 walk + TIFF
     * IFD parse, both byte orders) — the image-metadata prong of the
@@ -604,20 +481,16 @@ object Multimodal extends QueryModule {
     * (offset, endianness, sub-IFD) is a red row, not a silent skew. A
     * failed parse emits the never-matching sentinel row.
     */
-  def decodeExif(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        graft.functions.ExifMeta.parse(r.getAs[Array[Byte]](1)) match {
-          case Some(e) =>
-            Row(r.getLong(0), e.byteOrder, e.make, e.model, e.orientation,
-                e.dateTime, e.iso, e.expNum, e.expDen)
-          case None =>
-            Row(r.getLong(0), "none", "", "", 0, "", 0, 0, 0)
-        }
-      }))
-    spark.createDataFrame(rdd, exifSchema)
-  }
+  def decodeExif(media: DataFrame): DataFrame =
+    decodeRows(media, exifSchema, withMeta = false) { r =>
+      graft.functions.ExifMeta.parse(r.getAs[Array[Byte]](1)) match {
+        case Some(e) =>
+          Row(r.getLong(0), e.byteOrder, e.make, e.model, e.orientation,
+              e.dateTime, e.iso, e.expNum, e.expDen)
+        case None =>
+          Row(r.getLong(0), "none", "", "", 0, "", 0, 0, 0)
+      }
+    }
 
   val mp3Schema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -633,22 +506,16 @@ object Multimodal extends QueryModule {
     * bit (every fifth stream), and an ID3v2 prefix (every fourth) all
     * vary, so the gate exercises the padded-walk and tag-skip paths.
     */
-  def mp3Table(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val rdd = Par.widen(t.documents.select(col("doc_id")), col("doc_id")).rdd.map { r =>
+  def mp3Table(t: Tables): DataFrame =
+    synthTable(t.documents.select(col("doc_id")), withMeta = false) { r =>
       val d = r.getLong(0)
-      Row(d, graft.functions.Mp3Frames.synthetic(
+      graft.functions.Mp3Frames.synthetic(
         frames = (d % 20 + 5).toInt,
         brIdx = (d % 14 + 1).toInt,
         srIdx = (d % 3).toInt,
         padded = d % 5 == 0,
-        id3Bytes = if (d % 4 == 0) 64 else 0))
+        id3Bytes = if (d % 4 == 0) 64 else 0)
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType)))
-    spark.createDataFrame(rdd, schema)
-  }
 
   val id3Schema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -661,9 +528,8 @@ object Multimodal extends QueryModule {
   /** MP3 streams opening with a REAL ID3v2.4 tag (TIT2/TPE1/TALB text
     * frames, closed-form from doc_id) ahead of the CBR frames.
     */
-  def id3Table(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val rdd = Par.widen(t.documents.select(col("doc_id")), col("doc_id")).rdd.map { r =>
+  def id3Table(t: Tables): DataFrame =
+    synthTable(t.documents.select(col("doc_id")), withMeta = false) { r =>
       val d = r.getLong(0)
       val tag = graft.functions.Mp3Frames.syntheticId3(
         graft.functions.Mp3Frames.Id3Tags(
@@ -672,13 +538,8 @@ object Multimodal extends QueryModule {
       val frames = graft.functions.Mp3Frames.synthetic(
         frames = (d % 10 + 3).toInt, brIdx = (d % 14 + 1).toInt,
         srIdx = (d % 3).toInt, padded = false, id3Bytes = 0)
-      Row(d, tag ++ frames)
+      tag ++ frames
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType)))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** REAL ID3v2 tag extraction (graft.functions.Mp3Frames.parseId3Tags:
     * frame walk inside the syncsafe-sized tag block) plus the audio
@@ -686,20 +547,16 @@ object Multimodal extends QueryModule {
     * frame walk compose. Hash-gated field-for-field against the
     * closed-form oracle.
     */
-  def decodeId3Tags(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        (graft.functions.Mp3Frames.parseId3Tags(payload),
-         graft.functions.Mp3Frames.parse(payload)) match {
-          case (Some(t), Some(m)) =>
-            Row(r.getLong(0), t.title, t.artist, t.album, m.nFrames)
-          case _ => Row(r.getLong(0), "", "", "", 0)
-        }
-      }))
-    spark.createDataFrame(rdd, id3Schema)
-  }
+  def decodeId3Tags(media: DataFrame): DataFrame =
+    decodeRows(media, id3Schema, withMeta = false) { r =>
+      val payload = r.getAs[Array[Byte]](1)
+      (graft.functions.Mp3Frames.parseId3Tags(payload),
+       graft.functions.Mp3Frames.parse(payload)) match {
+        case (Some(t), Some(m)) =>
+          Row(r.getLong(0), t.title, t.artist, t.album, m.nFrames)
+        case _ => Row(r.getLong(0), "", "", "", 0)
+      }
+    }
 
   /** REAL MP3 frame-header walk (graft.functions.Mp3Frames): frame
     * count, sample rate, bitrate, and duration without decoding audio
@@ -707,20 +564,16 @@ object Multimodal extends QueryModule {
     * against the oracle's closed-form recomputation; a walk that
     * ignores the padding bit or the ID3 prefix desyncs and reds out.
     */
-  def decodeMp3Headers(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        graft.functions.Mp3Frames.parse(r.getAs[Array[Byte]](1)) match {
-          case Some(m) =>
-            Row(r.getLong(0), m.nFrames, m.sampleRate, m.bitrateKbps,
-                m.durationMs, m.hasId3)
-          case None =>
-            Row(r.getLong(0), 0, 0, 0, 0L, false)
-        }
-      }))
-    spark.createDataFrame(rdd, mp3Schema)
-  }
+  def decodeMp3Headers(media: DataFrame): DataFrame =
+    decodeRows(media, mp3Schema, withMeta = false) { r =>
+      graft.functions.Mp3Frames.parse(r.getAs[Array[Byte]](1)) match {
+        case Some(m) =>
+          Row(r.getLong(0), m.nFrames, m.sampleRate, m.bitrateKbps,
+              m.durationMs, m.hasId3)
+        case None =>
+          Row(r.getLong(0), 0, 0, 0, 0L, false)
+      }
+    }
 
   val flacSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -742,25 +595,20 @@ object Multimodal extends QueryModule {
     * and a PADDING block on every fifth, so the gate exercises the
     * chain walk, the last-block flag, and both endiannesses.
     */
-  def flacTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val rdd = Par.widen(t.documents.select(col("doc_id")), col("doc_id")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val d = r.getLong(0)
-        Row(d, graft.functions.FlacHeaders.synthetic(
-          minBlock = Seq(576, 1024, 4096)((d % 3).toInt),
-          maxBlock = 4096,
-          sampleRate = Seq(8000, 22050, 44100, 48000)((d % 4).toInt),
-          channels = (d % 8).toInt + 1,
-          bits = Seq(8, 16, 24)((d % 3).toInt),
-          totalSamples = d * 100 + 4096,
-          md5 = Array.fill[Byte](16)((d % 251).toByte),
-          vendor = if (d % 3 == 0) Some(s"graft${d % 7}") else None,
-          paddingBytes = if (d % 5 == 0) 16 else 0))
-      }))
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
-  }
+  def flacTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(col("doc_id")), withMeta = false) { r =>
+      val d = r.getLong(0)
+      graft.functions.FlacHeaders.synthetic(
+        minBlock = Seq(576, 1024, 4096)((d % 3).toInt),
+        maxBlock = 4096,
+        sampleRate = Seq(8000, 22050, 44100, 48000)((d % 4).toInt),
+        channels = (d % 8).toInt + 1,
+        bits = Seq(8, 16, 24)((d % 3).toInt),
+        totalSamples = d * 100 + 4096,
+        md5 = Array.fill[Byte](16)((d % 251).toByte),
+        vendor = if (d % 3 == 0) Some(s"graft${d % 7}") else None,
+        paddingBytes = if (d % 5 == 0) 16 else 0)
+    }
 
   /** REAL FLAC metadata walk (graft.functions.FlacHeaders): STREAMINFO
     * fields, block count, VORBIS_COMMENT vendor, and the MD5 tail
@@ -769,20 +617,16 @@ object Multimodal extends QueryModule {
     * closed-form oracle; a walk that mis-sizes a block or misreads the
     * big-endian packed word desyncs and reds out.
     */
-  def decodeFlacHeaders(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        graft.functions.FlacHeaders.parse(r.getAs[Array[Byte]](1)) match {
-          case Some(f) =>
-            Row(r.getLong(0), f.minBlock, f.sampleRate, f.channels, f.bits,
-                f.totalSamples, f.totalSamples * 1000 / f.sampleRate,
-                f.nBlocks, f.vendor, f.md5Hex, true)
-          case None => Row(r.getLong(0), 0, 0, 0, 0, 0L, 0L, 0, "", "", false)
-        }
-      }))
-    spark.createDataFrame(rdd, flacSchema)
-  }
+  def decodeFlacHeaders(media: DataFrame): DataFrame =
+    decodeRows(media, flacSchema, withMeta = false) { r =>
+      graft.functions.FlacHeaders.parse(r.getAs[Array[Byte]](1)) match {
+        case Some(f) =>
+          Row(r.getLong(0), f.minBlock, f.sampleRate, f.channels, f.bits,
+              f.totalSamples, f.totalSamples * 1000 / f.sampleRate,
+              f.nBlocks, f.vendor, f.md5Hex, true)
+        case None => Row(r.getLong(0), 0, 0, 0, 0, 0L, 0L, 0, "", "", false)
+      }
+    }
 
   val oggSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -801,22 +645,17 @@ object Multimodal extends QueryModule {
     * identification page, comment page, 0-5 empty audio pages, EOS,
     * every page carrying its real RFC 3533 CRC).
     */
-  def oggTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val rdd = Par.widen(t.documents.select(col("doc_id")), col("doc_id")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val d = r.getLong(0)
-        Row(d, graft.functions.OggHeaders.synthetic(
-          serial = d,
-          channels = (d % 8).toInt + 1,
-          sampleRate = Seq(8000, 22050, 44100, 48000)((d % 4).toInt),
-          nominalBitrate = ((d % 32).toInt + 1) * 16000,
-          vendor = s"graft${d % 7}",
-          nAudioPages = (d % 6).toInt))
-      }))
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
-  }
+  def oggTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(col("doc_id")), withMeta = false) { r =>
+      val d = r.getLong(0)
+      graft.functions.OggHeaders.synthetic(
+        serial = d,
+        channels = (d % 8).toInt + 1,
+        sampleRate = Seq(8000, 22050, 44100, 48000)((d % 4).toInt),
+        nominalBitrate = ((d % 32).toInt + 1) * 16000,
+        vendor = s"graft${d % 7}",
+        nAudioPages = (d % 6).toInt)
+    }
 
   /** REAL Ogg page walk + Vorbis ident/comment parse
     * (graft.functions.OggHeaders): page accounting with verified CRCs,
@@ -825,19 +664,15 @@ object Multimodal extends QueryModule {
     * that mis-sizes a lacing table or miscomputes the unreflected CRC
     * desyncs and reds out.
     */
-  def decodeOggHeaders(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        graft.functions.OggHeaders.parse(r.getAs[Array[Byte]](1)) match {
-          case Some(o) =>
-            Row(r.getLong(0), o.serial, o.nPages, o.lastGranule, o.channels,
-                o.sampleRate, o.nominalBitrate, o.durationMs, o.vendor, true)
-          case None => Row(r.getLong(0), 0L, 0, 0L, 0, 0, 0, 0L, "", false)
-        }
-      }))
-    spark.createDataFrame(rdd, oggSchema)
-  }
+  def decodeOggHeaders(media: DataFrame): DataFrame =
+    decodeRows(media, oggSchema, withMeta = false) { r =>
+      graft.functions.OggHeaders.parse(r.getAs[Array[Byte]](1)) match {
+        case Some(o) =>
+          Row(r.getLong(0), o.serial, o.nPages, o.lastGranule, o.channels,
+              o.sampleRate, o.nominalBitrate, o.durationMs, o.vendor, true)
+        case None => Row(r.getLong(0), 0L, 0, 0L, 0, 0, 0, 0L, "", false)
+      }
+    }
 
   val orientedSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -854,48 +689,27 @@ object Multimodal extends QueryModule {
     * stage every image pipeline runs (a quarter of phone photos store
     * rotated sensor data): parse the payload's EXIF orientation,
     * decode pixels, apply the inverse transform (ExifMeta.orient),
-    * then fingerprint a 4×4 sampled grid of the UPRIGHT raster. The
-    * fixtures cycle all 8 orientations, so every transform arm sits
-    * inside the driver's hash gate (SF-pinned snapshot — decode is
+    * then fingerprint a 4×4 sampled grid of the UPRIGHT raster through
+    * the shared sampler (ImageHeaders.thumbnailRaster). The fixtures
+    * cycle all 8 orientations, so every transform arm sits inside the
+    * oracle hash gate (SF-pinned snapshot — decode is
     * deterministic); the sentinel row surfaces any parse/decode/orient
     * failure as a red row.
     */
-  def decodeOrientedThumbs(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        val row = for {
-          e <- graft.functions.ExifMeta.parse(payload)
-          (w, h, ch, raster) <- graft.functions.JpegPixels.decodeRaster(payload)
-          (up, ow, oh) <- graft.functions.ExifMeta.orient(raster, w, h, ch, e.orientation)
-        } yield {
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var fnv = 0xcbf29ce484222325L
-          def mix(v: Int): Unit = { fnv ^= (v & 0xff); fnv *= 0x100000001b3L }
-          var ty = 0
-          while (ty < 4) {
-            val sy = (ty.toLong * oh / 4).toInt
-            var tx = 0
-            while (tx < 4) {
-              val sx = (tx.toLong * ow / 4).toInt
-              val i = (sy * ow + sx) * ch
-              val (pr, pg, pb) =
-                if (ch == 1) { val v = up(i) & 0xff; (v, v, v) }
-                else (up(i) & 0xff, up(i + 1) & 0xff, up(i + 2) & 0xff)
-              sr += pr; sg += pg; sb += pb
-              mix(pr); mix(pg); mix(pb)
-              tx += 1
-            }
-            ty += 1
-          }
-          Row(r.getLong(0), e.orientation, ow, oh,
-              sr.toDouble / 16, sg.toDouble / 16, sb.toDouble / 16, fnv)
-        }
-        row.getOrElse(Row(r.getLong(0), 0, 0, 0, 0.0, 0.0, 0.0, 0L))
-      }))
-    spark.createDataFrame(rdd, orientedSchema)
-  }
+  def decodeOrientedThumbs(media: DataFrame): DataFrame =
+    decodeRows(media, orientedSchema, withMeta = false) { r =>
+      val payload = r.getAs[Array[Byte]](1)
+      val row = for {
+        e <- graft.functions.ExifMeta.parse(payload)
+        (w, h, ch, raster) <- graft.functions.JpegPixels.decodeRaster(payload)
+        (up, ow, oh) <- graft.functions.ExifMeta.orient(raster, w, h, ch, e.orientation)
+      } yield {
+        val (_, _, mr, mg, mb, fnv) =
+          graft.functions.ImageHeaders.thumbnailRaster(up, ow, oh, ch, 4, 4)
+        Row(r.getLong(0), e.orientation, ow, oh, mr, mg, mb, fnv)
+      }
+      row.getOrElse(Row(r.getLong(0), 0, 0, 0, 0.0, 0.0, 0.0, 0L))
+    }
 
   /** REAL pixel decode for the DCT-compressed format: hand-rolled
     * baseline JPEG (graft.functions.JpegPixels — marker walk, canonical
@@ -906,29 +720,25 @@ object Multimodal extends QueryModule {
     * channel means within 1/255: both use the libjpeg triangle chroma
     * upsample, so only IDCT rounding remains).
     */
-  def decodeJpegPixels(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        val payload = r.getAs[Array[Byte]](1)
-        graft.functions.JpegPixels.decode(payload) match {
-          case Some((w, h, mr, mg, mb)) =>
-            val ok = graft.functions.JpegPixels.jdkMeans(payload) match {
-              case Some((rw, rh, rr, rg, rb)) =>
-                w == rw && h == rh && w == meta.getInt(0) && h == meta.getInt(1) &&
-                  math.abs(mr - rr) <= 1.0 && math.abs(mg - rg) <= 1.0 &&
-                  math.abs(mb - rb) <= 1.0
-              case None => false
-            }
-            Row(r.getLong(0), w, h,
-                math.rint(mr * 10000) / 10000, math.rint(mg * 10000) / 10000,
-                math.rint(mb * 10000) / 10000, ok)
-          case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, false)
-        }
-      }))
-    spark.createDataFrame(rdd, pixelSchema)
-  }
+  def decodeJpegPixels(media: DataFrame): DataFrame =
+    decodeRows(media, pixelSchema) { r =>
+      val meta = r.getStruct(2)
+      val payload = r.getAs[Array[Byte]](1)
+      graft.functions.JpegPixels.decode(payload) match {
+        case Some((w, h, mr, mg, mb)) =>
+          val ok = graft.functions.JpegPixels.jdkMeans(payload) match {
+            case Some((rw, rh, rr, rg, rb)) =>
+              w == rw && h == rh && w == meta.getInt(0) && h == meta.getInt(1) &&
+                math.abs(mr - rr) <= 1.0 && math.abs(mg - rg) <= 1.0 &&
+                math.abs(mb - rb) <= 1.0
+            case None => false
+          }
+          Row(r.getLong(0), w, h,
+              math.rint(mr * 10000) / 10000, math.rint(mg * 10000) / 10000,
+              math.rint(mb * 10000) / 10000, ok)
+        case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, false)
+      }
+    }
 
   /** DCT-path thumbnails: baseline JPEG decode + the shared
     * nearest-neighbor sampling grid. `thumb_ok` cross-checks the
@@ -938,27 +748,23 @@ object Multimodal extends QueryModule {
     * decoder's own determinism (it cannot be compared across
     * decoders).
     */
-  def decodeJpegThumbnails(media: DataFrame, tw: Int, th: Int): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        graft.functions.JpegPixels.thumbnail(payload, tw, th) match {
-          case Some((w, h, mr, mg, mb, fnv)) =>
-            val ok = graft.functions.JpegPixels.jdkThumbMeans(payload, tw, th) match {
-              case Some((rr, rg, rb)) =>
-                math.abs(mr - rr) <= 1.0 && math.abs(mg - rg) <= 1.0 &&
-                  math.abs(mb - rb) <= 1.0
-              case None => false
-            }
-            Row(r.getLong(0), w, h,
-                math.rint(mr * 10000) / 10000, math.rint(mg * 10000) / 10000,
-                math.rint(mb * 10000) / 10000, fnv, ok)
-          case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, 0L, false)
-        }
-      }))
-    spark.createDataFrame(rdd, thumbSchema)
-  }
+  def decodeJpegThumbnails(media: DataFrame, tw: Int, th: Int): DataFrame =
+    decodeRows(media, thumbSchema) { r =>
+      val payload = r.getAs[Array[Byte]](1)
+      graft.functions.JpegPixels.thumbnail(payload, tw, th) match {
+        case Some((w, h, mr, mg, mb, fnv)) =>
+          val ok = graft.functions.JpegPixels.jdkThumbMeans(payload, tw, th) match {
+            case Some((rr, rg, rb)) =>
+              math.abs(mr - rr) <= 1.0 && math.abs(mg - rg) <= 1.0 &&
+                math.abs(mb - rb) <= 1.0
+            case None => false
+          }
+          Row(r.getLong(0), w, h,
+              math.rint(mr * 10000) / 10000, math.rint(mg * 10000) / 10000,
+              math.rint(mb * 10000) / 10000, fnv, ok)
+        case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, 0L, false)
+      }
+    }
 
   /** Image table whose payloads are COMPLETE lossless WebPs (real VP8L
     * bitstreams — prefix-coded ARGB with seed-cycled transform paths:
@@ -966,104 +772,40 @@ object Multimodal extends QueryModule {
     * meta-groups+color-cache) — the fourth compressed still format
     * after PNG, GIF and JPEG.
     */
-  def webpTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
-      col("doc_id"),
-      (col("doc_id") % 16 + 4).cast("int").as("w"),
-      (col("doc_id") % 12 + 4).cast("int").as("h"),
-      (col("doc_id") % 997).cast("int").as("seed"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
-      Row(r.getLong(0),
-          graft.functions.WebpPixels.syntheticWebp(r.getInt(1), r.getInt(2), r.getInt(3)),
-          Row(r.getInt(1), r.getInt(2), r.getInt(3)))
+  def webpTable(t: Tables): DataFrame =
+    synthTable(gradientDims(t)) { r =>
+      graft.functions.WebpPixels.syntheticWebp(r.getInt(1), r.getInt(2), r.getInt(3))
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("w", IntegerType), StructField("h", IntegerType),
-        StructField("seed", IntegerType)))),
-    ))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** REAL pixel decode for the LAST compressed still-image format:
     * full VP8L — RIFF walk, prefix codes, color cache, LZ77, and all
     * four transform inverses (graft.functions.WebpPixels,
-    * dependency-free), batched like every other modality. `pixels_ok`
-    * cross-checks decoded channel means against the independent
-    * closed-form gradient; because the table cycles five encoding
-    * paths by seed, every transform inverse sits inside the driver's
-    * hash gate, not just the literal path.
+    * dependency-free). `pixels_ok` cross-checks decoded channel means
+    * against the independent closed-form gradient; because the table
+    * cycles five encoding paths by seed, every transform inverse sits
+    * inside the oracle hash gate, not just the literal path.
     */
-  def decodeWebpPixels(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.WebpPixels.decode(r.getAs[Array[Byte]](1)) match {
-          case Some((w, h, mr, mg, mb)) =>
-            val (er, eg, eb) = graft.functions.WebpPixels.syntheticMeans(
-              meta.getInt(0), meta.getInt(1), meta.getInt(2))
-            Row(r.getLong(0), w, h, mr, mg, mb,
-                w == meta.getInt(0) && h == meta.getInt(1) &&
-                  mr == er && mg == eg && mb == eb)
-          case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, false)
-        }
-      }))
-    spark.createDataFrame(rdd, pixelSchema)
-  }
+  def decodeWebpPixels(media: DataFrame): DataFrame =
+    gradientPixels(media, graft.functions.WebpPixels.decode,
+      graft.functions.WebpPixels.syntheticMeans)
 
   /** REAL pixel decode for the COMPRESSED image format: full PNG chunk
     * walk + zlib inflate + per-row unfilter (graft.functions.PngPixels,
-    * dependency-free), batched like every other modality. `pixels_ok`
-    * cross-checks the decoded channel means against an independent
-    * closed-form recomputation of the gradient — on a non-constant
-    * image, so a wrong unfilter branch cannot pass. With this the
-    * multimodal decode stub no longer covers any mainstream image
-    * format.
+    * dependency-free). `pixels_ok` cross-checks the decoded channel
+    * means against an independent closed-form recomputation of the
+    * gradient — on a non-constant image, so a wrong unfilter branch
+    * cannot pass.
     */
-  def decodePngPixels(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.PngPixels.decode(r.getAs[Array[Byte]](1)) match {
-          case Some((w, h, mr, mg, mb)) =>
-            val (er, eg, eb) = graft.functions.PngPixels.syntheticMeans(
-              meta.getInt(0), meta.getInt(1), meta.getInt(2))
-            Row(r.getLong(0), w, h, mr, mg, mb,
-                w == meta.getInt(0) && h == meta.getInt(1) &&
-                  mr == er && mg == eg && mb == eb)
-          case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, false)
-        }
-      }))
-    spark.createDataFrame(rdd, pixelSchema)
-  }
+  def decodePngPixels(media: DataFrame): DataFrame =
+    gradientPixels(media, graft.functions.PngPixels.decode,
+      graft.functions.PngPixels.syntheticMeans)
 
   /** Thumbnails for the COMPRESSED image path: PNG decode + the same
-    * nearest-neighbor sampling grid as the BMP thumbnails. `thumb_ok`
-    * compares the sampled pixels' FNV (and means) against a formula-only
-    * recomputation of the gradient — the codec chain is in the loop on
-    * every image, the check path never is.
+    * nearest-neighbor sampling grid as the BMP thumbnails, checked as
+    * [[gradientThumbnails]] says.
     */
-  def decodePngThumbnails(media: DataFrame, tw: Int, th: Int): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.PngPixels.thumbnail(r.getAs[Array[Byte]](1), tw, th) match {
-          case Some((w, h, mr, mg, mb, fnv)) =>
-            val (er, eg, eb, efnv) = graft.functions.PngPixels.syntheticThumb(
-              meta.getInt(0), meta.getInt(1), meta.getInt(2), tw, th)
-            Row(r.getLong(0), w, h, mr, mg, mb, fnv,
-                fnv == efnv && mr == er && mg == eg && mb == eb)
-          case None => Row(r.getLong(0), 0, 0, 0.0, 0.0, 0.0, 0L, false)
-        }
-      }))
-    spark.createDataFrame(rdd, thumbSchema)
-  }
+  def decodePngThumbnails(media: DataFrame, tw: Int, th: Int): DataFrame =
+    gradientThumbnails(media, tw, th, graft.functions.PngPixels.thumbnail)
 
   val pcmSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1077,49 +819,31 @@ object Multimodal extends QueryModule {
     * ±amplitude square wave — real decodable waveforms whose RMS equals
     * the amplitude exactly.
     */
-  def pcmTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
+  def pcmTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(
       col("doc_id"),
       (col("doc_id") % 2 + 1).cast("int").as("channels"),
       (col("doc_id") % 2000 + 100).cast("int").as("frames"),
-      (col("doc_id") % 30000 + 1).cast("int").as("amp"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
-      Row(r.getLong(0),
-          graft.functions.AudioHeaders.syntheticSquareWav(
-            r.getInt(1), 16000, r.getInt(3).toShort, r.getInt(2)),
-          Row(r.getInt(1), r.getInt(2), r.getInt(3)))
+      (col("doc_id") % 30000 + 1).cast("int").as("amp"))) { r =>
+      graft.functions.AudioHeaders.syntheticSquareWav(
+        r.getInt(1), 16000, r.getInt(3).toShort, r.getInt(2))
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("channels", IntegerType),
-        StructField("frames", IntegerType),
-        StructField("amp", IntegerType)))),
-    ))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** REAL sample decode (PCM16 — raw LE shorts, no codec): RMS and peak
     * amplitude over the actual samples; `samples_ok` cross-checks
     * against the declared square wave (RMS == amplitude exactly).
     */
-  def decodePcm(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.AudioHeaders.decodePcmSamples(r.getAs[Array[Byte]](1)) match {
-          case Some((n, rms, peak)) =>
-            Row(r.getLong(0), n, rms, peak,
-                n == meta.getInt(0).toLong * meta.getInt(1) &&
-                  rms == meta.getInt(2).toDouble && peak == meta.getInt(2))
-          case None => Row(r.getLong(0), 0L, 0.0, 0, false)
-        }
-      }))
-    spark.createDataFrame(rdd, pcmSchema)
-  }
+  def decodePcm(media: DataFrame): DataFrame =
+    decodeRows(media, pcmSchema) { r =>
+      val meta = r.getStruct(2)
+      graft.functions.AudioHeaders.decodePcmSamples(r.getAs[Array[Byte]](1)) match {
+        case Some((n, rms, peak)) =>
+          Row(r.getLong(0), n, rms, peak,
+              n == meta.getInt(0).toLong * meta.getInt(1) &&
+                rms == meta.getInt(2).toDouble && peak == meta.getInt(2))
+        case None => Row(r.getLong(0), 0L, 0.0, 0, false)
+      }
+    }
 
   val aviSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1135,29 +859,16 @@ object Multimodal extends QueryModule {
     * solid-color '00db' frames, per-frame color drift) — real decodable
     * video, not header fragments.
     */
-  def aviTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
+  def aviTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(
       col("doc_id"),
       (col("doc_id") % 8 + 2).cast("int").as("w"),
       (col("doc_id") % 6 + 2).cast("int").as("h"),
       (col("doc_id") % 12 + 2).cast("int").as("frames"),
-      (col("doc_id") % 200).cast("int").as("r"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
-      Row(r.getLong(0),
-          graft.functions.AviFrames.synthetic(
-            r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), 10, 20),
-          Row(r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)))
+      (col("doc_id") % 200).cast("int").as("r"))) { r =>
+      graft.functions.AviFrames.synthetic(
+        r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), 10, 20)
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("w", IntegerType), StructField("h", IntegerType),
-        StructField("frames", IntegerType), StructField("r", IntegerType)))),
-    ))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** REAL frame-sampling decode (uncompressed AVI — RIFF walking + DIB
     * pixel arrays, no codec): every 2nd frame's pixels average into the
@@ -1166,24 +877,20 @@ object Multimodal extends QueryModule {
     * channel against the synthesized per-frame color drift (frame i is
     * r+i, so sampled frames 0,2,... average to r + (n_sampled-1)).
     */
-  def decodeAviFrames(media: DataFrame, frameStep: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.AviFrames.decode(r.getAs[Array[Byte]](1), frameStep) match {
-          case Some((w, h, nf, ns, mr, _, _)) =>
-            val expectSampled = (meta.getInt(2) + frameStep - 1) / frameStep
-            val expectMeanR = meta.getInt(3).toDouble + (expectSampled - 1)
-            Row(r.getLong(0), w, h, nf, ns, mr,
-                w == meta.getInt(0) && h == meta.getInt(1) &&
-                  nf == meta.getInt(2) && ns == expectSampled &&
-                  mr == expectMeanR)
-          case None => Row(r.getLong(0), 0, 0, 0, 0, 0.0, false)
-        }
-      }))
-    spark.createDataFrame(rdd, aviSchema)
-  }
+  def decodeAviFrames(media: DataFrame, frameStep: Int = 2): DataFrame =
+    decodeRows(media, aviSchema) { r =>
+      val meta = r.getStruct(2)
+      graft.functions.AviFrames.decode(r.getAs[Array[Byte]](1), frameStep) match {
+        case Some((w, h, nf, ns, mr, _, _)) =>
+          val expectSampled = (meta.getInt(2) + frameStep - 1) / frameStep
+          val expectMeanR = meta.getInt(3).toDouble + (expectSampled - 1)
+          Row(r.getLong(0), w, h, nf, ns, mr,
+              w == meta.getInt(0) && h == meta.getInt(1) &&
+                nf == meta.getInt(2) && ns == expectSampled &&
+                mr == expectMeanR)
+        case None => Row(r.getLong(0), 0, 0, 0, 0, 0.0, false)
+      }
+    }
 
   val mjpegSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1204,29 +911,16 @@ object Multimodal extends QueryModule {
     * decodable because the codec is the JPEG decoder this library
     * already has.
     */
-  def mjpegTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val base = t.documents.select(
+  def mjpegTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(
       col("doc_id"),
       (col("doc_id") % 12 + 9).cast("int").as("w"),
       (col("doc_id") % 10 + 9).cast("int").as("h"),
       (col("doc_id") % 5 + 2).cast("int").as("frames"),
-      (col("doc_id") % 997).cast("int").as("seed"))
-    val rdd = Par.widen(base, col("doc_id")).rdd.map { r =>
-      Row(r.getLong(0),
-          graft.functions.AviFrames.syntheticMjpeg(
-            r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)),
-          Row(r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)))
+      (col("doc_id") % 997).cast("int").as("seed"))) { r =>
+      graft.functions.AviFrames.syntheticMjpeg(
+        r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("w", IntegerType), StructField("h", IntegerType),
-        StructField("frames", IntegerType), StructField("seed", IntegerType)))),
-    ))
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** REAL compressed-video frame sampling: every 2nd MJPEG frame
     * decodes through the hand-rolled baseline-JPEG path
@@ -1236,24 +930,20 @@ object Multimodal extends QueryModule {
     * 1/255 per channel, plus the container contract (declared dims,
     * frame count, ceil(frames/2) sample count).
     */
-  def decodeMjpegFrames(media: DataFrame, frameStep: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload"), col("meta")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val meta = r.getStruct(2)
-        graft.functions.AviFrames.decodeMjpeg(r.getAs[Array[Byte]](1), frameStep) match {
-          case Some((w, h, nf, ns, mr, mg, mb, jdkOk)) =>
-            val expectSampled = (meta.getInt(2) + frameStep - 1) / frameStep
-            Row(r.getLong(0), w, h, nf, ns,
-                math.rint(mr * 10000) / 10000, math.rint(mg * 10000) / 10000,
-                math.rint(mb * 10000) / 10000,
-                jdkOk && w == meta.getInt(0) && h == meta.getInt(1) &&
-                  nf == meta.getInt(2) && ns == expectSampled)
-          case None => Row(r.getLong(0), 0, 0, 0, 0, 0.0, 0.0, 0.0, false)
-        }
-      }))
-    spark.createDataFrame(rdd, mjpegSchema)
-  }
+  def decodeMjpegFrames(media: DataFrame, frameStep: Int = 2): DataFrame =
+    decodeRows(media, mjpegSchema) { r =>
+      val meta = r.getStruct(2)
+      graft.functions.AviFrames.decodeMjpeg(r.getAs[Array[Byte]](1), frameStep) match {
+        case Some((w, h, nf, ns, mr, mg, mb, jdkOk)) =>
+          val expectSampled = (meta.getInt(2) + frameStep - 1) / frameStep
+          Row(r.getLong(0), w, h, nf, ns,
+              math.rint(mr * 10000) / 10000, math.rint(mg * 10000) / 10000,
+              math.rint(mb * 10000) / 10000,
+              jdkOk && w == meta.getInt(0) && h == meta.getInt(1) &&
+                nf == meta.getInt(2) && ns == expectSampled)
+        case None => Row(r.getLong(0), 0, 0, 0, 0, 0.0, 0.0, 0.0, false)
+      }
+    }
 
   /** Closed-form DuckDB oracles for the synthesized-media entries. Every
     * payload below is a pure function of doc_id (the tables synthesize
@@ -1747,22 +1437,16 @@ object Multimodal extends QueryModule {
     * and grow pair volume quadratically at scale), each doc a mild
     * variant — brightness shift (DC-only under pHash) plus a small
     * single-tile delta. Real BMP bytes; the decode in phashPairs
-    * parses them, no side channel. Batched like every other fixture
-    * synth in this file.
+    * parses them, no side channel.
     */
-  def phashImageTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val rdd = Par.widen(t.documents.select(col("doc_id")), col("doc_id")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val id = r.getLong(0)
-        val variant = (id % 10).toInt
-        Row(id, graft.functions.ImageHeaders.patternBmp(64, 48, seed = id / 10,
-          brightness = (variant % 8) * 4, tileDelta = (variant % 3) * 5,
-          tileIdx = variant % 6))
-      }))
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
-  }
+  def phashImageTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(col("doc_id")), withMeta = false) { r =>
+      val id = r.getLong(0)
+      val variant = (id % 10).toInt
+      graft.functions.ImageHeaders.patternBmp(64, 48, seed = id / 10,
+        brightness = (variant % 8) * 4, tileDelta = (variant % 3) * 5,
+        tileIdx = variant % 6)
+    }
 
   private val hash64Schema = StructType(Seq(
     StructField("doc_id", LongType), StructField("h", LongType)))
@@ -1784,21 +1468,16 @@ object Multimodal extends QueryModule {
   }
 
   /** Near-dup image pairs (Hamming ≤ 6 on the 64-bit pHash) over a
-    * (doc_id, payload) media frame. The hash is a per-row decode in the
-    * file's batched-extractor shape (embarrassingly parallel); pairing
-    * is the shared [[hamming64Pairs]] banded join.
+    * (doc_id, payload) media frame. The hash is a per-row decode
+    * (embarrassingly parallel; a payload that does not decode has no
+    * hash and no row); pairing is the shared [[hamming64Pairs]] banded
+    * join.
     */
-  def phashPairs(media: DataFrame, maxBucket: Int = Dedup.MaxBucket): DataFrame = {
-    val spark = media.sparkSession
-    val hashed = spark.createDataFrame(
-      media.select(col("doc_id"), col("payload")).rdd
-        .mapPartitions(_.grouped(BatchSize).flatMap(_.flatMap { r =>
-          graft.functions.PerceptualHash.phash64(r.getAs[Array[Byte]](1))
-            .map(h => Row(r.getLong(0), h))
-        })),
-      hash64Schema)
-    hamming64Pairs(hashed, maxBucket)
-  }
+  def phashPairs(media: DataFrame, maxBucket: Int = Dedup.MaxBucket): DataFrame =
+    hamming64Pairs(decodeSome(media, hash64Schema, withMeta = false) { r =>
+      graft.functions.PerceptualHash.phash64(r.getAs[Array[Byte]](1))
+        .map(h => Row(r.getLong(0), h))
+    }, maxBucket)
 
   /** Audio table for fingerprint near-dup: one 32-segment melody per
     * SCENE (doc_id / 10 — ten docs per scene, scene count scaling with
@@ -1809,57 +1488,46 @@ object Multimodal extends QueryModule {
     * segment's tone substituted. Real PCM16 WAV bytes; audioFpPairs
     * decodes them — no side channel.
     */
-  def audioFpTable(t: Tables): DataFrame = {
-    val spark = t.documents.sparkSession
-    val rdd = Par.widen(t.documents.select(col("doc_id")), col("doc_id")).rdd
-      .mapPartitions(_.grouped(BatchSize).flatMap(_.map { r =>
-        val id = r.getLong(0)
-        val scene = id / 10
-        val variant = (id % 10).toInt
-        // Melody = 32 tones drawn from a 50-letter scale by a splitmix64
-        // mix of (scene, segment): distinct scenes get independent
-        // sequences (collision odds ~50^-32), so cross-scene near-dups
-        // are structurally absent at ANY corpus scale. Tones stay in
-        // [300, 3436] Hz, inside the fingerprint's band range and under
-        // the 4 kHz Nyquist of the 8 kHz fixture rate.
-        val base = Array.tabulate(32) { s =>
-          var x = scene * 0x9e3779b97f4a7c15L + s * 0xbf58476d1ce4e5b9L
-          x ^= x >>> 31; x *= 0xff51afd7ed558ccdL; x ^= x >>> 33
-          300.0 + 64.0 * java.lang.Long.remainderUnsigned(x, 50L)
-        }
-        val tones =
-          if (variant % 3 == 0) base
-          else base.updated(variant % 6, base(variant % 6) + 150.0 * (variant % 3))
-        Row(id, graft.functions.AudioFingerprint.syntheticToneWav(
-          8000, amp = 2000.0 * (1 + variant % 5), toneHz = tones.toSeq,
-          nSamples = 2048))
-      }))
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
-  }
+  def audioFpTable(t: Tables): DataFrame =
+    synthTable(t.documents.select(col("doc_id")), withMeta = false) { r =>
+      val id = r.getLong(0)
+      val scene = id / 10
+      val variant = (id % 10).toInt
+      // Melody = 32 tones drawn from a 50-letter scale by a splitmix64
+      // mix of (scene, segment): distinct scenes get independent
+      // sequences (collision odds ~50^-32), so cross-scene near-dups
+      // are structurally absent at ANY corpus scale. Tones stay in
+      // [300, 3436] Hz, inside the fingerprint's band range and under
+      // the 4 kHz Nyquist of the 8 kHz fixture rate.
+      val base = Array.tabulate(32) { s =>
+        var x = scene * 0x9e3779b97f4a7c15L + s * 0xbf58476d1ce4e5b9L
+        x ^= x >>> 31; x *= 0xff51afd7ed558ccdL; x ^= x >>> 33
+        300.0 + 64.0 * java.lang.Long.remainderUnsigned(x, 50L)
+      }
+      val tones =
+        if (variant % 3 == 0) base
+        else base.updated(variant % 6, base(variant % 6) + 150.0 * (variant % 3))
+      graft.functions.AudioFingerprint.syntheticToneWav(
+        8000, amp = 2000.0 * (1 + variant % 5), toneHz = tones.toSeq,
+        nSamples = 2048)
+    }
 
   /** Near-dup audio pairs (Hamming ≤ 6 on the 64-bit Haitsma–Kalker
     * style fingerprint, [[graft.functions.AudioFingerprint]]) over a
     * (doc_id, payload) WAV frame — the audio twin of [[phashPairs]]:
-    * per-row decode in the batched-extractor shape, then the shared
-    * [[hamming64Pairs]] banded join. As with simhash/pHash, the 4×16
-    * band join GUARANTEES recall only within Hamming 3 (pigeonhole:
-    * ≤3 errors leave one band exact); pairs at distance 4–6 are
-    * best-effort candidates and missed when the errors spread across
-    * all four bands. An exactly volume-scaled re-encode of a recording
-    * hashes identically (the structural invariance AudioFingerprintSpec
-    * pins); the fixture's independently-quantized re-syntheses drift
-    * ≤4 bits, so gain-only variants always pair.
+    * per-row decode, then the shared [[hamming64Pairs]] banded join.
+    * As with simhash/pHash, the 4×16 band join GUARANTEES recall only
+    * within Hamming 3 (pigeonhole: ≤3 errors leave one band exact);
+    * pairs at distance 4–6 are best-effort candidates and missed when
+    * the errors spread across all four bands. An exactly volume-scaled
+    * re-encode of a recording hashes identically (the structural
+    * invariance AudioFingerprintSpec pins); the fixture's
+    * independently-quantized re-syntheses drift ≤4 bits, so gain-only
+    * variants always pair.
     */
-  def audioFpPairs(media: DataFrame, maxBucket: Int = Dedup.MaxBucket): DataFrame = {
-    val spark = media.sparkSession
-    val hashed = spark.createDataFrame(
-      media.select(col("doc_id"), col("payload")).rdd
-        .mapPartitions(_.grouped(BatchSize).flatMap(_.flatMap { r =>
-          graft.functions.AudioFingerprint.fingerprint64(r.getAs[Array[Byte]](1))
-            .map(h => Row(r.getLong(0), h))
-        })),
-      hash64Schema)
-    hamming64Pairs(hashed, maxBucket)
-  }
+  def audioFpPairs(media: DataFrame, maxBucket: Int = Dedup.MaxBucket): DataFrame =
+    hamming64Pairs(decodeSome(media, hash64Schema, withMeta = false) { r =>
+      graft.functions.AudioFingerprint.fingerprint64(r.getAs[Array[Byte]](1))
+        .map(h => Row(r.getLong(0), h))
+    }, maxBucket)
 }

@@ -95,10 +95,8 @@ object OutputWriters {
   /** File mode: single CSV with header (coalesced like the reference's
     * one-file output; on a cluster drop the coalesce).
     */
-  def writeCsv(df: DataFrame, path: String, singleFile: Boolean = true): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite").option("header", "true").csv(path)
-  }
+  def writeCsv(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
   /** JSON lines (the reference writes a JSON document per report; JSONL
     * is the distributed-friendly equivalent).

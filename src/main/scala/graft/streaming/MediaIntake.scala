@@ -148,10 +148,6 @@ object MediaIntake {
       }
   }
 
-  /** Stateless EXIF extraction over the arriving files; doc_id comes
-    * from the file name, files without parseable EXIF are skipped (the
-    * gate's full-row-set compare then surfaces any skip as missing).
-    */
   /** One row of Ogg/Vorbis triage, column-for-column the m_ogg_headers
     * frame so the stream shares its closed-form oracle — the AUDIO arm
     * of the continuous intake (podcast/speech crawl drop dirs).
@@ -161,9 +157,6 @@ object MediaIntake {
                           nominal_bitrate: Int, duration_ms: Long,
                           vendor: String, header_ok: Boolean)
 
-  /** Stateless per-file Ogg walk over the drop stream: same shape as
-    * [[exifStream]], CRC-verified pages and all.
-    */
   /** One row of decoded TIFF pixels, column-for-column the
     * m_tiff_pixels frame so the stream shares the PNG gradient's
     * closed-form oracle; pixels_ok re-derives the expected means from
@@ -185,18 +178,19 @@ object MediaIntake {
         id.findFirstMatchIn(path).map { m =>
           val d = m.group(1).toLong
           graft.functions.TiffPixels.decode(bytes) match {
-            case Some((w, h, mr, mg, mb)) =>
-              val (er, eg, eb) = graft.functions.PngPixels.syntheticMeans(
-                (d % 16).toInt + 4, (d % 12).toInt + 4, (d % 997).toInt)
-              TiffRow(d, w, h, mr, mg, mb,
-                w == (d % 16).toInt + 4 && h == (d % 12).toInt + 4 &&
-                  mr == er && mg == eg && mb == eb)
+            case Some(p @ (w, h, mr, mg, mb)) =>
+              TiffRow(d, w, h, mr, mg, mb, graft.operators.Multimodal.gradientOk(
+                p, (d % 16).toInt + 4, (d % 12).toInt + 4, (d % 997).toInt,
+                graft.functions.PngPixels.syntheticMeans))
             case None => TiffRow(d, 0, 0, 0.0, 0.0, 0.0, pixels_ok = false)
           }
         }
       }
   }
 
+  /** Stateless per-file Ogg walk over the drop stream: same shape as
+    * [[exifStream]], CRC-verified pages and all.
+    */
   def oggStream(spark: SparkSession, dropDir: String): Dataset[OggRow] = {
     import spark.implicits._
     val id = "doc_([0-9]+)\\.ogg$".r
@@ -214,6 +208,10 @@ object MediaIntake {
       }
   }
 
+  /** Stateless EXIF extraction over the arriving files; doc_id comes
+    * from the file name, files without parseable EXIF are skipped (the
+    * gate's full-row-set compare then surfaces any skip as missing).
+    */
   def exifStream(spark: SparkSession, dropDir: String): Dataset[ExifRow] = {
     import spark.implicits._
     val id = "doc_([0-9]+)\\.jpg$".r
