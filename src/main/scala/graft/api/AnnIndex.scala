@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object AnnIndex {
 
-  // native codegen'd expression (graft.plans.SqDistance) — the
+  // native codegen'd expression (graft.plans.FloatArrayKernel) — the
   // corpus×centroids assignment loop must not run as interpreted
   // higher-order lambdas; arithmetic is identical to the
   // aggregate(zip_with(...)) fold it replaces
@@ -26,10 +26,7 @@ object AnnIndex {
     * `iters` COUNTS THE SEED ASSIGNMENT AS STEP 1: the fit runs the
     * seed selection plus `iters − 1` centroid updates
     * (kmeansCentroidsOn's convention — iters = 1 returns the raw
-    * seeds). Before round 15 this method ran `iters` updates AFTER
-    * seeding, so cross-round recall comparisons at the same `iters`
-    * see one fewer Lloyd step; pass iters + 1 to reproduce the old
-    * trajectory.
+    * seeds).
     *
     * ONE coarse-quantizer Lloyd: this delegates to the oracled
     * fixed-point fit (Similarity.kmeansCentroids — per-dimension sums
@@ -55,7 +52,7 @@ object AnnIndex {
       .toDF("cluster", "centroid")
   }
 
-  /** Nearest centroid per corpus vector (squared L2, codegen-free but
+  /** Nearest centroid per corpus vector (the codegen'd sq_distance,
     * centroid side broadcast — one pass, no shuffle).
     */
   def assign(corpus: DataFrame, centroids: DataFrame): DataFrame =
@@ -114,6 +111,6 @@ object AnnIndex {
       .withColumn("cos", expr("cosine_similarity(q_vec, embedding)"))
     // bounded-heap top-k (partial aggregate, ≤ k rows per query per
     // partition cross the exchange) — not a window over all scored rows
-    VectorOps.topKByCosine(scored, topK)
+    graft.functions.TopKByScore.top(scored, "q_id", "vec_id", "cos", topK)
   }
 }

@@ -156,21 +156,11 @@ object PqIndex {
       .join(cb, Seq("j"))
       .select(col("q_id"), col("j"), col("code"),
         expr("sq_distance(qsub, centroid)").as("pd"))
-    val scored = coded.join(broadcast(qProbes), Seq("cluster"))
+    val partials = coded.join(broadcast(qProbes), Seq("cluster"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), posexplode(col("codes")).as(Seq("j", "code")))
       .join(broadcast(qtable), Seq("q_id", "j", "code"))
-      .groupBy("q_id", "vec_id")
-      // order-free exact sum of the m partial distances: each pd is
-      // floored onto the 2^-40 grid (exponent-shift multiply, exact)
-      // so the DECIMAL sum is partition-order independent — a raw
-      // double SUM could flap a near-tie's rank across runs, and a
-      // display-precision round() before selection is the tie trap.
-      .agg(expr(s"CAST(SUM(CAST(FLOOR(pd * $P40) AS DECIMAL(38,0))) AS DOUBLE) / $P40")
-        .as("adist"))
-    VectorOps.topKByCosine(
-      scored.select(col("q_id"), col("vec_id"), (-col("adist")).as("cos")), topK)
-      .select(col("q_id"), col("vec_id"), (-col("cos")).as("adist"), col("rn"))
+    adcTopK(partials, topK)
   }
 
   /** ADC top-k: queries (q_id, q_vec) against the ENCODED corpus.
@@ -187,9 +177,16 @@ object PqIndex {
       .select(col("q_id"), col("j"), col("code"),
         expr("sq_distance(qsub, centroid)").as("pd"))
     val exploded = codes.select(col("vec_id"), posexplode(col("codes")).as(Seq("j", "code")))
-    val scored = exploded.join(broadcast(table), Seq("j", "code"))
+    val partials = exploded.join(broadcast(table), Seq("j", "code"))
       .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id")
+    adcTopK(partials, topK)
+  }
+
+  /** The topK smallest ADC distances per query over (q_id, vec_id, pd)
+    * partial-distance rows: (q_id, vec_id, adist, rn).
+    */
+  private def adcTopK(partials: DataFrame, topK: Int): DataFrame = {
+    val adist = partials.groupBy("q_id", "vec_id")
       // order-free exact sum of the m partial distances: each pd is
       // floored onto the 2^-40 grid (exponent-shift multiply, exact)
       // so the DECIMAL sum is partition-order independent — a raw
@@ -197,9 +194,10 @@ object PqIndex {
       // display-precision round() before selection is the tie trap.
       .agg(expr(s"CAST(SUM(CAST(FLOOR(pd * $P40) AS DECIMAL(38,0))) AS DOUBLE) / $P40")
         .as("adist"))
-    // negate: the shared bounded-heap keeps TOP scores; rename back after
-    VectorOps.topKByCosine(
-      scored.select(col("q_id"), col("vec_id"), (-col("adist")).as("cos")), topK)
-      .select(col("q_id"), col("vec_id"), (-col("cos")).as("adist"), col("rn"))
+    // negate: the bounded heap keeps TOP scores; negate back after
+    graft.functions.TopKByScore.top(
+      adist.select(col("q_id"), col("vec_id"), (-col("adist")).as("score")),
+      "q_id", "vec_id", "score", topK)
+      .select(col("q_id"), col("vec_id"), (-col("score")).as("adist"), col("rn"))
   }
 }

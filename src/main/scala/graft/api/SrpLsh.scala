@@ -144,6 +144,6 @@ object SrpLsh {
       .join(queries, "q_id")
       .join(corpus, "vec_id")
       .withColumn("cos", expr("cosine_similarity(q_vec, embedding)"))
-    VectorOps.topKByCosine(scored, topK)
+    graft.functions.TopKByScore.top(scored, "q_id", "vec_id", "cos", topK)
   }
 }

@@ -3,10 +3,10 @@ package graft.api
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Shared verification / ranking stages for the vector-similarity
-  * family (AnnIndex, SrpLsh) — one implementation so a change to
-  * rounding, thresholding, or top-k tie-breaking can never silently
-  * diverge between the IVF and SRP paths.
+/** The exact-cosine verification stage of the bucketed near-dup paths
+  * (AnnIndex, SrpLsh) — one implementation so a change to thresholding
+  * can never silently diverge between the IVF and SRP paths. Their top-k
+  * searches, like PqIndex's, rank through `TopKByScore.top`.
   */
 private[api] object VectorOps {
 
@@ -20,19 +20,4 @@ private[api] object VectorOps {
       .withColumn("cos", expr("cosine_similarity(va, vb)"))
       .filter(col("cos") >= tau)
       .select(col("a_id"), col("b_id"), col("cos"))
-
-  /** Bounded-heap top-k per query over a (q_id, vec_id, cos) frame —
-    * partial aggregate shipping ≤ k rows per query per partition.
-    */
-  def topKByCosine(scored: DataFrame, topK: Int): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    scored.select(col("q_id"), col("vec_id"), col("cos")).as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .agg(new graft.functions.TopKByScore(topK).toColumn)
-      .flatMap { case (q, hits) =>
-        hits.zipWithIndex.map { case ((v, c), i) => (q, v, c, i + 1) }
-      }
-      .toDF("q_id", "vec_id", "cos", "rn")
-  }
 }

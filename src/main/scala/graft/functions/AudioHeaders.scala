@@ -4,7 +4,8 @@ package graft.functions
   * ImageHeaders: no media libraries, just byte parsing of the canonical
   * 44-byte PCM header (RIFF/WAVE + "fmt " chunk + "data" chunk size).
   * Gives the multimodal pipeline real audio metadata (channels, sample
-  * rate, bit depth, duration) while sample decode stays stubbed.
+  * rate, bit depth, duration); [[decodePcmSamples]] decodes the PCM16
+  * samples themselves.
   */
 object AudioHeaders {
 
@@ -63,8 +64,8 @@ object AudioHeaders {
     * is raw 16-bit LE samples. Returns (n_samples, rms, peak) over all
     * samples (channel-interleaved counted individually), or None unless
     * the header is canonical PCM16 with a complete data payload.
-    * Compressed audio keeps its decode stubbed pending codecs — this is
-    * the one audio format the engine decodes END TO END.
+    * MP3, FLAC and Ogg get header walks only — this is the one audio
+    * format the engine decodes END TO END.
     */
   def decodePcmSamples(b: Array[Byte]): Option[(Long, Double, Int)] =
     parse(b).flatMap { case (_, _, bits, _) =>

@@ -8,9 +8,9 @@ package graft.functions
   * `movi` list's frame chunks; each frame is a BMP-style pixel array
   * (BGR, bottom-up rows padded to 4 bytes).
   *
-  * Compressed AVI ('00dc' with an actual codec) and every other video
-  * container keep their frame decode stubbed, as documented on
-  * Multimodal.
+  * Of compressed AVI ('00dc' chunks) only Motion JPEG decodes
+  * ([[decodeMjpeg]]); any other codec, and every other video container,
+  * is refused.
   */
 object AviFrames {
 

@@ -87,9 +87,9 @@ object ImageHeaders {
     * LE dimensions in the DIB header, BGR byte order, rows bottom-up
     * and padded to 4-byte multiples. Returns (w, h, meanR, meanG,
     * meanB) over every pixel, or None for anything that is not a
-    * well-formed uncompressed 24bpp BMP (compressed formats keep their
-    * decode stubbed pending codecs — this is the one image format the
-    * engine decodes END TO END).
+    * well-formed uncompressed 24bpp BMP (PngPixels, GifPixels,
+    * JpegPixels, WebpPixels and TiffPixels decode the other still-image
+    * formats).
     */
   def decodeBmpPixels(b: Array[Byte]): Option[(Int, Int, Double, Double, Double)] = {
     if (b.length < 54 || b(0) != 'B' || b(1) != 'M') return None

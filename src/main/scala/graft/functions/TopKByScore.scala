@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.col
 
 /** Typed bounded-heap top-k for scored candidates: input rows are
   * (group_id, item_id, score); each group keeps only its k best items
@@ -42,4 +43,24 @@ class TopKByScore(k: Int)
 
   override def bufferEncoder: Encoder[Seq[(Long, Double)]] = ExpressionEncoder()
   override def outputEncoder: Encoder[Seq[(Long, Double)]] = ExpressionEncoder()
+}
+
+object TopKByScore {
+
+  /** The k best `item`s per `key` of `scored` by `score` (BIGINT,
+    * BIGINT, DOUBLE columns): (key, item, score, rn) rows under the same
+    * names, rn = 1 for the best. The one Spark shell around the
+    * aggregator.
+    */
+  def top(scored: DataFrame, key: String, item: String, score: String, k: Int): DataFrame = {
+    val spark = scored.sparkSession
+    import spark.implicits._
+    scored.select(col(key), col(item), col(score)).as[(Long, Long, Double)]
+      .groupByKey(_._1)
+      .agg(new TopKByScore(k).toColumn)
+      .flatMap { case (g, hits) =>
+        hits.zipWithIndex.map { case ((v, s), i) => (g, v, s, i + 1) }
+      }
+      .toDF(key, item, score, "rn")
+  }
 }

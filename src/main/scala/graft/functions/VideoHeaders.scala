@@ -3,8 +3,8 @@ package graft.functions
 /** Pure-JVM MP4 (ISO-BMFF) header metadata decode — completes the
   * image/audio/video modality triple: walks the top-level box list for
   * `ftyp` (major brand) and `moov`/`mvhd` (timescale + duration), no
-  * media libraries. Sample decode stays stubbed, as with the other
-  * modalities.
+  * media libraries. MP4 samples are not decoded (AVI frames are, in
+  * [[AviFrames]]).
   */
 object VideoHeaders {
 

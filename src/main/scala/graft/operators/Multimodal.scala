@@ -1270,9 +1270,9 @@ object Multimodal extends QueryModule {
       Some(graft.api.ParseSnapshots.sfPinnedSql("m_oriented_thumb")),
     ),
     // END-TO-END pixel decode: complete 24bpp BMPs decoded to
-    // per-channel means with a declared-color cross-check — the image
-    // modality's decode is real for the uncompressed format (codecs
-    // stay stubbed for compressed ones)
+    // per-channel means with a declared-color cross-check — the
+    // uncompressed member of the still-image decoders (PNG, TIFF, WebP,
+    // GIF and JPEG follow)
     QueryDef(
       "m_bmp_pixels",
       (s, dir) =>
@@ -1383,8 +1383,8 @@ object Multimodal extends QueryModule {
     // (RIFF + '00db' DIB frames), every 2nd frame's pixels decoded and
     // averaged, with exact cross-checks on dimensions, frame count,
     // sample count, and the sampled mean under the per-frame color
-    // drift — the frame-sample operation is real for the codec-free
-    // container; compressed video keeps the stub
+    // drift — the codec-free container; m_mjpeg_frames below samples
+    // the compressed Motion-JPEG case
     QueryDef(
       "m_avi_frames",
       (s, dir) =>

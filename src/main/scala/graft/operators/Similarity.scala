@@ -1,14 +1,15 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.DataFrame
+import graft.functions.TopKByScore
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the embedding column (Array[Float], dim 64).
   *
   * The Spark side scores with the native codegen'd `cosine_similarity`
-  * expression (graft.plans.CosineSimilarity, registered via
+  * expression (graft.plans.FloatArrayKernel, registered via
   * SparkSessionExtensions) — no interpreted higher-order functions on
   * the hot path. Its arithmetic (sequential double left-fold,
   * dot / (sqrt(na)*sqrt(nb))) is bit-identical to the DuckDB oracle's
@@ -32,6 +33,13 @@ object Similarity extends QueryModule {
   // top-k SELECTION and d_embedding_neardup's tau MEMBERSHIP, where a
   // one-ulp disagreement flips rows, not just digits.
   private[graft] val cos = "cosine_similarity(q_vec, embedding)"
+
+  /** The query batch: the vectors of `e` with vec_id < n as (q_id,
+    * q_vec), plus `extra` columns.
+    */
+  private[graft] def queryBatch(e: DataFrame, n: Int, extra: Column*): DataFrame =
+    e.filter(col("vec_id") < n)
+      .select(Seq(col("vec_id").as("q_id"), col("embedding").as("q_vec")) ++ extra: _*)
 
   /** Shared radius-scoring projection (s_range_search / its streaming
     * twin): broadcast query batch against any vector frame — batch scan
@@ -62,22 +70,17 @@ object Similarity extends QueryModule {
        |ORDER BY q_id, vec_id""".stripMargin
   }
 
-  /** Local cosine with EXACTLY the native expression's arithmetic
-    * (plans.CosineSimilarity: ascending double left-fold,
-    * dot / (sqrt(na)*sqrt(nb))) — used by the MMR rerank's in-group
-    * candidate-candidate similarities so the greedy argmax compares
-    * the same doubles the oracle derives.
+  /** Local cosine through the native expression's own fold
+    * (plans.FloatArrayKernel.Cosine) — used by the MMR rerank's
+    * in-group candidate-candidate similarities so the greedy argmax
+    * compares the same doubles the oracle derives. A zero-norm side
+    * gives NaN (0/0), where the SQL function gives null.
     */
-  private def cosLocal(a: Seq[Float], b: Seq[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < a.length) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
+  private def cosLocal(a: Seq[Float], b: Seq[Float]): Double =
+    graft.plans.FloatArrayKernel.Cosine(a.length, b.length, a, b) match {
+      case c: Double => c
+      case _ => Double.NaN
     }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
 
   /** Maximal Marginal Relevance rerank (Carbonell & Goldstein 1998):
     * diversify a top-N candidate pool by greedily picking
@@ -95,15 +98,9 @@ object Similarity extends QueryModule {
                                k: Int, lambda: Double): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val queries = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val scored = e.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+    val scored = e.join(broadcast(queryBatch(e, nQueries)), col("vec_id") =!= col("q_id"))
       .withColumn("rel", expr(cos))
-      .select(col("q_id"), col("vec_id"), col("rel")).as[(Long, Long, Double)]
-    val pool = scored.groupByKey(_._1)
-      .agg(new graft.functions.TopKByScore(poolK).toColumn)
-      .flatMap { case (q, hits) => hits.map { case (v, rel) => (q, v, rel) } }
-      .toDF("q_id", "vec_id", "rel")
+    val pool = TopKByScore.top(scored, "q_id", "vec_id", "rel", poolK)
     val withVec = broadcast(pool)
       .join(e.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("q_id"), col("vec_id"), col("rel"), col("embedding"))
@@ -280,23 +277,13 @@ object Similarity extends QueryModule {
     QueryDef(
       "s_cosine_topk",
       (s, dir) => {
-        import s.implicits._
         val e = Tables(s, dir).embeddings.select(col("vec_id"), col("embedding"))
-        val queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
         // bounded-heap typed aggregator instead of a row_number window:
         // each partition ships ≤ k rows per query, the exchange never
         // carries the full scored corpus×queries relation
-        val scored = e.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+        val scored = e.join(broadcast(queryBatch(e, 10)), col("vec_id") =!= col("q_id"))
           .withColumn("cos", expr(cos))
-          .select(col("q_id"), col("vec_id"), col("cos")).as[(Long, Long, Double)]
-        scored.groupByKey(_._1)
-          .agg(new graft.functions.TopKByScore(5).toColumn)
-          .flatMap { case (q, hits) =>
-            hits.zipWithIndex.map { case ((v, c), i) => (q, v, c, i + 1) }
-          }
-          .toDF("q_id", "vec_id", "cos", "rn")
-          .orderBy("q_id", "rn")
+        TopKByScore.top(scored, "q_id", "vec_id", "cos", 5).orderBy("q_id", "rn")
       },
       Some(s"""WITH c AS (SELECT vec_id, embedding,
               |  sqrt(${duckDot("embedding", "embedding")}) AS nrm FROM embeddings),
@@ -321,22 +308,11 @@ object Similarity extends QueryModule {
     QueryDef(
       "s_hard_negatives",
       (s, dir) => {
-        import s.implicits._
         val e = Tables(s, dir).embeddings.select(col("vec_id"), col("embedding"), col("label"))
-        val queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"),
-            col("label").as("q_label"))
-        val scored = e.join(broadcast(queries),
+        val scored = e.join(broadcast(queryBatch(e, 10, col("label").as("q_label"))),
             col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
           .withColumn("cos", expr(cos))
-          .select(col("q_id"), col("vec_id"), col("cos")).as[(Long, Long, Double)]
-        scored.groupByKey(_._1)
-          .agg(new graft.functions.TopKByScore(5).toColumn)
-          .flatMap { case (q, hits) =>
-            hits.zipWithIndex.map { case ((v, c), i) => (q, v, c, i + 1) }
-          }
-          .toDF("q_id", "vec_id", "cos", "rn")
-          .orderBy("q_id", "rn")
+        TopKByScore.top(scored, "q_id", "vec_id", "cos", 5).orderBy("q_id", "rn")
       },
       Some(s"""WITH c AS (SELECT vec_id, embedding, label,
               |  sqrt(${duckDot("embedding", "embedding")}) AS nrm FROM embeddings),
@@ -410,9 +386,7 @@ object Similarity extends QueryModule {
       "s_range_search",
       (s, dir) => {
         val e = Tables(s, dir).embeddings.select(col("vec_id"), col("embedding"))
-        val queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-        rangeSearch(e, queries, 0.35).orderBy("q_id", "vec_id")
+        rangeSearch(e, queryBatch(e, 10), 0.35).orderBy("q_id", "vec_id")
       },
       Some(RangeSearchSql),
     ),
@@ -435,30 +409,18 @@ object Similarity extends QueryModule {
     QueryDef(
       "s_prefix_rerank_topk",
       (s, dir) => {
-        import s.implicits._
         val e = Tables(s, dir).embeddings.select(col("vec_id"), col("embedding"))
-        val queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+        val queries = queryBatch(e, 10)
         val coarse = e.join(broadcast(queries), col("vec_id") =!= col("q_id"))
           .withColumn("cdot",
             expr("dot_product(slice(q_vec, 1, 16), slice(embedding, 1, 16))"))
-          .select(col("q_id"), col("vec_id"), col("cdot")).as[(Long, Long, Double)]
-        val cands = coarse.groupByKey(_._1)
-          .agg(new graft.functions.TopKByScore(20).toColumn)
-          .flatMap { case (q, hits) => hits.map { case (v, _) => (q, v) } }
-          .toDF("q_id", "vec_id")
+        val cands = TopKByScore.top(coarse, "q_id", "vec_id", "cdot", 20)
+          .select(col("q_id"), col("vec_id"))
         val rescored = cands
           .join(e, "vec_id")
           .join(broadcast(queries), "q_id")
           .withColumn("cos", expr(cos))
-          .select(col("q_id"), col("vec_id"), col("cos")).as[(Long, Long, Double)]
-        rescored.groupByKey(_._1)
-          .agg(new graft.functions.TopKByScore(5).toColumn)
-          .flatMap { case (q, hits) =>
-            hits.zipWithIndex.map { case ((v, c), i) => (q, v, c, i + 1) }
-          }
-          .toDF("q_id", "vec_id", "cos", "rn")
-          .orderBy("q_id", "rn")
+        TopKByScore.top(rescored, "q_id", "vec_id", "cos", 5).orderBy("q_id", "rn")
       },
       Some {
         val prefixDot =
@@ -485,12 +447,10 @@ object Similarity extends QueryModule {
       "d_embedding_neardup",
       (s, dir) => {
         val e = Tables(s, dir).embeddings.select(col("vec_id"), col("embedding"))
-        val probe = e.filter(col("vec_id") < 200)
-          .select(col("vec_id").as("a_id"), col("embedding").as("q_vec"))
-        e.join(broadcast(probe), col("a_id") < col("vec_id"))
+        e.join(broadcast(queryBatch(e, 200)), col("q_id") < col("vec_id"))
           .withColumn("cos", expr(cos))
           .filter(col("cos") >= 0.45)
-          .select(col("a_id"), col("vec_id").as("b_id"), col("cos"))
+          .select(col("q_id").as("a_id"), col("vec_id").as("b_id"), col("cos"))
           .orderBy("a_id", "b_id")
       },
       Some(s"""WITH c AS (SELECT vec_id, embedding,
@@ -546,8 +506,7 @@ object Similarity extends QueryModule {
       (s, dir) => {
         val e = Tables(s, dir).embeddings
         val corpus = e.select(col("vec_id"), col("embedding"))
-        val queries = corpus.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+        val queries = queryBatch(corpus, 10)
         graft.api.SrpLsh.search(corpus, queries, dim = 64, topK = 5)
           .orderBy("q_id", "rn")
       },
@@ -568,8 +527,7 @@ object Similarity extends QueryModule {
       (s, dir) => {
         val e = Tables(s, dir).embeddings
         val corpus = e.select(col("vec_id"), col("embedding"))
-        val queries = corpus.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+        val queries = queryBatch(corpus, 10)
         val cb = graft.api.PqIndex.codebooks(corpus, dim = 64, m = 16, ksub = 16, iters = 3)
         val codes = graft.api.PqIndex.encode(corpus, cb, dim = 64, m = 16)
         graft.api.PqIndex.adcSearch(codes, cb, queries, dim = 64, m = 16, topK = 5)
@@ -586,8 +544,7 @@ object Similarity extends QueryModule {
       (s, dir) => {
         val e = Tables(s, dir).embeddings
         val corpus = e.select(col("vec_id"), col("embedding"))
-        val queries = corpus.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+        val queries = queryBatch(corpus, 10)
         val centroids = graft.api.AnnIndex.kmeans(corpus, k = 8, iters = 3)
         val cb = graft.api.PqIndex.codebooks(corpus, dim = 64, m = 16, ksub = 16, iters = 3)
         graft.api.PqIndex.ivfpqSearch(corpus, centroids, cb, queries,
@@ -608,20 +565,13 @@ object Similarity extends QueryModule {
     QueryDef(
       "s_knn_classify",
       (s, dir) => {
-        import s.implicits._
         val e = Tables(s, dir).embeddings
         val labeled = e.filter(col("vec_id") >= 10)
           .select(col("vec_id"), col("embedding"), col("label"))
-        val queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-        val scored = labeled.join(broadcast(queries))
+        val scored = labeled.join(broadcast(queryBatch(e, 10)))
           .withColumn("cos", expr(cos))
-          .select(col("q_id"), col("vec_id"), col("cos")).as[(Long, Long, Double)]
-        val topk = scored.groupByKey(_._1)
-          .agg(new graft.functions.TopKByScore(10).toColumn)
-          .flatMap { case (q, hits) => hits.map { case (v, _) => (q, v) } }
-          .toDF("q_id", "vec_id")
-        topk.join(labeled.select("vec_id", "label"), "vec_id")
+        TopKByScore.top(scored, "q_id", "vec_id", "cos", 10)
+          .join(labeled.select("vec_id", "label"), "vec_id")
           .groupBy("q_id", "label")
           .agg(count(lit(1)).as("votes"))
           .groupBy("q_id")
@@ -758,20 +708,14 @@ object Similarity extends QueryModule {
     QueryDef(
       "s_cluster_balance",
       (s, dir) => {
-        import s.implicits._
         val assigned = kmeansClusters(
           Tables(s, dir).embeddings.select(col("vec_id"), col("embedding")))
         val scored = assigned.select(
             col("cluster").cast("long"), col("vec_id"),
-            -conv(substring(md5(col("vec_id").cast("string")), 1, 13), 16, 10)
-              .cast("bigint").cast("double"))
-          .as[(Long, Long, Double)]
-        scored.groupByKey(_._1)
-          .agg(new graft.functions.TopKByScore(32).toColumn)
-          .flatMap { case (c, hits) =>
-            hits.zipWithIndex.map { case ((v, _), i) => (v, c.toInt, i + 1) }
-          }
-          .toDF("vec_id", "cluster", "rn")
+            (-conv(substring(md5(col("vec_id").cast("string")), 1, 13), 16, 10)
+              .cast("bigint").cast("double")).as("prio"))
+        TopKByScore.top(scored, "cluster", "vec_id", "prio", 32)
+          .select(col("vec_id"), col("cluster").cast("int"), col("rn"))
           .orderBy("vec_id")
       },
       Some(s"""WITH $KmeansCtes,
@@ -796,8 +740,7 @@ object Similarity extends QueryModule {
         // parquet is metadata-only.
         val k = math.max(8, math.ceil(math.sqrt(corpus.count().toDouble)).toInt)
         val centroids = graft.api.AnnIndex.kmeans(corpus, k = k, iters = 3)
-        val queries = corpus.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+        val queries = queryBatch(corpus, 10)
         graft.api.AnnIndex.search(corpus, centroids, queries, nprobe = 3, topK = 5)
           .orderBy("q_id", "rn")
       },

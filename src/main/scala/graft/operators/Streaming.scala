@@ -579,9 +579,7 @@ object Streaming extends QueryModule {
     QueryDef(
       "st_range_search",
       (s, dir) => {
-        val queries = Tables(s, dir).embeddings
-          .filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+        val queries = graft.operators.Similarity.queryBatch(Tables(s, dir).embeddings, 10)
         val stream = graft.operators.Similarity
           .rangeSearch(
             graft.streaming.CorpusStreaming.readEmbeddingStream(s, dir)

@@ -718,22 +718,14 @@ object TextAnalysis extends QueryModule {
     */
   private[graft] def crawlFrontier(docs: org.apache.spark.sql.DataFrame,
                                    host: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val urls = sitemapUrls(docs).filter(!col("is_index"))
     val robots = robotsDecisions(docs.select(col("doc_id")))
       .filter(col("allowed")).select(col("doc_id"), col("crawl_delay"))
     val cand = urls.join(robots, "doc_id")
       .withColumn("item", col("doc_id") * 8 + col("entry_i"))
-    val top = cand
-      .select(host.as("h"), col("item"), col("priority"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .agg(new graft.functions.TopKByScore(50).toColumn)
-      .flatMap { case (_, hits) =>
-        hits.zipWithIndex.map { case ((item, _), r) => (item, r + 1) }
-      }
-      .toDF("item", "crawl_rank")
+    val top = graft.functions.TopKByScore
+      .top(cand.select(host.as("h"), col("item"), col("priority")), "h", "item", "priority", 50)
+      .select(col("item"), col("rn").as("crawl_rank"))
     broadcast(top).join(cand, "item")
       .select(
         concat(lit("site"), host.cast("string"), lit(".test")).as("host"),

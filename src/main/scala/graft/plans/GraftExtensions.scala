@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point registering graft's native
   * expressions. Usable both programmatically
@@ -12,45 +13,29 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => BandJoinBinning)
-    ext.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      CosineSimilarity.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2, "cosine_similarity expects 2 arguments")
-        CosineSimilarity(children.head, children(1))
-      },
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("sq_distance"),
-      SqDistance.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2, "sq_distance expects 2 arguments")
-        SqDistance(children.head, children(1))
-      },
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      DotProduct.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2, "dot_product expects 2 arguments")
-        DotProduct(children.head, children(1))
-      },
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      Simhash64.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1, "simhash64 expects 1 argument")
-        Simhash64(children.head)
-      },
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("rolling_gram_hash"),
-      RollingGramHash.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2, "rolling_gram_hash expects 2 arguments")
-        RollingGramHash(children.head, children(1))
-      },
-    ))
+    for ((name, cls, arity, build) <- GraftExtensions.functions)
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.size == arity,
+            s"$name expects $arity argument${if (arity == 1) "" else "s"}")
+          build(children)
+        },
+      ))
   }
+}
+
+object GraftExtensions {
+
+  /** One row per SQL function: name, expression class, arity, builder. */
+  private val functions: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] =
+    FloatArrayKernel.folds.map { f =>
+      (f.name, classOf[FloatArrayKernel], 2,
+        (c: Seq[Expression]) => FloatArrayKernel(f, c.head, c(1)))
+    } ++ Seq(
+      ("simhash64", classOf[Simhash64], 1, (c: Seq[Expression]) => Simhash64(c.head)),
+      ("rolling_gram_hash", classOf[RollingGramHash], 2,
+        (c: Seq[Expression]) => RollingGramHash(c.head, c(1))),
+    )
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, UnaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{UnaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -90,6 +90,4 @@ object Simhash64 {
     val hi = Murmur3_x86_32.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), 0x85ebca6b)
     (hi.toLong << 32) | (lo.toLong & 0xffffffffL)
   }
-
-  val info: ExpressionInfo = new ExpressionInfo(classOf[Simhash64].getName, "simhash64")
 }

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Native sq_distance expression: SQL registration, parity with the
-  * interpreted lambda fold it replaced, and codegen/interpreted
-  * agreement.
+/** Native sq_distance expression: SQL registration and parity with the
+  * interpreted lambda fold it replaced; codegen/interpreted agreement of
+  * all three float-array kernel functions.
   */
 class SqDistanceSpec extends SparkSpec {
 
@@ -36,12 +36,33 @@ class SqDistanceSpec extends SparkSpec {
   }
 
   test("interpreted and codegen paths agree") {
-    def run(): Seq[Double] = Tables(spark, sfDir).embeddings.limit(50)
-      .selectExpr("sq_distance(embedding, reverse(embedding)) AS d")
-      .orderBy("d").collect().map(_.getDouble(0)).toSeq
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    val gen = try run() finally spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp = try run() finally spark.conf.unset("spark.sql.codegen.factoryMode")
-    assert(gen == interp && gen.nonEmpty)
+    // the three functions share one kernel: per function, real
+    // embeddings (bitwise-equal doubles), a length mismatch (null) and
+    // a zero-norm side (null for cosine). The operands come from the
+    // table, so nothing constant-folds on the driver; whole-stage
+    // codegen off plus NO_CODEGEN forces the interpreted eval.
+    def run(fn: String, wholeStage: Boolean, mode: String): Seq[Seq[Option[Long]]] = {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage.toString)
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try Tables(spark, sfDir).embeddings.orderBy("vec_id").limit(50)
+        .selectExpr("vec_id",
+          s"$fn(embedding, reverse(embedding))",
+          s"$fn(embedding, slice(embedding, 1, 63))",
+          s"$fn(array_repeat(CAST(vec_id * 0 AS FLOAT), 64), embedding)")
+        .collect().sortBy(_.getLong(0)).toSeq
+        .map(r => (1 to 3).map(i =>
+          Option(r.get(i)).map(v => java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double]))))
+      finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+    for (fn <- Seq("sq_distance", "dot_product", "cosine_similarity")) {
+      val gen = run(fn, wholeStage = true, "CODEGEN_ONLY")
+      val interp = run(fn, wholeStage = false, "NO_CODEGEN")
+      assert(gen == interp && gen.size == 50, fn)
+      assert(gen.forall(r => r(0).nonEmpty && r(1).isEmpty), fn)
+      assert(gen.forall(_(2).isEmpty == (fn == "cosine_similarity")), fn)
+    }
   }
 }
